@@ -69,9 +69,9 @@ object Etl {
         spark, transformed, schema, s"$outBase/${spec.name}",
         daily = daily, dayPartitionField = spec.dayPartitionField,
         table = Some(spec.name))
-      // transforms are row-preserving (rename/drop/cast), so rowsLoaded IS
-      // the extract count — recounting `extracted` would re-run the whole
-      // source scan (a second full table transfer on the JDBC path).
+      // transforms are row-preserving (rename/drop/cast), so the rows the
+      // write job counted ARE the extract count: the source is scanned once,
+      // by the write, and rowsTotal is the K5 read-back of the destination.
       RunReport(spec.name, report.rowsLoaded, report.rowsLoaded, report.rowsTotal)
     }
   }

@@ -52,7 +52,8 @@ object BigQuerySink {
     base ++ gcs ++ part
   }
 
-  /** The BigQuery leg of the sink seam. `countAudit` is the
+  /** The BigQuery leg of the sink seam. `write` counts its rows inside the
+    * load job, like the parquet leg; `countAudit` is the
     * `get_table(...).num_rows` read-back (`bigquery_operations.py:46-48`),
     * spelled as a connector read so it stays a metadata-only count.
     */
@@ -61,12 +62,14 @@ object BigQuerySink {
       cfg: BigQuerySinkConfig,
       table: String): Sinks.SinkAdapter = new Sinks.SinkAdapter {
     val name: String = table
-    def write(df: DataFrame, daily: Boolean, dayPartitionField: Option[String]): Unit =
-      df.write
-        .format("bigquery")
-        .mode(saveMode(daily))
-        .options(options(cfg, table, dayPartitionField))
-        .save()
+    def write(df: DataFrame, daily: Boolean, dayPartitionField: Option[String]): Long =
+      Sinks.countedWrite(tableRef(cfg, table), df) {
+        _.write
+          .format("bigquery")
+          .mode(saveMode(daily))
+          .options(options(cfg, table, dayPartitionField))
+          .save()
+      }
     def countAudit(): Long =
       spark.read.format("bigquery")
         .option("table", tableRef(cfg, table))

@@ -1,6 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration.{DurationInt, FiniteDuration}
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -18,6 +23,9 @@ import graft.model.SchemaRegistry
   *    incremental reads partition-prunable, which is the 100 TB story: a
   *    daily query touches one directory, not the table;
   *  - K5 post-load row-count audit (`bigquery_operations.py:46-48`).
+  *
+  * A table load counts its rows inside its write job ([[writeCounted]]),
+  * so it scans its source exactly once.
   */
 object Sinks {
 
@@ -31,21 +39,74 @@ object Sinks {
       df: DataFrame,
       path: String,
       daily: Boolean = false,
-      dayPartitionField: Option[String] = None): Unit = {
-    val mode = if (daily) SaveMode.Append else SaveMode.Overwrite
-    dayPartitionField match {
-      case Some(f) =>
-        // repartition on the partition value first: otherwise every shuffle
-        // partition writes a sliver into every day directory — thousands of
-        // tiny files here, millions at 100 TB. One shuffle, one file per
-        // day per final partition.
-        df.withColumn(PartitionCol, to_date(col(f)))
-          .repartition(col(PartitionCol))
-          .write.mode(mode).partitionBy(PartitionCol).parquet(path)
-      case None =>
-        df.write.mode(mode).parquet(path)
+      dayPartitionField: Option[String] = None): Unit =
+    writeParquet(dayLayout(df, dayPartitionField), path, daily, dayPartitionField.isDefined)
+
+  /** [[write]] that runs `df` once and returns the rows written, counted by
+    * the write job itself. (`write` stays `Unit`: a `Long` result would
+    * break `foreachBatch` lambdas ending in a `write` call, whose overloads
+    * give the lambda no expected type to discard the value against.)
+    */
+  def writeCounted(
+      df: DataFrame,
+      path: String,
+      daily: Boolean = false,
+      dayPartitionField: Option[String] = None): Long =
+    // the count goes after the DAY repartition, in the write's result stage
+    countedWrite(path, dayLayout(df, dayPartitionField)) {
+      writeParquet(_, path, daily, dayPartitionField.isDefined)
     }
+
+  /** Adds the DAY partition column and repartitions on it first: otherwise
+    * every shuffle partition writes a sliver into every day directory —
+    * thousands of tiny files here, millions at 100 TB. One shuffle, one
+    * file per day per final partition.
+    */
+  private def dayLayout(df: DataFrame, dayPartitionField: Option[String]): DataFrame =
+    dayPartitionField.fold(df) { f =>
+      df.withColumn(PartitionCol, to_date(col(f))).repartition(col(PartitionCol))
+    }
+
+  private def writeParquet(
+      df: DataFrame,
+      path: String,
+      daily: Boolean,
+      dayPartitioned: Boolean): Unit = {
+    val w = df.write.mode(if (daily) SaveMode.Append else SaveMode.Overwrite)
+    (if (dayPartitioned) w.partitionBy(PartitionCol) else w).parquet(path)
   }
+
+  /** Upper bound on the wait for a write's observed row count. The count
+    * travels on Spark's asynchronous listener bus, which drops events when
+    * its queue overflows; a dropped count must fail the load, not hang it.
+    */
+  private[sources] val ObservedRowsWait: FiniteDuration = 2.minutes
+
+  /** Runs `write` over `df` with a row count observed as the last operator
+    * before the writer, and returns the rows written. Any shuffle must sit
+    * inside `df`, below the count: only a result stage applies each task's
+    * count exactly once (a retried shuffle map stage could count twice).
+    * `target` names the destination in the error when the count never
+    * arrives.
+    */
+  def countedWrite(target: String, df: DataFrame)(
+      write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("rows")))
+    awaitObservedRows(target, rows)
+  }
+
+  private[graft] def awaitObservedRows(
+      target: String,
+      rows: Observation,
+      bound: FiniteDuration = ObservedRowsWait): Long =
+    try Await.result(rows.future, bound).getLong(0)
+    catch {
+      case _: TimeoutException =>
+        throw new IllegalStateException(
+          s"load of $target: the write finished but its row count did not " +
+            s"arrive within $bound (Spark listener bus event dropped?)")
+    }
 
   /** K5: read-back count audit. */
   def countAudit(spark: SparkSession, path: String): Long =
@@ -972,15 +1033,20 @@ object Sinks {
     */
   trait SinkAdapter {
     def name: String
-    def write(df: DataFrame, daily: Boolean, dayPartitionField: Option[String]): Unit
+    /** Writes `df` with the disposition, running it exactly once, and
+      * returns the rows written — counted by the write job itself
+      * ([[countedWrite]]), never by a separate pass over `df`.
+      */
+    def write(df: DataFrame, daily: Boolean, dayPartitionField: Option[String]): Long
+    /** Rows in the destination after the write, read back from it. */
     def countAudit(): Long
   }
 
   def parquetAdapter(spark: SparkSession, path: String, table: Option[String] = None): SinkAdapter =
     new SinkAdapter {
       val name: String = table.getOrElse(path.split('/').last)
-      def write(df: DataFrame, daily: Boolean, dayPartitionField: Option[String]): Unit =
-        Sinks.write(df, path, daily, dayPartitionField)
+      def write(df: DataFrame, daily: Boolean, dayPartitionField: Option[String]): Long =
+        Sinks.writeCounted(df, path, daily, dayPartitionField)
       def countAudit(): Long = Sinks.countAudit(spark, path)
     }
 
@@ -988,7 +1054,9 @@ object Sinks {
     * `load_to_bigquery` contract (`bigquery_operations.py:21-48`): bind the
     * declared schema, write with the disposition, read back the audit
     * count. Returns (rowsLoaded, rowsTotalAfterLoad) like the reference's
-    * two log lines (`bigquery_operations.py:47-48`).
+    * two log lines (`bigquery_operations.py:47-48`): rowsLoaded is the
+    * count the write job observed (the source is read once), rowsTotal
+    * the K5 read-back of the destination.
     */
   def loadVia(
       sink: SinkAdapter,
@@ -996,10 +1064,8 @@ object Sinks {
       schema: StructType,
       daily: Boolean = false,
       dayPartitionField: Option[String] = None): LoadReport = {
-    val bound = SchemaRegistry.enforce(df, schema)
-    val loaded = bound.count()
-    sink.write(bound, daily, dayPartitionField)
-    LoadReport(sink.name, loaded, sink.countAudit())
+    val rowsWritten = sink.write(SchemaRegistry.enforce(df, schema), daily, dayPartitionField)
+    LoadReport(sink.name, rowsWritten, sink.countAudit())
   }
 
   /** [[loadVia]] against the parquet destination. */

@@ -48,18 +48,67 @@ class SinksSpec extends SparkSpec {
       SchemaRegistry.schemaFor(schema, "t"))
     assert(viaSeam == Sinks.LoadReport("t", 2, 2))
 
-    // a recording adapter proves enforce-then-write-then-audit ordering
+    // a recording adapter proves enforce-then-write-then-audit ordering,
+    // and that rowsLoaded is what the adapter's write returned
+    val calls = scala.collection.mutable.ArrayBuffer.empty[String]
     var written: Option[(Long, Boolean, Option[String])] = None
     val recording = new Sinks.SinkAdapter {
       val name = "rec"
-      def write(d: org.apache.spark.sql.DataFrame, daily: Boolean, f: Option[String]): Unit =
-        written = Some((d.count(), daily, f))
-      def countAudit(): Long = 42L
+      def write(d: org.apache.spark.sql.DataFrame, daily: Boolean, f: Option[String]): Long = {
+        assert(d.schema.map(c => c.name -> c.dataType) ==
+          SchemaRegistry.schemaFor(schema, "t").map(c => c.name -> c.dataType),
+          "write must see the bound schema")
+        calls += "write"
+        val n = d.count()
+        written = Some((n, daily, f))
+        n
+      }
+      def countAudit(): Long = { calls += "audit"; 42L }
     }
     val r = Sinks.loadVia(recording, df, SchemaRegistry.schemaFor(schema, "t"),
       daily = true, dayPartitionField = Some("d"))
     assert(r == Sinks.LoadReport("rec", 2, 42L))
     assert(written.contains((2L, true, Some("d"))))
+    assert(calls == Seq("write", "audit"))
+  }
+
+  test("a load reads its source once: the write job counts the rows it loads") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = SchemaRegistry.schemaFor(SchemaRegistry.fromJson(
+      """{"t": [{"name": "id", "type": "INTEGER"}, {"name": "ts", "type": "TIMESTAMP"}]}"""), "t")
+    val rows = (0 until 30).map(i =>
+      Row(i.toLong, java.sql.Timestamp.valueOf(f"2024-01-${1 + i % 3}%02d 10:00:00")))
+    val out = java.nio.file.Files.createTempDirectory("graft_one_pass").toString
+    // every Spark job that computes the source adds each row it reads once
+    def loadCountingReads(path: String, daily: Boolean, dayField: Option[String]) = {
+      val reads = spark.sparkContext.longAccumulator("source_rows")
+      val src = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 3).map { r => reads.add(1); r },
+        StructType(Seq(StructField("id", LongType), StructField("ts", TimestampType))))
+      val report = Sinks.load(spark, src, schema, path, daily = daily, dayPartitionField = dayField)
+      (report, reads.value.longValue)
+    }
+    // DAY-partitioned append: the count rides the write's post-shuffle stage
+    val day = s"$out/day"
+    assert(loadCountingReads(day, daily = true, Some("ts")) == ((Sinks.LoadReport("day", 30, 30), 30L)))
+    assert(loadCountingReads(day, daily = true, Some("ts")) == ((Sinks.LoadReport("day", 30, 60), 30L)))
+    assert(spark.read.parquet(day).select("p_date").distinct().count() == 3)
+    // unpartitioned overwrite: truncate, so the total stays one load's rows
+    val full = s"$out/full"
+    assert(loadCountingReads(full, daily = false, None) == ((Sinks.LoadReport("full", 30, 30), 30L)))
+    assert(loadCountingReads(full, daily = false, None) == ((Sinks.LoadReport("full", 30, 30), 30L)))
+    // an empty write still reports its (zero) rows
+    assert(Sinks.writeCounted(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
+      s"$out/empty") == 0L)
+  }
+
+  test("a row count that never arrives fails the load by name instead of hanging") {
+    val e = intercept[IllegalStateException] {
+      Sinks.awaitObservedRows("warehouse/daily_log", org.apache.spark.sql.Observation(),
+        scala.concurrent.duration.FiniteDuration(50, "ms"))
+    }
+    assert(e.getMessage.contains("warehouse/daily_log"))
   }
 
   test("retention sweep drops only expired day= partitions, leaves foreign entries") {
