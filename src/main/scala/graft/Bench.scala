@@ -1,24 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.maxPlanStringLength", (8 << 20).toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // managed tables (bucketed-join round-trip) must never land in the
-      // repo cwd — the default warehouse dir is ${user.dir}/spark-warehouse
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse_bench")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate(warehouse = GraftSession.tmpWarehouse("bench"))
     // untimed warmup: JVM/codegen/parquet-footer costs land here, not on
     // whichever query happens to run first. Every query runs once at the
     // smallest available scale factor so each one's generated-code paths
@@ -50,7 +34,7 @@ object Bench {
     } catch { case _: Throwable => () }
     // Median-of-3: three full suite passes, each in a FRESH child session.
     // A child session (spark.newSession()) shares the SparkContext and JIT
-    // state but isolates the per-session FrameMemo cache, so every pass
+    // state but isolates the per-session SessionMemo cache, so every pass
     // rebuilds shared memoized frames exactly like the baseline's
     // fresh-JVM passes do — reps stay comparable to BASELINE.md instead of
     // re-measuring a warm cache. Suite order within each pass is the same

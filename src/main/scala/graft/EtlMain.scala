@@ -32,12 +32,6 @@ import graft.sources.Tables
   */
 object EtlMain {
 
-  /** Local-mode cores and shuffle partitions: `SPARK_GRAFT_CPUS` when set,
-    * else the cores the JVM has, so an unconfigured run fits its box.
-    */
-  private[graft] def localCpus(env: Map[String, String], availableProcessors: Int): String =
-    env.getOrElse("SPARK_GRAFT_CPUS", availableProcessors.toString)
-
   def main(args: Array[String]): Unit = {
     // accept both `--day=YYYY-MM-DD` and `--day YYYY-MM-DD`
     var dayOpt: Option[LocalDate] = None
@@ -79,16 +73,7 @@ object EtlMain {
     // getOrCreate returns it — and stopping a session this CLI didn't
     // create would yank it out from under the host.
     val preexisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val cpus = localCpus(sys.env, Runtime.getRuntime.availableProcessors)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate(master = sys.env.get("SPARK_MASTER"))
     // O4: dated-file run log (LOG_DIR config key; stdout always mirrors).
     // The file-name date comes from RunLog's own clock, so name and line
     // timestamps can never disagree across a midnight boundary.

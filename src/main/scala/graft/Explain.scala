@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection harness: prints the formatted physical plan for the
   * named queries (or a representative default set). Used to check the
   * scale-critical plan properties — PushedFilters reaching the parquet
@@ -14,16 +12,7 @@ object Explain {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("p6_date_predicate", "q5_region_revenue", "q3_top_orders",
         "d_minhash_lsh", "sim_knn_brute", "ss_sessionize")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.getOrCreate(cpus = "4")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

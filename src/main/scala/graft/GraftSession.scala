@@ -1,0 +1,57 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one local-mode session config every graft entry point, tool and
+  * spec runs on. Callers choose only what differs for a reason: a pinned
+  * core count, where managed tables live, and a master override.
+  */
+object GraftSession {
+
+  /** Local-mode cores and shuffle partitions: `SPARK_GRAFT_CPUS` when set,
+    * else the cores the JVM has, so an unconfigured run fits its box.
+    */
+  private[graft] def localCpus(env: Map[String, String], availableProcessors: Int): String =
+    env.getOrElse("SPARK_GRAFT_CPUS", availableProcessors.toString)
+
+  def cpus: String = localCpus(sys.env, Runtime.getRuntime.availableProcessors)
+
+  /** `getOrCreate` with the shared settings. An existing session is
+    * returned with the runtime settings re-applied.
+    *
+    * @param warehouse managed-table directory; unset keeps Spark's
+    *                  `${user.dir}/spark-warehouse`
+    * @param master    overrides `local[cpus]`
+    */
+  def getOrCreate(
+      cpus: String = GraftSession.cpus,
+      warehouse: Option[String] = None,
+      master: Option[String] = None): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(master.getOrElse(s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      // events.ts has shipped as TIMESTAMP(NANOS) (needs this flag to read
+      // as long nanos) and as timestamp[us]/NTZ; Tables.load normalizes
+      // both to a session-zone micros timestamp. Harmless on non-NANOS
+      // corpora.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.adaptive.enabled", "true")
+      // cap AQE's per-stage plan-change logging: a plan whose printed tree
+      // expands shared subtrees can otherwise burn the driver building a
+      // string nobody reads
+      .config("spark.sql.maxPlanStringLength", (8 << 20).toString)
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+    warehouse.foreach(builder.config("spark.sql.warehouse.dir", _))
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** A per-tool warehouse under the JVM temp dir, so managed tables never
+    * land in the working directory.
+    */
+  def tmpWarehouse(name: String): Option[String] =
+    Some(s"${sys.props("java.io.tmpdir")}/graft_warehouse_$name")
+}

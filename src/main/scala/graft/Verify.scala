@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,26 +14,7 @@ object Verify {
         if (args(2) == "certs") Some(SparkEntry.certificateQueries)
         else Some(args(2).split(",").toSet)
       } else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts has shipped as TIMESTAMP(NANOS) (needs this flag to read
-      // as long nanos) and as timestamp[us]/NTZ; Tables.load normalizes
-      // both to a session-zone micros timestamp. Harmless on non-NANOS
-      // corpora.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.maxPlanStringLength", (8 << 20).toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // managed tables (bucketed-join round-trip) must never land in the
-      // repo cwd — the default warehouse dir is ${user.dir}/spark-warehouse
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse_verify")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate(warehouse = GraftSession.tmpWarehouse("verify"))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -436,7 +436,7 @@ object Dedup {
     // (k, bands)-dependent strings, so querying a k=16/bands=8 index with
     // the bands=4 defaults would return ZERO pairs silently — the
     // worst possible failure for a dedup gate
-    val m = graft.sources.MetaMemo.cachedHead(spark, s"${tp}_meta")
+    val m = graft.SessionMemo.cachedHead(spark, s"${tp}_meta")
     val (ik, ib) = (m.getInt(0), m.getInt(1))
     require(ik == k && ib == bands,
       s"index '$tablePrefix' was written with k=$ik bands=$ib but queried " +
@@ -490,7 +490,7 @@ object Dedup {
       threshold: Double = 0.7): DataFrame = {
     val spark = newSigs.sparkSession
     val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    val m = graft.sources.MetaMemo.cachedHead(spark, s"${tp}_meta")
+    val m = graft.SessionMemo.cachedHead(spark, s"${tp}_meta")
     val (k, bands, buckets) = (m.getInt(0), m.getInt(1), m.getInt(2))
     val cached = newSigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -682,7 +682,7 @@ object Dedup {
       idCol: String,
       toks: Column): Unit = {
     val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    val n = graft.sources.MetaMemo.cachedHead(spark, s"${tp}_meta").getInt(0)
+    val n = graft.SessionMemo.cachedHead(spark, s"${tp}_meta").getInt(0)
     val delCounts = deletedDocs
       .select(col(idCol).as("id"), toks.as("tk"))
       .select(col("id"), explode(array_distinct(wordShingles(col("tk"), n))).as("gram"))
@@ -1802,7 +1802,7 @@ object Dedup {
     require(minRun >= 1, s"minRun=$minRun must be >= 1")
     val spark = newDocs.sparkSession
     val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    val n = graft.sources.MetaMemo.cachedHead(spark, s"${tp}_meta").getInt(0)
+    val n = graft.SessionMemo.cachedHead(spark, s"${tp}_meta").getInt(0)
     val grams = newDocs
       .select(col(idCol).as("id"), toks.as("tk"))
       .select(col("id"), posexplode(wordShingles(col("tk"), n)))
@@ -1848,7 +1848,7 @@ object Dedup {
       batchId: Long = -1L): Unit = {
     val spark = batch.sparkSession
     val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    val m = graft.sources.MetaMemo.cachedHead(spark, s"${tp}_meta")
+    val m = graft.SessionMemo.cachedHead(spark, s"${tp}_meta")
     val (n, buckets) = (m.getInt(0), m.getInt(1))
     val counts = batch
       .select(col(idCol).as("id"), toks.as("tk"))
@@ -1881,7 +1881,7 @@ object Dedup {
     require(minRun >= 1, s"minRun=$minRun must be >= 1")
     val spark = dayDocs.sparkSession
     val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    val n = graft.sources.MetaMemo.cachedHead(spark, s"${tp}_meta").getInt(0)
+    val n = graft.SessionMemo.cachedHead(spark, s"${tp}_meta").getInt(0)
     val dupGrams = spark.table(s"${tp}_grams")
       .groupBy("gram").agg(sum("n_docs").as("df"))
       .filter(col("df") >= 2)

@@ -440,15 +440,15 @@ object LinearModel {
       predCol: String = "pred"): DataFrame = {
     val spark = feats.sparkSession
     val tp = Sinks.activeTablePrefix(spark, tablePrefix)
-    // generation-immutable model state memoized per session (r16,
-    // MetaMemo): serving parities re-read weights + meta per micro-batch
-    val rows = graft.sources.MetaMemo.cached(spark, s"${tp}_meta", "weights") {
+    // generation-immutable model state memoized per session
+    // (SessionMemo): serving parities re-read weights + meta per micro-batch
+    val rows = graft.SessionMemo.cached(spark, s"${tp}_meta", "weights") {
       spark.table(s"${tp}_weights")
         .orderBy("j").select("feature", "w").collect()
     }
     val names = rows.map(_.getString(0)).toSeq
     val w = rows.map(_.getDouble(1)).toSeq
-    val d = graft.sources.MetaMemo.cachedHead(spark, s"${tp}_meta").getInt(0)
+    val d = graft.SessionMemo.cachedHead(spark, s"${tp}_meta").getInt(0)
     require(d == w.size,
       s"model '$tablePrefix': _meta says $d weights, _weights has ${w.size}")
     scoreSquashedLinear(feats, names, w, scoreCol, predCol)

@@ -583,8 +583,8 @@ object Similarity {
       embCol: String): DataFrame = {
     val spark = batch.sparkSession
     val tp = activeIvfPrefix(spark, tablePrefix)
-    // stored model is generation-immutable — memoized per session (r16,
-    // MetaMemo): the centroid scan + the separate dim head were two
+    // stored model is generation-immutable — memoized per session
+    // (SessionMemo): the centroid scan + the separate dim head were two
     // driver jobs per serving micro-batch
     val (cents, dim) = cachedCentsLocal(spark, tp)
     // the dimension contract comes from the STORED model, not from batch
@@ -979,11 +979,11 @@ object Similarity {
   /** The `_meta` head row of a RESOLVED generation prefix, memoized per
     * session (r16): generation metadata is immutable — every rewrite of a
     * family under the same name rewrites `_meta` and therefore the
-    * [[graft.sources.MetaMemo]] fingerprint the entry is keyed on.
+    * [[graft.SessionMemo]] fingerprint the entry is keyed on.
     */
   private def cachedMetaRow(
       spark: org.apache.spark.sql.SparkSession, tp: String): org.apache.spark.sql.Row =
-    graft.sources.MetaMemo.cached(spark, s"${tp}_meta", "meta") {
+    graft.SessionMemo.cached(spark, s"${tp}_meta", "meta") {
       spark.table(s"${tp}_meta").head()
     }
 
@@ -996,7 +996,7 @@ object Similarity {
     */
   private def cachedCentsLocal(
       spark: org.apache.spark.sql.SparkSession, tp: String): (DataFrame, Int) = {
-    val rows = graft.sources.MetaMemo.cached(spark, s"${tp}_meta", "cents") {
+    val rows = graft.SessionMemo.cached(spark, s"${tp}_meta", "cents") {
       spark.table(s"${tp}_cents").collect()
     }
     // the old dim probe read size(cvec) of the scan's first row — the
@@ -1012,7 +1012,7 @@ object Similarity {
   private def cachedBooks(
       spark: org.apache.spark.sql.SparkSession, tp: String,
       m: Int, ks: Int): Array[Array[Array[Double]]] =
-    graft.sources.MetaMemo.cached(spark, s"${tp}_meta", "books") {
+    graft.SessionMemo.cached(spark, s"${tp}_meta", "books") {
       val books = Array.fill(m, ks)(Array.empty[Double])
       spark.table(s"${tp}_books").collect().foreach { r =>
         books(r.getInt(0))(r.getLong(1).toInt - 1) = r.getSeq[Double](2).toArray
@@ -1101,7 +1101,7 @@ object Similarity {
       embCol: String): Unit = {
     val spark = newVecs.sparkSession
     val tp = activeIvfPrefix(spark, tablePrefix)
-    // generation-immutable metadata memoized per session (r16, MetaMemo):
+    // generation-immutable metadata memoized per session (SessionMemo):
     // the meta head, the centroid set and its dimension cost ~3 driver
     // jobs per micro-batch when re-read every append
     val meta = cachedMetaRow(spark, tp)
@@ -1409,8 +1409,8 @@ object Similarity {
       candidateHook: DataFrame => DataFrame = identity): DataFrame = {
     val spark = queries.sparkSession
     val tp = activeIvfPrefix(spark, tablePrefix)
-    // generation-immutable model state memoized per session (r16,
-    // MetaMemo): the meta head + the centroid scan behind the probe
+    // generation-immutable model state memoized per session
+    // (SessionMemo): the meta head + the centroid scan behind the probe
     // broadcast were two driver jobs per probe call
     val meta = cachedMetaRow(spark, tp)
     val nlist = metaInt(meta, "nlist", meta.getInt(0))
@@ -1586,7 +1586,7 @@ object Similarity {
     // meta fields read by NAME: an ordinal read would silently swap
     // m/ks/subDim if the meta schema ever reordered — poisoned appends.
     // meta/books/cents are generation-immutable and memoized per session
-    // (r16, MetaMemo) — re-collecting them cost ~3 driver jobs per
+    // (SessionMemo) — re-collecting them cost ~3 driver jobs per
     // micro-batch
     val meta = cachedMetaRow(spark, tp)
     val (m, ks, subDim, buckets) =
@@ -1788,7 +1788,7 @@ object Similarity {
     val spark = queries.sparkSession
     val tp = activeIvfPrefix(spark, tablePrefix)
     // by-name meta reads — see appendToIvfPqIndex. meta/books/cents are
-    // generation-immutable and memoized per session (r16, MetaMemo):
+    // generation-immutable and memoized per session (SessionMemo):
     // re-collecting them cost ~3 driver jobs per probe call
     val meta = cachedMetaRow(spark, tp)
     val (nlist, m, subDim) = (metaInt(meta, "nlist", meta.getInt(0)),

@@ -1049,7 +1049,7 @@ object Text {
       tablePrefix: String): DataFrame = {
     val spark = words.sparkSession
     val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    val maxLen = graft.sources.MetaMemo.cachedHead(spark, s"${tp}_meta").getInt(0)
+    val maxLen = graft.SessionMemo.cachedHead(spark, s"${tp}_meta").getInt(0)
     val lp = spark.table(s"${tp}_pieces").select("piece", "lp").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     words.withColumn("__vit",
@@ -1388,8 +1388,8 @@ object Text {
     // (knScoreAgainstStats), where exchange reuse already dedupes them
     // within one scoring job and a checkpoint measured 2× slower.
     val key = s"knfold:${tp}_cab@" +
-      graft.sources.MetaMemo.tableFingerprint(spark, s"${tp}_cab")
-    val cab = graft.queries.FrameMemo.getOrCompute(spark, key) {
+      graft.SessionMemo.tableFingerprint(spark, s"${tp}_cab")
+    val cab = graft.SessionMemo.getOrCompute(spark, key) {
       spark.table(s"${tp}_cab")
         .groupBy("a", "b").agg(sum("cab").as("cab"))
         .filter(col("cab") > 0)
@@ -1421,7 +1421,7 @@ object Text {
       .groupBy("a", "b").agg(sum("cab").as("cab"))
       .filter(col("cab") > 0)
       .localCheckpoint(true) // sever from the tables the cutover retires
-    val order = graft.sources.MetaMemo.cachedHead(spark, s"${tp}_meta").getInt(0)
+    val order = graft.SessionMemo.cachedHead(spark, s"${tp}_meta").getInt(0)
     graft.sources.Sinks.rebuildCutover(spark, tablePrefix, KnSuffixes) { g =>
       folded.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .format("parquet").saveAsTable(s"${g}_cab")
@@ -1527,36 +1527,36 @@ object Text {
     // per-generation constants; the global tallies collapse to collected
     // LocalRelations whose broadcasts build with no job
     val key = s"knfold:${tp}_cabc@" +
-      graft.sources.MetaMemo.tableFingerprint(spark, s"${tp}_cabc")
-    val cabc = graft.queries.FrameMemo.getOrCompute(spark, key) {
+      graft.SessionMemo.tableFingerprint(spark, s"${tp}_cabc")
+    val cabc = graft.SessionMemo.getOrCompute(spark, key) {
       spark.table(s"${tp}_cabc")
         .groupBy("a", "b", "c").agg(sum("cabc").as("cabc"))
         .filter(col("cabc") > 0)
         .localCheckpoint(true)
     }
-    val cont = graft.queries.FrameMemo.getOrCompute(spark, s"$key/cont") {
+    val cont = graft.SessionMemo.getOrCompute(spark, s"$key/cont") {
       kn3DerivedCont(cabc).localCheckpoint(true)
     }
-    val ab = graft.queries.FrameMemo.getOrCompute(spark, s"$key/ab") {
+    val ab = graft.SessionMemo.getOrCompute(spark, s"$key/ab") {
       kn3DerivedAb(cabc).localCheckpoint(true)
     }
-    val bmid = graft.queries.FrameMemo.getOrCompute(spark, s"$key/bmid") {
+    val bmid = graft.SessionMemo.getOrCompute(spark, s"$key/bmid") {
       kn3DerivedBmid(cont).localCheckpoint(true)
     }
-    val cc = graft.queries.FrameMemo.getOrCompute(spark, s"$key/cc") {
+    val cc = graft.SessionMemo.getOrCompute(spark, s"$key/cc") {
       kn3DerivedCc(cont).localCheckpoint(true)
     }
-    val g3 = graft.queries.FrameMemo.getOrCompute(spark, s"$key/g3") {
+    val g3 = graft.SessionMemo.getOrCompute(spark, s"$key/g3") {
       val r = kn3DerivedG3(cabc).head()
       spark.createDataFrame(Seq((r.getLong(0), r.getLong(1))))
         .toDF("n1_3", "n2_3")
     }
-    val g2 = graft.queries.FrameMemo.getOrCompute(spark, s"$key/g2") {
+    val g2 = graft.SessionMemo.getOrCompute(spark, s"$key/g2") {
       val r = kn3DerivedG2(cont).head()
       spark.createDataFrame(Seq((r.getLong(0), r.getLong(1))))
         .toDF("n1_2", "n2_2")
     }
-    val gBg = graft.queries.FrameMemo.getOrCompute(spark, s"$key/gbg") {
+    val gBg = graft.SessionMemo.getOrCompute(spark, s"$key/gbg") {
       val r = kn3DerivedGBg(cont).head()
       spark.createDataFrame(Seq(Tuple1(r.getLong(0)))).toDF("nbg")
     }
@@ -1574,7 +1574,7 @@ object Text {
       .groupBy("a", "b", "c").agg(sum("cabc").as("cabc"))
       .filter(col("cabc") > 0)
       .localCheckpoint(true) // sever from the tables the cutover retires
-    val order = graft.sources.MetaMemo.cachedHead(spark, s"${tp}_meta").getInt(0)
+    val order = graft.SessionMemo.cachedHead(spark, s"${tp}_meta").getInt(0)
     graft.sources.Sinks.rebuildCutover(spark, tablePrefix, Kn3Suffixes) { g =>
       folded.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .format("parquet").saveAsTable(s"${g}_cabc")

@@ -125,7 +125,7 @@ object TextIndex {
       batchId: Long = -1L): Unit = {
     val spark = newDocs.sparkSession
     val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    val buckets = graft.sources.MetaMemo.cachedHead(spark, s"${tp}_meta").getInt(2)
+    val buckets = graft.SessionMemo.cachedHead(spark, s"${tp}_meta").getInt(2)
     // an ingested id must be NEW to the index — both collision classes
     // fail loudly, in one probe job (union of two semi-joins, limit 1):
     //   - TOMBSTONED: appending fresh postings/doclens for it would (a)
@@ -287,7 +287,7 @@ object TextIndex {
     */
   def repairTextIndexStats(spark: SparkSession, tablePrefix: String): DataFrame = {
     val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    val buckets = graft.sources.MetaMemo.cachedHead(spark, s"${tp}_meta").getInt(2)
+    val buckets = graft.SessionMemo.cachedHead(spark, s"${tp}_meta").getInt(2)
     val stored = spark.table(s"${tp}_stats")
       .agg(coalesce(sum("n_docs"), lit(0L)), coalesce(sum("tot_dl"), lit(0L)))
       .head()
@@ -775,7 +775,7 @@ object TextIndex {
     require(queryTerms.nonEmpty, "bm25MaxScoreAgainstIndex: no query terms")
     require(kTop >= 1, s"kTop=$kTop must be positive")
     val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    val m = graft.sources.MetaMemo.cachedHead(spark, s"${tp}_meta")
+    val m = graft.SessionMemo.cachedHead(spark, s"${tp}_meta")
     val (k1, b) = (m.getDouble(0), m.getDouble(1))
     val nDocs = spark.table(s"${tp}_stats")
       .agg(coalesce(sum("n_docs"), lit(0L))).head().getLong(0)
@@ -867,7 +867,7 @@ object TextIndex {
     require(maxDfFrac > 0 && maxDfFrac <= 1.0,
       s"maxDfFrac=$maxDfFrac must be in (0, 1]")
     val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    val m = graft.sources.MetaMemo.cachedHead(spark, s"${tp}_meta")
+    val m = graft.SessionMemo.cachedHead(spark, s"${tp}_meta")
     val (k1, b) = (m.getDouble(0), m.getDouble(1))
     val stats = spark.table(s"${tp}_stats")
       .agg(sum("n_docs").as("n_docs"), sum("tot_dl").as("tot_dl"))
@@ -996,7 +996,7 @@ object TextIndex {
       "bm25MaxScoreBatchAgainstIndex: every query needs at least one term")
     require(kTop >= 1, s"kTop=$kTop must be positive")
     val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    val m = graft.sources.MetaMemo.cachedHead(spark, s"${tp}_meta")
+    val m = graft.SessionMemo.cachedHead(spark, s"${tp}_meta")
     val (k1, b) = (m.getDouble(0), m.getDouble(1))
     val nDocs = spark.table(s"${tp}_stats")
       .agg(coalesce(sum("n_docs"), lit(0L))).head().getLong(0)
@@ -1158,7 +1158,7 @@ object TextIndex {
       k1: Double,
       b: Double): Long = {
     val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    val buckets = graft.sources.MetaMemo.cachedHead(spark, s"${tp}_meta").getInt(2)
+    val buckets = graft.SessionMemo.cachedHead(spark, s"${tp}_meta").getInt(2)
     val meta = spark.createDataFrame(Seq((k1, b, buckets)))
       .toDF("k1", "b", "buckets")
     graft.sources.Sinks.compactFamilyCutover(spark, tablePrefix, Suffixes,

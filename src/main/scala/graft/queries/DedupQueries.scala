@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SessionMemo
 import graft.functions.CrossHash
 import graft.operators.{Dedup, Sampling, Similarity, Text}
 import graft.sources.Tables
@@ -35,12 +36,12 @@ object DedupQueries {
     * incremental/indexed/rebuild/band-stats family and StreamQueries'
     * index seeds all consume the SAME per-document signatures — one
     * corpus-wide frame per (session, dir), materialized once
-    * ([[FrameMemo]]); registered in [[SharedFrames]] so the bench charges
+    * ([[SessionMemo]]); registered in [[SharedFrames]] so the bench charges
     * its build to the dedicated shared-frame entry, not to whichever
     * consumer runs first.
     */
   private[queries] def minhashSigsFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"minhash_sigs_w3:$d") {
+    SessionMemo.getOrCompute(s, s"minhash_sigs_w3:$d") {
       Dedup.minhashSignatures(
         docsTk(s, d), "doc_id", tkShingles(3), k = 16)
         .localCheckpoint(true)
@@ -56,7 +57,7 @@ object DedupQueries {
     */
   private[queries] def ensureMinhashBase(s: SparkSession, d: String): String = {
     val prefix = s"mh_base_${ScratchKeys.forPath(d)}"
-    IndexMemo.ensure(s, s"mh_base:$d") {
+    SessionMemo.ensure(s, s"mh_base:$d") {
       Seq(s"${prefix}_bands", s"${prefix}_sigs", s"${prefix}_meta")
         .foreach(graft.sources.Sinks.dropManagedTable(s, _))
       Dedup.writeMinhashIndex(
@@ -75,7 +76,7 @@ object DedupQueries {
     * both the audit and the rewrite.
     */
   private[queries] def dupSpansFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"dup_spans_w5:$d") {
+    SessionMemo.getOrCompute(s, s"dup_spans_w5:$d") {
       Dedup.dupSpans(docsTk(s, d), "doc_id", col("__tk"),
           n = 5, minDocs = 2, minRun = 2)
         .localCheckpoint(true)
@@ -88,7 +89,7 @@ object DedupQueries {
     * n_grams, n_dup, dup_frac), doc-count-sized.
     */
   private[queries] def dupCoverageFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"dup_cov_w5:$d") {
+    SessionMemo.getOrCompute(s, s"dup_cov_w5:$d") {
       Dedup.dupGramCoverage(t(s, d, "documents"), "doc_id", toks,
           n = 5, minDocs = 2)
         .localCheckpoint(true)
@@ -103,11 +104,11 @@ object DedupQueries {
     * frame from [[Dedup.minhashPairs]] is computed once per
     * (session, data dir) and reused, instead of re-running the full
     * shingle→signature→band-join pipeline per consumer. Memoized via
-    * [[FrameMemo]] (weak session keys, soft frame refs); the frame is
+    * [[SessionMemo]] (weak session keys, soft frame refs); the frame is
     * already eagerly materialized by `minhashPairs` itself.
     */
   private[queries] def minhashPairEdges(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"minhash_pairs:$d") {
+    SessionMemo.getOrCompute(s, s"minhash_pairs:$d") {
       Dedup.minhashPairs(
         docsTk(s, d), "doc_id", tkShingles(3),
         k = 16, bands = 4, threshold = 0.7, assumeUnboundedVocab = true)
@@ -119,7 +120,7 @@ object DedupQueries {
     * both consumers reuse.
     */
   private[queries] def simhashFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"simhash_w3:$d") {
+    SessionMemo.getOrCompute(s, s"simhash_w3:$d") {
       Dedup.simhash(docsTk(s, d), "doc_id", tkShingles(3))
         .localCheckpoint(true)
     }
@@ -136,7 +137,7 @@ object DedupQueries {
     * degenerating to one tile at test scale.
     */
   private[queries] def embeddingPairEdges(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"emb_pairs:$d") {
+    SessionMemo.getOrCompute(s, s"emb_pairs:$d") {
       Dedup.embeddingPairs(
           t(s, d, "embeddings"), "vec_id", "embedding", "label", threshold = 0.38,
           chunkRows = 256)

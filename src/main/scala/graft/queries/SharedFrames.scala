@@ -2,8 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The suite's shared memoized frames ([[FrameMemo]]), enumerated in one
-  * place so the bench can build them in a DEDICATED timed step before
+/** The suite's shared memoized frames ([[graft.SessionMemo]]), enumerated
+  * in one place so the bench can build them in a DEDICATED timed step before
   * per-query timing. Without this, a shared frame's build cost lands on
   * whichever consumer runs first in a pass — and when memory pressure
   * clears a soft reference or evicts checkpoint blocks mid-pass, on a

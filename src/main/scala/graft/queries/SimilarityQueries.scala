@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SessionMemo
 import graft.operators.Similarity
 import graft.sources.Tables
 
@@ -35,7 +36,7 @@ object SimilarityQueries {
     */
   private[queries] def ensureIvfBase(s: SparkSession, d: String): String = {
     val prefix = s"ivf_base_${ScratchKeys.forPath(d)}"
-    IndexMemo.ensure(s, s"ivf_base:$d") {
+    SessionMemo.ensure(s, s"ivf_base:$d") {
       Seq(s"${prefix}_lists", s"${prefix}_cents", s"${prefix}_meta")
         .foreach(graft.sources.Sinks.dropManagedTable(s, _))
       Similarity.writeIvfIndex(emb(s, d), "vec_id", "embedding", prefix,
@@ -46,7 +47,7 @@ object SimilarityQueries {
 
   private[queries] def ensureIvfPqBase(s: SparkSession, d: String): String = {
     val prefix = s"ivfpq_base_${ScratchKeys.forPath(d)}"
-    IndexMemo.ensure(s, s"ivfpq_base:$d") {
+    SessionMemo.ensure(s, s"ivfpq_base:$d") {
       Seq(s"${prefix}_codes", s"${prefix}_vecs", s"${prefix}_cents",
           s"${prefix}_books", s"${prefix}_meta")
         .foreach(graft.sources.Sinks.dropManagedTable(s, _))
@@ -63,7 +64,7 @@ object SimilarityQueries {
     * suite-shared frame and pre-built by Bench via [[SharedFrames]].
     */
   private[queries] def kmeansAssignFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"kmeans_k8_i2:$d") {
+    SessionMemo.getOrCompute(s, s"kmeans_k8_i2:$d") {
       Similarity.kmeansAssign(emb(s, d), "vec_id", "embedding", k = 8, iters = 2)
         .localCheckpoint(true)
     }
@@ -166,8 +167,8 @@ object SimilarityQueries {
     * EXACT via MaxScore's lossless pruning; dense side ANN), so the only
     * loss is dense-probe recall amplified by the greedy chain — measured
     * min per-query overlap 0.875 / 0.875 / 1.000 at sf0.001 / 0.01 /
-    * 0.1 (tools/ProfileScratch ragbatchmmr, 2026-08-16; dated note in
-    * BASELINE.md); floor ~0.125 under the worst measured point, the
+    * 0.1 (BASELINE.md "sim_rag_batch_mmr served-chain floor (dated
+    * pin)", 2026-08-16); floor ~0.125 under the worst measured point, the
     * sibling floors' policy.
     */
   val RagBatchMmrFloor = 0.75
@@ -224,8 +225,8 @@ object SimilarityQueries {
   /** Top-15 overlap floor for the end-to-end RAG retrieval
     * (`sim_rag_retrieve`): both SERVED tiers (filtered IVF probe at
     * nprobe=8, filtered BM25 probe) fused with RRF must recover the
-    * exactly-fused top-15. Measured (tools/ProfileScratch `rag`,
-    * 2026-08-15): 0.800 / 0.867 / 0.933 at sf0.001 / 0.01 / 0.1 — the
+    * exactly-fused top-15. Measured (BASELINE.md "r11 RAG retrieval
+    * overlap", 2026-08-15): 0.800 / 0.867 / 0.933 at sf0.001 / 0.01 / 0.1 — the
     * only loss is dense-tier ANN recall (the sparse tier is exact), RRF's
     * rank discounting dampens it, and the overlap IMPROVES with corpus
     * size as probed cells densify. Floor at the smallest corpus's
@@ -407,13 +408,13 @@ object SimilarityQueries {
     // sibling entry was collected, ONE shared rebuild re-seeds both —
     // the old getOrCompute pair re-ran the entire exact tier (brute
     // top-k + three corpus BM25 passes) just to rebuild the served side.
-    (FrameMemo.peek(s, s"rag_fused_exact:$d"),
-        FrameMemo.peek(s, s"rag_fused_served:$d")) match {
+    (SessionMemo.peek(s, s"rag_fused_exact:$d"),
+        SessionMemo.peek(s, s"rag_fused_served:$d")) match {
       case (Some(ex), Some(sv)) => (ex, sv)
       case _ =>
         val (ex, sv) = ragBatchFusedBuild(s, d)
-        FrameMemo.put(s, s"rag_fused_exact:$d", ex)
-        FrameMemo.put(s, s"rag_fused_served:$d", sv)
+        SessionMemo.put(s, s"rag_fused_exact:$d", ex)
+        SessionMemo.put(s, s"rag_fused_served:$d", sv)
         (ex, sv)
     }
   }

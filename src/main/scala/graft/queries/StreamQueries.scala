@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 import graft.streaming.EventStreams
@@ -176,6 +177,15 @@ object StreamQueries {
     try body finally prev.foreach { case (k, v) => s.conf.set(k, v) }
   }
 
+  /** Start the configured `writer` and run it until its bounded input is
+    * consumed, under [[withStreamPartitions]]; stops the query either way.
+    */
+  private def drainStream(s: SparkSession)(writer: => DataStreamWriter[_]): Unit =
+    withStreamPartitions(s) {
+      val q = writer.start()
+      try q.processAllAvailable() finally q.stop()
+    }
+
   /** Run the parity's stream-INDEPENDENT reference/certificate work on its
     * own thread while the micro-batches drain (guide §2.6 — overlap
     * independent jobs: Spark's scheduler runs several jobs at once; the
@@ -340,9 +350,8 @@ object StreamQueries {
 
   private def drain(df: DataFrame, name: String, mode: String): DataFrame = {
     val spark = df.sparkSession
-    withStreamPartitions(spark) {
-      val q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
-      try q.processAllAvailable() finally q.stop()
+    drainStream(spark) {
+      df.writeStream.format("memory").queryName(name).outputMode(mode)
     }
     spark.table(name)
   }
@@ -538,13 +547,11 @@ object StreamQueries {
           try mat.write.mode("overwrite").parquet(target)
           finally mat.unpersist()
         }
-        withStreamPartitions(s) {
-          val q = eventsStreamSplit(s, d).writeStream
+        drainStream(s) {
+          eventsStreamSplit(s, d).writeStream
             .option("checkpointLocation", s"$scratch/chk")
             .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                 _: Long) => mergeBatch(batch.toDF()))
-            .start()
-          try q.processAllAvailable() finally q.stop()
         }
         s.read.parquet(target)
           .select(col("user_id"), col("n_events"),
@@ -600,8 +607,8 @@ object StreamQueries {
         // the certificate's corpus count is stream-independent — computed
         // while the drain runs (guide §2.6, see `overlapping`)
         val nDocs = overlapping(docs.count()) {
-          withStreamPartitions(s) {
-            val q = s.readStream.schema(s.read.parquet(splitDir.toString).schema)
+          drainStream(s) {
+            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
               .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
               .writeStream
               .option("checkpointLocation", s"$scratch/chk")
@@ -617,8 +624,6 @@ object StreamQueries {
                     sigs, prefix, bid, threshold = 0.7)
                   .foreach(_.write.mode("append").parquet(pairsDir))
               })
-              .start()
-            try q.processAllAvailable() finally q.stop()
           }
         }
         // resolution-safe: a retried batch's scrub advances a generation
@@ -678,16 +683,14 @@ object StreamQueries {
       val survivors = try {
         overlapping(docs
             .filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 3 =!= 0).count()) {
-          withStreamPartitions(s) {
-            val q = s.readStream.schema(s.read.parquet(delDir.toString).schema)
+          drainStream(s) {
+            s.readStream.schema(s.read.parquet(delDir.toString).schema)
               .option("maxFilesPerTrigger", 1).parquet(delDir.toString)
               .writeStream
               .option("checkpointLocation", s"$scratch/chk")
               .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                   _: Long) =>
                 Dedup.deleteFromMinhashIndex(s, prefix, batch.toDF()))
-              .start()
-            try q.processAllAvailable() finally q.stop()
           }
         }
       } finally deleteRecursively(scratch)
@@ -751,8 +754,8 @@ object StreamQueries {
                 e.filter(col("vec_id") % 50 === 0), e, "vec_id", "embedding", k = 3)
               .localCheckpoint(true))
         } {
-          withStreamPartitions(s) {
-            val q = s.readStream.schema(s.read.parquet(waveDir.toString).schema)
+          drainStream(s) {
+            s.readStream.schema(s.read.parquet(waveDir.toString).schema)
               .option("maxFilesPerTrigger", 1).parquet(waveDir.toString)
               .writeStream
               .option("checkpointLocation", s"$scratch/chk")
@@ -771,8 +774,6 @@ object StreamQueries {
                     prefix, buckets = 8, nlist = 16, iters = 3,
                     assign = SimilarityQueries.IvfAssign))
               })
-              .start()
-            try q.processAllAvailable() finally q.stop()
           }
         }
         val probes = s.read.parquet(probeDir)
@@ -857,8 +858,8 @@ object StreamQueries {
                 e.filter(col("vec_id") % 50 === 0), e, "vec_id", "embedding", k = 3)
               .localCheckpoint(true))
         } {
-          withStreamPartitions(s) {
-            val q = s.readStream.schema(s.read.parquet(splitDir.toString).schema)
+          drainStream(s) {
+            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
               .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
               .writeStream
               .option("checkpointLocation", s"$scratch/chk")
@@ -867,8 +868,6 @@ object StreamQueries {
                 // production append body: batchId-keyed exactly-once
                 Similarity.exactlyOnceAppendToIvfIndex(
                   batch.toDF(), prefix, "vec_id", "embedding", bid): Unit)
-              .start()
-            try q.processAllAvailable() finally q.stop()
           }
         }
       } finally deleteRecursively(scratch)
@@ -936,8 +935,8 @@ object StreamQueries {
         s, prefix, Dedup.connectedComponentsStar(oldEdges), 8)
       val scratch = java.nio.file.Files.createTempDirectory("graft_stream_cc_")
       try {
-        withStreamPartitions(s) {
-          val q = s.readStream.schema(s.read.parquet(splitDir.toString).schema)
+        drainStream(s) {
+          s.readStream.schema(s.read.parquet(splitDir.toString).schema)
             .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
             .writeStream
             .option("checkpointLocation", s"$scratch/chk")
@@ -948,8 +947,6 @@ object StreamQueries {
               graft.sources.Sinks.updateLabelTable(s, prefix, updated, 8)
               ()
             })
-            .start()
-          try q.processAllAvailable() finally q.stop()
         }
       } finally deleteRecursively(scratch)
       docs.select("doc_id")
@@ -1001,8 +998,8 @@ object StreamQueries {
             .localCheckpoint(true)
           (os, br)
         } {
-          withStreamPartitions(s) {
-            val q = s.readStream.schema(s.read.parquet(splitDir.toString).schema)
+          drainStream(s) {
+            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
               .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
               .writeStream
               .option("checkpointLocation", s"$scratch/chk")
@@ -1013,8 +1010,6 @@ object StreamQueries {
                     k = 3, nprobe = SimilarityQueries.IvfNprobe)
                   .withColumn("batch_id", lit(bid))
                   .write.mode("append").parquet(resultsDir): Unit)
-              .start()
-            try q.processAllAvailable() finally q.stop()
           }
         }
         val streamed = s.read.parquet(resultsDir).localCheckpoint(true)
@@ -1069,8 +1064,8 @@ object StreamQueries {
         // PERSISTED model matches it). Stream-independent — computed
         // while the drain runs (guide §2.6, see `overlapping`)
         val oneShot = overlapping(SimilarityQueries.kmeansAssignFrame(s, d)) {
-          withStreamPartitions(s) {
-            val q = s.readStream.schema(s.read.parquet(splitDir.toString).schema)
+          drainStream(s) {
+            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
               .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
               .writeStream
               .option("checkpointLocation", s"$scratch/chk")
@@ -1080,8 +1075,6 @@ object StreamQueries {
                     "vec_id", "embedding")
                   .withColumn("batch_id", lit(bid))
                   .write.mode("append").parquet(resultsDir): Unit)
-              .start()
-            try q.processAllAvailable() finally q.stop()
           }
         }
         val streamed = s.read.parquet(resultsDir).localCheckpoint(true)
@@ -1135,8 +1128,8 @@ object StreamQueries {
             .select("doc_id", "score", "pred")
             .localCheckpoint(true)
         } {
-          withStreamPartitions(s) {
-            val q = s.readStream.schema(s.read.parquet(splitDir.toString).schema)
+          drainStream(s) {
+            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
               .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
               .writeStream
               .option("checkpointLocation", s"$scratch/chk")
@@ -1147,8 +1140,6 @@ object StreamQueries {
                   .select(col("doc_id"), col("score"), col("pred"),
                     lit(bid).as("batch_id"))
                   .write.mode("append").parquet(resultsDir): Unit)
-              .start()
-            try q.processAllAvailable() finally q.stop()
           }
         }
         val streamed = s.read.parquet(resultsDir).localCheckpoint(true)
@@ -1201,8 +1192,8 @@ object StreamQueries {
             .select("doc_id", "score", "cal_score")
             .localCheckpoint(true)
         } {
-          withStreamPartitions(s) {
-            val q = s.readStream.schema(s.read.parquet(splitDir.toString).schema)
+          drainStream(s) {
+            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
               .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
               .writeStream
               .option("checkpointLocation", s"$scratch/chk")
@@ -1213,8 +1204,6 @@ object StreamQueries {
                   .select(col("doc_id"), col("score"), col("cal_score"),
                     lit(bid).as("batch_id"))
                   .write.mode("append").parquet(resultsDir): Unit)
-              .start()
-            try q.processAllAvailable() finally q.stop()
           }
         }
         val streamed = s.read.parquet(resultsDir).localCheckpoint(true)
@@ -1283,8 +1272,8 @@ object StreamQueries {
           ps.toDF("pattern").coalesce(1)
             .write.mode("append").parquet(patDir))
         val seen = new java.util.concurrent.atomic.AtomicLong(0L)
-        withStreamPartitions(s) {
-          val q = s.readStream.schema(s.read.parquet(patDir).schema)
+        drainStream(s) {
+          s.readStream.schema(s.read.parquet(patDir).schema)
             .option("maxFilesPerTrigger", 1).parquet(patDir)
             .writeStream
             .option("checkpointLocation", s"$scratch/chk")
@@ -1294,8 +1283,6 @@ object StreamQueries {
                 batch.select("pattern").collect().map(_.getString(0)).toSeq)
               seen.incrementAndGet(): Unit
             })
-            .start()
-          try q.processAllAvailable() finally q.stop()
         }
         val resolved = Text.resolveBlocklist(s, prefix)
         val ok = resolved == finalSet.sorted &&
@@ -1348,8 +1335,8 @@ object StreamQueries {
             .agg(count(lit(1)).as("n_words"), sum("n_pieces").as("n_subtoks"))
             .localCheckpoint(true)
         } {
-          withStreamPartitions(s) {
-            val q = s.readStream.schema(s.read.parquet(splitDir.toString).schema)
+          drainStream(s) {
+            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
               .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
               .writeStream
               .option("checkpointLocation", s"$scratch/chk")
@@ -1371,8 +1358,6 @@ object StreamQueries {
                   .withColumn("batch_id", lit(bid))
                   .write.mode("append").parquet(resultsDir): Unit
               })
-              .start()
-            try q.processAllAvailable() finally q.stop()
           }
         }
         val streamed = s.read.parquet(resultsDir).localCheckpoint(true)
@@ -1423,8 +1408,8 @@ object StreamQueries {
         val oneShot = overlapping {
           TextQueries.queries("tx_doremi_weights")(s, d).localCheckpoint(true)
         } {
-          withStreamPartitions(s) {
-            val q = s.readStream.schema(s.read.parquet(splitDir.toString).schema)
+          drainStream(s) {
+            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
               .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
               .writeStream
               .option("checkpointLocation", s"$scratch/chk")
@@ -1446,8 +1431,6 @@ object StreamQueries {
                   .withColumn("batch_id", lit(bid))
                   .write.mode("append").parquet(resultsDir): Unit
               })
-              .start()
-            try q.processAllAvailable() finally q.stop()
           }
         }
         val partials = s.read.parquet(resultsDir).localCheckpoint(true)
@@ -1499,13 +1482,13 @@ object StreamQueries {
         // stream-independent one-shot scoring against the frozen persisted
         // base — computed while the drain runs (guide §2.6, see
         // `overlapping`; the shared serving fold is single-flight in
-        // FrameMemo, so the race with batch 0 builds it exactly once)
+        // SessionMemo, so the race with batch 0 builds it exactly once)
         val oneShot = overlapping {
           Text.scoreAgainstKnModel(docs, "doc_id", toks, prefix)
             .withColumnRenamed("id", "doc_id").localCheckpoint(true)
         } {
-          withStreamPartitions(s) {
-            val q = s.readStream.schema(s.read.parquet(splitDir.toString).schema)
+          drainStream(s) {
+            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
               .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
               .writeStream
               .option("checkpointLocation", s"$scratch/chk")
@@ -1516,8 +1499,6 @@ object StreamQueries {
                   .withColumn("batch_id", lit(bid))
                   .write.mode("append").parquet(resultsDir): Unit
               })
-              .start()
-            try q.processAllAvailable() finally q.stop()
           }
         }
         val streamed = s.read.parquet(resultsDir).localCheckpoint(true)
@@ -1557,13 +1538,13 @@ object StreamQueries {
         // stream-independent one-shot scoring against the frozen persisted
         // base — computed while the drain runs (guide §2.6, see
         // `overlapping`; the shared serving fold is single-flight in
-        // FrameMemo, so the race with batch 0 builds it exactly once)
+        // SessionMemo, so the race with batch 0 builds it exactly once)
         val oneShot = overlapping {
           Text.scoreAgainstKn3Model(docs, "doc_id", toks, prefix)
             .withColumnRenamed("id", "doc_id").localCheckpoint(true)
         } {
-          withStreamPartitions(s) {
-            val q = s.readStream.schema(s.read.parquet(splitDir.toString).schema)
+          drainStream(s) {
+            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
               .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
               .writeStream
               .option("checkpointLocation", s"$scratch/chk")
@@ -1574,8 +1555,6 @@ object StreamQueries {
                   .withColumn("batch_id", lit(bid))
                   .write.mode("append").parquet(resultsDir): Unit
               })
-              .start()
-            try q.processAllAvailable() finally q.stop()
           }
         }
         val streamed = s.read.parquet(resultsDir).localCheckpoint(true)
@@ -1626,8 +1605,8 @@ object StreamQueries {
                 e.filter(col("vec_id") % 50 === 0), e, "vec_id", "embedding", k = 3)
               .localCheckpoint(true))
         } {
-          withStreamPartitions(s) {
-            val q = s.readStream.schema(s.read.parquet(splitDir.toString).schema)
+          drainStream(s) {
+            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
               .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
               .writeStream
               .option("checkpointLocation", s"$scratch/chk")
@@ -1636,8 +1615,6 @@ object StreamQueries {
                 // production append body: batchId-keyed exactly-once
                 Similarity.exactlyOnceAppendToIvfPqIndex(
                   batch.toDF(), prefix, "vec_id", "embedding", bid): Unit)
-              .start()
-            try q.processAllAvailable() finally q.stop()
           }
         }
       } finally deleteRecursively(scratch)
@@ -1708,8 +1685,8 @@ object StreamQueries {
       // while the drain runs (guide §2.6, see `overlapping`)
       val nAll = try {
         overlapping(docs.count()) {
-          withStreamPartitions(s) {
-            val q = s.readStream.schema(s.read.parquet(splitDir.toString).schema)
+          drainStream(s) {
+            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
               .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
               .writeStream
               .option("checkpointLocation", s"$scratch/chk")
@@ -1717,8 +1694,6 @@ object StreamQueries {
                   bid: Long) =>
                 TextIndex.exactlyOnceIngestIntoTextIndex(batch.toDF(), "doc_id",
                   CrossHash.tokens(col("text")), prefix, bid): Unit)
-              .start()
-            try q.processAllAvailable() finally q.stop()
           }
         }
       } finally deleteRecursively(scratch)
@@ -1755,8 +1730,8 @@ object StreamQueries {
         overlapping {
           docs.select(explode(CrossHash.tokens(col("text")))).count()
         } {
-          withStreamPartitions(s) {
-            val q = s.readStream.schema(s.read.parquet(splitDir.toString).schema)
+          drainStream(s) {
+            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
               .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
               .writeStream
               .option("checkpointLocation", s"$scratch/chk")
@@ -1769,8 +1744,6 @@ object StreamQueries {
                 dp.write.mode(org.apache.spark.sql.SaveMode.Append)
                   .format("parquet").saveAsTable(dtfT)
               })
-              .start()
-            try q.processAllAvailable() finally q.stop()
           }
         }
       } finally deleteRecursively(scratch)
@@ -1810,8 +1783,8 @@ object StreamQueries {
               CrossHash.wordShingles(CrossHash.tokens(col("text")), 5))).as("g"))
             .count()
         } {
-          withStreamPartitions(s) {
-            val q = s.readStream.schema(s.read.parquet(splitDir.toString).schema)
+          drainStream(s) {
+            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
               .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
               .writeStream
               .option("checkpointLocation", s"$scratch/chk")
@@ -1820,8 +1793,6 @@ object StreamQueries {
                 // production ingest body: batchId-keyed exactly-once
                 Dedup.exactlyOnceIngestIntoGramIndex(batch.toDF(), "doc_id",
                   CrossHash.tokens(col("text")), prefix, bid): Unit)
-              .start()
-            try q.processAllAvailable() finally q.stop()
           }
         }
       } finally deleteRecursively(scratch)
@@ -2006,14 +1977,12 @@ object StreamQueries {
         val out = s"$scratch/out"
         val stream = eventsStream(s, d)
           .select("event_id", "ts", "user_id", "event_type", "value")
-        withStreamPartitions(s) {
-          val q = stream.writeStream
+        drainStream(s) {
+          stream.writeStream
             .format("parquet")
             .option("path", out)
             .option("checkpointLocation", s"$scratch/chk")
             .outputMode("append")
-            .start()
-          try q.processAllAvailable() finally q.stop()
         }
         s.read.parquet(out)
           .groupBy("event_type")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SessionMemo
 import graft.functions.CrossHash
 import graft.operators.{LinearModel, Multimodal, Sampling, Text, TextIndex}
 import graft.sources.Tables
@@ -24,7 +25,7 @@ object TextQueries {
     * localCheckpointed.
     */
   private[queries] def bpeMerges6(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"bpe_merges6:$d") {
+    SessionMemo.getOrCompute(s, s"bpe_merges6:$d") {
       Text.bpeMerges(docs(s, d), col("text"), nMerges = 6)
     }
 
@@ -34,13 +35,13 @@ object TextQueries {
     * trains once per (session, corpus) like [[bpeMerges6]].
     */
   private[queries] def ulm2(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val pieces = FrameMemo.getOrCompute(s, s"ulm2_pieces:$d") {
+    val pieces = SessionMemo.getOrCompute(s, s"ulm2_pieces:$d") {
       val (p, w) = Text.ulmTrain(docs(s, d), col("text"),
         maxPieceLen = 4, seedMulti = 60, rounds = 2)
-      FrameMemo.put(s, s"ulm2_segs:$d", w)
+      SessionMemo.put(s, s"ulm2_segs:$d", w)
       p
     }
-    (pieces, FrameMemo.getOrCompute(s, s"ulm2_segs:$d") {
+    (pieces, SessionMemo.getOrCompute(s, s"ulm2_segs:$d") {
       Text.ulmTrain(docs(s, d), col("text"),
         maxPieceLen = 4, seedMulti = 60, rounds = 2)._2
     })
@@ -58,7 +59,7 @@ object TextQueries {
     */
   private[queries] def ensureKnBase(s: SparkSession, d: String): String = {
     val prefix = s"knlm_base_${ScratchKeys.forPath(d)}"
-    IndexMemo.ensure(s, s"knlm_base:$d") {
+    SessionMemo.ensure(s, s"knlm_base:$d") {
       graft.sources.Sinks.dropTableFamily(s, prefix, Text.KnSuffixes)
       Text.writeKnModel(docs(s, d), "doc_id", toks, prefix)
     }
@@ -74,7 +75,7 @@ object TextQueries {
     */
   private[queries] def ensureKn3Base(s: SparkSession, d: String): String = {
     val prefix = s"kn3_base_${ScratchKeys.forPath(d)}"
-    IndexMemo.ensure(s, s"kn3_base:$d") {
+    SessionMemo.ensure(s, s"kn3_base:$d") {
       graft.sources.Sinks.dropTableFamily(s, prefix, Text.Kn3Suffixes)
       Text.writeKn3Model(docs(s, d), "doc_id", toks, prefix)
     }
@@ -91,7 +92,7 @@ object TextQueries {
     * re-running the LM join chain per pass.
     */
   private[graft] def kn3ScoredAllFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"kn3_scored_all:$d") {
+    SessionMemo.getOrCompute(s, s"kn3_scored_all:$d") {
       Text.scoreAgainstKn3Model(docs(s, d), "doc_id", toks, ensureKn3Base(s, d))
         .withColumnRenamed("id", "doc_id")
         .localCheckpoint(true)
@@ -107,7 +108,7 @@ object TextQueries {
     * the d_curate_ccnet flagship gate.
     */
   private[queries] def pplBucketsFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"ppl_buckets:$d") {
+    SessionMemo.getOrCompute(s, s"ppl_buckets:$d") {
       val scored = kn3ScoredAllFrame(s, d)
       val n = scored.count()
       graft.operators.Relational
@@ -131,7 +132,7 @@ object TextQueries {
     * frame the whole chain would run once per consumer.
     */
   private[graft] def curateCcnetFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"curate_ccnet:$d") {
+    SessionMemo.getOrCompute(s, s"curate_ccnet:$d") {
       val surv = graft.operators.Dedup.keepSurvivors(
         docs(s, d), "doc_id", DedupQueries.minhashPairEdges(s, d))
       val gated = surv
@@ -165,7 +166,7 @@ object TextQueries {
     */
   private[queries] def ensureUlmBase(s: SparkSession, d: String): String = {
     val prefix = s"ulm_base_${ScratchKeys.forPath(d)}"
-    IndexMemo.ensure(s, s"ulm_base:$d") {
+    SessionMemo.ensure(s, s"ulm_base:$d") {
       graft.sources.Sinks.dropTableFamily(s, prefix, Text.UlmSuffixes)
       Text.writeUlmModel(ulm2(s, d)._1, prefix, maxPieceLen = 4)
     }
@@ -216,7 +217,7 @@ object TextQueries {
     * Everything is one row-local map pass over the corpus.
     */
   private[queries] def langClfFeatures(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"langclf_feats:$d") {
+    SessionMemo.getOrCompute(s, s"langclf_feats:$d") {
       langClfFeaturesImpl(s, d, grams = toks, salt = LangSalt,
         scale = LangScale)
     }
@@ -229,7 +230,7 @@ object TextQueries {
     * the hashed gram universe changes.
     */
   private[queries] def langClfCharFeatures(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"langclf_cfeats:$d") {
+    SessionMemo.getOrCompute(s, s"langclf_cfeats:$d") {
       langClfFeaturesImpl(s, d,
         grams = flatten(transform(toks, t =>
           CrossHash.charGrams(concat(lit("<"), t, lit(">")), 3))),
@@ -295,7 +296,7 @@ object TextQueries {
     * attribution) and collected model-sized.
     */
   private[queries] def langClfWeightsFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"langclf_w:$d") {
+    SessionMemo.getOrCompute(s, s"langclf_w:$d") {
       val tr = langClfFeatures(s, d).filter(col("doc_id") % 5 =!= 0)
       val rows = Dialects.flatMap { case (name, _) =>
         // driver-side (oracle-identical-arithmetic) trainer under the
@@ -321,7 +322,7 @@ object TextQueries {
     * trainer, split, and rounds as [[langClfWeightsFrame]].
     */
   private[queries] def langClfCharWeightsFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"langclf_cw:$d") {
+    SessionMemo.getOrCompute(s, s"langclf_cw:$d") {
       val tr = langClfCharFeatures(s, d).filter(col("doc_id") % 5 =!= 0)
       val rows = Dialects.flatMap { case (name, _) =>
         // Auto: driver GD under the cap, distributed past it — see
@@ -444,7 +445,7 @@ object TextQueries {
     * Doc-count-sized.
     */
   private[queries] def repSignalsFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"rep_signals:$d") {
+    SessionMemo.getOrCompute(s, s"rep_signals:$d") {
       Text.repetitionSignals(docs(s, d), "doc_id", toks).localCheckpoint(true)
     }
 
@@ -453,7 +454,7 @@ object TextQueries {
     * gate. Doc-count-sized.
     */
   private[queries] def bpCoverageFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"bp_cov3:$d") {
+    SessionMemo.getOrCompute(s, s"bp_cov3:$d") {
       Text.boilerplateCoverage(
           docs(s, d).withColumn("__tk", toks), "doc_id",
           CrossHash.wordShingles(col("__tk"), 3), topK = 500)
@@ -468,7 +469,7 @@ object TextQueries {
     * are asset-sized, so the checkpoint is small.
     */
   private[queries] def mmImageAHashFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"mm_img_ahash:$d") {
+    SessionMemo.getOrCompute(s, s"mm_img_ahash:$d") {
       val base = Multimodal.synthesizePng(docs(s, d), "doc_id")
       val twins = Multimodal.synthesizePngNearDup(
         docs(s, d).filter(col("doc_id") % 25 === 0), "doc_id")
@@ -480,7 +481,7 @@ object TextQueries {
     * (`mm_video_hash_pairs`, `_capped`). Frame-count-sized rows.
     */
   private[queries] def mmGifFrameAHashFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"mm_gif_fhash:$d") {
+    SessionMemo.getOrCompute(s, s"mm_gif_fhash:$d") {
       val base = Multimodal.synthesizeGif(docs(s, d), "doc_id")
       val twins = Multimodal.synthesizeGifNearDup(
         docs(s, d).filter(col("doc_id") % 25 === 0), "doc_id")
@@ -492,7 +493,7 @@ object TextQueries {
     * attribution reason as [[ensureKnBase]].
     */
   private[queries] def unigramCfFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"unigram_cf:$d") {
+    SessionMemo.getOrCompute(s, s"unigram_cf:$d") {
       Text.unigramTf(docs(s, d), "doc_id", toks)
         .groupBy("term").agg(sum("tf").as("cf"))
         .localCheckpoint(true)
@@ -504,7 +505,7 @@ object TextQueries {
     * streaming parity's one-shot side all consume this frame.
     */
   private[queries] def doremiNllFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"doremi_nll:$d") {
+    SessionMemo.getOrCompute(s, s"doremi_nll:$d") {
       val dd = docs(s, d)
       val u = Text.unigramNll(dd, "doc_id", toks)
         .select(col("id"), col("nll").as("unll"))
@@ -525,7 +526,7 @@ object TextQueries {
     */
   private[queries] def ensureTextBase(s: SparkSession, d: String): String = {
     val prefix = s"ti_base_${ScratchKeys.forPath(d)}"
-    IndexMemo.ensure(s, s"ti_base:$d") {
+    SessionMemo.ensure(s, s"ti_base:$d") {
       TextIndex.Suffixes
         .foreach(sfx => graft.sources.Sinks.dropManagedTable(s, s"$prefix$sfx"))
       TextIndex.writeTextIndex(
@@ -598,7 +599,7 @@ object TextQueries {
     */
   private[queries] def ensureSkewBase(s: SparkSession, d: String): String = {
     val prefix = s"ti_skew_${ScratchKeys.forPath(d)}"
-    IndexMemo.ensure(s, s"ti_skew:$d") {
+    SessionMemo.ensure(s, s"ti_skew:$d") {
       TextIndex.Suffixes
         .foreach(sfx => graft.sources.Sinks.dropManagedTable(s, s"$prefix$sfx"))
       TextIndex.writeTextIndex(skewedDocs(s, d), "doc_id", toks, prefix,
@@ -660,7 +661,7 @@ object TextQueries {
     * training scans it `ClfIters` times, scoring once.
     */
   private[queries] def classifierFeatures(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"clf_features:$d") {
+    SessionMemo.getOrCompute(s, s"clf_features:$d") {
       classifierFeatureCols(docs(s, d)).localCheckpoint(true)
     }
 
@@ -669,7 +670,7 @@ object TextQueries {
     * shared-frame entry).
     */
   private[queries] def classifierWeightsFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"clf_weights:$d") {
+    SessionMemo.getOrCompute(s, s"clf_weights:$d") {
       // the driver-side ORACLE-IDENTICAL trainer (the langid students'
       // trainer — same arithmetic, same GD-replay oracles): the
       // distributed twin pays Catalyst planning + codegen + job launch
@@ -697,7 +698,7 @@ object TextQueries {
     * shared-frame entry.
     */
   private[queries] def holdoutWeightsFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"clf_holdout_weights:$d") {
+    SessionMemo.getOrCompute(s, s"clf_holdout_weights:$d") {
       // driver GD under the cap, distributed past it — see
       // classifierWeightsFrame
       val w = LinearModel.trainSquashedLinearAuto(
@@ -719,7 +720,7 @@ object TextQueries {
     * model-sized.
     */
   private[queries] def calibrationFitFrame(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"clf_cal_fit:$d") {
+    SessionMemo.getOrCompute(s, s"clf_cal_fit:$d") {
       val levels = LinearModel.scoreSquashedLinear(
           classifierFeatures(s, d).filter(col("doc_id") % 5 =!= 0),
           ClfXCols, holdoutWeights(s, d))

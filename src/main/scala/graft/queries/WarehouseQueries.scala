@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SessionMemo
 import graft.operators.{Hierarchy, Relational}
 import graft.sources.Tables
 
@@ -79,7 +80,7 @@ object WarehouseQueries {
     * consume it (and its pair counts).
     */
   private[queries] def basketItems(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"basket_items:$d") {
+    SessionMemo.getOrCompute(s, s"basket_items:$d") {
       t(s, d, "lineitem")
         .select(col("l_orderkey").as("oid"), col("l_partkey").as("item"))
         .distinct()
@@ -88,7 +89,7 @@ object WarehouseQueries {
 
   /** Co-occurrence pair counts (a < b, count of shared baskets), memoized. */
   private[queries] def basketPairCounts(s: SparkSession, d: String): DataFrame =
-    FrameMemo.getOrCompute(s, s"basket_pairs:$d") {
+    SessionMemo.getOrCompute(s, s"basket_pairs:$d") {
       val items = basketItems(s, d)
       items.as("x")
         .join(items.as("y"),

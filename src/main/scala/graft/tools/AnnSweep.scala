@@ -1,6 +1,7 @@
 package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.operators.Similarity
 import graft.sources.Tables
 
@@ -114,16 +115,7 @@ object AnnSweep {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse_annsweep")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.getOrCreate(warehouse = GraftSession.tmpWarehouse("annsweep"))
     if (args.headOption.contains("nlist")) {
       runNlist(spark)
       spark.stop()

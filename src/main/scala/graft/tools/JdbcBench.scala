@@ -2,8 +2,7 @@ package graft.tools
 
 import java.sql.DriverManager
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.sources.{Jdbc, JdbcConfig, JdbcDialect}
 
 /** Timing evidence for `Jdbc.read`'s partitionColumn path (round-8
@@ -43,12 +42,7 @@ object JdbcBench {
     } finally conn.close()
     println(s"JDBCBENCH generated $n rows in derby at $dir")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.getOrCreate()
     val cfg = JdbcConfig(s"jdbc:derby:$dir", user = "app", password = "app",
       dialect = JdbcDialect.Derby)
     // untimed warmup: driver load, codegen

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
+
 /** Round-15 optimization profiler: runs named suite queries (or shared
   * frame builders prefixed `frame:`) one at a time and reports, per query,
   * wall time, the number of Spark JOBS it launched, and the summed
@@ -18,20 +20,7 @@ import org.apache.spark.sql.SparkSession
 object OptProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.maxPlanStringLength", (8 << 20).toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse_bench")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.getOrCreate(warehouse = GraftSession.tmpWarehouse("bench"))
 
     // r16 (ADVICE): the listener bus delivers asynchronously — a bare
     // `jobs = Nil` on the main thread raced late job-end events from the

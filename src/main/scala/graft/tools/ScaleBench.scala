@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Scale validation for the dedup family beyond sf0.1: synthesizes a 10×
   * documents corpus from sf0.1 (50k docs) and times the dedup queries at 1×
@@ -1179,26 +1179,12 @@ object ScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    // r16: core count from the bench env contract (default unchanged) —
     // the `corescale` mode runs the compute-bound decade subset at two
-    // core counts to produce the parallel-scaling receipt the sf0.1
-    // suite cannot (its residual cost is per-job fixed overhead)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // cap AQE's per-stage plan-change logging: a plan whose printed
-      // tree expands shared subtrees can otherwise OOM/burn the driver
-      // building a string nobody reads (seen on the r10 batch)
-      .config("spark.sql.maxPlanStringLength", (8 << 20).toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse_scalebench")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // core counts (SPARK_GRAFT_CPUS) to produce the parallel-scaling
+    // receipt the sf0.1 suite cannot (its residual cost is per-job fixed
+    // overhead)
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.getOrCreate(cpus, GraftSession.tmpWarehouse("scalebench"))
 
     val src = "/root/testdata/sf0.1"
     val scaleDir = args.headOption

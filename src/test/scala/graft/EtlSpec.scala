@@ -122,12 +122,6 @@ class EtlSpec extends SparkSpec {
     assert(e.getMessage.contains("--day requires a date"))
   }
 
-  test("EtlMain sizes local mode to the box unless SPARK_GRAFT_CPUS says otherwise") {
-    assert(EtlMain.localCpus(Map.empty, 4) == "4")
-    assert(EtlMain.localCpus(Map("PATH" -> "/bin"), 1) == "1")
-    assert(EtlMain.localCpus(Map("SPARK_GRAFT_CPUS" -> "16"), 4) == "16")
-  }
-
   test("credentials parser handles comments, blanks, and values with '='") {
     val parsed = Credentials.parse(
       """# comment

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all specs — mirrors the harness config
-  * (UTC, nanos-as-long for the events table, AQE on).
+/** Shared local session for all specs: the [[GraftSession]] config at a
+  * pinned 4 cores, with a throwaway warehouse.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -15,16 +15,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-    .getOrCreate()
+  lazy val session: SparkSession = GraftSession.getOrCreate(cpus = "4",
+    warehouse = Some(java.nio.file.Files.createTempDirectory("graft_warehouse").toString))
 }
