@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.CrossHash._
+import graft.sources.TableFamily
 
 /** Deduplication operators for large text/embedding corpora — the
   * LLM-data-pipeline tier (extension over the reference, which has no dedup;
@@ -353,6 +354,9 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("new_id"), col("index_id"), col("jaccard"))
 
+  /** The persisted minhash index: `_bands`, `_sigs`, `_meta` (see [[writeMinhashIndex]]). */
+  val Minhash = new TableFamily("_bands", "_sigs", "_meta")
+
   /** Persist a MinHash LSH index as BUCKETED catalog tables — the
     * cross-session production shape [[minhashSignatures]]'s doc promises:
     * the corpus is signed once, and every later ingest reads the index
@@ -554,8 +558,7 @@ object Dedup {
     val spark = batch.sparkSession
     graft.sources.Sinks.exactlyOnceBatch(
         spark, s"${tablePrefix}_applied", batchId) {
-      graft.sources.Sinks.compactFamilyCutover(spark, tablePrefix,
-        Seq("_grams", "_meta"),
+      Grams.compact(spark, tablePrefix,
         Map[String, DataFrame => DataFrame](
           "_grams" -> (_.filter(col("batch_id") =!= batchId)))): Unit
     } {
@@ -567,7 +570,7 @@ object Dedup {
     * the lifecycle verb for PARAMETER changes: k/bands retuning or a
     * bucket-count change requires a full re-sign, and this runs it with
     * no serving gap (same pointer/resolve contract as the ANN rebuilds —
-    * [[graft.sources.Sinks.rebuildCutover]]; every minhash verb resolves
+    * [[graft.sources.TableFamily.rebuild]]; every minhash verb resolves
     * the active generation). Returns the new generation number.
     */
   def rebuildMinhashIndex(
@@ -576,8 +579,7 @@ object Dedup {
       buckets: Int,
       k: Int = 16,
       bands: Int = 4): Long =
-    graft.sources.Sinks.rebuildCutover(sigs.sparkSession, tablePrefix,
-      Seq("_bands", "_sigs", "_meta")) { g =>
+    Minhash.rebuild(sigs.sparkSession, tablePrefix) { g =>
       writeMinhashIndex(sigs, g, buckets, k, bands)
     }
 
@@ -587,7 +589,7 @@ object Dedup {
     * this rewrites each back to one file per bucket through its own
     * catalog bucket spec, staged as a fresh GENERATION and flipped
     * through the `_current` pointer
-    * ([[graft.sources.Sinks.compactFamilyCutover]] — a reader resolves a
+    * ([[graft.sources.TableFamily.compact]] — a reader resolves a
     * complete family at every instant; the old per-table rename swap had
     * a blind window, SinksSpec stages it). Row set unchanged, so probe
     * results are hash-identical and the zero-Exchange probe plan is
@@ -597,8 +599,7 @@ object Dedup {
   def compactMinhashIndex(
       spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String): Seq[(Int, Int)] = {
-    val (_, counts) = graft.sources.Sinks.compactFamilyCutover(
-      spark, tablePrefix, Seq("_bands", "_sigs", "_meta"))
+    val (_, counts) = Minhash.compact(spark, tablePrefix)
     Seq(counts("_bands"), counts("_sigs"))
   }
 
@@ -616,8 +617,7 @@ object Dedup {
   def compactGramIndex(
       spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String): (Int, Int) =
-    graft.sources.Sinks.compactFamilyCutover(spark, tablePrefix,
-      Seq("_grams", "_meta"),
+    Grams.compact(spark, tablePrefix,
       Map[String, DataFrame => DataFrame]("_grams" -> (
         _.groupBy("gram").agg(sum("n_docs").as("n_docs"))
           // partials collapse into the merged generation (see
@@ -634,30 +634,13 @@ object Dedup {
     * delete batch, which is why production runs batch take-downs daily
     * rather than per document. `deletedIds` must expose an `id` column.
     */
-  /** Fork (snapshot) a persisted minhash index — the dedup tier's
-    * staging-copy verb, same contract as
-    * [[graft.operators.Similarity.snapshotIvfIndex]]: the ACTIVE
-    * generation of `fromPrefix` lands as an independent bare index at
-    * `toPrefix` with the bucket layout preserved, so a trial take-down
-    * ([[deleteFromMinhashIndex]]) or re-banding runs against the fork
-    * while the source keeps serving untouched. Cost: two bounded
-    * bucketed rewrites — no corpus re-signing.
-    */
-  def snapshotMinhashIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      fromPrefix: String,
-      toPrefix: String): Unit =
-    graft.sources.Sinks.snapshotTablePrefix(spark, fromPrefix, toPrefix,
-      Seq("_bands", "_sigs", "_meta"))
-
   def deleteFromMinhashIndex(
       spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String,
       deletedIds: DataFrame): Unit = {
     val del = deletedIds.select(col("id")).distinct().localCheckpoint(true)
     val anti = (df: DataFrame) => df.join(del, Seq("id"), "left_anti")
-    graft.sources.Sinks.compactFamilyCutover(spark, tablePrefix,
-      Seq("_bands", "_sigs", "_meta"),
+    Minhash.compact(spark, tablePrefix,
       Map[String, DataFrame => DataFrame]("_bands" -> anti, "_sigs" -> anti)): Unit
   }
 
@@ -688,8 +671,7 @@ object Dedup {
       .select(col("id"), explode(array_distinct(wordShingles(col("tk"), n))).as("gram"))
       .groupBy("gram").agg(countDistinct(col("id")).as("n_del"))
       .localCheckpoint(true)
-    graft.sources.Sinks.compactFamilyCutover(spark, tablePrefix,
-      Seq("_grams", "_meta"),
+    Grams.compact(spark, tablePrefix,
       Map[String, DataFrame => DataFrame]("_grams" -> (
         _.groupBy("gram").agg(sum("n_docs").as("n_docs"))
           .join(delCounts, Seq("gram"), "left")
@@ -1719,6 +1701,9 @@ object Dedup {
       .drop("grp")
   }
 
+  /** The persisted gram index: `_grams`, `_meta` (see [[writeGramIndex]]). */
+  val Grams = new TableFamily("_grams", "_meta")
+
   /** Persist the cross-document gram index as a bucketed catalog table —
     * the production shape of incremental substring-dedup, mirroring
     * [[writeMinhashIndex]]: the corpus's grams are aggregated once, and
@@ -1774,8 +1759,7 @@ object Dedup {
       n: Int,
       tablePrefix: String,
       buckets: Int): Long =
-    graft.sources.Sinks.rebuildCutover(df.sparkSession, tablePrefix,
-      Seq("_grams", "_meta")) { g =>
+    Grams.rebuild(df.sparkSession, tablePrefix) { g =>
       writeGramIndex(df, idCol, toks, n, g, buckets)
     }
 

@@ -341,7 +341,13 @@ object LinearModel {
   }
 
   import org.apache.spark.sql.{SaveMode, SparkSession}
-  import graft.sources.Sinks
+  import graft.sources.{Sinks, TableFamily}
+
+  /** The persisted linear model: `_weights` (j, feature, w), `_meta` (d). */
+  val Linear = new TableFamily("_weights", "_meta")
+
+  /** [[Linear]] with its isotonic calibration map `_cal` (lvl, cal). */
+  val Calibrated = new TableFamily("_weights", "_cal", "_meta")
 
   /** Persist a trained model as the 6th persisted family: `_weights`
     * ((j, feature, w) — the feature NAME travels with each weight, so
@@ -363,8 +369,6 @@ object LinearModel {
       .write.mode(SaveMode.Overwrite).format("parquet")
       .saveAsTable(s"${tablePrefix}_meta")
   }
-
-  private[graft] val CalSuffixes = Seq("_weights", "_cal", "_meta")
 
   /** Persist a trained model WITH its isotonic calibration map — the
     * serving artifact a probability-gating filter actually needs (raw
@@ -422,7 +426,7 @@ object LinearModel {
       yCol: String,
       lr: Double,
       iters: Int): Long =
-    Sinks.rebuildCutover(feats.sparkSession, tablePrefix, Seq("_weights", "_meta")) { g =>
+    Linear.rebuild(feats.sparkSession, tablePrefix) { g =>
       writeLinearModel(feats.sparkSession, g, xCols,
         trainSquashedLinear(feats, xCols, yCol, lr, iters).toSeq)
     }

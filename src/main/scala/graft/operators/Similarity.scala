@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.CrossHash._
+import graft.sources.TableFamily
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`) — extension tier (SURVEY.md §7).
@@ -528,6 +529,9 @@ object Similarity {
     assignToCentroidsRounded(vecs, "vid", "v", cents, keepDist = true)
       .select(col("vid"), col("cid"), round(col("d") + 1e-9, 4).as("dist"))
 
+  /** The persisted k-means model: `_cents` (cid, cvec), `_meta` (k, iters). */
+  val Kmeans = new TableFamily("_cents", "_meta")
+
   /** Persist a trained k-means model as catalog tables — the clustering
     * tier's train/serve split: `<prefix>_cents` (cid, cvec — k rows) and
     * `<prefix>_meta` (k, iters, written LAST, the suite-wide
@@ -563,7 +567,7 @@ object Similarity {
       tablePrefix: String,
       k: Int,
       iters: Int = 2): Long =
-    rebuildCutover(corpus.sparkSession, tablePrefix, Seq("_cents", "_meta")) { g =>
+    Kmeans.rebuild(corpus.sparkSession, tablePrefix) { g =>
       writeKmeansModel(corpus, idCol, embCol, g, k, iters)
     }
 
@@ -909,6 +913,9 @@ object Similarity {
       .select(col(idCol), col("pos").cast("long").as("j"), col("col").as("v"))
   }
 
+  /** The persisted IVF index: `_lists`, `_cents`, `_meta` (see [[writeIvfIndex]]). */
+  val Ivf = new TableFamily("_lists", "_cents", "_meta")
+
   /** Persist the IVF index as catalog tables — the production shape of a
     * 100 TB vector store, mirroring [[graft.operators.Dedup.writeMinhashIndex]]:
     * build once, probe per query batch with zero Exchange on the index
@@ -1046,8 +1053,7 @@ object Similarity {
       nlist: Int = 16,
       iters: Int = 3,
       assign: Int = 1): Long =
-    rebuildCutover(corpus.sparkSession, tablePrefix,
-      Seq("_lists", "_cents", "_meta")) { g =>
+    Ivf.rebuild(corpus.sparkSession, tablePrefix) { g =>
       writeIvfIndex(corpus, idCol, embCol, g, buckets, nlist, iters, assign)
     }
 
@@ -1070,17 +1076,10 @@ object Similarity {
       iters: Int = 2,
       dims: Int = 64,
       assign: Int = 1): Long =
-    rebuildCutover(corpus.sparkSession, tablePrefix,
-      Seq("_codes", "_vecs", "_cents", "_books", "_meta")) { g =>
+    IvfPq.rebuild(corpus.sparkSession, tablePrefix) { g =>
       writeIvfPqIndex(corpus, idCol, embCol, g, buckets, nlist, nlistIters,
         m, ks, iters, dims, assign)
     }
-
-  private def rebuildCutover(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String,
-      suffixes: Seq[String])(build: String => Unit): Long =
-    graft.sources.Sinks.rebuildCutover(spark, tablePrefix, suffixes)(build)
 
   /** Append new vectors to a persisted IVF index (see [[writeIvfIndex]])
     * under the FROZEN quantizer — the standard production maintenance
@@ -1476,6 +1475,9 @@ object Similarity {
         queries, tablePrefix, idCol, embCol, k, nprobe, candidateFilter)
       .localCheckpoint(true)
 
+  /** The persisted IVF-PQ index (see [[writeIvfPqIndex]]). */
+  val IvfPq = new TableFamily("_codes", "_vecs", "_cents", "_books", "_meta")
+
   /** Persisted IVF-PQ index — the production vector-store shape (FAISS
     * `IVFx,PQy` with `by_residual=false`): a coarse IVF quantizer prunes
     * which lists a query scans, and inside the lists every vector is a PQ
@@ -1632,7 +1634,7 @@ object Similarity {
     * per bucket per batch; this rewrites it back to one file per bucket
     * through its own catalog bucket spec, staged as a fresh GENERATION
     * and flipped through the pointer
-    * ([[graft.sources.Sinks.compactFamilyCutover]] — no reader-blind
+    * ([[graft.sources.TableFamily.compact]] — no reader-blind
     * rename window). Row set unchanged, so probes are hash-identical and
     * zero-Exchange is preserved (spec-pinned). Returns `_lists` (files
     * before, files after).
@@ -1640,8 +1642,7 @@ object Similarity {
   def compactIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String): (Int, Int) =
-    graft.sources.Sinks.compactFamilyCutover(spark, tablePrefix,
-      Seq("_lists", "_cents", "_meta"))._2("_lists")
+    Ivf.compact(spark, tablePrefix)._2("_lists")
 
   /** Vacuum a persisted IVF-PQ index (see [[writeIvfPqIndex]] /
     * [[appendToIvfPqIndex]]): rewrites the bucketed `_codes` back to one
@@ -1652,8 +1653,7 @@ object Similarity {
   def compactIvfPqIndex(
       spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String): ((Int, Int), (Int, Int)) = {
-    val (_, counts) = graft.sources.Sinks.compactFamilyCutover(
-      spark, tablePrefix, Seq("_codes", "_vecs", "_cents", "_books", "_meta"))
+    val (_, counts) = IvfPq.compact(spark, tablePrefix)
     (counts("_codes"), counts("_vecs"))
   }
 
@@ -1670,8 +1670,7 @@ object Similarity {
       deletedIds: DataFrame): Unit = {
     val del = deletedIds.select(col("id").as("neighbor_id"))
       .distinct().localCheckpoint(true)
-    graft.sources.Sinks.compactFamilyCutover(spark, tablePrefix,
-      Seq("_lists", "_cents", "_meta"),
+    Ivf.compact(spark, tablePrefix,
       Map[String, DataFrame => DataFrame](
         "_lists" -> (_.join(del, Seq("neighbor_id"), "left_anti")))): Unit
   }
@@ -1689,40 +1688,10 @@ object Similarity {
     val del = deletedIds.select(col("id").as("neighbor_id"))
       .distinct().localCheckpoint(true)
     val anti = (df: DataFrame) => df.join(del, Seq("neighbor_id"), "left_anti")
-    graft.sources.Sinks.compactFamilyCutover(spark, tablePrefix,
-      Seq("_codes", "_vecs", "_cents", "_books", "_meta"),
+    IvfPq.compact(spark, tablePrefix,
       Map[String, DataFrame => DataFrame](
         "_codes" -> anti, "_vecs" -> anti)): Unit
   }
-
-  /** Fork (snapshot) a persisted IVF index: the ACTIVE generation of
-    * `fromPrefix` — pointer-resolved, so forking a rebuilt index copies
-    * the serving generation — lands as an independent bare index at
-    * `toPrefix`, bucket layout preserved (the fork probes zero-Exchange
-    * like the source). Mutating verbs on the fork (delete/append/
-    * rebuild) never touch the source — the staging-copy workflow a
-    * production store uses to trial a take-down or re-quantization
-    * before applying it to serving. Cost: one bounded rewrite per table;
-    * no k-means, no re-listing.
-    */
-  def snapshotIvfIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      fromPrefix: String,
-      toPrefix: String): Unit =
-    graft.sources.Sinks.snapshotTablePrefix(spark, fromPrefix, toPrefix,
-      Seq("_lists", "_cents", "_meta"))
-
-  /** Fork (snapshot) a persisted IVF-PQ index — same contract as
-    * [[snapshotIvfIndex]] across the quadruple table family (codes,
-    * re-rank vectors, coarse centroids, codebooks): no quantizer
-    * retrains, no corpus re-encode, just bounded per-table rewrites.
-    */
-  def snapshotIvfPqIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      fromPrefix: String,
-      toPrefix: String): Unit =
-    graft.sources.Sinks.snapshotTablePrefix(spark, fromPrefix, toPrefix,
-      Seq("_codes", "_vecs", "_cents", "_books", "_meta"))
 
   /** Exactly-once wrapper around [[appendToIvfIndex]] — the batchId-keyed
     * write-ahead-ledger recipe ([[graft.sources.Sinks.exactlyOnceBatch]])

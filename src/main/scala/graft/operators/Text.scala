@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.CrossHash._
+import graft.sources.{PartialFamily, TableFamily}
 
 /** Text-analysis operators for training-data pipelines — language ID,
   * quality scoring, token counting, document fingerprinting (extension
@@ -675,14 +676,8 @@ object Text {
     * every bigram is OOV.
     */
   private def knScoreAgainstStats(tf: DataFrame, cabStats: DataFrame): DataFrame = {
-    // NOT materialized (round-15 measurement): the type table feeds four
-    // plan branches, but they all end in the same aggregation exchange,
-    // which Spark's ReuseExchange dedupes within the single scoring job —
-    // an eager localCheckpoint here measured ~2× SLOWER on the inline
-    // path (tx_kn_nll 0.98 → 2.0 s) and leaked block-manager pressure
-    // across the suite. The SERVING path, where the fold is frozen per
-    // generation, reuses the derived statistics across JOBS instead —
-    // see [[scoreAgainstKnModel]] (r16) — through this same body.
+    // Not materialized: the four branches share one exchange within the
+    // scoring job; a checkpoint here measured 2× slower (tx_kn_nll 0.98 → 2.0 s).
     knScoreBody(tf, cabStats, knDerivedCa(cabStats), knDerivedNb(cabStats),
       knDerivedGlob(cabStats))
   }
@@ -991,7 +986,10 @@ object Text {
           * lit(1e7) + lit(0.5) + lit(1e-3)).cast("long").as("lp"))
   }
 
-  private[graft] val UlmSuffixes = Seq("_pieces", "_meta")
+  /** The persisted unigram-LM tokenizer: `_pieces` is the (piece, cnt,
+    * lp) vocabulary, `_meta` the max piece length.
+    */
+  val Ulm = new TableFamily("_pieces", "_meta")
 
   /** Persist a trained unigram-LM tokenizer — the EIGHTH persisted family
     * (after minhash/gram/IVF/IVF-PQ/k-means/linear/text): in production a
@@ -1025,8 +1023,7 @@ object Text {
       maxPieceLen: Int = 4,
       seedMulti: Int = 60,
       rounds: Int = 2): Long =
-    graft.sources.Sinks.rebuildCutover(df.sparkSession, tablePrefix,
-      UlmSuffixes) { g =>
+    Ulm.rebuild(df.sparkSession, tablePrefix) { g =>
       writeUlmModel(ulmTrain(df, textCol, maxPieceLen, seedMulti, rounds)._1,
         g, maxPieceLen)
     }
@@ -1118,12 +1115,8 @@ object Text {
     */
   private def knTrigramScoreAgainstStats(
       tf: DataFrame, cabcStats: DataFrame): DataFrame = {
-    // NOT materialized — same ReuseExchange adjudication as the bigram
-    // scorer (see [[knScoreAgainstStats]]): the six consumers share the
-    // fold's exchange within one job, and eager checkpoints here
-    // measured net-negative (tx_kn3_nll 0.97 → 2.4 s) plus suite-wide
-    // block churn. The serving path reuses per-generation derived stats
-    // across jobs instead — see [[scoreAgainstKn3Model]] (r16).
+    // Not materialized, as in knScoreAgainstStats: a checkpoint here
+    // measured slower (tx_kn3_nll 0.97 → 2.4 s).
     val cabc = cabcStats
     val cont = kn3DerivedCont(cabc)
     knTrigramScoreBody(tf, cabc, kn3DerivedAb(cabc), cont,
@@ -1291,229 +1284,49 @@ object Text {
       },
       acc => acc.getField("n"))
 
-  private[graft] val KnSuffixes = Seq("_cab", "_meta")
-
-  /** Persist a Kneser-Ney bigram LM as the NINTH persisted family — the
-    * KenLM-artifact shape of a curation pipeline: the LM trains once over
-    * the corpus and every downstream quality-filter pass scores against
-    * the stored statistics, never a retrain. The entire model state is
-    * ONE table: `_cab` holds (a, b, cab) bigram-type count PARTIALS,
-    * append-only — every other KN statistic (predecessor sums,
-    * continuation counts, the discount) derives from the folded type
-    * table at serve time with type-table-sized aggregations (the `_stats`
-    * discipline: mutations append deltas, readers fold). `_meta`
-    * (kn_order) lands LAST as the completeness marker.
-    *
-    * At 100 TB the corpus pass happens exactly once, here; ingest passes
-    * only over NEW docs; delete appends NEGATIVE deltas and never touches
-    * the corpus — and because count folding is exact integer arithmetic,
-    * a fold after any verb sequence is BIT-IDENTICAL to a retrain on the
-    * surviving docs (the lifecycle queries' oracles prove it).
+  /** The persisted Kneser-Ney bigram LM: `_cab` holds (a, b, cab)
+    * bigram-type count partials, `_meta` the order. Every other KN
+    * statistic derives from the fold at serve time, so the corpus pass
+    * happens once, ingest and delete pass only over the docs they touch,
+    * and a fold after any verb sequence is bit-identical to a retrain on
+    * the surviving docs (exact integer sums).
     */
-  def writeKnModel(
-      docs: DataFrame,
-      idCol: String,
-      toks: Column,
-      tablePrefix: String): Unit = {
-    val spark = docs.sparkSession
-    bigramTf(docs, idCol, toks)
-      .groupBy("a", "b").agg(sum("tf").as("cab"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      .saveAsTable(s"${tablePrefix}_cab")
-    spark.createDataFrame(Seq(Tuple1(2))).toDF("kn_order")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      .saveAsTable(s"${tablePrefix}_meta")
-  }
+  val Kn = new PartialFamily("_cab", Seq("a", "b"), "cab", "kn_order" -> 2)
 
-  /** Fold new documents into a persisted KN model: ONE pass over the new
-    * docs, appending their bigram-type counts as delta rows — no read of
-    * the existing partials, no retrain. Serving's fold makes the merged
-    * statistics exactly what a full retrain over old+new would compute.
+  /** The persisted Kneser-Ney trigram LM: [[Kn]] one order up, with
+    * (a, b, c, cabc) trigram-type count partials in `_cabc`.
     */
-  def ingestIntoKnModel(
-      newDocs: DataFrame,
-      idCol: String,
-      toks: Column,
-      tablePrefix: String): Unit = {
-    val spark = newDocs.sparkSession
-    val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    bigramTf(newDocs, idCol, toks)
-      .groupBy("a", "b").agg(sum("tf").as("cab"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
-      .saveAsTable(s"${tp}_cab")
-  }
+  val Kn3 = new PartialFamily("_cabc", Seq("a", "b", "c"), "cabc", "kn_order" -> 3)
 
-  /** Remove documents from a persisted KN model by appending NEGATIVE
-    * count deltas (one pass over the removed docs only). The serving fold
-    * drops types whose folded count reaches zero, so post-delete scores
-    * are bit-identical to a retrain without those docs — curation's
-    * right-to-forget verb at LM-statistics cost, not corpus cost.
-    */
-  def deleteFromKnModel(
-      removedDocs: DataFrame,
-      idCol: String,
-      toks: Column,
-      tablePrefix: String): Unit = {
-    val spark = removedDocs.sparkSession
-    val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    bigramTf(removedDocs, idCol, toks)
-      .groupBy("a", "b").agg((-sum("tf")).as("cab"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
-      .saveAsTable(s"${tp}_cab")
-  }
+  /** A document frame's bigram-type counts, as [[Kn]] partials. */
+  def knCounts(docs: DataFrame, idCol: String, toks: Column): DataFrame =
+    bigramTf(docs, idCol, toks).groupBy("a", "b").agg(sum("tf").as("cab"))
 
-  /** Score a document frame against a PERSISTED KN model — the serving
-    * half of the train/serve split: generation-resolved, the `_cab`
-    * partials fold to the live type table (exact integer sums; zeroed
-    * types drop out), every derived statistic recomputes from that fold,
-    * and the scoring arithmetic is [[knBigramNll]]'s to the last double
-    * op. Output (id, n_bigrams, n_oov, nll) — see
-    * [[knScoreAgainstStats]] for the OOV contract.
+  /** A document frame's trigram-type counts, as [[Kn3]] partials. */
+  def kn3Counts(docs: DataFrame, idCol: String, toks: Column): DataFrame =
+    trigramTf(docs, idCol, toks).groupBy("a", "b", "c").agg(sum("tf").as("cabc"))
+
+  /** Score a document frame against a persisted [[Kn]] model, with
+    * [[knBigramNll]]'s arithmetic to the last double op. Output (id,
+    * n_bigrams, n_oov, nll) — see [[knScoreAgainstStats]] for the OOV
+    * contract. The fold is memoized per `_cab` fingerprint; the derived
+    * statistics stay lazy in-plan, where exchange reuse dedupes them
+    * (memoizing them measured slower: st_kn_serving_parity 4.23 → 4.39 s).
     */
   def scoreAgainstKnModel(
       docs: DataFrame,
       idCol: String,
       toks: Column,
-      tablePrefix: String): DataFrame = {
-    val spark = docs.sparkSession
-    val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    // The serving FOLD (partials → live type table) is a type-table-scale
-    // aggregation repeated on EVERY scoring call — 5× per streaming
-    // parity (4 micro-batches + the one-shot) against a FROZEN table.
-    // Memoized per session as a checkpointed frame keyed on the `_cab`
-    // file-set fingerprint (r16): an ingest/delete APPENDS partials, so
-    // the fingerprint changes and the stale fold is never read. This is
-    // the cross-JOB reuse the r15 W6 adjudication allows — the DERIVED
-    // per-(a)/(b)/global statistics stay lazy in-plan below
-    // (knScoreAgainstStats), where exchange reuse already dedupes them
-    // within one scoring job and a checkpoint measured 2× slower.
-    val key = s"knfold:${tp}_cab@" +
-      graft.SessionMemo.tableFingerprint(spark, s"${tp}_cab")
-    val cab = graft.SessionMemo.getOrCompute(spark, key) {
-      spark.table(s"${tp}_cab")
-        .groupBy("a", "b").agg(sum("cab").as("cab"))
-        .filter(col("cab") > 0)
-        .localCheckpoint(true)
-    }
-    // BIGRAM derived stats stay LAZY even on the serving path — measured
-    // (r16 A/B, focused bench ×3): memoizing ca/nb/glob per generation
-    // moved st_kn_serving_parity 4.23 → 4.39 s (the two aggregations are
-    // cheap against the checkpointed fold scan and the checkpoint builds
-    // don't amortize over 5 calls), while the same treatment on the
-    // TRIGRAM scorer (7 derived tables) won 0.6 s — see
-    // [[scoreAgainstKn3Model]], which keeps its memo.
-    knScoreAgainstStats(bigramTf(docs, idCol, toks), cab)
-  }
+      tablePrefix: String): DataFrame =
+    knScoreAgainstStats(bigramTf(docs, idCol, toks),
+      Kn.served(docs.sparkSession, tablePrefix)._2)
 
-  /** Compact the KN family's append-only partials: fold `_cab` to one row
-    * per live bigram type (dropping zeroed types) and stage the result as
-    * a NEW GENERATION — a reader resolves a complete family at every
-    * instant, the compactFamilyCutover contract. Scores are unchanged by
-    * construction (the serving fold of the compacted table is the
-    * identity); what changes is the fold's input size, which otherwise
-    * grows with every ingest/delete delta batch forever. No corpus
-    * access — the whole verb is type-table-sized.
-    */
-  def compactKnModel(spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): Long = {
-    val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    val folded = spark.table(s"${tp}_cab")
-      .groupBy("a", "b").agg(sum("cab").as("cab"))
-      .filter(col("cab") > 0)
-      .localCheckpoint(true) // sever from the tables the cutover retires
-    val order = graft.SessionMemo.cachedHead(spark, s"${tp}_meta").getInt(0)
-    graft.sources.Sinks.rebuildCutover(spark, tablePrefix, KnSuffixes) { g =>
-      folded.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .format("parquet").saveAsTable(s"${g}_cab")
-      spark.createDataFrame(Seq(Tuple1(order))).toDF("kn_order")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-        .saveAsTable(s"${g}_meta")
-    }
-  }
-
-  /** Retrain-and-cutover for the KN family — the blue/green contract
-    * every persisted family carries. Returns the new generation.
-    */
-  def rebuildKnModel(
-      docs: DataFrame,
-      idCol: String,
-      toks: Column,
-      tablePrefix: String): Long =
-    graft.sources.Sinks.rebuildCutover(docs.sparkSession, tablePrefix,
-      KnSuffixes) { g => writeKnModel(docs, idCol, toks, g) }
-
-  private[graft] val Kn3Suffixes = Seq("_cabc", "_meta")
-
-  /** Persist a Kneser-Ney TRIGRAM LM as the TENTH persisted family — the
-    * order CCNet/KenLM-style perplexity filters actually run (order ≥ 3):
-    * same artifact shape as the bigram family ([[writeKnModel]]) one
-    * order up. The entire model state is ONE table: `_cabc` holds
-    * (a, b, c, cabc) trigram-type count PARTIALS, append-only — every
-    * derived statistic of every order ((a,b) predecessor sums, the (b,c)
-    * continuation table, both per-order discounts, the bottom-level
-    * continuation probabilities) recomputes from the folded type table at
-    * serve time with type-table-sized aggregations. `_meta` (kn_order=3)
-    * lands LAST as the completeness marker.
-    *
-    * The integer-delta algebra is identical to the bigram family's: a
-    * fold after any ingest/delete sequence is BIT-IDENTICAL to a retrain
-    * on the surviving docs, which the lifecycle queries' oracles prove.
-    */
-  def writeKn3Model(
-      docs: DataFrame,
-      idCol: String,
-      toks: Column,
-      tablePrefix: String): Unit = {
-    val spark = docs.sparkSession
-    trigramTf(docs, idCol, toks)
-      .groupBy("a", "b", "c").agg(sum("tf").as("cabc"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      .saveAsTable(s"${tablePrefix}_cabc")
-    spark.createDataFrame(Seq(Tuple1(3))).toDF("kn_order")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      .saveAsTable(s"${tablePrefix}_meta")
-  }
-
-  /** Fold new documents into a persisted trigram-KN model — ONE pass over
-    * the new docs appending positive type-count deltas ([[ingestIntoKnModel]]
-    * one order up).
-    */
-  def ingestIntoKn3Model(
-      newDocs: DataFrame,
-      idCol: String,
-      toks: Column,
-      tablePrefix: String): Unit = {
-    val spark = newDocs.sparkSession
-    val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    trigramTf(newDocs, idCol, toks)
-      .groupBy("a", "b", "c").agg(sum("tf").as("cabc"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
-      .saveAsTable(s"${tp}_cabc")
-  }
-
-  /** Remove documents from a persisted trigram-KN model by appending
-    * NEGATIVE count deltas; the serving fold drops zeroed types from
-    * every derived statistic of every order ([[deleteFromKnModel]]'s
-    * right-to-forget contract at trigram-statistics cost).
-    */
-  def deleteFromKn3Model(
-      removedDocs: DataFrame,
-      idCol: String,
-      toks: Column,
-      tablePrefix: String): Unit = {
-    val spark = removedDocs.sparkSession
-    val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    trigramTf(removedDocs, idCol, toks)
-      .groupBy("a", "b", "c").agg((-sum("tf")).as("cabc"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
-      .saveAsTable(s"${tp}_cabc")
-  }
-
-  /** Score a document frame against a PERSISTED trigram-KN model —
-    * generation-resolved, partials folded to the live type table (exact
-    * integer sums; zeroed types drop out), every derived statistic
-    * recomputed from the fold, scoring arithmetic [[knTrigramNll]]'s to
-    * the last double op. Output (id, n_trigrams, n_oov, nll).
+  /** Score a document frame against a persisted [[Kn3]] model, with
+    * [[knTrigramNll]]'s arithmetic to the last double op. Output (id,
+    * n_trigrams, n_oov, nll). The fold and its seven derived statistics
+    * are memoized per `_cabc` fingerprint (measured 0.6 s faster than
+    * lazy); the global tallies are collected into LocalRelations, whose
+    * broadcasts build with no job.
     */
   def scoreAgainstKn3Model(
       docs: DataFrame,
@@ -1521,19 +1334,7 @@ object Text {
       toks: Column,
       tablePrefix: String): DataFrame = {
     val spark = docs.sparkSession
-    val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    // fold + derived statistics memoized per (session, _cabc fingerprint)
-    // — see scoreAgainstKnModel (r16): the derived per-order tables are
-    // per-generation constants; the global tallies collapse to collected
-    // LocalRelations whose broadcasts build with no job
-    val key = s"knfold:${tp}_cabc@" +
-      graft.SessionMemo.tableFingerprint(spark, s"${tp}_cabc")
-    val cabc = graft.SessionMemo.getOrCompute(spark, key) {
-      spark.table(s"${tp}_cabc")
-        .groupBy("a", "b", "c").agg(sum("cabc").as("cabc"))
-        .filter(col("cabc") > 0)
-        .localCheckpoint(true)
-    }
+    val (key, cabc) = Kn3.served(spark, tablePrefix)
     val cont = graft.SessionMemo.getOrCompute(spark, s"$key/cont") {
       kn3DerivedCont(cabc).localCheckpoint(true)
     }
@@ -1564,60 +1365,23 @@ object Text {
       cc, g3, g2, gBg)
   }
 
-  /** Compact the trigram family's append-only partials into a staged new
-    * generation — [[compactKnModel]]'s contract on the `_cabc` table.
-    */
-  def compactKn3Model(spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): Long = {
-    val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    val folded = spark.table(s"${tp}_cabc")
-      .groupBy("a", "b", "c").agg(sum("cabc").as("cabc"))
-      .filter(col("cabc") > 0)
-      .localCheckpoint(true) // sever from the tables the cutover retires
-    val order = graft.SessionMemo.cachedHead(spark, s"${tp}_meta").getInt(0)
-    graft.sources.Sinks.rebuildCutover(spark, tablePrefix, Kn3Suffixes) { g =>
-      folded.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .format("parquet").saveAsTable(s"${g}_cabc")
-      spark.createDataFrame(Seq(Tuple1(order))).toDF("kn_order")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-        .saveAsTable(s"${g}_meta")
-    }
-  }
-
-  /** Retrain-and-cutover for the trigram-KN family. */
-  def rebuildKn3Model(
-      docs: DataFrame,
-      idCol: String,
-      toks: Column,
-      tablePrefix: String): Long =
-    graft.sources.Sinks.rebuildCutover(docs.sparkSession, tablePrefix,
-      Kn3Suffixes) { g => writeKn3Model(docs, idCol, toks, g) }
-
-  private[graft] val BlocklistSuffixes = Seq("_patterns", "_meta")
-
-  /** Persist a banned-phrase BLOCKLIST as the ELEVENTH persisted family —
-    * a production blocklist is a MAINTAINED artifact (legal take-downs,
-    * new contamination sources), not a per-query collect: `_patterns`
-    * holds (pattern, delta) membership partials, APPEND-ONLY — additions
-    * append +1 rows, take-downs append −1 rows, and serving folds
-    * `sum(delta) > 0` to the live set (the `_stats` discipline every
-    * count-partial family follows, so fold ≡ rebuild by exact integer
-    * arithmetic). The write verbs keep the fold 0/1-valued by reading the
-    * current live set first (pattern-table-sized — the one concession to
-    * set semantics), so re-adding a live pattern or deleting an absent
-    * one is a no-op, not a reference-count surprise. `_meta` lands LAST
-    * as the completeness marker. Every verb sanitizes its input
-    * ([[graft.functions.CrossHash.sanitizePatterns]]) so the serving
-    * automaton never sees an automaton-illegal pattern.
+  /** The persisted banned-phrase blocklist: `_patterns` holds (pattern,
+    * delta) membership partials, `_meta` the seed count. The write verbs
+    * below keep the fold 0/1-valued by reading the live set first, so
+    * re-adding a live pattern or deleting an absent one is a no-op, and
+    * they sanitize their input ([[graft.functions.CrossHash.sanitizePatterns]])
+    * so the serving automaton never sees an illegal pattern.
     *
-    * SINGLE-WRITER contract (r14 ADVICE): the read-live-then-append step
-    * in [[ingestIntoBlocklist]]/[[deleteFromBlocklist]] is not atomic —
-    * two CONCURRENT ingests of the same absent pattern each see it
-    * absent and both append +1 (fold = 2), after which one take-down
-    * leaves the pattern live: a silent right-to-forget failure. Run the
-    * maintenance verbs from one writer at a time (the discipline every
-    * persisted family here assumes — generation cutover is the
-    * concurrency seam, not the append log). Readers are always safe.
+    * Single writer: read-live-then-append is not atomic, so two
+    * concurrent ingests of one absent pattern fold it to 2, and one
+    * take-down then leaves it live. Compaction folds every live pattern
+    * back to 1. Readers are always safe.
+    */
+  val Blocklist = new PartialFamily("_patterns", Seq("pattern"), "delta",
+    "n_seed" -> 0, membership = true)
+
+  /** Write a fresh blocklist at `tablePrefix`: one +1 row per distinct
+    * sanitized pattern.
     */
   def writeBlocklist(
       spark: org.apache.spark.sql.SparkSession,
@@ -1625,91 +1389,40 @@ object Text {
       patterns: Seq[String]): Unit = {
     import spark.implicits._
     val pats = graft.functions.CrossHash.sanitizePatterns(patterns).distinct
-    pats.map(p => (p, 1L)).toDF("pattern", "delta")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      .saveAsTable(s"${tablePrefix}_patterns")
-    spark.createDataFrame(Seq(Tuple1(pats.size))).toDF("n_seed")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      .saveAsTable(s"${tablePrefix}_meta")
+    Blocklist.write(tablePrefix, pats.map(p => (p, 1L)).toDF("pattern", "delta"), pats.size)
   }
 
-  /** Add patterns to a persisted blocklist: +1 delta rows for the
-    * sanitized additions not already live, appended to the ACTIVE
-    * generation — no rewrite of existing rows.
-    */
+  /** Add the sanitized patterns not already live. */
   def ingestIntoBlocklist(
       spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String,
       patterns: Seq[String]): Unit = {
     import spark.implicits._
-    val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    val live = resolveFrom(spark, tp).toSet
+    val live = resolveBlocklist(spark, tablePrefix).toSet
     val add = graft.functions.CrossHash.sanitizePatterns(patterns)
       .distinct.filterNot(live)
     if (add.nonEmpty)
-      add.map(p => (p, 1L)).toDF("pattern", "delta")
-        .write.mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
-        .saveAsTable(s"${tp}_patterns")
+      Blocklist.ingest(tablePrefix, add.map(p => (p, 1L)).toDF("pattern", "delta"))
   }
 
-  /** Take patterns DOWN from a persisted blocklist: −1 delta rows for the
-    * currently-live targets — the right-to-forget verb at
-    * pattern-table cost.
-    */
+  /** Take down the patterns that are currently live. */
   def deleteFromBlocklist(
       spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String,
       patterns: Seq[String]): Unit = {
     import spark.implicits._
-    val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
-    val live = resolveFrom(spark, tp).toSet
+    val live = resolveBlocklist(spark, tablePrefix).toSet
     val del = patterns.distinct.filter(live)
     if (del.nonEmpty)
-      del.map(p => (p, -1L)).toDF("pattern", "delta")
-        .write.mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
-        .saveAsTable(s"${tp}_patterns")
+      Blocklist.delete(tablePrefix, del.map(p => (p, 1L)).toDF("pattern", "delta"))
   }
 
-  /** The live pattern set of a persisted blocklist, generation-resolved:
-    * fold the deltas, keep positives, return SORTED (deterministic
-    * automaton construction). Blocklist-sized collect — a broadcast-class
-    * artifact by definition.
-    */
+  /** The live pattern set, sorted (deterministic automaton construction). */
   def resolveBlocklist(
       spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String): Seq[String] =
-    resolveFrom(spark,
-      graft.sources.Sinks.activeTablePrefix(spark, tablePrefix))
-
-  private def resolveFrom(
-      spark: org.apache.spark.sql.SparkSession, tp: String): Seq[String] =
-    spark.table(s"${tp}_patterns")
-      .groupBy("pattern").agg(sum("delta").as("d"))
-      .filter(col("d") > 0)
-      .orderBy("pattern")
+    Blocklist.live(spark, tablePrefix).select("pattern").orderBy("pattern")
       .collect().map(_.getString(0)).toSeq
-
-  /** Compact the blocklist's append-only deltas to one +1 row per live
-    * pattern, staged as a NEW GENERATION (compactKnModel's contract: the
-    * resolved set is unchanged, the fold input stops growing).
-    */
-  def compactBlocklist(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): Long = {
-    val live = resolveBlocklist(spark, tablePrefix)
-    graft.sources.Sinks.rebuildCutover(spark, tablePrefix,
-      BlocklistSuffixes) { g => writeBlocklist(spark, g, live) }
-  }
-
-  /** Replace-and-cutover for the blocklist family — the blue/green
-    * contract every persisted family carries. Returns the new generation.
-    */
-  def rebuildBlocklist(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String,
-      patterns: Seq[String]): Long =
-    graft.sources.Sinks.rebuildCutover(spark, tablePrefix,
-      BlocklistSuffixes) { g => writeBlocklist(spark, g, patterns) }
 
   /** The ULM Viterbi lattice DP as one row-local fold: accumulator
     * acc[j+1] = best (score, n_pieces, segmentation) over the word's

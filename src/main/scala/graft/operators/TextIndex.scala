@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.TableFamily
+
 /** Persisted inverted text index — the SPARSE-retrieval serving tier, the
   * seventh persisted index family (after minhash / gram / IVF / IVF-PQ /
   * k-means / linear-model). Where the dense tier answers "vectors near
@@ -19,7 +21,7 @@ import org.apache.spark.sql.functions._
   *
   * Catalog layout under `tablePrefix` (generation-resolved through the
   * same `_current` pointer chain as every other family — see
-  * [[graft.sources.Sinks.rebuildCutover]]):
+  * [[graft.sources.TableFamily.rebuild]]):
   *
   *   - `_postings` (term, id, tf)  bucketed+sorted by `term` — the
   *     postings lists. A probe filters `term IN (query terms)`, which
@@ -44,8 +46,9 @@ import org.apache.spark.sql.functions._
   */
 object TextIndex {
 
-  private[graft] val Suffixes =
-    Seq("_postings", "_doclens", "_stats", "_tombstones", "_maxscores", "_meta")
+  /** The persisted text index: the member tables listed above. */
+  val Family =
+    new TableFamily("_postings", "_doclens", "_stats", "_tombstones", "_maxscores", "_meta")
 
   // positional postings: `pos` (0-based, ascending) enables phrase /
   // proximity probes; tf = size(pos) keeps BM25 reads unchanged
@@ -351,7 +354,7 @@ object TextIndex {
     * scrub) still leaves tombstoned docs uncounted.
     *
     * The whole excision rides ONE generation cutover
-    * ([[graft.sources.Sinks.compactFamilyCutover]]): a concurrent
+    * ([[graft.sources.TableFamily.compact]]): a concurrent
     * reader resolves a complete generation at every instant (no
     * rename window), and a crash anywhere leaves either the old or the
     * new generation serving. `tablePrefix` is the family's LOGICAL
@@ -381,8 +384,7 @@ object TextIndex {
       (if (truncateTombstones)
         Map[String, DataFrame => DataFrame]("_tombstones" -> (df => df.limit(0)))
       else Map.empty[String, DataFrame => DataFrame])
-    val (_, counts) = graft.sources.Sinks.compactFamilyCutover(
-      spark, tablePrefix, Suffixes, rewrites)
+    val (_, counts) = Family.compact(spark, tablePrefix, rewrites)
     counts("_postings")
   }
 
@@ -1116,19 +1118,9 @@ object TextIndex {
       buckets: Int,
       k1: Double = 1.2,
       b: Double = 0.75): Long =
-    graft.sources.Sinks.rebuildCutover(docs.sparkSession, tablePrefix,
-      Suffixes) { g =>
+    Family.rebuild(docs.sparkSession, tablePrefix) { g =>
       writeTextIndex(docs, idCol, toks, g, buckets, k1, b)
     }
-
-  /** Fork (snapshot) the active generation into an independent staging
-    * copy — the copy-on-write verb mutation trials run on.
-    */
-  def snapshotTextIndex(
-      spark: SparkSession,
-      fromPrefix: String,
-      toPrefix: String): Unit =
-    graft.sources.Sinks.snapshotTablePrefix(spark, fromPrefix, toPrefix, Suffixes)
 
   /** Vacuum: fold tombstoned rows out of postings/doclens (bucket
     * layout preserved — probes keep their pruned scans), re-sum the
@@ -1161,7 +1153,7 @@ object TextIndex {
     val buckets = graft.SessionMemo.cachedHead(spark, s"${tp}_meta").getInt(2)
     val meta = spark.createDataFrame(Seq((k1, b, buckets)))
       .toDF("k1", "b", "buckets")
-    graft.sources.Sinks.compactFamilyCutover(spark, tablePrefix, Suffixes,
+    Family.compact(spark, tablePrefix,
       Map[String, DataFrame => DataFrame]("_meta" -> (_ => meta)))._1
   }
 }

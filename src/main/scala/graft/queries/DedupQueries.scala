@@ -49,7 +49,7 @@ object DedupQueries {
 
   /** Shared persisted minhash BASE index (the 90% corpus at the serving
     * banding k=16/bands=4): `d_incremental_indexed` probes it read-only
-    * and `d_delete_probe` FORKS it ([[Dedup.snapshotMinhashIndex]]) to
+    * and `d_delete_probe` FORKS it (`Dedup.Minhash.fork`) to
     * trial its take-down — the build-once / fork-to-stage discipline the
     * similarity tier's base indexes follow (see
     * `SimilarityQueries.ensureIvfBase`). Built once per (session,
@@ -58,8 +58,7 @@ object DedupQueries {
   private[queries] def ensureMinhashBase(s: SparkSession, d: String): String = {
     val prefix = s"mh_base_${ScratchKeys.forPath(d)}"
     SessionMemo.ensure(s, s"mh_base:$d") {
-      Seq(s"${prefix}_bands", s"${prefix}_sigs", s"${prefix}_meta")
-        .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+      Dedup.Minhash.drop(s, prefix)
       Dedup.writeMinhashIndex(
         minhashSigsFrame(s, d).filter(col("id") % 10 =!= 0), prefix,
         buckets = 8, k = 16, bands = 4)
@@ -356,11 +355,7 @@ object DedupQueries {
       // "yesterday" table is a complete pointer-resolved generation, and
       // the day's update would stage the next one
       val prefix = s"cc_labels_${ScratchKeys.forPath(d)}"
-      val genPat = java.util.regex.Pattern.quote(prefix) + "_g\\d+_(labels|meta)"
-      val stale = s.sessionState.catalog.listTables("default")
-        .map(_.table).filter(_.toLowerCase.matches(genPat))
-      (stale ++ Seq(s"${prefix}_current", s"${prefix}_labels", s"${prefix}_meta"))
-        .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+      graft.sources.Sinks.Labels.drop(s, prefix)
       graft.sources.Sinks.updateLabelTable(
         s, prefix, Dedup.connectedComponentsStar(oldEdges), 8)
       val inc = Dedup.incrementalConnectedComponents(
@@ -627,10 +622,7 @@ object DedupQueries {
     "d_rebuild_probe" -> ((s, d) => {
       val sigs = minhashSigsFrame(s, d)
       val prefix = s"mh_rb_${ScratchKeys.forPath(d)}"
-      Seq(s"${prefix}_bands", s"${prefix}_sigs", s"${prefix}_meta",
-          s"${prefix}_current",
-          s"${prefix}_g1_bands", s"${prefix}_g1_sigs", s"${prefix}_g1_meta")
-        .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+      Dedup.Minhash.drop(s, prefix)
       val corpus = sigs.filter(col("id") % 10 =!= 0)
       Dedup.writeMinhashIndex(corpus, prefix, buckets = 8, k = 16, bands = 2)
       val gen = Dedup.rebuildMinhashIndex(corpus, prefix, buckets = 8, k = 16, bands = 4)
@@ -661,8 +653,7 @@ object DedupQueries {
       val prefix = s"mh_eo_${ScratchKeys.forPath(d)}"
       // the crash-recovery scrub advances a generation now — scrub the
       // pointer + old generations too, or a rerun mis-resolves
-      graft.sources.Sinks.dropTableFamily(s, prefix,
-        Seq("_bands", "_sigs", "_meta"))
+      Dedup.Minhash.drop(s, prefix)
       val idx = sigs.filter(col("id") % 10 =!= 0)
       // the completeness certificate's index-side count is
       // lifecycle-independent (the shared signature frame) — computed
@@ -714,7 +705,7 @@ object DedupQueries {
       val prefix = s"mh_del_${ScratchKeys.forPath(d)}"
       // the take-down trials on a FORK of the shared base (copy-on-write
       // pinned in SinksSpec/DedupSimilaritySpec) — no corpus re-signing
-      Dedup.snapshotMinhashIndex(s, ensureMinhashBase(s, d), prefix)
+      Dedup.Minhash.fork(s, ensureMinhashBase(s, d), prefix)
       Dedup.deleteFromMinhashIndex(s, prefix,
         sigs.filter(col("id") % 10 =!= 0 && col("id") % 3 === 0).select("id"))
       Dedup.minhashPairsAgainstIndex(
@@ -734,7 +725,7 @@ object DedupQueries {
     "d_delete_spans" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val prefix = s"gram_del_${ScratchKeys.forPath(d)}"
-      graft.sources.Sinks.dropTableFamily(s, prefix, Seq("_grams", "_meta"))
+      Dedup.Grams.drop(s, prefix)
       val idxDocs = docs.filter(col("doc_id") % 10 =!= 0)
       Dedup.writeGramIndex(idxDocs, "doc_id", toks, n = 5, prefix, buckets = 8)
       Dedup.deleteFromGramIndex(s, prefix,
@@ -815,7 +806,7 @@ object DedupQueries {
     "d_dup_spans_indexed" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val prefix = s"gram_index_${ScratchKeys.forPath(d)}"
-      graft.sources.Sinks.dropTableFamily(s, prefix, Seq("_grams", "_meta"))
+      Dedup.Grams.drop(s, prefix)
       // the index corpus (doc_id % 10 != 0) arrives in two installments —
       // build + append — then a VACUUM cycle rewrites the fragmented
       // df-partials to one row per gram before the probe, so the oracle
@@ -844,9 +835,7 @@ object DedupQueries {
     "d_rebuild_spans" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val prefix = s"gram_rb_${ScratchKeys.forPath(d)}"
-      Seq(s"${prefix}_grams", s"${prefix}_meta", s"${prefix}_current",
-          s"${prefix}_g1_grams", s"${prefix}_g1_meta")
-        .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+      Dedup.Grams.drop(s, prefix)
       val idxDocs = docs.filter(col("doc_id") % 10 =!= 0)
       Dedup.writeGramIndex(idxDocs, "doc_id", toks, n = 4, prefix, buckets = 8)
       val gen = Dedup.rebuildGramIndex(idxDocs, "doc_id", toks, n = 5, prefix, buckets = 8)

@@ -27,7 +27,7 @@ object SimilarityQueries {
     * per pass. Built once per (session, corpus) here (memoized like the
     * shared frames; [[SharedFrames]] pre-builds them in Bench so the
     * cost lands in the `shared_frame_builds` entry), probed read-only by
-    * the probe-shaped queries, and FORKED ([[Similarity.snapshotIvfIndex]])
+    * the probe-shaped queries, and FORKED (`Similarity.Ivf.fork`)
     * by the mutating ones — the production build-once / fork-to-stage
     * discipline, and the deterministic quantizer makes every consumer's
     * rows identical to a private rebuild. Mutating a fork leaves the
@@ -37,8 +37,7 @@ object SimilarityQueries {
   private[queries] def ensureIvfBase(s: SparkSession, d: String): String = {
     val prefix = s"ivf_base_${ScratchKeys.forPath(d)}"
     SessionMemo.ensure(s, s"ivf_base:$d") {
-      Seq(s"${prefix}_lists", s"${prefix}_cents", s"${prefix}_meta")
-        .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+      Similarity.Ivf.drop(s, prefix)
       Similarity.writeIvfIndex(emb(s, d), "vec_id", "embedding", prefix,
         buckets = 8, nlist = 16, iters = 3, assign = IvfAssign)
     }
@@ -48,9 +47,7 @@ object SimilarityQueries {
   private[queries] def ensureIvfPqBase(s: SparkSession, d: String): String = {
     val prefix = s"ivfpq_base_${ScratchKeys.forPath(d)}"
     SessionMemo.ensure(s, s"ivfpq_base:$d") {
-      Seq(s"${prefix}_codes", s"${prefix}_vecs", s"${prefix}_cents",
-          s"${prefix}_books", s"${prefix}_meta")
-        .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+      Similarity.IvfPq.drop(s, prefix)
       Similarity.writeIvfPqIndex(emb(s, d), "vec_id", "embedding", prefix,
         buckets = 8, nlist = 16, nlistIters = 3, m = 16, ks = 16, iters = 2,
         assign = IvfAssign)
@@ -900,8 +897,7 @@ object SimilarityQueries {
           Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
             .localCheckpoint(true))
       } {
-        Seq(s"${prefix}_lists", s"${prefix}_cents", s"${prefix}_meta")
-          .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+        Similarity.Ivf.drop(s, prefix)
         Similarity.writeIvfIndex(e.filter(col("vec_id") % 10 =!= 0),
           "vec_id", "embedding", prefix, buckets = 8, nlist = 16, iters = 3,
           assign = IvfAssign)
@@ -972,10 +968,7 @@ object SimilarityQueries {
         Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
           .localCheckpoint(true)
       } {
-        Seq(s"${prefix}_lists", s"${prefix}_cents", s"${prefix}_meta",
-            s"${prefix}_current",
-            s"${prefix}_g1_lists", s"${prefix}_g1_cents", s"${prefix}_g1_meta")
-          .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+        Similarity.Ivf.drop(s, prefix)
         Similarity.writeIvfIndex(e.filter(col("vec_id") % 5 =!= 0),
           "vec_id", "embedding", prefix, buckets = 8, nlist = 8, iters = 2)
         Similarity.rebuildIvfIndex(e, "vec_id", "embedding", prefix,
@@ -1009,8 +1002,7 @@ object SimilarityQueries {
       val nlist = math.ceil(math.sqrt(n.toDouble)).toInt
       val nprobe = math.ceil(nlist * 3.0 / 8.0).toInt
       val prefix = s"ivf_sqrtn_${ScratchKeys.forPath(d)}"
-      Seq(s"${prefix}_g1_lists", s"${prefix}_g1_cents", s"${prefix}_g1_meta")
-        .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+      Similarity.Ivf.drop(s, prefix)
       // brute-force reference never reads the index — built on a second
       // thread while the fork + rebuild run (guide §2.6)
       val (brute, gen) = Overlap.both {
@@ -1021,7 +1013,7 @@ object SimilarityQueries {
         // the shared base (snapshot, no retrain) — the staging-copy
         // workflow, and the rebuild below must still retrain + cut over
         // from it
-        Similarity.snapshotIvfIndex(s, ensureIvfBase(s, d), prefix)
+        Similarity.Ivf.fork(s, ensureIvfBase(s, d), prefix)
         Similarity.rebuildIvfIndex(e, "vec_id", "embedding", prefix,
           buckets = 8, nlist = nlist, iters = 3, assign = IvfAssign)
       }
@@ -1057,11 +1049,7 @@ object SimilarityQueries {
         Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
           .localCheckpoint(true)
       } {
-        Seq(s"${prefix}_codes", s"${prefix}_vecs", s"${prefix}_cents",
-            s"${prefix}_books", s"${prefix}_meta", s"${prefix}_current",
-            s"${prefix}_g1_codes", s"${prefix}_g1_vecs", s"${prefix}_g1_cents",
-            s"${prefix}_g1_books", s"${prefix}_g1_meta")
-          .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+        Similarity.IvfPq.drop(s, prefix)
         Similarity.writeIvfPqIndex(e.filter(col("vec_id") % 5 =!= 0),
           "vec_id", "embedding", prefix,
           buckets = 8, nlist = 8, nlistIters = 2, m = 16, ks = 16, iters = 2)
@@ -1170,8 +1158,7 @@ object SimilarityQueries {
             .localCheckpoint(true))
       } {
         // the vacuum advances a generation — scrub pointer + generations too
-        graft.sources.Sinks.dropTableFamily(s, prefix,
-          Seq("_codes", "_vecs", "_cents", "_books", "_meta"))
+        Similarity.IvfPq.drop(s, prefix)
         Similarity.writeIvfPqIndex(e.filter(col("vec_id") % 10 =!= 0),
           "vec_id", "embedding", prefix,
           buckets = 8, nlist = 16, nlistIters = 3, m = 16, ks = 16, iters = 2,
@@ -1233,7 +1220,7 @@ object SimilarityQueries {
         // the take-down is trialed on a FORK of the serving base (snapshot,
         // no retrain) — copy-on-write: index_ok additionally pins that the
         // base still lists the FULL corpus after the fork's deletion
-        Similarity.snapshotIvfIndex(s, base, prefix)
+        Similarity.Ivf.fork(s, base, prefix)
         Similarity.deleteFromIvfIndex(s, prefix,
           e.filter(col("vec_id") % 7 === 0).select(col("vec_id").as("id")))
       }
@@ -1279,7 +1266,7 @@ object SimilarityQueries {
         // fork-then-delete (see sim_knn_ivf_delete): the flagship index's
         // take-down trials on a snapshot; index_ok additionally pins the
         // base's codes AND re-rank vectors untouched by the fork's scrub
-        Similarity.snapshotIvfPqIndex(s, base, prefix)
+        Similarity.IvfPq.fork(s, base, prefix)
         Similarity.deleteFromIvfPqIndex(s, prefix,
           e.filter(col("vec_id") % 7 === 0).select(col("vec_id").as("id")))
       }

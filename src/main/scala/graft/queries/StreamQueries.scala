@@ -591,9 +591,7 @@ object StreamQueries {
           .write.mode("overwrite").parquet(out.toString)
       }
       val prefix = s"mh_stream_index_${ScratchKeys.forPath(d)}"
-      Seq(s"${prefix}_bands", s"${prefix}_sigs", s"${prefix}_meta",
-          s"${prefix}_applied")
-        .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+      Dedup.Minhash.drop(s, prefix)
       // seed from the suite-shared signature memo (the same frame
       // d_incremental/d_incremental_indexed split) — the seed is
       // "yesterday's corpus", already signed in production; only the
@@ -666,14 +664,7 @@ object StreamQueries {
           .write.mode("overwrite").parquet(out.toString)
       }
       val prefix = s"mh_stream_del_${ScratchKeys.forPath(d)}"
-      // four streamed deletions = four generation cutovers — scrub the
-      // pointer and old generations so a rerun resolves fresh. maxGen is
-      // EXPLICIT with headroom over the fixture's cutover count: at the
-      // default (4) this fixture sat exactly at the boundary, and adding
-      // one more streamed batch would leave a stale g5 the fresh-JVM
-      // fallback scan in activeTablePrefix could mis-resolve on a rerun
-      graft.sources.Sinks.dropTableFamily(s, prefix,
-        Seq("_bands", "_sigs", "_meta"), maxGen = 12)
+      Dedup.Minhash.drop(s, prefix)
       val corpusSigs = DedupQueries.minhashSigsFrame(s, d)
       Dedup.writeMinhashIndex(
         corpusSigs.filter(col("id") % 10 =!= 0), prefix, buckets = 8, k = 16, bands = 4)
@@ -734,10 +725,7 @@ object StreamQueries {
         }
       }
       val prefix = s"ivf_stream_rb_${ScratchKeys.forPath(d)}"
-      Seq(s"${prefix}_lists", s"${prefix}_cents", s"${prefix}_meta",
-          s"${prefix}_current",
-          s"${prefix}_g1_lists", s"${prefix}_g1_cents", s"${prefix}_g1_meta")
-        .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+      Similarity.Ivf.drop(s, prefix)
       Similarity.writeIvfIndex(e.filter(col("vec_id") % 5 =!= 0),
         "vec_id", "embedding", prefix, buckets = 8, nlist = 8, iters = 2)
       val preDrains = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -842,9 +830,7 @@ object StreamQueries {
           .write.mode("overwrite").parquet(out.toString)
       }
       val prefix = s"ivf_stream_${ScratchKeys.forPath(d)}"
-      Seq(s"${prefix}_lists", s"${prefix}_cents", s"${prefix}_meta",
-          s"${prefix}_applied")
-        .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+      Similarity.Ivf.drop(s, prefix)
       Similarity.writeIvfIndex(e.filter(col("vec_id") % 10 =!= 0),
         "vec_id", "embedding", prefix, buckets = 8, nlist = 16, iters = 3,
         assign = SimilarityQueries.IvfAssign)
@@ -924,13 +910,7 @@ object StreamQueries {
       // update plan reads the OLD generation while writing the NEW one,
       // so no materialize-before-overwrite hack is needed)
       val prefix = s"cc_stream_labels_${ScratchKeys.forPath(d)}"
-      // enumerate generations for cleanup — the generation counter grows
-      // monotonically across suite runs, so a fixed drop list would leak
-      val genPat = java.util.regex.Pattern.quote(prefix) + "_g\\d+_(labels|meta)"
-      val stale = s.sessionState.catalog.listTables("default")
-        .map(_.table).filter(_.toLowerCase.matches(genPat))
-      (stale ++ Seq(s"${prefix}_current", s"${prefix}_labels", s"${prefix}_meta"))
-        .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+      graft.sources.Sinks.Labels.drop(s, prefix)
       graft.sources.Sinks.updateLabelTable(
         s, prefix, Dedup.connectedComponentsStar(oldEdges), 8)
       val scratch = java.nio.file.Files.createTempDirectory("graft_stream_cc_")
@@ -1052,8 +1032,7 @@ object StreamQueries {
           .write.mode("overwrite").parquet(out.toString)
       }
       val prefix = s"km_serve_${ScratchKeys.forPath(d)}"
-      Seq(s"${prefix}_cents", s"${prefix}_meta")
-        .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+      Similarity.Kmeans.drop(s, prefix)
       Similarity.writeKmeansModel(e, "vec_id", "embedding", prefix,
         k = 8, iters = 2)
       val scratch = java.nio.file.Files.createTempDirectory("graft_stream_km_")
@@ -1109,8 +1088,7 @@ object StreamQueries {
           .write.mode("overwrite").parquet(out.toString)
       }
       val prefix = s"clf_serve_${ScratchKeys.forPath(d)}"
-      Seq(s"${prefix}_weights", s"${prefix}_meta")
-        .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+      LinearModel.Linear.drop(s, prefix)
       LinearModel.writeLinearModel(s, prefix,
         TextQueries.ClfXCols, TextQueries.classifierWeights(s, d))
       val scratch = java.nio.file.Files.createTempDirectory("graft_stream_clf_")
@@ -1176,8 +1154,7 @@ object StreamQueries {
           .write.mode("overwrite").parquet(out.toString)
       }
       val prefix = s"clf_cals_${ScratchKeys.forPath(d)}"
-      LinearModel.CalSuffixes
-        .foreach(sfx => graft.sources.Sinks.dropManagedTable(s, s"$prefix$sfx"))
+      LinearModel.Calibrated.drop(s, prefix)
       LinearModel.writeCalibratedLinearModel(s, prefix, TextQueries.ClfXCols,
         TextQueries.holdoutWeights(s, d), TextQueries.calibrationFitFrame(s, d))
       val scratch = java.nio.file.Files.createTempDirectory("graft_stream_cal_")
@@ -1260,7 +1237,7 @@ object StreamQueries {
       import graft.operators.Text
       val finalSet = TextQueries.topBigramBlocklist(s, d, 12).drop(2)
       val prefix = s"blk_st_${ScratchKeys.forPath(d)}"
-      graft.sources.Sinks.dropTableFamily(s, prefix, Text.BlocklistSuffixes)
+      Text.Blocklist.drop(s, prefix)
       Text.writeBlocklist(s, prefix, finalSet.take(4))
       val rest = finalSet.drop(4)
       val scratch = java.nio.file.Files.createTempDirectory("graft_stream_blk_")
@@ -1312,7 +1289,7 @@ object StreamQueries {
           .write.mode("overwrite").parquet(out.toString)
       }
       val prefix = s"ulm_stream_${ScratchKeys.forPath(d)}"
-      graft.sources.Sinks.dropTableFamily(s, prefix, Text.UlmSuffixes)
+      Text.Ulm.drop(s, prefix)
       val (pieces, _) = TextQueries.ulm2(s, d)
       Text.writeUlmModel(pieces, prefix, maxPieceLen = 4)
       val scratch = java.nio.file.Files.createTempDirectory("graft_stream_ulm_")
@@ -1456,7 +1433,7 @@ object StreamQueries {
     }),
 
     // Streamed KN-LM serving: the ninth family's streaming twin — the
-    // bigram-count model trains once and PERSISTS (writeKnModel), then
+    // bigram-count model trains once and PERSISTS (`Text.Kn.write`), then
     // the corpus streams in four micro-batches, each batch scored in
     // foreachBatch against the STORED statistics (generation-resolved
     // fold, tx_kn_nll's arithmetic). Per-doc scores depend only on the
@@ -1588,9 +1565,7 @@ object StreamQueries {
           .write.mode("overwrite").parquet(out.toString)
       }
       val prefix = s"ivfpq_stream_${ScratchKeys.forPath(d)}"
-      Seq(s"${prefix}_codes", s"${prefix}_vecs", s"${prefix}_cents",
-          s"${prefix}_books", s"${prefix}_meta", s"${prefix}_applied")
-        .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+      Similarity.IvfPq.drop(s, prefix)
       Similarity.writeIvfPqIndex(e.filter(col("vec_id") % 10 =!= 0),
         "vec_id", "embedding", prefix,
         buckets = 8, nlist = 16, nlistIters = 3, m = 16, ks = 16, iters = 2,
@@ -1676,8 +1651,7 @@ object StreamQueries {
           .write.mode("overwrite").parquet(out.toString)
       }
       val prefix = s"ti_stream_index_${ScratchKeys.forPath(d)}"
-      (TextIndex.Suffixes :+ "_applied")
-        .foreach(sfx => graft.sources.Sinks.dropManagedTable(s, s"$prefix$sfx"))
+      TextIndex.Family.drop(s, prefix)
       TextIndex.writeTextIndex(
         docs.filter(col("doc_id") % 10 =!= 0), "doc_id", tk, prefix, buckets = 8)
       val scratch = java.nio.file.Files.createTempDirectory("graft_stream_ti_")
@@ -1767,8 +1741,7 @@ object StreamQueries {
           .write.mode("overwrite").parquet(out.toString)
       }
       val prefix = s"gram_stream_index_${ScratchKeys.forPath(d)}"
-      Seq(s"${prefix}_grams", s"${prefix}_meta", s"${prefix}_applied")
-        .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+      Dedup.Grams.drop(s, prefix)
       Dedup.writeGramIndex(
         docs.filter(col("doc_id") % 10 =!= 0), "doc_id",
         CrossHash.tokens(col("text")), n = 5, prefix, buckets = 8)

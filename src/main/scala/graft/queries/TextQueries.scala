@@ -60,8 +60,8 @@ object TextQueries {
   private[queries] def ensureKnBase(s: SparkSession, d: String): String = {
     val prefix = s"knlm_base_${ScratchKeys.forPath(d)}"
     SessionMemo.ensure(s, s"knlm_base:$d") {
-      graft.sources.Sinks.dropTableFamily(s, prefix, Text.KnSuffixes)
-      Text.writeKnModel(docs(s, d), "doc_id", toks, prefix)
+      Text.Kn.drop(s, prefix)
+      Text.Kn.write(prefix, Text.knCounts(docs(s, d), "doc_id", toks))
     }
     prefix
   }
@@ -76,8 +76,8 @@ object TextQueries {
   private[queries] def ensureKn3Base(s: SparkSession, d: String): String = {
     val prefix = s"kn3_base_${ScratchKeys.forPath(d)}"
     SessionMemo.ensure(s, s"kn3_base:$d") {
-      graft.sources.Sinks.dropTableFamily(s, prefix, Text.Kn3Suffixes)
-      Text.writeKn3Model(docs(s, d), "doc_id", toks, prefix)
+      Text.Kn3.drop(s, prefix)
+      Text.Kn3.write(prefix, Text.kn3Counts(docs(s, d), "doc_id", toks))
     }
     prefix
   }
@@ -167,7 +167,7 @@ object TextQueries {
   private[queries] def ensureUlmBase(s: SparkSession, d: String): String = {
     val prefix = s"ulm_base_${ScratchKeys.forPath(d)}"
     SessionMemo.ensure(s, s"ulm_base:$d") {
-      graft.sources.Sinks.dropTableFamily(s, prefix, Text.UlmSuffixes)
+      Text.Ulm.drop(s, prefix)
       Text.writeUlmModel(ulm2(s, d)._1, prefix, maxPieceLen = 4)
     }
     prefix
@@ -527,8 +527,7 @@ object TextQueries {
   private[queries] def ensureTextBase(s: SparkSession, d: String): String = {
     val prefix = s"ti_base_${ScratchKeys.forPath(d)}"
     SessionMemo.ensure(s, s"ti_base:$d") {
-      TextIndex.Suffixes
-        .foreach(sfx => graft.sources.Sinks.dropManagedTable(s, s"$prefix$sfx"))
+      TextIndex.Family.drop(s, prefix)
       TextIndex.writeTextIndex(
         docs(s, d).filter(col("doc_id") % 4 =!= 3), "doc_id", toks,
         prefix, buckets = 8)
@@ -600,8 +599,7 @@ object TextQueries {
   private[queries] def ensureSkewBase(s: SparkSession, d: String): String = {
     val prefix = s"ti_skew_${ScratchKeys.forPath(d)}"
     SessionMemo.ensure(s, s"ti_skew:$d") {
-      TextIndex.Suffixes
-        .foreach(sfx => graft.sources.Sinks.dropManagedTable(s, s"$prefix$sfx"))
+      TextIndex.Family.drop(s, prefix)
       TextIndex.writeTextIndex(skewedDocs(s, d), "doc_id", toks, prefix,
         buckets = 8)
     }
@@ -975,8 +973,7 @@ object TextQueries {
     // hash-mismatches.
     "tx_clf_cal_serving" -> ((s, d) => {
       val prefix = s"clf_cal_${ScratchKeys.forPath(d)}"
-      LinearModel.CalSuffixes
-        .foreach(sfx => graft.sources.Sinks.dropManagedTable(s, s"$prefix$sfx"))
+      LinearModel.Calibrated.drop(s, prefix)
       LinearModel.writeCalibratedLinearModel(s, prefix, ClfXCols,
         holdoutWeights(s, d), calibrationFitFrame(s, d))
       LinearModel.scoreAgainstCalibratedModel(
@@ -1241,9 +1238,8 @@ object TextQueries {
     // outcomes.
     "tx_bm25_ingest" -> ((s, d) => {
       val prefix = s"ti_eo_${ScratchKeys.forPath(d)}"
-      (TextIndex.Suffixes :+ "_applied")
-        .foreach(sfx => graft.sources.Sinks.dropManagedTable(s, s"$prefix$sfx"))
-      TextIndex.snapshotTextIndex(s, ensureTextBase(s, d), prefix)
+      TextIndex.Family.drop(s, prefix)
+      TextIndex.Family.fork(s, ensureTextBase(s, d), prefix)
       val day = docs(s, d).filter(col("doc_id") % 4 === 3)
       val batch0 = day.filter(col("doc_id") % 2 === 0)
       val batch1 = day.filter(col("doc_id") % 2 =!= 0)
@@ -1297,7 +1293,7 @@ object TextQueries {
     // df all shift, so a stale stat or a leaked posting hash-mismatches.
     "tx_bm25_delete" -> ((s, d) => {
       val prefix = s"ti_del_${ScratchKeys.forPath(d)}"
-      TextIndex.snapshotTextIndex(s, ensureTextBase(s, d), prefix)
+      TextIndex.Family.fork(s, ensureTextBase(s, d), prefix)
       TextIndex.deleteFromTextIndex(s, prefix,
         docs(s, d).filter(col("doc_id") % 4 =!= 3 && col("doc_id") % 3 === 0)
           .select("doc_id"))
@@ -1332,9 +1328,8 @@ object TextQueries {
     // certificate pins gen=1 + bare tables retired.
     "tx_bm25_rebuild" -> ((s, d) => {
       val prefix = s"ti_rb_${ScratchKeys.forPath(d)}"
-      TextIndex.Suffixes.map(sfx => s"${prefix}_g1$sfx")
-        .foreach(graft.sources.Sinks.dropManagedTable(s, _))
-      TextIndex.snapshotTextIndex(s, ensureTextBase(s, d), prefix)
+      TextIndex.Family.drop(s, prefix)
+      TextIndex.Family.fork(s, ensureTextBase(s, d), prefix)
       s.createDataFrame(Seq((2.0, 0.5, 8))).toDF("k1", "b", "buckets")
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .format("parquet").saveAsTable(s"${prefix}_meta")
@@ -1545,15 +1540,15 @@ object TextQueries {
 
     // Persisted KN-LM SERVING — the ninth family's write -> reopen ->
     // score-from-stored round trip (the KenLM-artifact shape): the bigram
-    // count partials land on disk (writeKnModel), the % 7 slice scores
+    // count partials land on disk (`Text.Kn.write`), the % 7 slice scores
     // against the STORED statistics (generation-resolved fold, same
     // arithmetic as tx_kn_nll to the last double op), and the oracle
     // recomputes the full-corpus chain for the slice — a stored partial
     // that drifted from the corpus counts hash-mismatches.
     "tx_kn_serving" -> ((s, d) => {
       val prefix = s"knlm_serve_${ScratchKeys.forPath(d)}"
-      graft.sources.Sinks.dropTableFamily(s, prefix, Text.KnSuffixes)
-      Text.writeKnModel(docs(s, d), "doc_id", toks, prefix)
+      Text.Kn.drop(s, prefix)
+      Text.Kn.write(prefix, Text.knCounts(docs(s, d), "doc_id", toks))
       Text.scoreAgainstKnModel(docs(s, d).filter(col("doc_id") % 7 === 0),
           "doc_id", toks, prefix)
         .withColumnRenamed("id", "doc_id")
@@ -1567,11 +1562,11 @@ object TextQueries {
     // retrain over old+new.
     "tx_kn_ingest" -> ((s, d) => {
       val prefix = s"knlm_ing_${ScratchKeys.forPath(d)}"
-      graft.sources.Sinks.dropTableFamily(s, prefix, Text.KnSuffixes)
-      Text.writeKnModel(docs(s, d).filter(col("doc_id") % 3 =!= 0),
-        "doc_id", toks, prefix)
-      Text.ingestIntoKnModel(docs(s, d).filter(col("doc_id") % 3 === 0),
-        "doc_id", toks, prefix)
+      Text.Kn.drop(s, prefix)
+      Text.Kn.write(prefix,
+        Text.knCounts(docs(s, d).filter(col("doc_id") % 3 =!= 0), "doc_id", toks))
+      Text.Kn.ingest(prefix,
+        Text.knCounts(docs(s, d).filter(col("doc_id") % 3 === 0), "doc_id", toks))
       Text.scoreAgainstKnModel(docs(s, d).filter(col("doc_id") % 7 === 0),
           "doc_id", toks, prefix)
         .withColumnRenamed("id", "doc_id")
@@ -1586,10 +1581,10 @@ object TextQueries {
     // statistic (type counts, continuation counts, the discount itself).
     "tx_kn_delete" -> ((s, d) => {
       val prefix = s"knlm_del_${ScratchKeys.forPath(d)}"
-      graft.sources.Sinks.dropTableFamily(s, prefix, Text.KnSuffixes)
-      Text.writeKnModel(docs(s, d), "doc_id", toks, prefix)
-      Text.deleteFromKnModel(docs(s, d).filter(col("doc_id") % 5 === 0),
-        "doc_id", toks, prefix)
+      Text.Kn.drop(s, prefix)
+      Text.Kn.write(prefix, Text.knCounts(docs(s, d), "doc_id", toks))
+      Text.Kn.delete(prefix,
+        Text.knCounts(docs(s, d).filter(col("doc_id") % 5 === 0), "doc_id", toks))
       Text.scoreAgainstKnModel(
           docs(s, d).filter(col("doc_id") % 7 === 0 && col("doc_id") % 5 =!= 0),
           "doc_id", toks, prefix)
@@ -1600,14 +1595,14 @@ object TextQueries {
     // Persisted TRIGRAM KN-LM SERVING — the TENTH family's write ->
     // reopen -> score-from-stored round trip at the order production
     // perplexity filters actually run (CCNet/KenLM run order ≥ 3): the
-    // trigram-type count partials land on disk (writeKn3Model), the % 7
+    // trigram-type count partials land on disk (`Text.Kn3.write`), the % 7
     // slice scores against the STORED statistics (generation-resolved
     // fold, tx_kn3_nll's arithmetic to the last double op), and the
     // oracle recomputes the full-corpus chain for the slice.
     "tx_kn3_serving" -> ((s, d) => {
       val prefix = s"kn3_serve_${ScratchKeys.forPath(d)}"
-      graft.sources.Sinks.dropTableFamily(s, prefix, Text.Kn3Suffixes)
-      Text.writeKn3Model(docs(s, d), "doc_id", toks, prefix)
+      Text.Kn3.drop(s, prefix)
+      Text.Kn3.write(prefix, Text.kn3Counts(docs(s, d), "doc_id", toks))
       Text.scoreAgainstKn3Model(docs(s, d).filter(col("doc_id") % 7 === 0),
           "doc_id", toks, prefix)
         .withColumnRenamed("id", "doc_id")
@@ -1621,11 +1616,11 @@ object TextQueries {
     // every derived statistic of every order.
     "tx_kn3_ingest" -> ((s, d) => {
       val prefix = s"kn3_ing_${ScratchKeys.forPath(d)}"
-      graft.sources.Sinks.dropTableFamily(s, prefix, Text.Kn3Suffixes)
-      Text.writeKn3Model(docs(s, d).filter(col("doc_id") % 3 =!= 0),
-        "doc_id", toks, prefix)
-      Text.ingestIntoKn3Model(docs(s, d).filter(col("doc_id") % 3 === 0),
-        "doc_id", toks, prefix)
+      Text.Kn3.drop(s, prefix)
+      Text.Kn3.write(prefix,
+        Text.kn3Counts(docs(s, d).filter(col("doc_id") % 3 =!= 0), "doc_id", toks))
+      Text.Kn3.ingest(prefix,
+        Text.kn3Counts(docs(s, d).filter(col("doc_id") % 3 === 0), "doc_id", toks))
       Text.scoreAgainstKn3Model(docs(s, d).filter(col("doc_id") % 7 === 0),
           "doc_id", toks, prefix)
         .withColumnRenamed("id", "doc_id")
@@ -1639,10 +1634,10 @@ object TextQueries {
     // continuation counts, and both discounts.
     "tx_kn3_delete" -> ((s, d) => {
       val prefix = s"kn3_del_${ScratchKeys.forPath(d)}"
-      graft.sources.Sinks.dropTableFamily(s, prefix, Text.Kn3Suffixes)
-      Text.writeKn3Model(docs(s, d), "doc_id", toks, prefix)
-      Text.deleteFromKn3Model(docs(s, d).filter(col("doc_id") % 5 === 0),
-        "doc_id", toks, prefix)
+      Text.Kn3.drop(s, prefix)
+      Text.Kn3.write(prefix, Text.kn3Counts(docs(s, d), "doc_id", toks))
+      Text.Kn3.delete(prefix,
+        Text.kn3Counts(docs(s, d).filter(col("doc_id") % 5 === 0), "doc_id", toks))
       Text.scoreAgainstKn3Model(
           docs(s, d).filter(col("doc_id") % 7 === 0 && col("doc_id") % 5 =!= 0),
           "doc_id", toks, prefix)
@@ -1871,7 +1866,7 @@ object TextQueries {
       val blocked = bottom.union(dupBad).distinct()
         .collect().map(_.getString(0)).toSeq.sorted
       val prefix = s"domblk_${ScratchKeys.forPath(d)}"
-      graft.sources.Sinks.dropTableFamily(s, prefix, Text.BlocklistSuffixes)
+      Text.Blocklist.drop(s, prefix)
       Text.writeBlocklist(s, prefix, blocked)
       val live = Text.resolveBlocklist(s, prefix)
       dd.join(broadcast(stats), Seq("domain"))
@@ -1915,7 +1910,7 @@ object TextQueries {
     // one hash-mismatches.
     "tx_blocklist_serving" -> ((s, d) => {
       val prefix = s"blk_${ScratchKeys.forPath(d)}"
-      graft.sources.Sinks.dropTableFamily(s, prefix, Text.BlocklistSuffixes)
+      Text.Blocklist.drop(s, prefix)
       val top12 = topBigramBlocklist(s, d, 12)
       Text.writeBlocklist(s, prefix, top12.take(10))
       Text.ingestIntoBlocklist(s, prefix, top12.drop(10))
@@ -2065,7 +2060,7 @@ object TextQueries {
     // hash-mismatches the doc-level counts too.
     "tx_ulm_serving" -> ((s, d) => {
       val prefix = s"ulm_serve_${ScratchKeys.forPath(d)}"
-      graft.sources.Sinks.dropTableFamily(s, prefix, Text.UlmSuffixes)
+      Text.Ulm.drop(s, prefix)
       val (pieces, segs) = ulm2(s, d)
       Text.writeUlmModel(pieces, prefix, maxPieceLen = 4)
       val words = docs(s, d).select(explode(toks).as("word"))

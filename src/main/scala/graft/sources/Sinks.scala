@@ -334,53 +334,6 @@ object Sinks {
     }
   }
 
-  /** The shared stage → pointer-flip → retire flow behind every index
-    * family's rebuild verb: `build` writes a complete index under the
-    * staged generation prefix it is given (its `_meta` last), the
-    * cutover is one small-table overwrite of `<prefix>_current`, and
-    * the retired generation drops last. Crash windows each leave a
-    * serveable state — see [[activeTablePrefix]]. Returns the new
-    * generation number.
-    */
-  private[graft] def rebuildCutover(
-      spark: SparkSession,
-      tablePrefix: String,
-      suffixes: Seq[String])(build: String => Unit): Long = {
-    val cur =
-      if (spark.catalog.tableExists(s"${tablePrefix}_current"))
-        spark.table(s"${tablePrefix}_current").head().getLong(0)
-      else 0L
-    val next = cur + 1
-    val g = s"${tablePrefix}_g$next"
-    suffixes.foreach(sfx => dropManagedTable(spark, s"$g$sfx"))
-    build(g)
-    spark.createDataFrame(Seq(Tuple1(next))).toDF("gen")
-      .write.mode(SaveMode.Overwrite)
-      .format("parquet").saveAsTable(s"${tablePrefix}_current")
-    val oldPrefix = if (cur == 0) tablePrefix else s"${tablePrefix}_g$cur"
-    suffixes.foreach(sfx => dropManagedTable(spark, s"$oldPrefix$sfx"))
-    next
-  }
-
-  /** Drop every on-disk remnant of a pointer-managed table family at
-    * `prefix`: the bare member tables, the exactly-once ledger, the
-    * generation pointer, and generations g1..`maxGen` — the idempotence
-    * scrub for trial fixtures that re-build a family per run (now that
-    * deletes/compactions also advance generations, a leftover `_current`
-    * from a previous run would silently mis-resolve a freshly written
-    * bare index).
-    */
-  def dropTableFamily(
-      spark: SparkSession,
-      prefix: String,
-      suffixes: Seq[String],
-      maxGen: Int = 4): Unit = {
-    (suffixes ++ Seq("_applied", "_current"))
-      .foreach(sfx => dropManagedTable(spark, s"$prefix$sfx"))
-    (1 to maxGen).foreach(g =>
-      suffixes.foreach(sfx => dropManagedTable(spark, s"${prefix}_g$g$sfx")))
-  }
-
   /** Reset an index family's exactly-once ingest ledger (`_applied`,
     * kept at the BARE prefix — deliberately OUTSIDE the generation
     * chain). The ledger's batch history spans generations, which is the
@@ -396,52 +349,6 @@ object Sinks {
     */
   def clearIngestLedger(spark: SparkSession, tablePrefix: String): Unit =
     dropManagedTable(spark, s"${tablePrefix}_applied")
-
-  /** Snapshot (fork) a persisted table family — the index lifecycle verb
-    * a vector/dedup store exposes as "restore into a staging copy": the
-    * ACTIVE generation of `fromPrefix` (pointer-resolved, same chain as
-    * every probe) is copied into a bare `toPrefix`, table by table, as a
-    * FILE-LEVEL clone (guide §6): the catalog metadata — schema,
-    * provider, bucket spec — is cloned via `CREATE TABLE … LIKE …` and
-    * the parquet data files copy byte-identically under their original
-    * names (bucketed file names carry the bucket id, so the fork serves
-    * with the identical zero-Exchange probe layout). No Spark job runs
-    * at all: the r15 path re-EXECUTED a read→bucketed-write per member
-    * table (decode + shuffle-free re-encode, one job each — ~1–2 s per
-    * 6-table fork at bench scale and O(CPU·bytes) at 100 TB, where a
-    * raw copy is pure sequential I/O). `_meta` copies LAST — the same
-    * completeness-marker discipline as the builders; a crash mid-fork
-    * leaves a metaless (or empty-_meta, which every resolve fails
-    * LOUDLY on) target, and the fork verb re-runs after scrubbing. The
-    * fork is then a fully independent index: mutating verbs
-    * (delete/append/rebuild) on it never touch the source — the
-    * copy-on-write discipline `DedupSimilaritySpec` pins.
-    */
-  def snapshotTablePrefix(
-      spark: SparkSession,
-      fromPrefix: String,
-      toPrefix: String,
-      suffixes: Seq[String]): Unit = {
-    require(fromPrefix != toPrefix,
-      s"snapshotTablePrefix: fork target must differ from source '$fromPrefix'")
-    require(suffixes.contains("_meta"),
-      "snapshotTablePrefix: family must include _meta (the completeness marker)")
-    val from = activeTablePrefix(spark, fromPrefix)
-    // bare target: stale tables or a stale generation pointer at the
-    // target prefix must not leak into (or mis-resolve) the fresh fork
-    (suffixes :+ "_current").foreach(sfx => dropManagedTable(spark, s"$toPrefix$sfx"))
-    val (meta, data) = suffixes.partition(_ == "_meta")
-    // member tables clone SEQUENTIALLY on purpose (r16 A/B): forking the
-    // data members on a thread pool measured flat-to-worse (tx_bm25_delete
-    // 8.05 → 8.75 s focused) — the per-table copies already saturate the
-    // disk through cloneTableViaFileCopy's own pool, so cross-table
-    // concurrency only adds contention. `_meta` lands LAST (completeness
-    // marker: a crash mid-fork leaves a metaless prefix nothing resolves
-    // to).
-    (data ++ meta).foreach { sfx =>
-      cloneTableViaFileCopy(spark, s"$from$sfx", s"$toPrefix$sfx")
-    }
-  }
 
   /** Clone a managed, unpartitioned parquet table by catalog-metadata
     * clone + raw file copy — the zero-job sibling of a read→write copy:
@@ -503,29 +410,23 @@ object Sinks {
     spark.catalog.refreshTable(dst)
   }
 
+  /** The label table family: `_labels` (id → rep, bucketed on `id`). */
+  val Labels = new TableFamily("_labels", "_meta")
+
   /** Blue/green persisted LABEL table (id → rep — the connected-components
     * state [[graft.operators.Dedup.incrementalConnectedComponents]]
     * maintains): each update stages the full new label set as a fresh
-    * generation — bucketed on `id`, `_meta` written LAST as the
-    * completeness marker, exactly the four index families' discipline —
-    * then flips `<prefix>_current` (one small-table overwrite) and
-    * retires the old generation. Before this verb the streaming CC path
-    * overwrote its bucketed label table in place per batch: a crash
-    * mid-overwrite lost the labels, the one persisted state without the
-    * [[rebuildCutover]] protection (round-8 verdict). Every crash window
-    * now leaves a complete serving generation: die before the pointer
-    * flip and the old generation still serves (the update re-runs); die
-    * after it and the new one serves (a leaked retired generation is
-    * storage, not correctness). As a bonus the update plan reads the OLD
-    * generation while writing the NEW table, so read-while-overwrite
-    * materialization hacks are unnecessary. Returns the new generation.
+    * [[Labels]] generation and flips the pointer, so every crash window
+    * leaves a complete serving generation. The update plan reads the OLD
+    * generation while writing the NEW table, so no read-while-overwrite
+    * materialization is needed. Returns the new generation.
     */
   def updateLabelTable(
       spark: SparkSession,
       tablePrefix: String,
       labels: org.apache.spark.sql.DataFrame,
       buckets: Int = 8): Long =
-    rebuildCutover(spark, tablePrefix, Seq("_labels", "_meta")) { g =>
+    Labels.rebuild(spark, tablePrefix) { g =>
       writeBucketedTable(labels, s"${g}_labels", buckets, "id")
       spark.createDataFrame(Seq(Tuple1(buckets))).toDF("buckets")
         .write.mode(SaveMode.Overwrite)
@@ -901,7 +802,7 @@ object Sinks {
   }
 
   /** The compaction STAGE write shared by [[compactTable]] (stage → two
-    * renames, for standalone tables) and [[compactFamilyCutover]] (stage
+    * renames, for standalone tables) and [[TableFamily.compact]] (stage
     * into a fresh generation, for pointer-managed families): writes
     * `rewrite(src)` into `dst` through src's OWN bucket spec at one file
     * per bucket — or size-targeted files when unbucketed — with src's
@@ -910,7 +811,7 @@ object Sinks {
     * ([[cloneTableViaFileCopy]] — zero Spark jobs, bit-identical rows);
     * guide §6: never re-encode bytes a copy preserves.
     */
-  private def stageCompactedInto(
+  private[sources] def stageCompactedInto(
       spark: SparkSession,
       table: String,
       stage: String,
@@ -980,50 +881,6 @@ object Sinks {
           .write.mode(SaveMode.Overwrite)
           .format("parquet").saveAsTable(stage)
     }
-  }
-
-  /** Family-level compaction THROUGH THE GENERATION POINTER — closes
-    * [[compactTable]]'s reader gap for pointer-managed index families: the
-    * stage-then-two-renames swap leaves a window where a concurrent
-    * reader resolves NEITHER table name, while here every table of the
-    * compacted family stages into a fresh generation (same one-file-per-
-    * bucket write, `_meta` LAST as the completeness marker), the flip is
-    * the one-row `_current` overwrite every probe already resolves
-    * through, and the retired generation drops after — a reader holds a
-    * complete serving generation at every instant (the
-    * [[rebuildCutover]] crash-window contract, applied to vacuuming).
-    *
-    * `rewrites` transforms individual member tables inside the same
-    * staging pass (tombstone-fold anti-joins, stats/bounds re-sums,
-    * meta re-stamps); unnamed members copy-compact verbatim. Reads
-    * inside a rewrite closure resolve against the OLD generation for
-    * the whole staging pass (the pointer flips after), so closures may
-    * freely read sibling tables of the generation being compacted.
-    *
-    * Returns (new generation, per-suffix (input files, output files)).
-    */
-  private[graft] def compactFamilyCutover(
-      spark: SparkSession,
-      tablePrefix: String,
-      suffixes: Seq[String],
-      rewrites: Map[String, DataFrame => DataFrame] = Map.empty,
-      targetFileBytes: Long = 128L << 20): (Long, Map[String, (Int, Int)]) = {
-    require(suffixes.contains("_meta"),
-      "compactFamilyCutover: family must include _meta (the completeness marker)")
-    require(rewrites.keySet.subsetOf(suffixes.toSet),
-      s"rewrites name non-member suffixes: ${rewrites.keySet.diff(suffixes.toSet)}")
-    val from = activeTablePrefix(spark, tablePrefix)
-    val counts = scala.collection.mutable.Map.empty[String, (Int, Int)]
-    val gen = rebuildCutover(spark, tablePrefix, suffixes) { g =>
-      val (meta, data) = suffixes.partition(_ == "_meta")
-      (data ++ meta).foreach { sfx =>
-        val src = s"$from$sfx"
-        val dst = s"$g$sfx"
-        stageCompactedInto(spark, src, dst, rewrites.get(sfx), targetFileBytes)
-        counts(sfx) = (parquetFileCount(spark, src), parquetFileCount(spark, dst))
-      }
-    }
-    (gen, counts.toMap)
   }
 
   /** Sink-choosing seam: one destination's write + audit pair. The parquet

@@ -43,8 +43,7 @@ object AnnSweep {
       707 -> Seq(25, 50, 90, 140, 200))
     for ((nlist, nprobes) <- sweeps) {
       val prefix = s"annnl_$nlist"
-      Seq(s"${prefix}_lists", s"${prefix}_cents", s"${prefix}_meta")
-        .foreach(graft.sources.Sinks.dropManagedTable(spark, _))
+      Similarity.Ivf.drop(spark, prefix)
       val t0 = System.nanoTime()
       Similarity.writeIvfIndex(e, "vec_id", "embedding", prefix,
         buckets = 8, nlist = nlist, iters = 3, assign = 2)
@@ -139,8 +138,7 @@ object AnnSweep {
           .localCheckpoint(true)
         val total = brute.count()
         val p = "annsweep_sqrtn"
-        Seq(s"${p}_lists", s"${p}_cents", s"${p}_meta")
-          .foreach(graft.sources.Sinks.dropManagedTable(spark, _))
+        Similarity.Ivf.drop(spark, p)
         Similarity.writeIvfIndex(e, "vec_id", "embedding", p,
           buckets = 8, nlist = nlist, iters = 3, assign = 2)
         for (nprobe <- Seq(math.max(2, nlist / 8), nlist / 4, (nlist * 3) / 8,
@@ -169,8 +167,7 @@ object AnnSweep {
           .localCheckpoint(true)
         val total = brute.count()
         val p = "annsweep_filt"
-        Seq(s"${p}_lists", s"${p}_cents", s"${p}_meta")
-          .foreach(graft.sources.Sinks.dropManagedTable(spark, _))
+        Similarity.Ivf.drop(spark, p)
         Similarity.writeIvfIndex(e, "vec_id", "embedding", p,
           buckets = 8, nlist = 16, iters = 3, assign = 2)
         for (nprobe <- Seq(6, 8, 10)) {
@@ -196,14 +193,11 @@ object AnnSweep {
       val total = brute.count()
       for (assign <- Seq(1, 2)) {
         val ivfP = s"annsweep_ivf_a$assign"
-        Seq(s"${ivfP}_lists", s"${ivfP}_cents", s"${ivfP}_meta")
-          .foreach(graft.sources.Sinks.dropManagedTable(spark, _))
+        Similarity.Ivf.drop(spark, ivfP)
         Similarity.writeIvfIndex(e, "vec_id", "embedding", ivfP,
           buckets = 8, nlist = 16, iters = 3, assign = assign)
         val pqP = s"annsweep_ivfpq_a$assign"
-        Seq(s"${pqP}_codes", s"${pqP}_vecs", s"${pqP}_cents",
-            s"${pqP}_books", s"${pqP}_meta")
-          .foreach(graft.sources.Sinks.dropManagedTable(spark, _))
+        Similarity.IvfPq.drop(spark, pqP)
         Similarity.writeIvfPqIndex(e, "vec_id", "embedding", pqP,
           buckets = 8, nlist = 16, nlistIters = 3, m = 16, ks = 16, iters = 2,
           assign = assign)

@@ -77,8 +77,7 @@ object OptProfile {
       val (pieces0, segs0) = time("ulmTrain (cold)")(
         Text.ulmTrain(docs, col("text"), 4, 60, 2))
       pieces0.count(); segs0.count()
-      time("dropTableFamily")(
-        graft.sources.Sinks.dropTableFamily(s, prefix, Text.UlmSuffixes))
+      time("Ulm.drop")(Text.Ulm.drop(s, prefix))
       val (pieces, segs) = (pieces0, segs0)
       time("writeUlmModel")(Text.writeUlmModel(pieces, prefix, maxPieceLen = 4))
       val words = docs.select(explode(toks).as("word"))

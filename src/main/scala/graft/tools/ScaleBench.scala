@@ -175,12 +175,9 @@ object ScaleBench {
     def suite(dir: String, tag: String): Seq[(String, (Double, Long))] = {
       val e = Tables.load(spark, dir, "embeddings")
       val prefix = s"annscale_$tag"
-      Seq(s"${prefix}_lists", s"${prefix}_cents", s"${prefix}_meta")
-        .foreach(Sinks.dropManagedTable(spark, _))
+      Similarity.Ivf.drop(spark, prefix)
       val pqPrefix = s"annscale_pq_$tag"
-      Seq(s"${pqPrefix}_codes", s"${pqPrefix}_vecs", s"${pqPrefix}_cents",
-          s"${pqPrefix}_books", s"${pqPrefix}_meta")
-        .foreach(Sinks.dropManagedTable(spark, _))
+      Similarity.IvfPq.drop(spark, pqPrefix)
       Seq(
         "ann_brute" -> timeOne(
           Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3).count()),
@@ -255,18 +252,16 @@ object ScaleBench {
       val n = e.count()
       val b = s"forkb_$tag"; val fk = s"forkc_$tag"
       val pb = s"forkpqb_$tag"; val pf = s"forkpqc_$tag"
-      for (p <- Seq(b, fk); sfx <- Seq("_lists", "_cents", "_meta"))
-        Sinks.dropManagedTable(spark, s"$p$sfx")
-      for (p <- Seq(pb, pf); sfx <- Seq("_codes", "_vecs", "_cents", "_books", "_meta"))
-        Sinks.dropManagedTable(spark, s"$p$sfx")
+      Seq(b, fk).foreach(Similarity.Ivf.drop(spark, _))
+      Seq(pb, pf).foreach(Similarity.IvfPq.drop(spark, _))
       val tBuild = timeOne(Similarity.writeIvfIndex(
         e, "vec_id", "embedding", b, buckets = 8, nlist = 16, iters = 3, assign = 2))
-      val tFork = timeOne(Similarity.snapshotIvfIndex(spark, b, fk))
+      val tFork = timeOne(Similarity.Ivf.fork(spark, b, fk))
       val tPqBuild = timeOne(Similarity.writeIvfPqIndex(
         e, "vec_id", "embedding", pb,
         buckets = 8, nlist = 16, nlistIters = 3, m = 16, ks = 16, iters = 2,
         assign = 2))
-      val tPqFork = timeOne(Similarity.snapshotIvfPqIndex(spark, pb, pf))
+      val tPqFork = timeOne(Similarity.IvfPq.fork(spark, pb, pf))
       if (tag != "warm")
         println(f"FORK $tag%-4s n=$n%8d  ivf_build $tBuild%6.2f s  " +
           f"ivf_fork $tFork%6.2f s  ivfpq_build $tPqBuild%6.2f s  " +
@@ -361,12 +356,9 @@ object ScaleBench {
     def annSuite(dir: String, tag: String): Map[String, (Double, Long)] = {
       val e = Tables.load(spark, dir, "embeddings")
       val prefix = s"annx100_$tag"
-      Seq(s"${prefix}_lists", s"${prefix}_cents", s"${prefix}_meta")
-        .foreach(Sinks.dropManagedTable(spark, _))
+      Similarity.Ivf.drop(spark, prefix)
       val pqPrefix = s"annx100_pq_$tag"
-      Seq(s"${pqPrefix}_codes", s"${pqPrefix}_vecs", s"${pqPrefix}_cents",
-          s"${pqPrefix}_books", s"${pqPrefix}_meta")
-        .foreach(Sinks.dropManagedTable(spark, _))
+      Similarity.IvfPq.drop(spark, pqPrefix)
       def timeOne(f: => Long): (Double, Long) = {
         spark.catalog.clearCache()
         val t0 = System.nanoTime()
@@ -707,8 +699,7 @@ object ScaleBench {
           threshold = 0.38, chunkRows = 256).select("a", "b")
         .localCheckpoint(true)
       val prefix = s"hn_sb_${tag.replace('.', '_').replace('/', '_')}"
-      Seq("_cents", "_lists", "_meta", "_current")
-        .foreach(sfx => graft.sources.Sinks.dropManagedTable(spark, s"$prefix$sfx"))
+      Similarity.Ivf.drop(spark, prefix)
       // the PRODUCTION index shape (the sqrtn doctrine): nlist ≈ √N keeps
       // the probed fraction assign·nprobe/nlist ≪ 1, which is where the
       // indexed path's cost bound comes from — at the suite's toy
@@ -742,8 +733,7 @@ object ScaleBench {
       // serving nprobe=6) — this recall is what HardNegRecallFloor gates
       if (!fixedBatch) {
         val qPrefix = s"${prefix}_q16"
-        Seq("_cents", "_lists", "_meta", "_current")
-          .foreach(sfx => graft.sources.Sinks.dropManagedTable(spark, s"$qPrefix$sfx"))
+        Similarity.Ivf.drop(spark, qPrefix)
         Similarity.writeIvfIndex(e, "vec_id", "embedding", qPrefix,
           buckets = 8, nlist = 16, iters = 3, assign = 2)
         val mined16 = Similarity.hardNegativesIndexed(e, "vec_id", "embedding",
@@ -786,8 +776,7 @@ object ScaleBench {
             .when(col("doc_id") % 10 =!= 0, concat(col("text"), lit(" zstopz")))
             .otherwise(col("text")).as("text"))
       val prefix = s"ms_sb_${tag.replace('.', '_')}"
-      (TextIndex.Suffixes :+ "_current")
-        .foreach(sfx => graft.sources.Sinks.dropManagedTable(spark, s"$prefix$sfx"))
+      TextIndex.Family.drop(spark, prefix)
       TextIndex.writeTextIndex(docs, "doc_id",
         graft.functions.CrossHash.tokens(col("text")), prefix, buckets = 8)
       val t0 = System.nanoTime()
@@ -872,9 +861,9 @@ object ScaleBench {
       spark.catalog.clearCache()
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       val prefix = s"sb_knf_$tag"
-      graft.sources.Sinks.dropTableFamily(spark, prefix, Text.KnSuffixes)
+      Text.Kn.drop(spark, prefix)
       val t0 = System.nanoTime()
-      Text.writeKnModel(docs, "doc_id", toks, prefix)
+      Text.Kn.write(prefix, Text.knCounts(docs, "doc_id", toks))
       val tBuild = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
       val served = Text.scoreAgainstKnModel(
@@ -884,11 +873,11 @@ object ScaleBench {
       val delta = docs.filter(col("doc_id") % 10 === 3)
         .withColumn("doc_id", col("doc_id") + 900000000L)
       val t2 = System.nanoTime()
-      Text.ingestIntoKnModel(delta, "doc_id", toks, prefix)
+      Text.Kn.ingest(prefix, Text.knCounts(delta, "doc_id", toks))
       val tIngest = (System.nanoTime() - t2) / 1e9
-      graft.sources.Sinks.dropTableFamily(spark, s"${prefix}_rt", Text.KnSuffixes)
+      Text.Kn.drop(spark, s"${prefix}_rt")
       val t3 = System.nanoTime()
-      Text.writeKnModel(docs.unionByName(delta), "doc_id", toks, s"${prefix}_rt")
+      Text.Kn.write(s"${prefix}_rt", Text.knCounts(docs.unionByName(delta), "doc_id", toks))
       val tRetrain = (System.nanoTime() - t3) / 1e9
       println(f"KNFAM $tag%-4s build $tBuild%7.2f s  serve $tServe%6.2f s " +
         f"($served%6d docs)  ingest(10%%) $tIngest%6.2f s  " +
@@ -896,9 +885,9 @@ object ScaleBench {
     }
     // untimed warm pass: JVM/codegen/parquet-footer costs would otherwise
     // land on the x1 build and invert the decade comparison
-    graft.sources.Sinks.dropTableFamily(spark, "sb_knf_warm", Text.KnSuffixes)
-    Text.writeKnModel(spark.read.parquet(s"$src/documents.parquet"),
-      "doc_id", toks, "sb_knf_warm")
+    Text.Kn.drop(spark, "sb_knf_warm")
+    Text.Kn.write("sb_knf_warm",
+      Text.knCounts(spark.read.parquet(s"$src/documents.parquet"), "doc_id", toks))
     Text.scoreAgainstKnModel(
       spark.read.parquet(s"$src/documents.parquet").limit(50),
       "doc_id", toks, "sb_knf_warm").count()

@@ -270,7 +270,7 @@ class DedupSimilaritySpec extends SparkSpec {
       buckets = 4, nlist = 4, iters = 2)
     Similarity.rebuildIvfIndex(corpus, "vec_id", "embedding", "ivf_snap_src",
       buckets = 4, nlist = 4, iters = 2)
-    Similarity.snapshotIvfIndex(spark, "ivf_snap_src", "ivf_snap_fork")
+    Similarity.Ivf.fork(spark, "ivf_snap_src", "ivf_snap_fork")
 
     def probe(prefix: String) = Similarity.ivfTopKAgainstIndex(
         queries, prefix, "vec_id", "embedding", k = 3, nprobe = 2)
@@ -588,8 +588,7 @@ class DedupSimilaritySpec extends SparkSpec {
         "vec_id", "embedding", k = 3, nprobe = 4)
       .select("query_id", "rank", "neighbor_id")
       .as[(Long, Long, Long)].collect().toSet
-    graft.sources.Sinks.dropTableFamily(spark, "ivf_rb_spec",
-      Seq("_lists", "_cents", "_meta"))
+    Similarity.Ivf.drop(spark, "ivf_rb_spec")
     Similarity.writeIvfIndex(corpus.filter(col("vec_id") < 60),
       "vec_id", "embedding", "ivf_rb_spec", buckets = 4, nlist = 4, iters = 2)
     val before = probe()
@@ -750,8 +749,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val seed = corpus.filter(col("vec_id") < 40)
     val batchA = corpus.filter(col("vec_id") >= 40 && col("vec_id") < 60)
     val batchB = corpus.filter(col("vec_id") >= 60)
-    graft.sources.Sinks.dropTableFamily(spark, "ivf_eo_spec",
-      Seq("_lists", "_cents", "_meta"))
+    Similarity.Ivf.drop(spark, "ivf_eo_spec")
     Similarity.writeIvfIndex(seed, "vec_id", "embedding", "ivf_eo_spec",
       buckets = 4, nlist = 4, iters = 2)
     // the crash-recovery scrub is a generation cutover — resolve reads
@@ -790,8 +788,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val seed = mkDocs(0 until 4, "s")
     val batchA = mkDocs(10 until 14, "a")
     val batchB = mkDocs(20 until 26, "b")
-    graft.sources.Sinks.dropTableFamily(spark, "gram_eo_spec",
-      Seq("_grams", "_meta"))
+    Dedup.Grams.drop(spark, "gram_eo_spec")
     Dedup.writeGramIndex(seed, "doc_id", toks, 3, "gram_eo_spec", buckets = 4)
     // the crash-recovery scrub is a generation cutover — resolve reads
     def dfTotals() = spark.table(
@@ -913,8 +910,7 @@ class DedupSimilaritySpec extends SparkSpec {
           s"${graft.sources.Sinks.activeTablePrefix(spark, "mh_eo_spec")}$sfx")
         .collect().map(_.toString).sorted.toSeq
     }
-    graft.sources.Sinks.dropTableFamily(spark, "mh_eo_spec",
-      Seq("_bands", "_sigs", "_meta"))
+    Dedup.Minhash.drop(spark, "mh_eo_spec")
     Dedup.writeMinhashIndex(sigsOf(seed), "mh_eo_spec", buckets = 4, k = 16, bands = 8)
 
     // first delivery applies
@@ -1000,8 +996,7 @@ class DedupSimilaritySpec extends SparkSpec {
       (1L, "the quick brown fox jumps over the lazy dog again and again today"),
       (2L, "some completely independent sentence about catalyst optimizer rules")
     ).toDF("doc_id", "text")
-    graft.sources.Sinks.dropTableFamily(spark, "mh_cmp_spec",
-      Seq("_bands", "_sigs", "_meta"))
+    Dedup.Minhash.drop(spark, "mh_cmp_spec")
     Dedup.writeMinhashIndex(sigsOf(seed), "mh_cmp_spec", buckets = 4, k = 16, bands = 8)
     // three append cycles fragment both tables (one file per bucket per cycle)
     for (i <- 0 until 3) {
@@ -1041,8 +1036,7 @@ class DedupSimilaritySpec extends SparkSpec {
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "alpha beta gamma delta other words here")
     ).toDF("doc_id", "text")
-    graft.sources.Sinks.dropTableFamily(spark, "gram_cmp_spec",
-      Seq("_grams", "_meta"))
+    Dedup.Grams.drop(spark, "gram_cmp_spec")
     Dedup.writeGramIndex(seed, "doc_id", toks, 3, "gram_cmp_spec", buckets = 4)
     // two ingest cycles append df PARTIALS for overlapping grams
     for (i <- 0 until 2) {
@@ -1087,8 +1081,7 @@ class DedupSimilaritySpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
       .localCheckpoint(true)
-    graft.sources.Sinks.dropTableFamily(spark, "ivfpq_cmp_spec",
-      Seq("_codes", "_vecs", "_cents", "_books", "_meta"))
+    Similarity.IvfPq.drop(spark, "ivfpq_cmp_spec")
     Similarity.writeIvfPqIndex(corpus.filter(col("vec_id") < 50),
       "vec_id", "embedding", "ivfpq_cmp_spec",
       buckets = 4, nlist = 4, nlistIters = 2, m = 4, ks = 8, iters = 2, dims = 16)
@@ -1151,8 +1144,7 @@ class DedupSimilaritySpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
       .localCheckpoint(true)
-    graft.sources.Sinks.dropTableFamily(spark, "ivfpq_del_spec",
-      Seq("_codes", "_vecs", "_cents", "_books", "_meta"))
+    Similarity.IvfPq.drop(spark, "ivfpq_del_spec")
     Similarity.writeIvfPqIndex(corpus, "vec_id", "embedding", "ivfpq_del_spec",
       buckets = 4, nlist = 4, nlistIters = 2, m = 4, ks = 8, iters = 2, dims = 16)
     // delete vec 0's entire direction-cluster cohort except itself — a

@@ -351,25 +351,25 @@ class OperatorsSpec extends SparkSpec {
         .as[(Long, Long, Long, Option[Double])].collect().toSet
 
     // serve from the stored family ≡ the in-memory scorer
-    graft.sources.Sinks.dropTableFamily(spark, "t_kn_f", Text.KnSuffixes)
-    Text.writeKnModel(all, "doc_id", toks, "t_kn_f")
+    Text.Kn.drop(spark, "t_kn_f")
+    Text.Kn.write("t_kn_f", Text.knCounts(all, "doc_id", toks))
     assert(rows(Text.scoreAgainstKnModel(all, "doc_id", toks, "t_kn_f"))
       == reference(all, Set(1L, 2L, 3L)))
 
     // ingest-fold: train on docs 1-2, fold 3-4 in — scores must equal the
     // full-corpus model (delta fold ≡ retrain)
-    graft.sources.Sinks.dropTableFamily(spark, "t_kn_i", Text.KnSuffixes)
-    Text.writeKnModel(all.filter(col("doc_id") <= 2), "doc_id", toks, "t_kn_i")
-    Text.ingestIntoKnModel(all.filter(col("doc_id") > 2), "doc_id", toks, "t_kn_i")
+    Text.Kn.drop(spark, "t_kn_i")
+    Text.Kn.write("t_kn_i", Text.knCounts(all.filter(col("doc_id") <= 2), "doc_id", toks))
+    Text.Kn.ingest("t_kn_i", Text.knCounts(all.filter(col("doc_id") > 2), "doc_id", toks))
     assert(rows(Text.scoreAgainstKnModel(all, "doc_id", toks, "t_kn_i"))
       == reference(all, Set(1L, 2L, 3L)))
 
     // delete: negative deltas for doc 2 — surviving docs score exactly as
     // a retrain without it (type (a,c->b? ) counts, continuation counts
     // and the discount all shift)
-    graft.sources.Sinks.dropTableFamily(spark, "t_kn_d", Text.KnSuffixes)
-    Text.writeKnModel(all, "doc_id", toks, "t_kn_d")
-    Text.deleteFromKnModel(all.filter(col("doc_id") === 2), "doc_id", toks, "t_kn_d")
+    Text.Kn.drop(spark, "t_kn_d")
+    Text.Kn.write("t_kn_d", Text.knCounts(all, "doc_id", toks))
+    Text.Kn.delete("t_kn_d", Text.knCounts(all.filter(col("doc_id") === 2), "doc_id", toks))
     val survivors = all.filter(col("doc_id") =!= 2)
     assert(rows(Text.scoreAgainstKnModel(survivors, "doc_id", toks, "t_kn_d"))
       == reference(survivors, Set(1L, 3L)))
@@ -377,7 +377,7 @@ class OperatorsSpec extends SparkSpec {
     // compaction: folds base + negative-delta rows to one live row per
     // type behind a generation cutover — scores unchanged, partials shrunk
     val before = spark.table("t_kn_d_cab").count()
-    val gen = Text.compactKnModel(spark, "t_kn_d")
+    val gen = Text.Kn.compact(spark, "t_kn_d")._1
     assert(gen == 1L)
     assert(spark.table("t_kn_d_g1_cab").count() < before)
     assert(rows(Text.scoreAgainstKnModel(survivors, "doc_id", toks, "t_kn_d"))
@@ -596,7 +596,7 @@ class OperatorsSpec extends SparkSpec {
       (4L, "ababcd")).toDF("doc_id", "text")
     val (pieces, segs) = Text.ulmTrain(docs, col("text"),
       maxPieceLen = 4, seedMulti = 60, rounds = 2)
-    graft.sources.Sinks.dropTableFamily(spark, "ulm_spec", Text.UlmSuffixes)
+    Text.Ulm.drop(spark, "ulm_spec")
     Text.writeUlmModel(pieces, "ulm_spec", maxPieceLen = 4)
     // serving the training vocabulary reproduces the trainer's
     // segmentation table exactly (the frozen-artifact contract)
@@ -815,31 +815,31 @@ class OperatorsSpec extends SparkSpec {
 
     // serve from the stored family ≡ the in-memory scorer; a two-token
     // doc has no trigrams and no row
-    graft.sources.Sinks.dropTableFamily(spark, "t_kn3_f", Text.Kn3Suffixes)
-    Text.writeKn3Model(all, "doc_id", toks, "t_kn3_f")
+    Text.Kn3.drop(spark, "t_kn3_f")
+    Text.Kn3.write("t_kn3_f", Text.kn3Counts(all, "doc_id", toks))
     assert(rows(Text.scoreAgainstKn3Model(all, "doc_id", toks, "t_kn3_f"))
       == reference(all, Set(1L, 2L, 3L)))
 
     // ingest-fold ≡ retrain over old+new
-    graft.sources.Sinks.dropTableFamily(spark, "t_kn3_i", Text.Kn3Suffixes)
-    Text.writeKn3Model(all.filter(col("doc_id") <= 2), "doc_id", toks, "t_kn3_i")
-    Text.ingestIntoKn3Model(all.filter(col("doc_id") > 2), "doc_id", toks, "t_kn3_i")
+    Text.Kn3.drop(spark, "t_kn3_i")
+    Text.Kn3.write("t_kn3_i", Text.kn3Counts(all.filter(col("doc_id") <= 2), "doc_id", toks))
+    Text.Kn3.ingest("t_kn3_i", Text.kn3Counts(all.filter(col("doc_id") > 2), "doc_id", toks))
     assert(rows(Text.scoreAgainstKn3Model(all, "doc_id", toks, "t_kn3_i"))
       == reference(all, Set(1L, 2L, 3L)))
 
     // delete ≡ retrain-without: every derived statistic of every order
     // (the (a,b) sums, the (b,c) continuation table, both discounts)
     // must shift
-    graft.sources.Sinks.dropTableFamily(spark, "t_kn3_d", Text.Kn3Suffixes)
-    Text.writeKn3Model(all, "doc_id", toks, "t_kn3_d")
-    Text.deleteFromKn3Model(all.filter(col("doc_id") === 2), "doc_id", toks, "t_kn3_d")
+    Text.Kn3.drop(spark, "t_kn3_d")
+    Text.Kn3.write("t_kn3_d", Text.kn3Counts(all, "doc_id", toks))
+    Text.Kn3.delete("t_kn3_d", Text.kn3Counts(all.filter(col("doc_id") === 2), "doc_id", toks))
     val survivors = all.filter(col("doc_id") =!= 2)
     assert(rows(Text.scoreAgainstKn3Model(survivors, "doc_id", toks, "t_kn3_d"))
       == reference(survivors, Set(1L, 3L)))
 
     // compaction: generation cutover, scores unchanged, partials shrunk
     val before = spark.table("t_kn3_d_cabc").count()
-    val gen = Text.compactKn3Model(spark, "t_kn3_d")
+    val gen = Text.Kn3.compact(spark, "t_kn3_d")._1
     assert(gen == 1L)
     assert(spark.table("t_kn3_d_g1_cabc").count() < before)
     assert(rows(Text.scoreAgainstKn3Model(survivors, "doc_id", toks, "t_kn3_d"))
@@ -848,7 +848,9 @@ class OperatorsSpec extends SparkSpec {
     // blue/green retrain: stage generation 2 over the FULL corpus (doc 2
     // returns), flip the pointer — serving re-resolves through it and
     // the deleted doc's statistics are back
-    val gen2 = Text.rebuildKn3Model(all, "doc_id", toks, "t_kn3_d")
+    val gen2 = Text.Kn3.rebuild(spark, "t_kn3_d") { g =>
+      Text.Kn3.write(g, Text.kn3Counts(all, "doc_id", toks))
+    }
     assert(gen2 == 2L)
     assert(rows(Text.scoreAgainstKn3Model(all, "doc_id", toks, "t_kn3_d"))
       == reference(all, Set(1L, 2L, 3L)))
@@ -992,8 +994,7 @@ class OperatorsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val tk = CrossHash.tokens(col("text"))
     val terms = Seq("spark", "query", "join", "stream")
-    TextIndex.Suffixes
-      .foreach(sfx => graft.sources.Sinks.dropManagedTable(spark, s"ti_spec$sfx"))
+    TextIndex.Family.drop(spark, "ti_spec")
     TextIndex.writeTextIndex(corpus, "doc_id", tk, "ti_spec", buckets = 4)
 
     val served = TextIndex.bm25AgainstIndex(spark, "ti_spec", terms, 10)
@@ -1036,8 +1037,7 @@ class OperatorsSpec extends SparkSpec {
       (5L, "table and hash far apart")                           // 0 hits
     ).toDF("doc_id", "text")
     val tk = CrossHash.tokens(col("text"))
-    TextIndex.Suffixes
-      .foreach(sfx => graft.sources.Sinks.dropManagedTable(spark, s"ti_ph_spec$sfx"))
+    TextIndex.Family.drop(spark, "ti_ph_spec")
     TextIndex.writeTextIndex(corpus, "doc_id", tk, "ti_ph_spec", buckets = 2)
 
     val out = TextIndex.phraseSearchAgainstIndex(
@@ -1078,8 +1078,7 @@ class OperatorsSpec extends SparkSpec {
       (5L, "nothing shared at all")
     ).toDF("doc_id", "text")
     val tk = CrossHash.tokens(col("text"))
-    TextIndex.Suffixes
-      .foreach(sfx => graft.sources.Sinks.dropManagedTable(spark, s"ti_el_spec$sfx"))
+    TextIndex.Family.drop(spark, "ti_el_spec")
     TextIndex.writeTextIndex(corpus, "doc_id", tk, "ti_el_spec", buckets = 2)
 
     // maxDfFrac = 0.5 elides 'noise' (0.8) and keeps 'signal' (0.2):
@@ -1124,8 +1123,7 @@ class OperatorsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val tk = CrossHash.tokens(col("text"))
     val terms = Seq("spark", "query", "join", "stream")
-    TextIndex.Suffixes
-      .foreach(sfx => graft.sources.Sinks.dropManagedTable(spark, s"ti_del_spec$sfx"))
+    TextIndex.Family.drop(spark, "ti_del_spec")
     TextIndex.writeTextIndex(corpus, "doc_id", tk, "ti_del_spec", buckets = 2)
 
     TextIndex.deleteFromTextIndex(spark, "ti_del_spec", Seq(2L).toDF("doc_id"))
@@ -1187,16 +1185,12 @@ class OperatorsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val tk = CrossHash.tokens(col("text"))
     val terms = Seq("spark", "query")
-    (Seq("ti_fk_spec", "ti_fk_spec_fork").flatMap(p =>
-        (TextIndex.Suffixes :+ "_current").map(p + _)) ++
-      (TextIndex.Suffixes ++ Seq("_current")).flatMap(s =>
-        Seq(s"ti_fk_spec_g1$s", s"ti_fk_spec_g2$s")))
-      .foreach(graft.sources.Sinks.dropManagedTable(spark, _))
+    Seq("ti_fk_spec", "ti_fk_spec_fork").foreach(TextIndex.Family.drop(spark, _))
     TextIndex.writeTextIndex(corpus, "doc_id", tk, "ti_fk_spec", buckets = 2)
     val base = TextIndex.bm25AgainstIndex(spark, "ti_fk_spec", terms, 10)
       .select("id", "dl", "bm25").localCheckpoint(true)
 
-    TextIndex.snapshotTextIndex(spark, "ti_fk_spec", "ti_fk_spec_fork")
+    TextIndex.Family.fork(spark, "ti_fk_spec", "ti_fk_spec_fork")
     TextIndex.deleteFromTextIndex(spark, "ti_fk_spec_fork", Seq(1L).toDF("doc_id"))
     val baseAgain = TextIndex.bm25AgainstIndex(spark, "ti_fk_spec", terms, 10)
       .select("id", "dl", "bm25")
@@ -1232,8 +1226,7 @@ class OperatorsSpec extends SparkSpec {
       (1L, "spark join words"), (2L, "query stream words")
     ).toDF("doc_id", "text")
     val tk = CrossHash.tokens(col("text"))
-    TextIndex.Suffixes
-      .foreach(sfx => graft.sources.Sinks.dropManagedTable(spark, s"ti_lv_spec$sfx"))
+    TextIndex.Family.drop(spark, "ti_lv_spec")
     TextIndex.writeTextIndex(corpus, "doc_id", tk, "ti_lv_spec", buckets = 2)
     // an overlapping batch under a NEW batchId redelivers doc 2 — the
     // ledger can't catch it; the live-id guard must (a silent accept
@@ -1263,8 +1256,7 @@ class OperatorsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val tk = CrossHash.tokens(col("text"))
     val terms = Seq("spark", "query", "stream")
-    TextIndex.Suffixes
-      .foreach(sfx => graft.sources.Sinks.dropManagedTable(spark, s"ti_rp_spec$sfx"))
+    TextIndex.Family.drop(spark, "ti_rp_spec")
     TextIndex.writeTextIndex(corpus, "doc_id", tk, "ti_rp_spec", buckets = 2)
     // stage deleteFromTextIndex's crash window: the tombstone append
     // landed, the process died before the stats compensation — and the
@@ -1309,8 +1301,7 @@ class OperatorsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val tk = CrossHash.tokens(col("text"))
     val bag = Seq("gold", "signal", "noise")
-    TextIndex.Suffixes
-      .foreach(sfx => graft.sources.Sinks.dropManagedTable(spark, s"ti_ms_spec$sfx"))
+    TextIndex.Family.drop(spark, "ti_ms_spec")
     TextIndex.writeTextIndex(corpus, "doc_id", tk, "ti_ms_spec", buckets = 2)
 
     // the bounds table rides the postings' bucketing: the probe's bounds
@@ -1476,8 +1467,7 @@ class OperatorsSpec extends SparkSpec {
       (5L, "nothing shared at all")
     ).toDF("doc_id", "text")
     val tk = CrossHash.tokens(col("text"))
-    TextIndex.Suffixes
-      .foreach(sfx => graft.sources.Sinks.dropManagedTable(spark, s"ti_fe_spec$sfx"))
+    TextIndex.Family.drop(spark, "ti_fe_spec")
     TextIndex.writeTextIndex(corpus, "doc_id", tk, "ti_fe_spec", buckets = 2)
     val allowed = Seq(1L, 2L, 3L).toDF("doc_id")
     val out = TextIndex.bm25FilteredAgainstIndex(spark, "ti_fe_spec",
@@ -1495,7 +1485,7 @@ class OperatorsSpec extends SparkSpec {
   test("persisted blocklist: set-semantics folds, blue/green rebuild + compact") {
     import graft.sources.Sinks
     val prefix = "blk_spec"
-    Sinks.dropTableFamily(spark, prefix, Text.BlocklistSuffixes)
+    Text.Blocklist.drop(spark, prefix)
     Text.writeBlocklist(spark, prefix, Seq("aa", "bb", "cc", "aa")) // dup collapses
     assert(Text.resolveBlocklist(spark, prefix) == Seq("aa", "bb", "cc"))
     Text.ingestIntoBlocklist(spark, prefix, Seq("bb", "dd")) // live add = no-op
@@ -1506,13 +1496,23 @@ class OperatorsSpec extends SparkSpec {
     Text.deleteFromBlocklist(spark, prefix, Seq("bb"))
     Text.ingestIntoBlocklist(spark, prefix, Seq("bb"))
     assert(Text.resolveBlocklist(spark, prefix) == Seq("bb", "cc", "dd"))
+    // a second writer's +1 for a live pattern (the single-writer violation)
+    // folds it to 2
+    Seq("cc" -> 1L).toDF("pattern", "delta")
+      .write.mode("append").format("parquet").saveAsTable(s"${prefix}_patterns")
+    assert(spark.table(s"${prefix}_patterns").filter(col("pattern") === "cc")
+      .agg(sum("delta")).head().getLong(0) == 2L)
     // compact: generation advances, resolved set unchanged, fold input
-    // shrinks to one row per live pattern
-    assert(Text.compactBlocklist(spark, prefix) == 1L)
+    // shrinks to one +1 row per live pattern
+    assert(Text.Blocklist.compact(spark, prefix)._1 == 1L)
     assert(Text.resolveBlocklist(spark, prefix) == Seq("bb", "cc", "dd"))
-    assert(spark.table(s"${prefix}_g1_patterns").count() == 3L)
+    assert(spark.table(s"${prefix}_g1_patterns").as[(String, Long)].collect().sorted.toSeq
+      == Seq("bb" -> 1L, "cc" -> 1L, "dd" -> 1L))
+    // so after compaction one take-down removes the doubled pattern
+    Text.deleteFromBlocklist(spark, prefix, Seq("cc"))
+    assert(Text.resolveBlocklist(spark, prefix) == Seq("bb", "dd"))
     // rebuild replaces wholesale behind the pointer
-    assert(Text.rebuildBlocklist(spark, prefix, Seq("xx")) == 2L)
+    assert(Text.Blocklist.rebuild(spark, prefix)(Text.writeBlocklist(spark, _, Seq("xx"))) == 2L)
     assert(Text.resolveBlocklist(spark, prefix) == Seq("xx"))
     // automaton-illegal inputs sanitized at the write boundary
     Text.ingestIntoBlocklist(spark, prefix, Seq("", "y😀y", "yy"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.execution.exchange.Exchange
 
 import graft.model.SchemaRegistry
-import graft.sources.{BigQuerySink, BigQuerySinkConfig, Sinks}
+import graft.sources.{BigQuerySink, BigQuerySinkConfig, PartialFamily, Sinks}
 
 /** Bucketed-table layout spec: co-located joins must plan without a
   * shuffle (the whole point of paying the bucketed write) — plus the
@@ -146,11 +146,7 @@ class SinksSpec extends SparkSpec {
 
   test("blue/green label table: every crash window leaves a complete serving generation") {
     val p = "bg_labels_spec"
-    val genPat = java.util.regex.Pattern.quote(p) + "_g\\d+_(labels|meta)"
-    (spark.sessionState.catalog.listTables("default")
-      .map(_.table).filter(_.toLowerCase.matches(genPat)) ++
-      Seq(s"${p}_current", s"${p}_labels", s"${p}_meta"))
-      .foreach(Sinks.dropManagedTable(spark, _))
+    Sinks.Labels.drop(spark, p)
     def serving(): Set[(Long, Long)] =
       Sinks.readLabelTable(spark, p).as[(Long, Long)].collect().toSet
     val l1 = Set(1L -> 1L, 2L -> 1L, 5L -> 5L)
@@ -173,6 +169,61 @@ class SinksSpec extends SparkSpec {
     assert(!spark.catalog.tableExists(s"${p}_g1_labels"),
       "retired generation must be dropped")
     assert(spark.table(s"${p}_current").head().getLong(0) == 2L)
+  }
+
+  /** A small signed-count family for the generic lifecycle specs. */
+  private val tally = new PartialFamily("_cnt", Seq("k"), "v", "n" -> 0)
+
+  private def writeTally(prefix: String, rows: (String, Long)*): Unit =
+    tally.write(prefix, rows.toDF("k", "v"))
+
+  test("table family drop scrubs every generation, in the catalog or only on disk") {
+    val p = "tf_drop_spec"
+    tally.drop(spark, p)
+    writeTally(p, "a" -> 1L)
+    (1 to 6).foreach(g => assert(tally.compact(spark, p)._1 == g.toLong))
+    // a generation the catalog forgot (a fresh JVM) survives only as a directory
+    val warehouse = new java.io.File(
+      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
+    val orphan = new java.io.File(warehouse, s"${p}_g7_cnt")
+    assert(orphan.mkdirs() && new java.io.File(orphan, "part-0.parquet").createNewFile())
+    tally.drop(spark, p)
+    writeTally(p, "b" -> 1L)
+    assert(Sinks.activeTablePrefix(spark, p) == p)
+    val generation = s"${p}_g\\d+_.*"
+    assert(!spark.catalog.listTables().collect().exists(_.name.matches(generation)),
+      "no generation table may survive the drop")
+    assert(!warehouse.list().exists(_.matches(generation)),
+      "no generation directory may survive the drop")
+    assert(tally.live(spark, p).as[(String, Long)].collect().toSeq == Seq("b" -> 1L))
+  }
+
+  test("partial family crash window: a rebuild that dies before _meta never serves") {
+    val p = "tf_crash_spec"
+    tally.drop(spark, p)
+    writeTally(p, "a" -> 2L, "b" -> 1L)
+    tally.delete(p, Seq("b" -> 1L).toDF("k", "v"))
+    assert(tally.compact(spark, p)._1 == 1L)
+    tally.ingest(p, Seq("c" -> 3L).toDF("k", "v"))
+    def fold(): Set[(String, Long)] = tally.live(spark, p).as[(String, Long)].collect().toSet
+    val served = fold()
+    assert(served == Set("a" -> 2L, "c" -> 3L))
+    // the build lands its data member, then dies before _meta
+    intercept[IllegalStateException] {
+      tally.rebuild(spark, p) { g =>
+        Seq("z" -> 9L).toDF("k", "v").write.format("parquet").saveAsTable(s"${g}_cnt")
+        throw new IllegalStateException("crash before _meta")
+      }
+    }
+    assert(spark.catalog.tableExists(s"${p}_g2_cnt") && !spark.catalog.tableExists(s"${p}_g2_meta"))
+    assert(spark.table(s"${p}_current").head().getLong(0) == 1L, "the pointer must not flip")
+    assert(Sinks.activeTablePrefix(spark, p) == s"${p}_g1", "the staged generation must not resolve")
+    assert(fold() == served, "the old generation keeps serving the same fold")
+    // the next verbs scrub the staged remnant and take the next generation numbers
+    assert(tally.compact(spark, p)._1 == 2L)
+    assert(fold() == served)
+    assert(tally.rebuild(spark, p)(writeTally(_, "d" -> 1L)) == 3L)
+    assert(fold() == Set("d" -> 1L))
   }
 
   test("training shards: one file per shard, deterministic internal order, lossless membership") {
@@ -415,7 +466,7 @@ class SinksSpec extends SparkSpec {
     spark.sql("ALTER TABLE cg_tbl__cold RENAME TO cg_tbl")
     assert(spark.table("cg_tbl").count() == 2)
 
-    // 2. compactFamilyCutover: a reader probing MID-STAGING (injected via
+    // 2. the family compaction: a reader probing MID-STAGING (injected via
     //    the _meta rewrite hook, which runs after every data table has
     //    staged) still resolves the complete OLD generation — the pointer
     //    flips only after the staging pass.
@@ -424,15 +475,12 @@ class SinksSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val tk = CrossHash.tokens(col("text"))
     val terms = Seq("spark", "query", "words")
-    ((TextIndex.Suffixes :+ "_current").map("ti_cg_spec" + _) ++
-      TextIndex.Suffixes.map(s => s"ti_cg_spec_g1$s"))
-      .foreach(Sinks.dropManagedTable(spark, _))
+    TextIndex.Family.drop(spark, "ti_cg_spec")
     TextIndex.writeTextIndex(corpus, "doc_id", tk, "ti_cg_spec", buckets = 2)
     val before = TextIndex.bm25AgainstIndex(spark, "ti_cg_spec", terms, 10)
       .select("id", "dl", "bm25").localCheckpoint(true)
     var midRows: Long = -1L
-    val (gen, counts) = Sinks.compactFamilyCutover(
-      spark, "ti_cg_spec", TextIndex.Suffixes,
+    val (gen, counts) = TextIndex.Family.compact(spark, "ti_cg_spec",
       Map[String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
         "_meta" -> (df => {
           val mid = TextIndex.bm25AgainstIndex(spark, "ti_cg_spec", terms, 10)
