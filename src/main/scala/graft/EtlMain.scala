@@ -28,17 +28,22 @@ import graft.sources.Tables
   *
   * `--daily` switches incremental-extract + append-load (E2); default is
   * full refresh with truncate (E1). `--day` pins the incremental day
-  * (defaults to yesterday, like `mysql_operations.py:22`).
+  * (defaults to yesterday, like `mysql_operations.py:22`). Any other flag
+  * is refused: a mistyped `--daily` would otherwise run a full refresh and
+  * truncate every destination.
   */
 object EtlMain {
 
   def main(args: Array[String]): Unit = {
     // accept both `--day=YYYY-MM-DD` and `--day YYYY-MM-DD`
+    val usage = "usage: EtlMain <config-file> [--daily] [--day=YYYY-MM-DD]"
+    var daily = false
     var dayOpt: Option[LocalDate] = None
-    val rest = scala.collection.mutable.ListBuffer[String]()
+    val positional = scala.collection.mutable.ListBuffer[String]()
     var i = 0
     while (i < args.length) {
       args(i) match {
+        case "--daily" => daily = true; i += 1
         case "--day" if i + 1 < args.length =>
           dayOpt = Some(LocalDate.parse(args(i + 1))); i += 2
         case "--day" =>
@@ -47,12 +52,12 @@ object EtlMain {
           throw new IllegalArgumentException("--day requires a date: --day=YYYY-MM-DD")
         case a if a.startsWith("--day=") =>
           dayOpt = Some(LocalDate.parse(a.drop(6))); i += 1
-        case a => rest += a; i += 1
+        case a if a.startsWith("--") =>
+          throw new IllegalArgumentException(s"unknown flag $a; $usage")
+        case a => positional += a; i += 1
       }
     }
-    val (flags, positional) = rest.toList.partition(_.startsWith("--"))
-    require(positional.length == 1, "usage: EtlMain <config-file> [--daily] [--day=YYYY-MM-DD]")
-    val daily = flags.contains("--daily")
+    require(positional.length == 1, usage)
     val day = dayOpt.getOrElse(LocalDate.now().minusDays(1))
 
     val conf = Credentials.parse(Files.readString(Paths.get(positional(0))))

@@ -54,7 +54,7 @@ object SparkEntry {
     * round (the round-7 false HLL merge-equality pin was only caught by
     * a one-time sf0.1 run — this makes that check standing):
     *
-    *   SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify /root/testdata/sf0.1 /tmp/certs01 certs"
+    *   sbt -batch "runMain graft.Verify /root/testdata/sf0.1 /tmp/certs01 certs"
     *   python3 tools/selfcheck.py /root/testdata/sf0.1 /tmp/certs01
     *
     * (`certs` is expanded by Verify to this set; results go in the

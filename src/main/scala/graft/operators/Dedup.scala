@@ -516,7 +516,7 @@ object Dedup {
 
   /** Exactly-once wrapper around [[ingestIntoMinhashIndex]] — the
     * batchId-keyed write-ahead-ledger recipe
-    * ([[graft.sources.Sinks.exactlyOnceBatch]]) with
+    * ([[graft.sources.TableFamily.exactlyOnce]]) with
     * [[deleteFromMinhashIndex]] as the crash-recovery scrub: a batch
     * redelivered after success skips (None), a retry after a mid-append
     * crash scrubs the partial residue and re-applies. Returns
@@ -528,8 +528,7 @@ object Dedup {
       batchId: Long,
       threshold: Double = 0.7): Option[DataFrame] = {
     val spark = newSigs.sparkSession
-    graft.sources.Sinks.exactlyOnceBatch(
-        spark, s"${tablePrefix}_applied", batchId) {
+    graft.sources.TableFamily.exactlyOnce(spark, tablePrefix, batchId) {
       deleteFromMinhashIndex(spark, tablePrefix, newSigs.select("id"))
     } {
       ingestIntoMinhashIndex(newSigs, tablePrefix, threshold)
@@ -537,7 +536,7 @@ object Dedup {
   }
 
   /** Exactly-once wrapper around [[ingestIntoGramIndex]] (same ledger
-    * recipe — see [[graft.sources.Sinks.exactlyOnceBatch]]). The gram
+    * recipe — see [[graft.sources.TableFamily.exactlyOnce]]). The gram
     * table stores df PARTIALS, not per-document rows, so the anti-join
     * scrub the other indexes use doesn't apply — and the decrementing
     * [[deleteFromGramIndex]] would OVER-subtract after a partial append
@@ -556,51 +555,13 @@ object Dedup {
     require(batchId >= 0,
       s"batchId=$batchId must be >= 0 (-1 is the merged-generation sentinel)")
     val spark = batch.sparkSession
-    graft.sources.Sinks.exactlyOnceBatch(
-        spark, s"${tablePrefix}_applied", batchId) {
+    graft.sources.TableFamily.exactlyOnce(spark, tablePrefix, batchId) {
       Grams.compact(spark, tablePrefix,
         Map[String, DataFrame => DataFrame](
           "_grams" -> (_.filter(col("batch_id") =!= batchId)))): Unit
     } {
       ingestIntoGramIndex(batch, idCol, toks, tablePrefix, batchId)
     }
-  }
-
-  /** Rebuild-and-cutover (blue/green) of the persisted minhash index —
-    * the lifecycle verb for PARAMETER changes: k/bands retuning or a
-    * bucket-count change requires a full re-sign, and this runs it with
-    * no serving gap (same pointer/resolve contract as the ANN rebuilds —
-    * [[graft.sources.TableFamily.rebuild]]; every minhash verb resolves
-    * the active generation). Returns the new generation number.
-    */
-  def rebuildMinhashIndex(
-      sigs: DataFrame,
-      tablePrefix: String,
-      buckets: Int,
-      k: Int = 16,
-      bands: Int = 4): Long =
-    Minhash.rebuild(sigs.sparkSession, tablePrefix) { g =>
-      writeMinhashIndex(sigs, g, buckets, k, bands)
-    }
-
-  /** Vacuum the minhash index's two bucketed tables (see
-    * [[writeMinhashIndex]] / [[ingestIntoMinhashIndex]]): per-batch
-    * appends fragment `_bands` and `_sigs` one file per bucket per batch;
-    * this rewrites each back to one file per bucket through its own
-    * catalog bucket spec, staged as a fresh GENERATION and flipped
-    * through the `_current` pointer
-    * ([[graft.sources.TableFamily.compact]] — a reader resolves a
-    * complete family at every instant; the old per-table rename swap had
-    * a blind window, SinksSpec stages it). Row set unchanged, so probe
-    * results are hash-identical and the zero-Exchange probe plan is
-    * preserved (both spec-pinned). Returns per-table (files before,
-    * files after) for (`_bands`, `_sigs`).
-    */
-  def compactMinhashIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): Seq[(Int, Int)] = {
-    val (_, counts) = Minhash.compact(spark, tablePrefix)
-    Seq(counts("_bands"), counts("_sigs"))
   }
 
   /** Vacuum the gram index (see [[writeGramIndex]] /
@@ -617,11 +578,20 @@ object Dedup {
   def compactGramIndex(
       spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String): (Int, Int) =
+    compactGrams(spark, tablePrefix)(identity)
+
+  /** [[Grams]] compaction whose `_grams` rewrite folds the df partials to
+    * one row per gram, applies `adjust` to the folded rows, and stamps
+    * them into the merged generation (`batch_id = -1`, see
+    * [[writeGramIndex]]) — run only with no ingest in flight. Returns
+    * `_grams` (files before, files after).
+    */
+  private def compactGrams(
+      spark: org.apache.spark.sql.SparkSession,
+      tablePrefix: String)(adjust: DataFrame => DataFrame): (Int, Int) =
     Grams.compact(spark, tablePrefix,
-      Map[String, DataFrame => DataFrame]("_grams" -> (
-        _.groupBy("gram").agg(sum("n_docs").as("n_docs"))
-          // partials collapse into the merged generation (see
-          // writeGramIndex); compact only with no ingest in flight
+      Map[String, DataFrame => DataFrame]("_grams" -> (partials =>
+        adjust(partials.groupBy("gram").agg(sum("n_docs").as("n_docs")))
           .withColumn("batch_id", lit(-1L)))))._2("_grams")
 
   /** Delete documents from the minhash index (see [[writeMinhashIndex]]):
@@ -637,12 +607,8 @@ object Dedup {
   def deleteFromMinhashIndex(
       spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String,
-      deletedIds: DataFrame): Unit = {
-    val del = deletedIds.select(col("id")).distinct().localCheckpoint(true)
-    val anti = (df: DataFrame) => df.join(del, Seq("id"), "left_anti")
-    Minhash.compact(spark, tablePrefix,
-      Map[String, DataFrame => DataFrame]("_bands" -> anti, "_sigs" -> anti)): Unit
-  }
+      deletedIds: DataFrame): Unit =
+    Minhash.deleteKeys(spark, tablePrefix, deletedIds.select(col("id")), "_bands", "_sigs")
 
   /** Delete documents from the gram index (see [[writeGramIndex]]): the
     * index stores per-gram document frequencies, not per-document rows,
@@ -671,16 +637,11 @@ object Dedup {
       .select(col("id"), explode(array_distinct(wordShingles(col("tk"), n))).as("gram"))
       .groupBy("gram").agg(countDistinct(col("id")).as("n_del"))
       .localCheckpoint(true)
-    Grams.compact(spark, tablePrefix,
-      Map[String, DataFrame => DataFrame]("_grams" -> (
-        _.groupBy("gram").agg(sum("n_docs").as("n_docs"))
-          .join(delCounts, Seq("gram"), "left")
-          .select(col("gram"),
-            (col("n_docs") - coalesce(col("n_del"), lit(0L))).as("n_docs"))
-          .filter(col("n_docs") > 0)
-          // partials collapse into the merged generation (see
-          // writeGramIndex); run deletions only with no ingest in flight
-          .withColumn("batch_id", lit(-1L))))): Unit
+    compactGrams(spark, tablePrefix)(
+      _.join(delCounts, Seq("gram"), "left")
+        .select(col("gram"),
+          (col("n_docs") - coalesce(col("n_del"), lit(0L))).as("n_docs"))
+        .filter(col("n_docs") > 0)): Unit
   }
 
   /** Edge-deletion connected components — the take-down counterpart of
@@ -1746,22 +1707,6 @@ object Dedup {
     meta.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .format("parquet").saveAsTable(s"${tablePrefix}_meta")
   }
-
-  /** Rebuild-and-cutover (blue/green) of the persisted gram index —
-    * for gram-width (`n`) or bucket-count changes, which invalidate
-    * every stored df row; same pointer/resolve contract as
-    * [[rebuildMinhashIndex]]. Returns the new generation number.
-    */
-  def rebuildGramIndex(
-      df: DataFrame,
-      idCol: String,
-      toks: Column,
-      n: Int,
-      tablePrefix: String,
-      buckets: Int): Long =
-    Grams.rebuild(df.sparkSession, tablePrefix) { g =>
-      writeGramIndex(df, idCol, toks, n, g, buckets)
-    }
 
   /** Incremental duplicate spans for a NEW batch against the PERSISTED
     * gram index ([[writeGramIndex]]): a new document's gram position is

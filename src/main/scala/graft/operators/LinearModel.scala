@@ -416,21 +416,6 @@ object LinearModel {
     isotonicApply(scored, "lvl", spark.table(s"${tp}_cal"))
   }
 
-  /** Retrain-and-cutover — identical blue/green contract to every other
-    * persisted family (stage `_g<N+1>`, flip the pointer, retire).
-    */
-  def rebuildLinearModel(
-      feats: DataFrame,
-      tablePrefix: String,
-      xCols: Seq[String],
-      yCol: String,
-      lr: Double,
-      iters: Int): Long =
-    Linear.rebuild(feats.sparkSession, tablePrefix) { g =>
-      writeLinearModel(feats.sparkSession, g, xCols,
-        trainSquashedLinear(feats, xCols, yCol, lr, iters).toSeq)
-    }
-
   /** Score a batch against a PERSISTED model — the online half of the
     * train/serve split: generation-resolved, and the feature columns are
     * bound BY STORED NAME in stored order, so a caller holding the

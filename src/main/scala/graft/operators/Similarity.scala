@@ -537,7 +537,7 @@ object Similarity {
     * `<prefix>_meta` (k, iters, written LAST, the suite-wide
     * completeness-marker discipline). The model is metadata-scale and
     * broadcast at assignment, so serving never re-trains; retraining is
-    * [[rebuildKmeansModel]], the same blue/green pointer cutover every
+    * `Kmeans.rebuild` over this writer, the generation cutover every
     * persisted family uses.
     */
   def writeKmeansModel(
@@ -555,21 +555,6 @@ object Similarity {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .format("parquet").saveAsTable(s"${tablePrefix}_meta")
   }
-
-  /** Retrain-and-cutover for a persisted k-means model — identical
-    * blue/green contract to [[rebuildIvfIndex]] (stage `_g<N+1>`, flip
-    * `<prefix>_current`, retire). Returns the new generation number.
-    */
-  def rebuildKmeansModel(
-      corpus: DataFrame,
-      idCol: String,
-      embCol: String,
-      tablePrefix: String,
-      k: Int,
-      iters: Int = 2): Long =
-    Kmeans.rebuild(corpus.sparkSession, tablePrefix) { g =>
-      writeKmeansModel(corpus, idCol, embCol, g, k, iters)
-    }
 
   /** Assign a batch against a PERSISTED k-means model (see
     * [[writeKmeansModel]]) — the online half of the train/serve split:
@@ -968,16 +953,10 @@ object Similarity {
   private def metaInt(meta: org.apache.spark.sql.Row, name: String, default: => Int): Int =
     if (meta.schema.fieldNames.contains(name)) meta.getAs[Int](name) else default
 
-  /** Resolve the ACTIVE generation of a rebuildable index (see
-    * [[rebuildIvfIndex]] / [[rebuildIvfPqIndex]]): a `<prefix>_current`
-    * pointer table names the live generation (`<prefix>_g<N>`); without
-    * one, fall back to the bare prefix when its `_meta` exists (every
-    * index built before rebuilds existed — two cheap existence checks,
-    * the common case), else the newest COMPLETE generation (`_meta` is
-    * written LAST by both builders, so its presence marks completeness —
-    * a mid-build generation never resolves; crash-recovery only). Every
-    * family verb resolves through here, so probes/appends/deletes/
-    * compaction all follow a cutover without call-site changes.
+  /** The ACTIVE generation of an index family
+    * ([[graft.sources.Sinks.activeTablePrefix]]): every verb resolves
+    * through here, so probes, appends, deletes and compaction all follow
+    * a rebuild's cutover without call-site changes.
     */
   private def activeIvfPrefix(
       spark: org.apache.spark.sql.SparkSession, prefix: String): String =
@@ -1027,66 +1006,13 @@ object Similarity {
       books
     }
 
-  /** Retrain-and-cutover (blue/green rebuild) of a persisted IVF index —
-    * the lifecycle verb for quantizer drift: appends keep the frozen
-    * quantizer ([[appendToIvfIndex]]), and when drift warrants, the
-    * index REBUILDS from the current corpus with fresh centroids (and
-    * possibly new nlist — production grows it ~√N) WITHOUT a serving
-    * gap. The new generation builds alongside the live one under
-    * `<prefix>_g<N+1>`; the cutover is one small-table overwrite of the
-    * `<prefix>_current` pointer, after which every verb resolves to the
-    * new generation ([[activeIvfPrefix]]); the retired generation drops
-    * last. Crash windows: before the pointer flip probes serve the OLD
-    * index untouched (bare `_meta` wins the resolve when no pointer
-    * exists); a mid-build crash leaves a metaless generation nothing
-    * resolves to; a pointer lost mid-overwrite recovers to the newest
-    * COMPLETE generation via the catalog-listing fallback; a crash
-    * after the flip leaves the retired generation's tables orphaned —
-    * garbage, never served. Returns the new generation number.
-    */
-  def rebuildIvfIndex(
-      corpus: DataFrame,
-      idCol: String,
-      embCol: String,
-      tablePrefix: String,
-      buckets: Int,
-      nlist: Int = 16,
-      iters: Int = 3,
-      assign: Int = 1): Long =
-    Ivf.rebuild(corpus.sparkSession, tablePrefix) { g =>
-      writeIvfIndex(corpus, idCol, embCol, g, buckets, nlist, iters, assign)
-    }
-
-  /** Retrain-and-cutover for the persisted IVF-PQ index — identical
-    * blue/green contract to [[rebuildIvfIndex]] (same pointer, same
-    * resolve, same crash windows), retraining BOTH quantizer tiers
-    * (coarse centroids and PQ codebooks) and re-coding the corpus in
-    * the staged generation. Returns the new generation number.
-    */
-  def rebuildIvfPqIndex(
-      corpus: DataFrame,
-      idCol: String,
-      embCol: String,
-      tablePrefix: String,
-      buckets: Int,
-      nlist: Int = 16,
-      nlistIters: Int = 3,
-      m: Int = 16,
-      ks: Int = 16,
-      iters: Int = 2,
-      dims: Int = 64,
-      assign: Int = 1): Long =
-    IvfPq.rebuild(corpus.sparkSession, tablePrefix) { g =>
-      writeIvfPqIndex(corpus, idCol, embCol, g, buckets, nlist, nlistIters,
-        m, ks, iters, dims, assign)
-    }
-
   /** Append new vectors to a persisted IVF index (see [[writeIvfIndex]])
     * under the FROZEN quantizer — the standard production maintenance
     * split: inverted lists grow online per ingest batch, centroids
-    * retrain offline (a rebuild via [[writeIvfIndex]]) when drift
-    * warrants. Assignment against the existing `_cents` table is
-    * deterministic, so appending a batch yields byte-identical lists to
+    * retrain offline (`Ivf.rebuild` over [[writeIvfIndex]], a
+    * generation cutover with no serving gap) when drift warrants.
+    * Assignment against the existing `_cents` table is deterministic, so
+    * appending a batch yields byte-identical lists to
     * having listed those vectors at build time with the same centroids
     * (spec-pinned); appends land bucket-aligned on `cid`, keeping probes
     * zero-Exchange as the index grows. Cost per batch:
@@ -1629,34 +1555,6 @@ object Similarity {
       .format("parquet").saveAsTable(s"${tp}_vecs")
   }
 
-  /** Vacuum a persisted IVF index (see [[writeIvfIndex]] /
-    * [[appendToIvfIndex]]): per-batch appends fragment `_lists` one file
-    * per bucket per batch; this rewrites it back to one file per bucket
-    * through its own catalog bucket spec, staged as a fresh GENERATION
-    * and flipped through the pointer
-    * ([[graft.sources.TableFamily.compact]] — no reader-blind
-    * rename window). Row set unchanged, so probes are hash-identical and
-    * zero-Exchange is preserved (spec-pinned). Returns `_lists` (files
-    * before, files after).
-    */
-  def compactIvfIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): (Int, Int) =
-    Ivf.compact(spark, tablePrefix)._2("_lists")
-
-  /** Vacuum a persisted IVF-PQ index (see [[writeIvfPqIndex]] /
-    * [[appendToIvfPqIndex]]): rewrites the bucketed `_codes` back to one
-    * file per bucket and the non-bucketed `_vecs` side table to
-    * size-targeted files — one generation cutover for the whole family.
-    * Returns ((codes before, after), (vecs before, after)).
-    */
-  def compactIvfPqIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): ((Int, Int), (Int, Int)) = {
-    val (_, counts) = IvfPq.compact(spark, tablePrefix)
-    (counts("_codes"), counts("_vecs"))
-  }
-
   /** Delete vectors from a persisted IVF index (see [[writeIvfIndex]]):
     * drops their inverted-list rows via an anti-join rewrite riding the
     * compaction machinery (generation cutover, bucket layout preserved,
@@ -1667,13 +1565,8 @@ object Similarity {
   def deleteFromIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String,
-      deletedIds: DataFrame): Unit = {
-    val del = deletedIds.select(col("id").as("neighbor_id"))
-      .distinct().localCheckpoint(true)
-    Ivf.compact(spark, tablePrefix,
-      Map[String, DataFrame => DataFrame](
-        "_lists" -> (_.join(del, Seq("neighbor_id"), "left_anti")))): Unit
-  }
+      deletedIds: DataFrame): Unit =
+    Ivf.deleteKeys(spark, tablePrefix, deletedIds.select(col("id").as("neighbor_id")), "_lists")
 
   /** Delete vectors from a persisted IVF-PQ index (see
     * [[writeIvfPqIndex]]): anti-join rewrite of both the bucketed
@@ -1684,17 +1577,12 @@ object Similarity {
   def deleteFromIvfPqIndex(
       spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String,
-      deletedIds: DataFrame): Unit = {
-    val del = deletedIds.select(col("id").as("neighbor_id"))
-      .distinct().localCheckpoint(true)
-    val anti = (df: DataFrame) => df.join(del, Seq("neighbor_id"), "left_anti")
-    IvfPq.compact(spark, tablePrefix,
-      Map[String, DataFrame => DataFrame](
-        "_codes" -> anti, "_vecs" -> anti)): Unit
-  }
+      deletedIds: DataFrame): Unit =
+    IvfPq.deleteKeys(spark, tablePrefix,
+      deletedIds.select(col("id").as("neighbor_id")), "_codes", "_vecs")
 
   /** Exactly-once wrapper around [[appendToIvfIndex]] — the batchId-keyed
-    * write-ahead-ledger recipe ([[graft.sources.Sinks.exactlyOnceBatch]])
+    * write-ahead-ledger recipe ([[graft.sources.TableFamily.exactlyOnce]])
     * with [[deleteFromIvfIndex]] as the crash-recovery scrub (anti-join
     * on the batch's ids: exact for any partial state, since `_lists`
     * rows are per-vector). Redelivery of a committed batch skips
@@ -1707,8 +1595,7 @@ object Similarity {
       embCol: String,
       batchId: Long): Option[Unit] = {
     val spark = newVecs.sparkSession
-    graft.sources.Sinks.exactlyOnceBatch(
-        spark, s"${tablePrefix}_applied", batchId) {
+    graft.sources.TableFamily.exactlyOnce(spark, tablePrefix, batchId) {
       deleteFromIvfIndex(spark, tablePrefix, newVecs.select(col(idCol).as("id")))
     } {
       appendToIvfIndex(newVecs, tablePrefix, idCol, embCol)
@@ -1728,8 +1615,7 @@ object Similarity {
       embCol: String,
       batchId: Long): Option[Unit] = {
     val spark = newVecs.sparkSession
-    graft.sources.Sinks.exactlyOnceBatch(
-        spark, s"${tablePrefix}_applied", batchId) {
+    graft.sources.TableFamily.exactlyOnce(spark, tablePrefix, batchId) {
       deleteFromIvfPqIndex(spark, tablePrefix, newVecs.select(col(idCol).as("id")))
     } {
       appendToIvfPqIndex(newVecs, tablePrefix, idCol, embCol)

@@ -1012,22 +1012,6 @@ object Text {
       .saveAsTable(s"${tablePrefix}_meta")
   }
 
-  /** Retrain-and-cutover — the blue/green contract every persisted family
-    * carries (stage `_g<N+1>`, flip the pointer, retire). Returns the new
-    * generation.
-    */
-  def rebuildUlmModel(
-      df: DataFrame,
-      textCol: Column,
-      tablePrefix: String,
-      maxPieceLen: Int = 4,
-      seedMulti: Int = 60,
-      rounds: Int = 2): Long =
-    Ulm.rebuild(df.sparkSession, tablePrefix) { g =>
-      writeUlmModel(ulmTrain(df, textCol, maxPieceLen, seedMulti, rounds)._1,
-        g, maxPieceLen)
-    }
-
   /** Encode a distinct-word frame against a PERSISTED tokenizer — the
     * serving half of the train/serve split: generation-resolved, the
     * stored pieces collect to the driver (tokenizer-parameter-scale, the

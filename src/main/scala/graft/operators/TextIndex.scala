@@ -211,8 +211,7 @@ object TextIndex {
       tablePrefix: String,
       batchId: Long): Boolean = {
     val spark = newDocs.sparkSession
-    graft.sources.Sinks.exactlyOnceBatch(
-        spark, s"${tablePrefix}_applied", batchId) {
+    graft.sources.TableFamily.exactlyOnce(spark, tablePrefix, batchId) {
       hardDeleteFromTextIndex(spark, tablePrefix,
         newDocs.select(col(idCol).cast("long").as("id")))
     } {
@@ -1097,39 +1096,13 @@ object TextIndex {
       kTop: Int): DataFrame =
     bm25AgainstIndex(spark, tablePrefix, queryTerms, kTop)
 
-  /** Blue/green rebuild — for scoring-parameter (k1/b) or bucket-count
-    * changes; same pointer/resolve contract as the sibling families.
-    * Returns the new generation number.
-    *
-    * Exactly-once ledger contract: the `_applied` batch history is NOT
-    * generation-scoped (see [[graft.sources.Sinks.clearIngestLedger]]).
-    * Rebuilding from a corpus that already CONTAINS the committed
-    * batches (the usual re-encode) keeps the ledger — a post-cutover
-    * redelivery must still skip or it would double-apply. Rebuilding
-    * from a snapshot that EXCLUDES them means the caller is resetting
-    * the stream to replay those batches: clear the ledger with the same
-    * cutover, or the replays are silently skipped.
-    */
-  def rebuildTextIndex(
-      docs: DataFrame,
-      idCol: String,
-      toks: Column,
-      tablePrefix: String,
-      buckets: Int,
-      k1: Double = 1.2,
-      b: Double = 0.75): Long =
-    Family.rebuild(docs.sparkSession, tablePrefix) { g =>
-      writeTextIndex(docs, idCol, toks, g, buckets, k1, b)
-    }
-
   /** Vacuum: fold tombstoned rows out of postings/doclens (bucket
     * layout preserved — probes keep their pruned scans), re-sum the
     * stats and score-bound partials to one base row each, and truncate
     * the tombstones — all staged as ONE fresh generation and flipped
     * atomically through the `_current` pointer (no reader ever resolves
-    * a half-compacted family; the old stage-then-rename path left a
-    * window where the table name resolved to NOTHING — SinksSpec stages
-    * it). Returns (input files, output files) for the postings rewrite.
+    * a half-compacted family). Returns (input files, output files) for
+    * the postings rewrite.
     */
   def compactTextIndex(spark: SparkSession, tablePrefix: String): (Int, Int) = {
     val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
@@ -1141,8 +1114,9 @@ object TextIndex {
     * doclens, stats, bounds and tombstones are parameter-free, so a k1/b
     * change needs no re-tokenization or re-aggregation at all; the new
     * generation is a bucket-preserving copy with a fresh `_meta`, flipped
-    * through the same pointer as [[rebuildTextIndex]] (which remains the
-    * verb for bucket-count or corpus changes). Returns the new generation.
+    * through the same pointer as a `Family.rebuild` over [[writeTextIndex]]
+    * (which remains the verb for bucket-count or corpus changes). Returns
+    * the new generation.
     */
   def restampTextIndex(
       spark: SparkSession,

@@ -613,7 +613,7 @@ object DedupQueries {
     // PARAMETER generation — same k but bands=2 (rows=8), whose band
     // keys are strictly STRICTER than the serving bands=4 keys, so the
     // stale index candidates are a proper subset and most planted pairs
-    // are invisible through it — then rebuildMinhashIndex re-signs the
+    // are invisible through it — then Minhash.rebuild re-signs the
     // corpus at the serving banding and flips the pointer (one
     // small-table overwrite, retired generation dropped last). The
     // post-cutover day probe resolves through the pointer and must match
@@ -625,7 +625,8 @@ object DedupQueries {
       Dedup.Minhash.drop(s, prefix)
       val corpus = sigs.filter(col("id") % 10 =!= 0)
       Dedup.writeMinhashIndex(corpus, prefix, buckets = 8, k = 16, bands = 2)
-      val gen = Dedup.rebuildMinhashIndex(corpus, prefix, buckets = 8, k = 16, bands = 4)
+      val gen = Dedup.Minhash.rebuild(s, prefix)(
+        Dedup.writeMinhashIndex(corpus, _, buckets = 8, k = 16, bands = 4))
       val retired = !s.catalog.tableExists(s"${prefix}_bands")
       Dedup.minhashPairsAgainstIndex(
           sigs.filter(col("id") % 10 === 0), prefix, k = 16, bands = 4, threshold = 0.7)
@@ -669,7 +670,7 @@ object DedupQueries {
           Dedup.exactlyOnceIngestIntoMinhashIndex(batch0, prefix, batchId = 0)
         // stage the mid-append crash: intent recorded, half the rows in,
         // no commit — exactly the state a died executor leaves behind
-        graft.sources.Sinks.recordLedger(s, s"${prefix}_applied", 1L, "intent")
+        graft.sources.TableFamily.recordLedger(s, prefix, 1L, "intent")
         Dedup.ingestIntoMinhashIndex(batch1.filter(col("id") % 2 === 0), prefix)
         val rec =
           Dedup.exactlyOnceIngestIntoMinhashIndex(batch1, prefix, batchId = 1)
@@ -838,7 +839,8 @@ object DedupQueries {
       Dedup.Grams.drop(s, prefix)
       val idxDocs = docs.filter(col("doc_id") % 10 =!= 0)
       Dedup.writeGramIndex(idxDocs, "doc_id", toks, n = 4, prefix, buckets = 8)
-      val gen = Dedup.rebuildGramIndex(idxDocs, "doc_id", toks, n = 5, prefix, buckets = 8)
+      val gen = Dedup.Grams.rebuild(s, prefix)(
+        Dedup.writeGramIndex(idxDocs, "doc_id", toks, n = 5, _, buckets = 8))
       val retired = !s.catalog.tableExists(s"${prefix}_grams")
       Dedup.dupSpansAgainstIndex(
           docs.filter(col("doc_id") % 10 === 0), "doc_id", toks, prefix, minRun = 2)

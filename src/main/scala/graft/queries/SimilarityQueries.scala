@@ -950,7 +950,7 @@ object SimilarityQueries {
 
     // Retrain-and-cutover (blue/green rebuild): the index first serves a
     // STALE generation (60% of the corpus, coarse nlist=8), then
-    // rebuildIvfIndex retrains on the full corpus at the serving config
+    // Ivf.rebuild retrains on the full corpus at the serving config
     // and flips the <prefix>_current pointer — one small-table overwrite,
     // no serving gap. The post-cutover probe must certify serving-grade
     // recall against the FULL corpus (impossible through the stale
@@ -971,8 +971,8 @@ object SimilarityQueries {
         Similarity.Ivf.drop(s, prefix)
         Similarity.writeIvfIndex(e.filter(col("vec_id") % 5 =!= 0),
           "vec_id", "embedding", prefix, buckets = 8, nlist = 8, iters = 2)
-        Similarity.rebuildIvfIndex(e, "vec_id", "embedding", prefix,
-          buckets = 8, nlist = 16, iters = 3, assign = IvfAssign)
+        Similarity.Ivf.rebuild(s, prefix)(Similarity.writeIvfIndex(e, "vec_id", "embedding",
+          _, buckets = 8, nlist = 16, iters = 3, assign = IvfAssign))
       }
       val retired = !s.catalog.tableExists(s"${prefix}_lists")
       val ivf = Similarity.ivfTopKAgainstIndex(q, prefix, "vec_id", "embedding",
@@ -1014,8 +1014,8 @@ object SimilarityQueries {
         // workflow, and the rebuild below must still retrain + cut over
         // from it
         Similarity.Ivf.fork(s, ensureIvfBase(s, d), prefix)
-        Similarity.rebuildIvfIndex(e, "vec_id", "embedding", prefix,
-          buckets = 8, nlist = nlist, iters = 3, assign = IvfAssign)
+        Similarity.Ivf.rebuild(s, prefix)(Similarity.writeIvfIndex(e, "vec_id", "embedding",
+          _, buckets = 8, nlist = nlist, iters = 3, assign = IvfAssign))
       }
       val ivf = Similarity.ivfTopKAgainstIndex(q, prefix, "vec_id", "embedding",
           k = 3, nprobe = nprobe)
@@ -1053,9 +1053,9 @@ object SimilarityQueries {
         Similarity.writeIvfPqIndex(e.filter(col("vec_id") % 5 =!= 0),
           "vec_id", "embedding", prefix,
           buckets = 8, nlist = 8, nlistIters = 2, m = 16, ks = 16, iters = 2)
-        Similarity.rebuildIvfPqIndex(e, "vec_id", "embedding", prefix,
-          buckets = 8, nlist = 16, nlistIters = 3, m = 16, ks = 16, iters = 2,
-          assign = IvfAssign)
+        Similarity.IvfPq.rebuild(s, prefix)(Similarity.writeIvfPqIndex(e, "vec_id", "embedding",
+          _, buckets = 8, nlist = 16, nlistIters = 3, m = 16, ks = 16, iters = 2,
+          assign = IvfAssign))
       }
       val retired = !s.catalog.tableExists(s"${prefix}_codes")
       val ann = Similarity.ivfPqTopKAgainstIndex(q, prefix, "vec_id", "embedding",
@@ -1170,7 +1170,7 @@ object SimilarityQueries {
         // catalog bucket spec); the probe below certifying recall over the
         // COMPACTED index proves the cycle is semantics-preserving under the
         // same oracle that gates the uncompacted path
-        Similarity.compactIvfPqIndex(s, prefix)
+        Similarity.IvfPq.compact(s, prefix)
       }
       val grown = Similarity.ivfPqTopKAgainstIndex(q, prefix, "vec_id", "embedding",
           k = 3, nprobe = IvfNprobe, shortlist = 128)

@@ -758,9 +758,9 @@ object StreamQueries {
                     lit(flipped).as("flipped"), lit(bid).as("bid"))
                   .write.mode("append").parquet(probeDir)
                 if (!flipped && preDrains.incrementAndGet() == 2)
-                  genSeen.set(Similarity.rebuildIvfIndex(e, "vec_id", "embedding",
-                    prefix, buckets = 8, nlist = 16, iters = 3,
-                    assign = SimilarityQueries.IvfAssign))
+                  genSeen.set(Similarity.Ivf.rebuild(s, prefix)(
+                    Similarity.writeIvfIndex(e, "vec_id", "embedding", _, buckets = 8,
+                      nlist = 16, iters = 3, assign = SimilarityQueries.IvfAssign)))
               })
           }
         }
@@ -813,7 +813,7 @@ object StreamQueries {
     // batch, and a plain append re-run would double-insert that batch's
     // rows. All four index-ingest foreachBatch bodies here (minhash,
     // gram, IVF, IVF-PQ) therefore run the exactly-once variants —
-    // batchId-keyed write-ahead ledger (Sinks.exactlyOnceBatch): a
+    // batchId-keyed write-ahead ledger (TableFamily.exactlyOnce): a
     // committed redelivery skips, a crash-retry scrubs the partial
     // residue via the family's deletion verb before re-applying (the
     // retry paths themselves are pinned by the three exactly-once specs

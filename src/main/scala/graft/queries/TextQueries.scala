@@ -1252,7 +1252,7 @@ object TextQueries {
           batch0, "doc_id", toks, prefix, batchId = 0)
         // stage the mid-append crash: intent recorded, part of the batch
         // landed, no commit — the state a died executor leaves behind
-        graft.sources.Sinks.recordLedger(s, s"${prefix}_applied", 1L, "intent")
+        graft.sources.TableFamily.recordLedger(s, prefix, 1L, "intent")
         TextIndex.ingestIntoTextIndex(
           batch1.filter(col("doc_id") % 3 === 0), "doc_id", toks, prefix,
           batchId = 1)
@@ -1318,7 +1318,7 @@ object TextQueries {
     // top-20 DIFFERS from the serving parameters', then the PARAM-ONLY
     // rebuild verb (restampTextIndex) stages a copy with a fresh _meta
     // and flips the pointer — postings are parameter-free, so nothing
-    // re-tokenizes (the full-corpus rebuildTextIndex remains the
+    // re-tokenizes (the full-corpus Family.rebuild remains the
     // bucket/corpus-change verb, spec-exercised in OperatorsSpec). The
     // stale fixture itself is staged by FORKING the shared base and
     // over-stamping its _meta — the whole query runs zero tokenization

@@ -24,7 +24,7 @@ import graft.model.SchemaRegistry
   *    daily query touches one directory, not the table;
   *  - K5 post-load row-count audit (`bigquery_operations.py:46-48`).
   *
-  * A table load counts its rows inside its write job ([[writeCounted]]),
+  * A table load counts its rows inside its write job ([[write]]),
   * so it scans its source exactly once.
   */
 object Sinks {
@@ -34,20 +34,10 @@ object Sinks {
   /** Partition column name added by DAY partitioning. */
   val PartitionCol = "p_date"
 
-  /** K2+K3: write with disposition + optional DAY partitioning. */
-  def write(
-      df: DataFrame,
-      path: String,
-      daily: Boolean = false,
-      dayPartitionField: Option[String] = None): Unit =
-    writeParquet(dayLayout(df, dayPartitionField), path, daily, dayPartitionField.isDefined)
-
-  /** [[write]] that runs `df` once and returns the rows written, counted by
-    * the write job itself. (`write` stays `Unit`: a `Long` result would
-    * break `foreachBatch` lambdas ending in a `write` call, whose overloads
-    * give the lambda no expected type to discard the value against.)
+  /** K2+K3: write with disposition + optional DAY partitioning. Runs `df`
+    * once and returns the rows written, counted by the write job itself.
     */
-  def writeCounted(
+  def write(
       df: DataFrame,
       path: String,
       daily: Boolean = false,
@@ -239,27 +229,35 @@ object Sinks {
       outDir: String,
       targetFileBytes: Long): (Int, Int) = {
     require(targetFileBytes > 0, s"targetFileBytes must be positive: $targetFileBytes")
-    // resolve through the Hadoop FileSystem of the path's scheme, not
-    // java.io.File — on hdfs:// or s3a:// a local listing would return
-    // nothing and silently collapse the whole table into one file
-    def parquetFiles(dir: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    }
-    val inFiles = parquetFiles(inDir)
+    val inFiles = parquetFilesAt(spark, new org.apache.hadoop.fs.Path(inDir))
     require(inFiles.nonEmpty, s"no parquet files to compact under $inDir")
-    val totalBytes = inFiles.map(_.getLen).sum
-    // Long arithmetic end-to-end: a tiny target over a 100 TB input must
-    // not overflow Int and collapse to a single output file
-    val nOutL = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes)
-    val nOut = math.min(nOutL, Int.MaxValue.toLong).toInt
     spark.read.parquet(inDir)
-      .repartition(nOut)
+      .repartition(outputFileCount(inFiles, targetFileBytes))
       .write.mode(SaveMode.Overwrite).parquet(outDir)
-    (inFiles.length, parquetFiles(outDir).length)
+    (inFiles.length, parquetFilesAt(spark, new org.apache.hadoop.fs.Path(outDir)).length)
+  }
+
+  /** Parquet data files directly under `dir` (none when it is missing),
+    * listed through the Hadoop FileSystem of the path's scheme, not
+    * java.io.File: on hdfs:// or s3a:// a local listing would return
+    * nothing and silently collapse a whole table into one file.
+    */
+  private def parquetFilesAt(
+      spark: SparkSession, dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+  }
+
+  /** ceil(total bytes of `files` / targetFileBytes), clamped to
+    * [1, Int.MaxValue]: Long arithmetic end-to-end, so a tiny target over a
+    * 100 TB input cannot overflow Int and collapse to a single file.
+    */
+  private def outputFileCount(
+      files: Seq[org.apache.hadoop.fs.FileStatus], targetFileBytes: Long): Int = {
+    val totalBytes = files.map(_.getLen).sum
+    math.min(math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes),
+      Int.MaxValue.toLong).toInt
   }
 
   /** Partition-granular retention sweep (TTL) over a `partCol=`-
@@ -334,22 +332,6 @@ object Sinks {
     }
   }
 
-  /** Reset an index family's exactly-once ingest ledger (`_applied`,
-    * kept at the BARE prefix — deliberately OUTSIDE the generation
-    * chain). The ledger's batch history spans generations, which is the
-    * right default for the common rebuild ("re-encode the corpus AS
-    * INGESTED SO FAR": a post-cutover redelivery of a committed batch
-    * must still skip, or it would double-apply). It is the WRONG default
-    * for a rebuild from a snapshot that excludes committed batches —
-    * there the stream is being reset to replay them, and a stale ledger
-    * would silently skip the replays. That caller resets the ledger
-    * with this verb as part of the same cutover, mirroring the stream's
-    * checkpoint reset. Spelled out here because the failure is silent
-    * in both directions; the rebuild verbs' scaladoc points at it.
-    */
-  def clearIngestLedger(spark: SparkSession, tablePrefix: String): Unit =
-    dropManagedTable(spark, s"${tablePrefix}_applied")
-
   /** Clone a managed, unpartitioned parquet table by catalog-metadata
     * clone + raw file copy — the zero-job sibling of a read→write copy:
     * `CREATE TABLE dst LIKE src` reproduces schema, provider and bucket
@@ -384,8 +366,7 @@ object Sinks {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = srcPath.getFileSystem(conf)
     if (!fs.exists(dstPath)) fs.mkdirs(dstPath): Unit
-    val files = fs.listStatus(srcPath).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+    val files = parquetFilesAt(spark, srcPath)
     // copy files CONCURRENTLY (r16 — measured: a sequential FileUtil.copy
     // of one bucketed postings table was 2.25 s of single-threaded driver
     // time, the whole rest of the clone is milliseconds): destinations
@@ -650,120 +631,12 @@ object Sinks {
         col(cB).cast("double").between(loB, hiB))
   }
 
-  /** Append one write-ahead ledger row for [[exactlyOnceBatch]]. Plain
-    * (non-bucketed) parquet catalog table; duplicate rows are harmless
-    * (the reader asks "does a commit row exist", not "how many").
-    */
-  private[graft] def recordLedger(
-      spark: SparkSession,
-      ledgerTable: String,
-      batchId: Long,
-      phase: String): Unit =
-    spark.createDataFrame(Seq((batchId, phase))).toDF("batch_id", "phase")
-      .write.mode(SaveMode.Append).format("parquet").saveAsTable(ledgerTable)
-
-  /** The batchId-keyed write-ahead ledger that turns Structured
-    * Streaming's at-least-once `foreachBatch` retries into exactly-once
-    * index STATE — shared by the exactly-once variants of all four
-    * persisted-index ingest verbs. A plain append is retry-unsafe two
-    * ways: a batch redelivered after a successful append double-inserts,
-    * and a crash mid-append leaves a partial batch a blind re-run
-    * duplicates. Both close against the ledger (batch_id, phase):
-    *
-    *  1. a `commit` row for this batchId ⇒ the batch is fully applied —
-    *     skip (returns None; checkpoint-lag redelivery, the common case);
-    *  2. an `intent` row without `commit` ⇒ a prior attempt may have
-    *     died mid-append — run `scrub` (the index family's exact
-    *     deletion verb over the batch's ids; a no-op scrub pays one
-    *     compaction pass) and fall through;
-    *  3. record `intent`, run `apply` (the plain ingest), record
-    *     `commit`, return Some(result).
-    *
-    * Correct because Structured Streaming replays a failed batch with
-    * the SAME batchId and — for deterministic sources — the same rows,
-    * so the scrub removes exactly the partial residue. The happy path
-    * costs two one-row ledger appends; the O(index) deletion rewrite is
-    * paid only on actual crash recovery. Downstream OUTPUT of a skipped
-    * redelivery needs its own idempotency, which is Spark's standard
-    * contract for foreachBatch sinks.
-    */
-  private[graft] def exactlyOnceBatch[T](
-      spark: SparkSession,
-      ledgerTable: String,
-      batchId: Long)(scrub: => Unit)(apply: => T): Option[T] = {
-    val phases: Set[String] =
-      if (spark.catalog.tableExists(ledgerTable))
-        // driver-side toSet replaces a distinct() Exchange — the matched
-        // rows are ≤ 2 per batch attempt (r16, guide §2.4)
-        spark.table(ledgerTable).filter(col("batch_id") === batchId)
-          .select("phase").collect().map(_.getString(0)).toSet
-      else Set.empty
-    if (phases.contains("commit")) None
-    else {
-      if (phases.contains("intent")) scrub
-      recordLedger(spark, ledgerTable, batchId, "intent")
-      val result = apply
-      recordLedger(spark, ledgerTable, batchId, "commit")
-      Some(result)
-    }
-  }
-
-  /** In-place compaction (vacuum) of a managed catalog table — the index
-    * lifecycle pass the append-maintained bucketed indexes need: per-batch
-    * appends accumulate one file per bucket per batch FOREVER (a year of
-    * daily ingest = hundreds of small files per bucket and, for the gram
-    * index, N_batches partial rows per gram), so probes degrade into
-    * metadata storms even though the bucket layout itself is intact.
-    *
-    * Semantics-preserving by construction: the rewrite goes through the
-    * table's OWN catalog bucket spec (same bucket count, columns, sort),
-    * so probe plans keep consuming the layout with zero Exchange on the
-    * index side — pinned by spec alongside probe-result hash parity. The
-    * optional `rewrite` hook transforms the row set inside the same
-    * stage-then-swap: semantics-preserving re-aggregations (gram-df
-    * partials re-sum to one row per gram — exact, the measure is
-    * additive) and deliberate row deletions (bucket-aligned anti-join of
-    * taken-down document ids) both ride it.
-    *
-    * Atomicity: stage-then-swap. The compacted data lands in a staging
-    * table, then two catalog renames swap it in (original → `__cold`,
-    * stage → original) and the old data is dropped last — a crash leaves
-    * either the original intact or both tables present, never neither.
-    * Non-bucketed tables (e.g. the IVF-PQ `_vecs` side table) compact
-    * through the same path sized by `targetFileBytes`, like [[compact]].
-    *
-    * Returns (input parquet file count, output parquet file count).
-    */
-  def compactTable(
-      spark: SparkSession,
-      table: String,
-      rewrite: DataFrame => DataFrame = identity,
-      targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    require(table.matches("[A-Za-z0-9_]+"),
-      s"compactTable expects an unqualified [A-Za-z0-9_]+ identifier, got '$table'")
-    val before = parquetFileCount(spark, table)
-    val stage = s"${table}__cstage"
-    val old = s"${table}__cold"
-    Seq(stage, old).foreach(dropManagedTable(spark, _))
-    // standalone compaction always re-writes (callers reach for this verb
-    // to merge fragments; the Some() keeps the family path's identity
-    // shortcut from skipping a deliberate merge here)
-    stageCompactedInto(spark, table, stage, Some(rewrite), targetFileBytes)
-    spark.sql(s"ALTER TABLE `$table` RENAME TO `$old`")
-    spark.sql(s"ALTER TABLE `$stage` RENAME TO `$table`")
-    dropManagedTable(spark, old)
-    (before, parquetFileCount(spark, table))
-  }
-
   /** Parquet data files currently backing a managed catalog table. */
   private def parquetFiles(
-      spark: SparkSession, table: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val p = new org.apache.hadoop.fs.Path(
+      spark: SparkSession, table: String): Seq[org.apache.hadoop.fs.FileStatus] =
+    parquetFilesAt(spark, new org.apache.hadoop.fs.Path(
       spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-  }
+        org.apache.spark.sql.catalyst.TableIdentifier(table)).location))
 
   private[graft] def parquetFileCount(spark: SparkSession, table: String): Int =
     parquetFiles(spark, table).length
@@ -783,52 +656,38 @@ object Sinks {
     * turn identity-rewrite members of a family compaction into raw file
     * copies — re-encoding an already-compact table buys nothing.
     */
-  private def alreadyCompact(
-      spark: SparkSession,
-      table: String,
-      bucketed: Boolean,
-      targetFileBytes: Long): Boolean = {
+  private def alreadyCompact(spark: SparkSession, table: String, bucketed: Boolean): Boolean = {
     val files = parquetFiles(spark, table)
     if (bucketed) {
       val ids = files.map(f => bucketIdOf(f.getPath.getName))
       ids.forall(_.isDefined) && ids.flatten.distinct.size == ids.size
-    } else {
-      val totalBytes = math.max(1L, files.map(_.getLen).sum)
-      val nOut = math.min(
-        math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes),
-        Int.MaxValue.toLong)
-      files.size <= nOut
-    }
+    } else files.size <= outputFileCount(files, CompactFileBytes)
   }
 
-  /** The compaction STAGE write shared by [[compactTable]] (stage → two
-    * renames, for standalone tables) and [[TableFamily.compact]] (stage
-    * into a fresh generation, for pointer-managed families): writes
-    * `rewrite(src)` into `dst` through src's OWN bucket spec at one file
-    * per bucket — or size-targeted files when unbucketed — with src's
-    * column order re-pinned. An identity member (`rewrite` None) whose
-    * layout is already at the target compacts as a raw FILE COPY
-    * ([[cloneTableViaFileCopy]] — zero Spark jobs, bit-identical rows);
-    * guide §6: never re-encode bytes a copy preserves.
+  /** Target file size of an unbucketed member's compaction. */
+  private val CompactFileBytes = 128L << 20
+
+  /** The compaction stage write of [[TableFamily.compact]]: writes
+    * `rewrite(table)` into `stage` through the table's OWN bucket spec at
+    * one file per bucket — or size-targeted files when unbucketed — with
+    * the table's column order re-pinned. An identity member (`rewrite`
+    * None) whose layout is already at the target compacts as a raw FILE
+    * COPY ([[cloneTableViaFileCopy]] — zero Spark jobs, bit-identical
+    * rows); guide §6: never re-encode bytes a copy preserves.
     */
   private[sources] def stageCompactedInto(
       spark: SparkSession,
       table: String,
       stage: String,
-      rewriteOpt: Option[DataFrame => DataFrame],
-      targetFileBytes: Long): Unit = {
-    require(targetFileBytes > 0, s"targetFileBytes must be positive: $targetFileBytes")
-    val specEarly = spark.sessionState.catalog.getTableMetadata(
+      rewrite: Option[DataFrame => DataFrame]): Unit = {
+    val spec = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(table)).bucketSpec
-    if (rewriteOpt.isEmpty &&
-        alreadyCompact(spark, table, specEarly.isDefined, targetFileBytes)) {
+    if (rewrite.isEmpty && alreadyCompact(spark, table, spec.isDefined)) {
       cloneTableViaFileCopy(spark, table, stage)
       return
     }
-    val rewrite = rewriteOpt.getOrElse(identity[DataFrame] _)
-    val catalog = spark.sessionState.catalog
-    val spec = catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table)).bucketSpec
+    // built at its use, inside the pinned settings below
+    def rows = rewrite.getOrElse(identity[DataFrame] _)(spark.table(table))
     // a rewrite hook must preserve the column SET (it writes back into
     // the same table), but Spark's USING joins put join keys first — so
     // an anti-join deletion rewrite would silently reorder a long-lived
@@ -862,7 +721,7 @@ object Sinks {
         pinned.foreach { case (k, v) => spark.conf.set(k, v) }
         try {
           val cols = s.bucketColumnNames.map(col)
-          val w = ordered(rewrite(spark.table(table))).repartition(s.numBuckets, cols: _*)
+          val w = ordered(rows).repartition(s.numBuckets, cols: _*)
             .write.mode(SaveMode.Overwrite)
             .bucketBy(s.numBuckets, s.bucketColumnNames.head, s.bucketColumnNames.tail: _*)
           val ws = if (s.sortColumnNames.nonEmpty)
@@ -873,11 +732,7 @@ object Sinks {
           case (k, None) => spark.conf.unset(k)
         }
       case None =>
-        val totalBytes = math.max(1L, parquetFiles(spark, table).map(_.getLen).sum)
-        val nOut = math.min(
-          math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes),
-          Int.MaxValue.toLong).toInt
-        ordered(rewrite(spark.table(table))).repartition(nOut)
+        ordered(rows).repartition(outputFileCount(parquetFiles(spark, table), CompactFileBytes))
           .write.mode(SaveMode.Overwrite)
           .format("parquet").saveAsTable(stage)
     }
@@ -903,7 +758,7 @@ object Sinks {
     new SinkAdapter {
       val name: String = table.getOrElse(path.split('/').last)
       def write(df: DataFrame, daily: Boolean, dayPartitionField: Option[String]): Long =
-        Sinks.writeCounted(df, path, daily, dayPartitionField)
+        Sinks.write(df, path, daily, dayPartitionField)
       def countAudit(): Long = Sinks.countAudit(spark, path)
     }
 

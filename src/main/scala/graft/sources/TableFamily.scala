@@ -27,9 +27,20 @@ class TableFamily(declared: String*) {
   /** Stage → pointer flip → retire: `build` writes a complete family
     * under the staged generation prefix it is given (its `_meta` last),
     * `<prefix>_current` is overwritten to name it, and the retired
-    * generation drops last. A build that throws leaves the pointer and
-    * the serving generation untouched; the staged remnant is scrubbed by
-    * the next verb. Returns the new generation number.
+    * generation drops last. Returns the new generation number. Callers
+    * hand in the family's own writer, e.g.
+    * `Ivf.rebuild(spark, p)(g => writeIvfIndex(corpus, id, emb, g, buckets))`.
+    *
+    * Crash windows: a build that throws leaves the pointer and the serving
+    * generation untouched (with no pointer yet, the bare `_meta` wins the
+    * resolve), and its metaless remnant never resolves and is scrubbed by
+    * the next verb; a pointer lost mid-overwrite recovers to the newest
+    * complete generation ([[Sinks.activeTablePrefix]]'s catalog fallback);
+    * a crash after the flip leaves the retired generation orphaned —
+    * never served, scrubbed by [[drop]].
+    *
+    * The ingest ledger ([[TableFamily.exactlyOnce]]) sits outside the
+    * generations, so a rebuild keeps it: see there for when that is wrong.
     */
   def rebuild(spark: SparkSession, prefix: String)(build: String => Unit): Long = {
     val cur =
@@ -70,7 +81,7 @@ class TableFamily(declared: String*) {
     val gen = rebuild(spark, prefix) { g =>
       members.foreach { sfx =>
         val (src, dst) = (s"$from$sfx", s"$g$sfx")
-        Sinks.stageCompactedInto(spark, src, dst, rewrites.get(sfx), 128L << 20)
+        Sinks.stageCompactedInto(spark, src, dst, rewrites.get(sfx))
         counts(sfx) = (Sinks.parquetFileCount(spark, src), Sinks.parquetFileCount(spark, dst))
       }
     }
@@ -90,6 +101,17 @@ class TableFamily(declared: String*) {
     members.foreach(sfx => Sinks.cloneTableViaFileCopy(spark, s"$src$sfx", s"$to$sfx"))
   }
 
+  /** Delete the rows whose `keys` columns match a row of `keys` from the
+    * named `from` members, in one [[compact]]: a left anti-join on every
+    * column of `keys`, one generation flip for all of them (a member
+    * pair such as codes and their re-rank vectors vanishes together).
+    */
+  def deleteKeys(spark: SparkSession, prefix: String, keys: DataFrame, from: String*): Unit = {
+    val del = keys.distinct().localCheckpoint(true)
+    val anti = (df: DataFrame) => df.join(del, del.columns.toSeq, "left_anti")
+    compact(spark, prefix, from.map(_ -> anti).toMap): Unit
+  }
+
   /** Drop every remnant of the family at `prefix`: the bare members, the
     * ingest ledger, the generation pointer, and every generation member
     * `<prefix>_g<N><member>` found in the catalog or, for a fresh JVM
@@ -105,8 +127,78 @@ class TableFamily(declared: String*) {
       if (fs.exists(warehouse)) fs.listStatus(warehouse).toSeq.map(_.getPath.getName.toLowerCase)
       else Nil
     val generations = (listed ++ dirs).distinct.filter(generation.matches)
-    ((members :+ "_applied" :+ "_current").map(prefix + _) ++ generations)
-      .foreach(Sinks.dropManagedTable(spark, _))
+    val bare = members.map(prefix + _) :+ TableFamily.ledger(prefix) :+ s"${prefix}_current"
+    (bare ++ generations).foreach(Sinks.dropManagedTable(spark, _))
+  }
+}
+
+object TableFamily {
+
+  /** The exactly-once ingest ledger of the family at `prefix`. */
+  private def ledger(prefix: String): String = s"${prefix}_applied"
+
+  /** Append one (batch_id, phase) row to the ingest ledger of the family
+    * at `prefix`. Duplicate rows are harmless: [[exactlyOnce]] asks
+    * whether a phase row exists, not how many.
+    */
+  private[graft] def recordLedger(
+      spark: SparkSession,
+      prefix: String,
+      batchId: Long,
+      phase: String): Unit =
+    spark.createDataFrame(Seq((batchId, phase))).toDF("batch_id", "phase")
+      .write.mode(SaveMode.Append).format("parquet").saveAsTable(ledger(prefix))
+
+  /** The batchId-keyed write-ahead ledger that turns Structured
+    * Streaming's at-least-once `foreachBatch` retries into exactly-once
+    * family state. A plain append is retry-unsafe two ways: a batch
+    * redelivered after a successful append double-inserts, and a crash
+    * mid-append leaves a partial batch a blind re-run duplicates. Both
+    * close against the ledger's (batch_id, phase) rows:
+    *
+    *  1. a `commit` row for `batchId` ⇒ the batch is fully applied —
+    *     skip (returns None; checkpoint-lag redelivery, the common case);
+    *  2. an `intent` row without `commit` ⇒ a prior attempt may have
+    *     died mid-append — run `scrub` (the family's exact deletion of
+    *     the batch's residue) and fall through;
+    *  3. record `intent`, run `apply` (the plain ingest), record
+    *     `commit`, return Some(result).
+    *
+    * Correct because Structured Streaming replays a failed batch with
+    * the same batchId and, for deterministic sources, the same rows. The
+    * happy path costs two one-row ledger appends; the scrub's rewrite is
+    * paid only on crash recovery. Output of a skipped redelivery needs
+    * its own idempotency, Spark's standard foreachBatch contract.
+    *
+    * The ledger lives at the bare prefix, outside the generation chain,
+    * so its history spans [[TableFamily.rebuild]]s. That is right for the
+    * usual rebuild, which re-encodes the corpus as ingested so far: a
+    * post-cutover redelivery of a committed batch must still skip. It is
+    * wrong for a family rebuilt from a snapshot that excludes committed
+    * batches — the stream is being reset to replay them, and the stale
+    * ledger would skip the replays silently. Such a family is a fresh
+    * one: [[TableFamily.drop]] it (which clears the ledger) and write it
+    * anew.
+    */
+  private[graft] def exactlyOnce[T](
+      spark: SparkSession,
+      prefix: String,
+      batchId: Long)(scrub: => Unit)(apply: => T): Option[T] = {
+    val phases: Set[String] =
+      if (spark.catalog.tableExists(ledger(prefix)))
+        // driver-side toSet replaces a distinct() Exchange — the matched
+        // rows are ≤ 2 per batch attempt
+        spark.table(ledger(prefix)).filter(col("batch_id") === batchId)
+          .select("phase").collect().map(_.getString(0)).toSet
+      else Set.empty
+    if (phases.contains("commit")) None
+    else {
+      if (phases.contains("intent")) scrub
+      recordLedger(spark, prefix, batchId, "intent")
+      val result = apply
+      recordLedger(spark, prefix, batchId, "commit")
+      Some(result)
+    }
   }
 }
 

@@ -30,8 +30,10 @@ object Tables {
   /** S1: full table scan. Column pruning + predicate pushdown are Catalyst's
     * job — callers just compose on the returned (lazy) DataFrame.
     */
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    normalizeEventTime(name, spark.read.parquet(s"$sfDir/$name.parquet"))
+
+  private def normalizeEventTime(name: String, raw: DataFrame): DataFrame =
     eventTimeColumns.getOrElse(name, Nil).foldLeft(raw) { (df, c) =>
       if (!df.columns.contains(c)) df
       else df.schema(c).dataType match {
@@ -40,7 +42,6 @@ object Tables {
         case _ => df
       }
     }
-  }
 
   /** S2: incremental ("daily") scan — the `WHERE DATE(backup_date) = d`
     * semantics of `mysql_operations.py:21-23`, written as the equivalent
@@ -74,11 +75,12 @@ object Tables {
         (lit(day.atStartOfDay(z).toInstant), lit(day.plusDays(1).atStartOfDay(z).toInstant))
     }
 
-  /** S2 fused with the scan: for nanos-backed columns the day range is
-    * applied to the RAW long column BEFORE the micros conversion, so the
-    * comparison is attribute-vs-literal and reaches the parquet scan
-    * (row-group skipping); filtering the converted column cannot push.
-    * Non-nanos tables fall through to [[incremental]] (already pushable).
+  /** S2 fused with the scan: the day range filters the RAW on-disk
+    * column, with bounds of its own type (epoch nanos for a nanos-backed
+    * event-time column, else [[dayBounds]]), BELOW [[load]]'s event-time
+    * normalization. The comparison stays attribute-vs-literal and reaches
+    * the parquet scan (row-group skipping); filtering the converted column
+    * cannot push.
     */
   def loadIncremental(
       spark: SparkSession,
@@ -87,33 +89,14 @@ object Tables {
       tsCol: String,
       day: java.time.LocalDate): DataFrame = {
     val raw = spark.read.parquet(s"$sfDir/$name.parquet")
-    val isNanos = eventTimeColumns.getOrElse(name, Nil).contains(tsCol) &&
-      raw.columns.contains(tsCol) && raw.schema(tsCol).dataType == LongType
-    val isNtz = eventTimeColumns.getOrElse(name, Nil).contains(tsCol) &&
-      raw.columns.contains(tsCol) && raw.schema(tsCol).dataType == TimestampNTZType
-    if (isNanos) {
-      val zone = java.time.ZoneOffset.UTC
-      val loNanos = day.atStartOfDay(zone).toInstant.getEpochSecond * 1000000000L
-      val hiNanos = day.plusDays(1).atStartOfDay(zone).toInstant.getEpochSecond * 1000000000L
-      val filtered = raw.filter(col(tsCol) >= loNanos && col(tsCol) < hiNanos)
-      eventTimeColumns(name).foldLeft(filtered) { (df, c) =>
-        if (df.columns.contains(c) && df.schema(c).dataType == LongType)
-          df.withColumn(c, expr(s"timestamp_micros($c div 1000)"))
-        else df
-      }
-    } else if (isNtz) {
-      // same discipline as the nanos branch: range-filter the RAW NTZ
-      // column (attribute-vs-NTZ-literal — pushes to the parquet scan)
-      // BEFORE the session-zone cast, and normalize EVERY configured
-      // event-time column like the nanos branch does
-      val (lo, hi) = dayBounds(TimestampNTZType, day)
-      val filtered = raw.filter(col(tsCol) >= lo && col(tsCol) < hi)
-      eventTimeColumns(name).foldLeft(filtered) { (df, c) =>
-        if (df.columns.contains(c) && df.schema(c).dataType == TimestampNTZType)
-          df.withColumn(c, col(c).cast(TimestampType))
-        else df
-      }
-    } else incremental(load(spark, sfDir, name), tsCol, day)
+    val (lo, hi) = raw.schema(tsCol).dataType match {
+      case LongType if eventTimeColumns.getOrElse(name, Nil).contains(tsCol) =>
+        def nanos(d: java.time.LocalDate) =
+          lit(d.atStartOfDay(java.time.ZoneOffset.UTC).toInstant.getEpochSecond * 1000000000L)
+        (nanos(day), nanos(day.plusDays(1)))
+      case dt => dayBounds(dt, day)
+    }
+    normalizeEventTime(name, raw.filter(col(tsCol) >= lo && col(tsCol) < hi))
   }
 
   /** S3: catalog discovery — the parquet-directory analogue of

@@ -268,8 +268,8 @@ class DedupSimilaritySpec extends SparkSpec {
     // through the pointer, not assume bare tables exist
     Similarity.writeIvfIndex(corpus, "vec_id", "embedding", "ivf_snap_src",
       buckets = 4, nlist = 4, iters = 2)
-    Similarity.rebuildIvfIndex(corpus, "vec_id", "embedding", "ivf_snap_src",
-      buckets = 4, nlist = 4, iters = 2)
+    Similarity.Ivf.rebuild(spark, "ivf_snap_src")(Similarity.writeIvfIndex(
+      corpus, "vec_id", "embedding", _, buckets = 4, nlist = 4, iters = 2))
     Similarity.Ivf.fork(spark, "ivf_snap_src", "ivf_snap_fork")
 
     def probe(prefix: String) = Similarity.ivfTopKAgainstIndex(
@@ -383,8 +383,8 @@ class DedupSimilaritySpec extends SparkSpec {
 
     // retrain at a different k through the pointer cutover: assignment
     // must resolve the NEW generation without call-site changes
-    val gen = Similarity.rebuildKmeansModel(corpus, "vec_id", "embedding",
-      "km_spec", k = 2, iters = 1)
+    val gen = Similarity.Kmeans.rebuild(spark, "km_spec")(
+      Similarity.writeKmeansModel(corpus, "vec_id", "embedding", _, k = 2, iters = 1))
     assert(gen == 1L)
     assert(!spark.catalog.tableExists("km_spec_cents"), "bare generation retired")
     assert(viaModel.map(_._2).max <= 2L,
@@ -604,8 +604,8 @@ class DedupSimilaritySpec extends SparkSpec {
       .foreach(graft.sources.Sinks.dropManagedTable(spark, _))
 
     // real rebuild: full corpus, more cells — probes follow, bare is gone
-    val gen = Similarity.rebuildIvfIndex(corpus, "vec_id", "embedding",
-      "ivf_rb_spec", buckets = 4, nlist = 8, iters = 2)
+    val gen = Similarity.Ivf.rebuild(spark, "ivf_rb_spec")(Similarity.writeIvfIndex(
+      corpus, "vec_id", "embedding", _, buckets = 4, nlist = 8, iters = 2))
     assert(gen == 1L)
     assert(!spark.catalog.tableExists("ivf_rb_spec_lists"),
       "the retired bare generation must be dropped")
@@ -625,8 +625,8 @@ class DedupSimilaritySpec extends SparkSpec {
       "the pre-delete generation must be retired")
     assert(spark.table("ivf_rb_spec_g2_lists").count() == 60L)
     // the next rebuild keeps incrementing and retires g2
-    assert(Similarity.rebuildIvfIndex(corpus, "vec_id", "embedding",
-      "ivf_rb_spec", buckets = 4, nlist = 4, iters = 2) == 3L)
+    assert(Similarity.Ivf.rebuild(spark, "ivf_rb_spec")(Similarity.writeIvfIndex(
+      corpus, "vec_id", "embedding", _, buckets = 4, nlist = 4, iters = 2)) == 3L)
     assert(!spark.catalog.tableExists("ivf_rb_spec_g2_lists"))
     assert(probe().nonEmpty && after.nonEmpty)
   }
@@ -647,9 +647,9 @@ class DedupSimilaritySpec extends SparkSpec {
     Similarity.writeIvfPqIndex(corpus.filter(col("vec_id") < 60),
       "vec_id", "embedding", "ivfpq_rb_spec",
       buckets = 4, nlist = 4, nlistIters = 2, m = 4, ks = 8, iters = 2, dims = 8)
-    assert(Similarity.rebuildIvfPqIndex(corpus, "vec_id", "embedding",
-      "ivfpq_rb_spec", buckets = 4, nlist = 4, nlistIters = 2,
-      m = 4, ks = 8, iters = 2, dims = 8) == 1L)
+    assert(Similarity.IvfPq.rebuild(spark, "ivfpq_rb_spec")(Similarity.writeIvfPqIndex(
+      corpus, "vec_id", "embedding", _, buckets = 4, nlist = 4, nlistIters = 2,
+      m = 4, ks = 8, iters = 2, dims = 8)) == 1L)
     assert(!spark.catalog.tableExists("ivfpq_rb_spec_codes"),
       "the retired bare generation must be dropped")
     // probe resolves through the pointer and reaches the refreshed corpus
@@ -766,7 +766,7 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(lists() == clean)
 
     // crash mid-append of batch B: intent in, HALF the rows listed
-    graft.sources.Sinks.recordLedger(spark, "ivf_eo_spec_applied", 1L, "intent")
+    graft.sources.TableFamily.recordLedger(spark, "ivf_eo_spec", 1L, "intent")
     Similarity.appendToIvfIndex(
       batchB.filter(col("vec_id") % 2 === 0), "ivf_eo_spec", "vec_id", "embedding")
     assert(Similarity.exactlyOnceAppendToIvfIndex(
@@ -805,7 +805,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
     // crash mid-append of batch B: intent recorded, only HALF the
     // batch's partial rows landed (stamped batch_id = 1)
-    graft.sources.Sinks.recordLedger(spark, "gram_eo_spec_applied", 1L, "intent")
+    graft.sources.TableFamily.recordLedger(spark, "gram_eo_spec", 1L, "intent")
     Dedup.ingestIntoGramIndex(
       mkDocs(20 until 23, "b"), "doc_id", toks, "gram_eo_spec", batchId = 1L)
     assert(Dedup.exactlyOnceIngestIntoGramIndex(
@@ -927,7 +927,7 @@ class DedupSimilaritySpec extends SparkSpec {
       (20L, "some completely independent sentence about catalyst optimizer rules"),
       (21L, "herons on the riverbank consider the zebra question at length"))
       .toDF("doc_id", "text")
-    graft.sources.Sinks.recordLedger(spark, "mh_eo_spec_applied", 8L, "intent")
+    graft.sources.TableFamily.recordLedger(spark, "mh_eo_spec", 8L, "intent")
     Dedup.ingestIntoMinhashIndex(
       sigsOf(batch8.filter($"doc_id" === 20L)), "mh_eo_spec", 0.5)
     assert(Dedup.exactlyOnceIngestIntoMinhashIndex(sigsOf(batch8), "mh_eo_spec", 8L).isDefined)
@@ -965,8 +965,8 @@ class DedupSimilaritySpec extends SparkSpec {
     // retune bands 4 -> 8: a full re-sign behind a pointer flip; probes
     // with the NEW parameters must work immediately after the cutover
     // (they'd throw the parameter-mismatch refusal against the old one)
-    assert(Dedup.rebuildMinhashIndex(
-      sigsOf(docs, 16), "mh_rb_spec", buckets = 4, k = 16, bands = 8) == 1L)
+    assert(Dedup.Minhash.rebuild(spark, "mh_rb_spec")(
+      Dedup.writeMinhashIndex(sigsOf(docs, 16), _, buckets = 4, k = 16, bands = 8)) == 1L)
     assert(!spark.catalog.tableExists("mh_rb_spec_bands"))
     val probe = Seq((10L, "the quick brown fox jumps over the lazy dog again and again today"))
       .toDF("doc_id", "text")
@@ -980,7 +980,8 @@ class DedupSimilaritySpec extends SparkSpec {
       Seq(s"gram_rb_spec$sfx", s"gram_rb_spec_g1$sfx")) :+ "gram_rb_spec_current")
       .foreach(graft.sources.Sinks.dropManagedTable(spark, _))
     Dedup.writeGramIndex(docs, "doc_id", toks, 3, "gram_rb_spec", buckets = 4)
-    assert(Dedup.rebuildGramIndex(docs, "doc_id", toks, 5, "gram_rb_spec", buckets = 4) == 1L)
+    assert(Dedup.Grams.rebuild(spark, "gram_rb_spec")(
+      Dedup.writeGramIndex(docs, "doc_id", toks, 5, _, buckets = 4)) == 1L)
     assert(!spark.catalog.tableExists("gram_rb_spec_grams"))
     assert(spark.table("gram_rb_spec_current").head().getLong(0) == 1L)
     // the resolved index now answers with width-5 grams
@@ -1014,7 +1015,8 @@ class DedupSimilaritySpec extends SparkSpec {
       .as[(Long, Long, Double)].collect().toSet
     assert(before.contains((500L, 1L, 1.0)) && before.exists(_._1 == 501L))
 
-    val counts = Dedup.compactMinhashIndex(spark, "mh_cmp_spec")
+    val (_, byMember) = Dedup.Minhash.compact(spark, "mh_cmp_spec")
+    val counts = Seq(byMember("_bands"), byMember("_sigs"))
     counts.foreach { case (inF, outF) =>
       assert(outF < inF, s"compaction must reduce files: $inF -> $outF")
       assert(outF <= 4, s"one file per bucket expected, got $outF")
@@ -1097,7 +1099,8 @@ class DedupSimilaritySpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     val beforeRows = probe()
 
-    val ((cIn, cOut), (vIn, vOut)) = Similarity.compactIvfPqIndex(spark, "ivfpq_cmp_spec")
+    val (_, byMember) = Similarity.IvfPq.compact(spark, "ivfpq_cmp_spec")
+    val ((cIn, cOut), (vIn, vOut)) = (byMember("_codes"), byMember("_vecs"))
     assert(cOut < cIn, s"codes compaction must reduce files: $cIn -> $cOut")
     assert(cOut <= 4, s"one file per bucket expected, got $cOut")
     assert(vOut < vIn, s"vecs compaction must reduce files: $vIn -> $vOut")

@@ -122,6 +122,32 @@ class EtlSpec extends SparkSpec {
     assert(e.getMessage.contains("--day requires a date"))
   }
 
+  test("EtlMain rejects an unknown flag instead of truncating every destination") {
+    val base = Files.createTempDirectory("graft_cli_flag")
+    sourceDf.write.parquet(s"$base/src/daily_log.parquet")
+    Files.writeString(base.resolve("registry.json"),
+      """{"daily_log": [{"name": "ID", "type": "INTEGER"}, {"name": "Server", "type": "STRING"}]}""")
+    Files.writeString(base.resolve("etl.conf"),
+      s"""SOURCE_DIR = $base/src
+         |OUT_DIR = $base/out
+         |TABLES = daily_log
+         |REGISTRY = $base/registry.json
+         |INCREMENTAL_COL.daily_log = backup_date
+         |""".stripMargin)
+    def rows() = spark.read.parquet(s"$base/out/daily_log").collect().map(_.toString).sorted.toSeq
+    EtlMain.main(Array(s"$base/etl.conf", "--daily", "--day=2024-01-15"))
+    val loaded = rows()
+    assert(loaded.size == 2) // only the two 01-15 rows
+    // a mistyped --daily must not fall through to a full (truncating) refresh
+    Seq("--dialy", "--daily=true").foreach { flag =>
+      val e = intercept[IllegalArgumentException] {
+        EtlMain.main(Array(s"$base/etl.conf", flag, "--day=2024-01-15"))
+      }
+      assert(e.getMessage.contains(flag), e.getMessage)
+      assert(rows() == loaded, s"$flag must leave the destination unchanged")
+    }
+  }
+
   test("credentials parser handles comments, blanks, and values with '='") {
     val parsed = Credentials.parse(
       """# comment

@@ -619,8 +619,8 @@ class OperatorsSpec extends SparkSpec {
         graft.sources.Sinks.activeTablePrefix(spark, "ulm_spec") + "_pieces")
       .select("piece").as[String].collect().toSet
     assert(!preVocab.contains("abab"), preVocab.toString)
-    val gen = Text.rebuildUlmModel(docs, col("text"), "ulm_spec",
-      maxPieceLen = 4, seedMulti = 60, rounds = 1)
+    val gen = Text.Ulm.rebuild(spark, "ulm_spec")(Text.writeUlmModel(
+      Text.ulmTrain(docs, col("text"), maxPieceLen = 4, seedMulti = 60, rounds = 1)._1, _, 4))
     assert(gen == 1L, s"first cutover must stage generation 1, got $gen")
     val postVocab = spark.table(
         graft.sources.Sinks.activeTablePrefix(spark, "ulm_spec") + "_pieces")
@@ -917,8 +917,9 @@ class OperatorsSpec extends SparkSpec {
       .select("id", "score", "pred")
     assert(served2.exceptAll(direct).isEmpty && direct.exceptAll(served2).isEmpty)
     // blue/green retrain: the new generation resolves through the pointer
-    val gen = LinearModel.rebuildLinearModel(df, prefix, Seq("x1", "x2"), "y",
-      lr = 1.0, iters = 5)
+    val gen = LinearModel.Linear.rebuild(spark, prefix)(LinearModel.writeLinearModel(spark, _,
+      Seq("x1", "x2"),
+      LinearModel.trainSquashedLinear(df, Seq("x1", "x2"), "y", lr = 1.0, iters = 5).toSeq))
     assert(gen >= 1L)
     val w5 = LinearModel.trainSquashedLinear(df, Seq("x1", "x2"), "y", lr = 1.0, iters = 5)
     val direct5 = LinearModel.scoreSquashedLinear(df, Seq("x1", "x2"), w5.toSeq)
@@ -1198,8 +1199,8 @@ class OperatorsSpec extends SparkSpec {
       "mutating the fork must not touch the source index")
 
     // rebuild at different scoring params: pointer flips, scores change
-    val gen = TextIndex.rebuildTextIndex(corpus, "doc_id", tk, "ti_fk_spec",
-      buckets = 2, k1 = 2.0, b = 0.5)
+    val gen = TextIndex.Family.rebuild(spark, "ti_fk_spec")(
+      TextIndex.writeTextIndex(corpus, "doc_id", tk, _, buckets = 2, k1 = 2.0, b = 0.5))
     assert(gen == 1L)
     assert(!spark.catalog.tableExists("ti_fk_spec_postings"),
       "bare generation must be retired after cutover")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.execution.exchange.Exchange
 
 import graft.model.SchemaRegistry
-import graft.sources.{BigQuerySink, BigQuerySinkConfig, PartialFamily, Sinks}
+import graft.sources.{BigQuerySink, BigQuerySinkConfig, PartialFamily, Sinks, TableFamily}
 
 /** Bucketed-table layout spec: co-located joins must plan without a
   * shuffle (the whole point of paying the bucketed write) — plus the
@@ -99,7 +99,7 @@ class SinksSpec extends SparkSpec {
     assert(loadCountingReads(full, daily = false, None) == ((Sinks.LoadReport("full", 30, 30), 30L)))
     assert(loadCountingReads(full, daily = false, None) == ((Sinks.LoadReport("full", 30, 30), 30L)))
     // an empty write still reports its (zero) rows
-    assert(Sinks.writeCounted(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
+    assert(Sinks.write(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
       s"$out/empty") == 0L)
   }
 
@@ -224,6 +224,37 @@ class SinksSpec extends SparkSpec {
     assert(fold() == served)
     assert(tally.rebuild(spark, p)(writeTally(_, "d" -> 1L)) == 3L)
     assert(fold() == Set("d" -> 1L))
+  }
+
+  test("table family verbs: deleteKeys rewrites only the named members; drop resets the ledger") {
+    val pair = new TableFamily("_a", "_b", "_meta")
+    val p = "tf_keys_spec"
+    pair.drop(spark, p)
+    def writePair(): Unit = {
+      val rows = Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("id", "v")
+      Seq("_a", "_b").foreach(m => rows.write.format("parquet").saveAsTable(s"$p$m"))
+      Seq(Tuple1(1)).toDF("n").write.format("parquet").saveAsTable(s"${p}_meta")
+    }
+    def ids(member: String): Set[Long] =
+      spark.table(s"${Sinks.activeTablePrefix(spark, p)}$member")
+        .select("id").as[Long].collect().toSet
+    def generation(): Long = spark.table(s"${p}_current").head().getLong(0)
+    writePair()
+    pair.deleteKeys(spark, p, Seq(2L, 3L, 3L).toDF("id"), "_a")
+    assert(generation() == 1L)
+    assert(ids("_a") == Set(1L) && ids("_b") == Set(1L, 2L, 3L))
+    pair.deleteKeys(spark, p, Seq(1L).toDF("id"), "_a", "_b")
+    assert(generation() == 2L, "two named members flip in one generation")
+    assert(ids("_a").isEmpty && ids("_b") == Set(2L, 3L))
+
+    // the ledger skips a committed batch until the family is dropped
+    def applyBatch(batchId: Long): Option[Long] =
+      TableFamily.exactlyOnce(spark, p, batchId)(fail("no attempt died mid-apply"))(batchId)
+    assert(applyBatch(0L) == Some(0L))
+    assert(applyBatch(0L).isEmpty, "a redelivered committed batch skips")
+    pair.drop(spark, p)
+    writePair()
+    assert(applyBatch(0L) == Some(0L), "a fresh family must not skip on the dropped ledger")
   }
 
   test("training shards: one file per shard, deterministic internal order, lossless membership") {
@@ -455,7 +486,7 @@ class SinksSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.functions.CrossHash
     import graft.operators.TextIndex
-    // 1. compactTable's stage-then-two-renames: between the renames the
+    // 1. a stage-then-two-renames swap: between the renames the
     //    table name resolves to NOTHING — staged here explicitly. This is
     //    why pointer-managed families must not compact through it.
     Seq("cg_tbl", "cg_tbl__cold").foreach(Sinks.dropManagedTable(spark, _))

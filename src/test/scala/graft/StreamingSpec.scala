@@ -78,6 +78,7 @@ class StreamingSpec extends SparkSpec {
         // daily=true => append: each micro-batch adds its closed windows.
         graft.sources.Sinks.write(batch, s"$out/agg", daily = true,
           dayPartitionField = Some("window_start"))
+        ()
       }
       .start()
     try {
