@@ -43,6 +43,14 @@ object Bench {
     // numbers against the box-noise episodes that forced manual
     // re-adjudication in rounds 1/3/5.
     val passes = 3
+    // first exception per entry, written to BENCH_DETAIL.json so a -1
+    // explains itself
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
+    def timed(name: String)(body: => Unit): Double = {
+      val t0 = System.nanoTime()
+      try { body; (System.nanoTime() - t0) / 1e9 }
+      catch { case e: Throwable => errors.getOrElseUpdate(name, e); -1.0 }
+    }
     val perPass: Seq[Seq[(String, Double)]] = (1 to passes).map { _ =>
       val sess = spark.newSession()
       // Dedicated timed entry for the suite-shared memoized frames
@@ -64,20 +72,18 @@ object Bench {
         else {
           val perFrame = graft.queries.SharedFrames.builders.map {
             case (n, b) =>
-              val t0 = System.nanoTime()
-              val ok = try { b(sess, sfDir).count(); true }
-                catch { case _: Throwable => false }
-              s"shared_frame_builds.$n" ->
-                (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+              val entry = s"shared_frame_builds.$n"
+              entry -> timed(entry)(b(sess, sfDir).count())
           }
-          val total =
-            if (perFrame.exists(_._2 < 0)) -1.0 else perFrame.map(_._2).sum
+          val total = perFrame.find(_._2 < 0) match {
+            case Some((failed, _)) =>
+              errors.getOrElseUpdate("shared_frame_builds", errors(failed)); -1.0
+            case None => perFrame.map(_._2).sum
+          }
           ("shared_frame_builds" -> total) +: perFrame
         }
       shared ++ selected.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(sess, sfDir).count(); true } catch { case _: Throwable => false }
-        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+        name -> timed(name)(fn(sess, sfDir).count())
       }
     }
     val byName: Map[String, Seq[Double]] =
@@ -112,6 +118,11 @@ object Bench {
     val repsJson = perPass.head.map(_._1).map { name =>
       s"\"" + name + "\":[" + byName(name).map(f3).mkString(",") + "]"
     }.mkString("{", ",", "}")
+    val errorsJson = errors.map { case (name, e) =>
+      import Verify.jsonString
+      jsonString(name) + ":{\"class\":" + jsonString(e.getClass.getName) +
+        ",\"message\":" + jsonString(String.valueOf(e.getMessage)) + "}"
+    }.mkString("{", ",", "}")
     // The harness keeps only a bounded tail of stdout; once the suite grew
     // past ~90 queries a full per-query detail line overflowed it and was
     // front-truncated, losing the total (BENCH_r04, and again r10: the
@@ -123,7 +134,7 @@ object Bench {
     // raw reps goes only to the repo file, where the budget gate reads it.
     try {
       val p = java.nio.file.Paths.get("BENCH_DETAIL.json")
-      val withReps = detail.dropRight(1) + s""","reps":$repsJson}"""
+      val withReps = detail.dropRight(1) + s""","reps":$repsJson,"errors":$errorsJson}"""
       java.nio.file.Files.write(p, (withReps + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     val slowestFirst = results.sortBy(-_._2)

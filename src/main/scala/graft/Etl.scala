@@ -2,10 +2,11 @@ package graft
 
 import java.time.LocalDate
 import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicReference
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import scala.util.{Failure, Success, Try}
+import scala.util.{Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -33,9 +34,15 @@ object Credentials {
   * concurrently — each pipeline is an independent lazy DataFrame chain, so
   * driver-side Futures just overlap their job submissions; executors then
   * schedule tasks from all pipelines. Errors stay fail-fast per reference O3
-  * (first failure propagates after in-flight tables drain).
+  * ("first error aborts the whole run"): once a table fails, no table that
+  * has not started yet starts; tables already running finish, because
+  * cancelling a truncate mid-write would leave its destination emptied;
+  * then the first failure is rethrown.
   */
 object Etl {
+
+  /** Tables in flight at once. */
+  private val Parallelism = 4
 
   /** Which tables get incremental extraction in daily mode and which sink
     * gets DAY partitioning, mirroring `mysql_operations.py:21` and
@@ -83,16 +90,23 @@ object Etl {
       registry: SchemaRegistry.Registry,
       outBase: String,
       daily: Boolean = false,
-      day: LocalDate = LocalDate.now().minusDays(1),
-      parallelism: Int = 4): Seq[RunReport] = {
-    val pool = Executors.newFixedThreadPool(math.max(1, parallelism))
+      day: LocalDate = LocalDate.now().minusDays(1)): Seq[RunReport] = {
+    val pool = Executors.newFixedThreadPool(Parallelism)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val firstFailure = new AtomicReference[Throwable]()
     try {
       val futures = specs.map { spec =>
-        Future(Try(runTable(spark, spec, source, registry, outBase, daily, day)))
+        Future[Try[Option[RunReport]]] {
+          if (firstFailure.get != null) Success(None) // O3: never starts
+          else {
+            val r = Try(runTable(spark, spec, source, registry, outBase, daily, day))
+            r.failed.foreach(firstFailure.compareAndSet(null, _))
+            r
+          }
+        }
       }
       val results = Await.result(Future.sequence(futures), Duration.Inf)
-      results.collect { case Failure(e) => throw e } // fail-fast, O3
+      Option(firstFailure.get).foreach(e => throw e)
       results.collect { case Success(Some(r)) => r }
     } finally pool.shutdown()
   }

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local-mode session config every graft entry point, tool and
-  * spec runs on. Callers choose only what differs for a reason: a pinned
+/** The one local-mode session config every graft entry point and spec
+  * runs on. Callers choose only what differs for a reason: a pinned
   * core count, where managed tables live, and a master override.
   */
 object GraftSession {
@@ -49,8 +49,8 @@ object GraftSession {
     spark
   }
 
-  /** A per-tool warehouse under the JVM temp dir, so managed tables never
-    * land in the working directory.
+  /** A per-entry-point warehouse under the JVM temp dir, so managed
+    * tables never land in the working directory.
     */
   def tmpWarehouse(name: String): Option[String] =
     Some(s"${sys.props("java.io.tmpdir")}/graft_warehouse_$name")

@@ -1993,9 +1993,10 @@ object Dedup {
     * empirically lossless at both test SFs; the all-pairs DuckDB oracle
     * on `d_embedding_cos_geo` is that losslessness certificate, re-proven
     * every round. The certificate is corpus- AND config-specific, not a
-    * property of the operator: the ScaleBench `embpairs` decade measures
-    * recall decaying to 0.870 at 10× (and 0.502 with nlist grown ~√n at
-    * fixed assign) on this near-isotropic corpus, because τ=0.5 is still
+    * property of the operator: the 2026-08-14 decade (BASELINE.md
+    * "Embedding pair-join decade") measured recall decaying to 0.870 at
+    * 10× (and 0.502 with nlist grown ~√n at fixed assign) on this
+    * near-isotropic corpus, because τ=0.5 is still
     * a ~60° angle there. This operator is the opt-in for genuinely
     * clustered high-τ corpora (SemDeDup at cos≥0.9 on real embeddings);
     * [[embeddingPairs]] is the safe default — always check the recall

@@ -308,7 +308,9 @@ object Similarity {
     * probe joins anchors×probed-cells on `cid` — a shuffle join), so a
     * corpus-scale anchor fraction is a legitimate batch here; with the
     * production nlist ≈ √N the probed fraction is assign·nprobe/nlist ≪ 1.
-    * Measured in ScaleBench `hardneg`.
+    * Measured 2026-08-15 on a 32-core box (BASELINE.md "hard-negative
+    * mining: brute vs IVF-indexed"): 1.05–2.02× over brute at the √N
+    * config, 2.02× on the ×10 batch.
     */
   def hardNegativesIndexed(
       corpus: DataFrame,
@@ -1354,7 +1356,8 @@ object Similarity {
     // probe join. Production filtered stores denormalize the filterable
     // attributes into the lists table for exactly this reason. A thinner
     // eligible density per probed cell costs recall at fixed nprobe —
-    // scale nprobe with selectivity (measured: tools/AnnSweep filtered).
+    // scale nprobe with selectivity (BASELINE.md "Filtered-search recall",
+    // 2026-08-14; `sim_knn_ivf_filtered` certifies the served setting).
     val listed = spark.table(s"${tp}_lists").filter(candidateFilter)
     val q = queries.select(col(idCol).as("query_id"), col(embCol).as("qe"))
     val probes = q.crossJoin(broadcast(
@@ -1680,9 +1683,9 @@ object Similarity {
     // query set makes this metadata-scale, and the checkpoint is the
     // barrier without which ProjectCollapsing inlines the m·ks-entry
     // table expressions into the candidate join and recomputes them PER
-    // CANDIDATE row (measured 6.5× at the 10× ScaleBench). The qtab
-    // columns then reach the cell join as plain data through a
-    // query_id equi-join.
+    // CANDIDATE row (measured 6.5× at 10× corpus, 2026-08-13, BASELINE.md
+    // "10× scale validation"). The qtab columns then reach the cell join
+    // as plain data through a query_id equi-join.
     val qtabs = q0.withColumn("qen", normalizedArr(col("qe")))
       .select(Seq(col("query_id")) ++ pqQueryTabCols(books, subDim, col("qen")): _*)
       .localCheckpoint(true)

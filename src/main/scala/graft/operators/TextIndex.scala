@@ -575,8 +575,8 @@ object TextIndex {
   }
 
   /** One MaxScore probe's pruning decisions — what the cost-defense
-    * certificates and ScaleBench read: how many of the query's terms
-    * stayed essential, how many were actually PRUNED (`nPruned > 0` is
+    * certificates read: how many of the query's terms stayed essential,
+    * how many were actually PRUNED (`nPruned > 0` is
     * the unambiguous "pruning engaged" signal — `nEssential < nTerms` is
     * also true when a term is merely absent from the corpus), the score
     * floor `theta` the non-essential prefix was pruned against (None =
@@ -596,8 +596,9 @@ object TextIndex {
     * phase and answer exhaustively: the θ pass costs a fixed ~2 Spark
     * jobs regardless of corpus size, so below ~10⁶ matched postings the
     * pruned probe is SLOWER than exhaustive even though it cuts
-    * scorer-input rows ~8× (ScaleBench `maxscore`, both decades — the
-    * wall win is asymptotic). The estimate is Σ stored df over the bag's
+    * scorer-input rows ~8× (measured at 1× and 10× corpus on a 32-core
+    * box, BASELINE.md "MaxScore pruning", 2026-08-15 — the wall win is
+    * asymptotic). The estimate is Σ stored df over the bag's
     * bounds partials — read from the same bucket-pruned ≤|bag|-row scan
     * the probe needs anyway, so declining costs one metadata scan.
     * Callers with a measured break-even of their own (or a certificate
@@ -718,7 +719,8 @@ object TextIndex {
     * only candidate documents' postings flow through the doclens join +
     * aggregation + top-k — with a hot term pruned, that is the
     * difference between O(hot postings) and O(rare postings) rows in the
-    * expensive stages. Measured in ScaleBench `maxscore`.
+    * expensive stages: 12.3% of postings reached the scorer at both
+    * decades (BASELINE.md "MaxScore pruning", 2026-08-15).
     *
     * Returns exactly [[bm25AgainstIndex]]'s shape — (id, dl, bm25),
     * top kTop by (bm25 desc, id) — and must equal it bit-for-bit on any

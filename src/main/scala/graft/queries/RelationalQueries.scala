@@ -478,8 +478,9 @@ object RelationalQueries {
     // Skew-treated join: 40% of event rows collapse onto one hot key, then
     // the salted join spreads that key over 8 reducers. The oracle is the
     // PLAIN join — row-identity with the unsalted result is the whole
-    // salting contract (the skew win itself is measured by
-    // graft.tools.SkewBench with broadcast disabled, see BASELINE.md).
+    // salting contract (the skew win itself, ~25% on a ×16 lineitem
+    // fan-out at local[32] with broadcast disabled, is recorded under
+    // BASELINE.md "Skew treatment").
     "q_skew_join" -> ((s, d) => {
       val ev = t(s, d, "events")
         .withColumn("k",

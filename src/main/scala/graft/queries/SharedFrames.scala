@@ -15,7 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Order is fixed and dependency-respecting (basket_pairs consumes
   * basket_items); every builder is idempotent (memo hit) and
-  * materializes eagerly, so prewarm cost is the true build cost.
+  * materializes eagerly, so the pre-build cost is the true build cost.
   */
 private[graft] object SharedFrames {
 
@@ -77,13 +77,4 @@ private[graft] object SharedFrames {
     // each consumed by its plain AND hot-bucket-capped pair query
     "mm_img_ahash" -> (TextQueries.mmImageAHashFrame _),
     "mm_gif_fhash" -> (TextQueries.mmGifFrameAHashFrame _))
-
-  /** Build (or touch, on memo hit) every shared frame for (session, dir).
-    * `count()` forces any builder that returns a lazily-wrapped
-    * materialized frame without retaining extra state. The bench times
-    * each builder individually (`shared_frame_builds.<name>` entries);
-    * this untimed form is for tools that just need the frames warm.
-    */
-  def prewarm(s: SparkSession, d: String): Unit =
-    builders.foreach { case (_, b) => b(s, d).count() }
 }

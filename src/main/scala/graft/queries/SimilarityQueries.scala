@@ -108,9 +108,10 @@ object SimilarityQueries {
     * assignment — every vector listed under its 2 nearest cells, which
     * kills the coarse-cell boundary misses that dominated the old
     * nprobe=4/assign=1 recall of 0.59–0.63). Measured recall vs
-    * brute-force top-3 (tools/AnnSweep, 2026-08-14): 0.967 / 0.933 /
-    * 0.892 at sf0.001 / 0.01 / 0.1 (full curve in BASELINE.md) — stable,
-    * because the quantizer is deterministic. Individual queries can
+    * brute-force top-3 (2026-08-14): 0.967 / 0.933 / 0.892 at sf0.001 /
+    * 0.01 / 0.1 (full curve in BASELINE.md "ANN recall–latency
+    * frontier"; `sim_knn_ivf` enforces the floor every oracle run) —
+    * stable, because the quantizer is deterministic. Individual queries can
     * still recall 0, so the certificate is corpus-level, like any ANN
     * benchmark.
     */
@@ -120,8 +121,8 @@ object SimilarityQueries {
     * cells ranked by centroid distance, 6 of 16 probed, index built with
     * dual assignment. Candidates scanned ≈ 2N·6/16 = 0.75N here (small
     * nlist — at 100 TB nlist grows ~√N and the scanned fraction shrinks
-    * to nprobe/nlist ≪ 1); recall/latency trade measured in
-    * tools/AnnSweep.
+    * to nprobe/nlist ≪ 1); recall/latency trade in BASELINE.md "ANN
+    * recall–latency frontier" (2026-08-14).
     */
   val IvfNprobe = 6
   val IvfAssign = 2
@@ -133,11 +134,12 @@ object SimilarityQueries {
     * probe budget scales up with selectivity — the standard filtered-ANN
     * practice: at the base nprobe=6 the measured recall vs
     * brute-force-over-the-filtered-corpus top-3 (selectivity 1/3,
-    * `neighbor_id % 3 = 0`; tools/AnnSweep filtered, 2026-08-14) is
-    * 1.000 / 0.900 / 0.825 at sf0.001 / 0.01 / 0.1; at nprobe=8 it is
-    * 1.000 / 0.933 / 0.925 — matching the unfiltered certificate's
-    * grade at 1/3 the scanned eligible candidates. Floor 0.075 under
-    * the worst measured point, same policy as the sibling floors.
+    * `neighbor_id % 3 = 0`; BASELINE.md "Filtered-search recall",
+    * 2026-08-14) is 1.000 / 0.900 / 0.825 at sf0.001 / 0.01 / 0.1; at
+    * nprobe=8 it is 1.000 / 0.933 / 0.925 — matching the unfiltered
+    * certificate's grade at 1/3 the scanned eligible candidates. Floor
+    * 0.075 under the worst measured point, same policy as the sibling
+    * floors.
     */
   val IvfFilteredNprobe = 8
 
@@ -175,11 +177,11 @@ object SimilarityQueries {
     * 100 TB" claim actually asserts — and probes at nprobe = ⌈3·nlist/8⌉
     * (scanned fraction 2·nprobe/nlist ≈ 0.72, at FINER cells than the
     * nlist=16 serving config). Measured recall vs brute-force top-3
-    * (tools/AnnSweep sqrtn, 2026-08-14): 0.967 / 1.000 / 0.958 at
-    * sf0.001 (nlist=23) / sf0.01 (nlist=23) / sf0.1 (nlist=45); the
-    * 500k-vector frontier at nlist ∈ {64, 160, 256, 707} is in
-    * BASELINE.md. Floor ~0.1 under the worst measured point, same
-    * policy as the sibling floors.
+    * (2026-08-14): 0.967 / 1.000 / 0.958 at sf0.001 (nlist=23) / sf0.01
+    * (nlist=23) / sf0.1 (nlist=45); the 500k-vector frontier at nlist ∈
+    * {64, 160, 256, 707} is in BASELINE.md "Production-nlist frontier on
+    * the 500k-vector corpus". Floor ~0.1 under the worst measured point,
+    * same policy as the sibling floors.
     */
   val SqrtNRecallFloor = 0.85
 
@@ -197,23 +199,26 @@ object SimilarityQueries {
   /** Corpus-level recall floor certified by `sim_knn_ivfpq` (coarse IVF
     * pruning × PQ-ADC scoring, nprobe=6/nlist=16/assign=2, shortlist
     * 128, exact re-rank): measured 0.967 / 0.933 / 0.867 at sf0.001 /
-    * 0.01 / 0.1 (tools/AnnSweep, 2026-08-14) — stable because the whole
-    * pipeline is deterministic. IVF candidate pruning dominates the
-    * loss (PQ-only recalls 0.925+ with the same shortlist), which is
-    * exactly what dual assignment fixes: a boundary vector is listed in
-    * both its nearest cells, so the compound recall now tracks within
-    * ~0.03 of the uncompressed IVF tier instead of collapsing to 0.59.
+    * 0.01 / 0.1 (BASELINE.md "ANN recall–latency frontier", 2026-08-14;
+    * `sim_knn_ivfpq` enforces the floor every oracle run) — stable
+    * because the whole pipeline is deterministic. IVF candidate pruning
+    * dominates the loss (PQ-only recalls 0.925+ with the same shortlist),
+    * which is exactly what dual assignment fixes: a boundary vector is
+    * listed in both its nearest cells, so the compound recall now tracks
+    * within ~0.03 of the uncompressed IVF tier instead of collapsing to
+    * 0.59.
     */
   val IvfPqRecallFloor = 0.80
 
   /** Corpus-level recall floor for INDEX-MINED hard negatives
     * (`sim_hard_negatives`: hardNegativesIndexed probes the shared IVF
     * base at the serving nprobe with the duplicate-cluster filter INSIDE
-    * the probe) against the exact brute mining. Measured (ScaleBench
-    * `hardneg`, 2026-08-15): 0.963 / 0.895 / 0.882 at sf0.001 / 0.01 /
-    * 0.1 on the shared nlist=16/nprobe=6 base — deterministic
-    * end-to-end, so the floor sits ~0.08 under the worst measured point
-    * (the sibling floors' policy). The production √N-nlist shape trades
+    * the probe) against the exact brute mining. Measured (BASELINE.md
+    * "hard-negative mining: brute vs IVF-indexed", 2026-08-15): 0.963 /
+    * 0.895 / 0.882 at sf0.001 / 0.01 / 0.1 on the shared
+    * nlist=16/nprobe=6 base — deterministic end-to-end, so the floor
+    * sits ~0.08 under the worst measured point (the sibling floors'
+    * policy). The production √N-nlist shape trades
     * deeper: nlist=142/nprobe=18 at ×10 mines at 2.0× the brute speed
     * scanning 25% of the corpus per anchor, recall 0.789 (same batch).
     */
@@ -774,9 +779,9 @@ object SimilarityQueries {
     // The PRODUCTION shape of the same prune: k grows with the corpus so
     // cluster sizes stay ~bounded (target 50 here ⇒ k = ⌈N/50⌉) and the
     // within-cluster pair mass is LINEAR in N — the scaling argument the
-    // fixed-k variant's measured exp 1.32 (ScaleBench `cluster`, dated in
-    // BASELINE.md) makes concrete. Data-dependent k is still exactly
-    // replayable: the oracle seeds its centroid CTE with
+    // fixed-k variant's exponent 1.32 (32-core box, 2026-08-14,
+    // BASELINE.md "Clustering-tier decade") makes concrete. Data-dependent
+    // k is still exactly replayable: the oracle seeds its centroid CTE with
     // LIMIT (SELECT ⌈count/50⌉).
     "sim_semdedup_bounded" -> ((s, d) => {
       val e = emb(s, d)

@@ -1199,7 +1199,8 @@ object TextQueries {
     // is the unambiguous signal; nEssential < nTerms is also true for a
     // merely-absent term). The adaptive default gate is proven
     // separately (OperatorsSpec equality on both sides of the
-    // threshold; ScaleBench `maxscore` measures the break-even).
+    // threshold; the break-even measured 2026-08-15 is in BASELINE.md
+    // "MaxScore pruning").
     "tx_bm25_maxscore" -> ((s, d) => {
       val prefix = ensureSkewBase(s, d)
       val (top, audit) = TextIndex.bm25MaxScoreWithAudit(

@@ -72,6 +72,18 @@ class EtlSpec extends SparkSpec {
     }
   }
 
+  test("fail-fast: a table queued behind a failure never starts (O3)") {
+    val out = Files.createTempDirectory("graft_etl").toString
+    // the four unregistered tables fill the 4-thread pool and fail; the
+    // table queued behind them must not truncate-and-reload its destination
+    val specs = (1 to 4).map(i => Etl.TableSpec(s"unregistered_$i")) :+
+      Etl.TableSpec("daily_log")
+    intercept[IllegalArgumentException] {
+      Etl.run(spark, specs, _ => sourceDf, registry, out)
+    }
+    assert(!new java.io.File(s"$out/daily_log").exists())
+  }
+
   test("O4 run log: dated file name, asctime [levelname] line format, append") {
     val dir = Files.createTempDirectory("graft_log")
     val fixed = java.time.Clock.fixed(

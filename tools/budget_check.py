@@ -8,8 +8,10 @@ Usage: python3 tools/budget_check.py BENCH_DETAIL.json [BASELINE.md]
 Reads the LAST budget table in BASELINE.md (rows `| query | run1 | run2 |
 budget | flag |`), applies each query's pinned flag threshold to the
 run's median, and reports violations. Queries absent from the table
-(added since the last budget refresh) are listed informationally. Exit
-code 1 iff any pinned query exceeds its flag threshold.
+(added since the last budget refresh) are listed informationally. A `-1`
+(threw) entry is printed with the exception class and message the run
+recorded under `errors`, when the file has one. Exit code 1 iff any
+pinned query exceeds its flag threshold.
 """
 import json
 import re
@@ -17,7 +19,9 @@ import sys
 
 
 def main():
-    run = json.load(open(sys.argv[1]))["queries"]
+    detail = json.load(open(sys.argv[1]))
+    run = detail["queries"]
+    errors = detail.get("errors", {})
     baseline = sys.argv[2] if len(sys.argv) > 2 else "BASELINE.md"
     budgets = {}
     # query names always contain an underscore — this keeps scale-table
@@ -33,7 +37,9 @@ def main():
     flagged, unpinned = [], []
     for q, v in sorted(run.items()):
         if v is None or v < 0:
-            flagged.append((q, v, "threw (-1)"))
+            err = errors.get(q)
+            cause = f": {err['class']}: {err['message']}" if err else ""
+            flagged.append((q, v, "threw (-1)" + cause))
             continue
         if q not in budgets:
             unpinned.append((q, v))
