@@ -49,6 +49,20 @@ object GraftSession {
     spark
   }
 
+  /** Run `body` with each `conf` key set on `spark`, then put every key
+    * back as it was: its previous value, or unset if it was not set (a
+    * key left at its default stays at its default, not pinned to it).
+    */
+  def withConf[T](spark: SparkSession, conf: (String, String)*)(body: => T): T = {
+    val set = spark.conf.getAll
+    val prev = conf.map { case (k, _) => k -> set.get(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** A per-entry-point warehouse under the JVM temp dir, so managed
     * tables never land in the working directory.
     */

@@ -375,19 +375,17 @@ object DedupQueries {
     // raw table, so a dropped/duplicated/misrouted document anywhere in
     // the write path hash-mismatches. Internal order + one-file-per-shard
     // are spec-pinned (SinksSpec).
-    "d_shard_manifest" -> ((s, d) => {
-      val scratch = java.nio.file.Files.createTempDirectory("graft_shards_").toString
-      try {
-        graft.sources.Sinks.writeTrainingShards(
-          t(s, d, "documents").select("doc_id", "lang", "text"),
-          "doc_id", scratch, nShards = 8, salt = "shards_v1")
-        graft.sources.Sinks.shardManifest(
-            s, scratch, "doc_id", size(split(col("text"), "\\s+")).cast("long"),
-            salt = "shards_v1")
-          .orderBy("shard")
-          // materialize before the scratch dir disappears
-          .localCheckpoint(true)
-      } finally StreamQueries.deleteRecursively(java.nio.file.Paths.get(scratch))
+    "d_shard_manifest" -> ((s, d) => ScratchKeys.withScratch("graft_shards_") { dir =>
+      val scratch = dir.toString
+      graft.sources.Sinks.writeTrainingShards(
+        t(s, d, "documents").select("doc_id", "lang", "text"),
+        "doc_id", scratch, nShards = 8, salt = "shards_v1")
+      graft.sources.Sinks.shardManifest(
+          s, scratch, "doc_id", size(split(col("text"), "\\s+")).cast("long"),
+          salt = "shards_v1")
+        .orderBy("shard")
+        // materialize before the scratch dir disappears
+        .localCheckpoint(true)
     }),
 
     // Clusters -> survivors: the deduplicated corpus, keeping the smallest
@@ -536,11 +534,8 @@ object DedupQueries {
           .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
           .localCheckpoint(true)
       }
-      val all = Window.partitionBy(lit(1))
       brute.join(mined, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("mine_recall_ok",
-          (sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-            / count(lit(1)).over(all)) >= SimilarityQueries.HardNegRecallFloor)
+        .withColumn("mine_recall_ok", Parity.recallAtLeast(SimilarityQueries.HardNegRecallFloor))
         .select("query_id", "rank", "neighbor_id", "cos", "mine_recall_ok")
         .orderBy("query_id", "rank")
     }),

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** One-job multiset equality for the parity certificates (r16, r15
@@ -16,6 +17,9 @@ import org.apache.spark.sql.functions._
   * Same comparison semantics as the set operators it replaces: grouping
   * and exceptAll both use null-safe equality with normalized NaN/-0.0,
   * and neither supports map-typed columns.
+  *
+  * Also the one recall-floor certificate every approximate-retrieval
+  * query emits ([[recallAtLeast]]).
   */
 private[queries] object Parity {
 
@@ -31,5 +35,15 @@ private[queries] object Parity {
       .agg(sum(col("__tag")).as("__net"))
       .filter(col("__net") =!= 0L)
       .isEmpty
+  }
+
+  /** The recall certificate over a reference frame left-joined to the
+    * served rows, which carry `hit` = 1: true on every row iff the share
+    * of reference rows that were served is at least `floor`.
+    */
+  def recallAtLeast(floor: Double): Column = {
+    val all = Window.partitionBy(lit(1))
+    (sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
+      / count(lit(1)).over(all)) >= floor
   }
 }

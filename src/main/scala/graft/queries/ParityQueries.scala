@@ -279,15 +279,10 @@ object ParityQueries {
       val ev = t(s, d, "events").withColumn("day", to_date(col("ts")))
       ev.write.mode("overwrite").partitionBy("day").parquet(out)
       val day0 = ev.agg(min("day")).head.getDate(0).toString
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "dynamic")
-      try ev.filter(col("day") === lit(day0))
-        .withColumn("value", col("value") * 2)
-        .write.mode("overwrite").partitionBy("day").parquet(out)
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
+      graft.GraftSession.withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        ev.filter(col("day") === lit(day0))
+          .withColumn("value", col("value") * 2)
+          .write.mode("overwrite").partitionBy("day").parquet(out)
       }
       s.read.parquet(out)
         .groupBy("day")

@@ -592,19 +592,16 @@ object RelationalQueries {
     // oracle filters the raw table directly, so any tile mis-assignment,
     // boundary slip, or over-pruning loses/admits a row and
     // hash-mismatches.
-    "q_ztile_box" -> ((s, d) => {
-      val scratch = java.nio.file.Files.createTempDirectory("graft_ztile_").toString
-      try {
-        graft.sources.Sinks.writeZTiled(
-          t(s, d, "events").select("event_id", "user_id", "value"),
-          scratch, "value", "user_id", bitsPerDim = 8, tileBits = 6)
-        graft.sources.Sinks.readZTiled(s, scratch, 50.0, 150.0, 30.0, 90.0)
-          .groupBy("user_id")
-          .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-          .orderBy("user_id")
-          .localCheckpoint(true) // materialize before the scratch dir goes
-      } finally graft.queries.StreamQueries.deleteRecursively(
-        java.nio.file.Paths.get(scratch))
+    "q_ztile_box" -> ((s, d) => ScratchKeys.withScratch("graft_ztile_") { dir =>
+      val scratch = dir.toString
+      graft.sources.Sinks.writeZTiled(
+        t(s, d, "events").select("event_id", "user_id", "value"),
+        scratch, "value", "user_id", bitsPerDim = 8, tileBits = 6)
+      graft.sources.Sinks.readZTiled(s, scratch, 50.0, 150.0, 30.0, 90.0)
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
+        .orderBy("user_id")
+        .localCheckpoint(true) // materialize before the scratch dir goes
     }),
 
     // Approximate tier — the 100 TB defaults, where exact countDistinct

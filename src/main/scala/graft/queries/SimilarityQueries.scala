@@ -591,11 +591,8 @@ object SimilarityQueries {
           .localCheckpoint(true))
       val served = fuse(denseServed, sparseServed)
         .select(col("doc_id"), lit(1).as("hit"))
-      val all = Window.partitionBy(lit(1))
       exact.join(served, Seq("doc_id"), "left")
-        .withColumn("rag_recall_ok",
-          (sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-            / count(lit(1)).over(all)) >= RagFusionRecallFloor)
+        .withColumn("rag_recall_ok", Parity.recallAtLeast(RagFusionRecallFloor))
         .select("doc_id", "dense_rank", "sparse_rank", "rrf", "rag_recall_ok")
         .orderBy(col("rrf").desc, col("doc_id"))
     }),
@@ -871,11 +868,8 @@ object SimilarityQueries {
           k = 3, nlist = 16, nprobe = IvfNprobe, assign = IvfAssign)
         .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
       val brute = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
-      val all = Window.partitionBy(lit(1))
       brute.join(ivf, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivf_recall_ok",
-          (sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-            / count(lit(1)).over(all)) >= IvfRecallFloor)
+        .withColumn("ivf_recall_ok", Parity.recallAtLeast(IvfRecallFloor))
         .select("query_id", "rank", "neighbor_id", "cos", "ivf_recall_ok")
         .orderBy("query_id", "rank")
     }),
@@ -917,11 +911,8 @@ object SimilarityQueries {
       val ls = s.table(s"${prefix}_lists")
         .agg(count(lit(1)).as("n"), countDistinct(col("neighbor_id")).as("nd")).head()
       val complete = ls.getLong(0) == IvfAssign * eN && ls.getLong(1) == eN
-      val all = Window.partitionBy(lit(1))
       brute.join(grown, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivf_recall_ok",
-          (sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-            / count(lit(1)).over(all)) >= IvfRecallFloor)
+        .withColumn("ivf_recall_ok", Parity.recallAtLeast(IvfRecallFloor))
         .withColumn("index_ok", lit(complete))
         .select("query_id", "rank", "neighbor_id", "cos", "ivf_recall_ok", "index_ok")
         .orderBy("query_id", "rank")
@@ -944,11 +935,8 @@ object SimilarityQueries {
           k = 3, nprobe = IvfNprobe)
         .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
       val brute = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
-      val all = Window.partitionBy(lit(1))
       brute.join(ivf, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivf_recall_ok",
-          (sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-            / count(lit(1)).over(all)) >= IvfRecallFloor)
+        .withColumn("ivf_recall_ok", Parity.recallAtLeast(IvfRecallFloor))
         .select("query_id", "rank", "neighbor_id", "cos", "ivf_recall_ok")
         .orderBy("query_id", "rank")
     }),
@@ -983,12 +971,9 @@ object SimilarityQueries {
       val ivf = Similarity.ivfTopKAgainstIndex(q, prefix, "vec_id", "embedding",
           k = 3, nprobe = IvfNprobe)
         .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      val all = Window.partitionBy(lit(1))
       brute.join(ivf, Seq("query_id", "neighbor_id"), "left")
         .withColumn("rebuild_ok",
-          ((sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-            / count(lit(1)).over(all)) >= IvfRecallFloor)
-            && lit(gen == 1L && retired))
+          Parity.recallAtLeast(IvfRecallFloor) && lit(gen == 1L && retired))
         .select("query_id", "rank", "neighbor_id", "cos", "rebuild_ok")
         .orderBy("query_id", "rank")
     }),
@@ -1025,12 +1010,9 @@ object SimilarityQueries {
       val ivf = Similarity.ivfTopKAgainstIndex(q, prefix, "vec_id", "embedding",
           k = 3, nprobe = nprobe)
         .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      val all = Window.partitionBy(lit(1))
       brute.join(ivf, Seq("query_id", "neighbor_id"), "left")
         .withColumn("sqrtn_ok",
-          ((sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-            / count(lit(1)).over(all)) >= SqrtNRecallFloor)
-            && lit(gen == 1L))
+          Parity.recallAtLeast(SqrtNRecallFloor) && lit(gen == 1L))
         .select("query_id", "rank", "neighbor_id", "cos", "sqrtn_ok")
         .orderBy("query_id", "rank")
     }),
@@ -1066,12 +1048,9 @@ object SimilarityQueries {
       val ann = Similarity.ivfPqTopKAgainstIndex(q, prefix, "vec_id", "embedding",
           k = 3, nprobe = IvfNprobe, shortlist = 128)
         .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      val all = Window.partitionBy(lit(1))
       brute.join(ann, Seq("query_id", "neighbor_id"), "left")
         .withColumn("rebuild_ok",
-          ((sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-            / count(lit(1)).over(all)) >= IvfPqRecallFloor)
-            && lit(gen == 1L && retired))
+          Parity.recallAtLeast(IvfPqRecallFloor) && lit(gen == 1L && retired))
         .select("query_id", "rank", "neighbor_id", "cos", "rebuild_ok")
         .orderBy("query_id", "rank")
     }),
@@ -1099,11 +1078,8 @@ object SimilarityQueries {
         .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
       val brute = Similarity.bruteForceTopK(
         q, e.filter(col("vec_id") % 3 === 0), "vec_id", "embedding", k = 3)
-      val all = Window.partitionBy(lit(1))
       brute.join(ivf, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("filtered_recall_ok",
-          (sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-            / count(lit(1)).over(all)) >= IvfFilteredRecallFloor)
+        .withColumn("filtered_recall_ok", Parity.recallAtLeast(IvfFilteredRecallFloor))
         .select("query_id", "rank", "neighbor_id", "cos", "filtered_recall_ok")
         .orderBy("query_id", "rank")
     }),
@@ -1133,11 +1109,8 @@ object SimilarityQueries {
           .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
           .localCheckpoint(true)
       }
-      val all = Window.partitionBy(lit(1))
       brute.join(pq, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("pq_recall_ok",
-          (sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-            / count(lit(1)).over(all)) >= PqRecallFloor)
+        .withColumn("pq_recall_ok", Parity.recallAtLeast(PqRecallFloor))
         .select("query_id", "rank", "neighbor_id", "cos", "pq_recall_ok")
         .orderBy("query_id", "rank")
     }),
@@ -1188,11 +1161,8 @@ object SimilarityQueries {
       val cs = s.table(s"${atp}_codes")
         .agg(count(lit(1)).as("n"), countDistinct(col("neighbor_id")).as("nd")).head()
       val complete = cs.getLong(0) == IvfAssign * eN && cs.getLong(1) == eN
-      val all = Window.partitionBy(lit(1))
       brute.join(grown, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivfpq_recall_ok",
-          (sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-            / count(lit(1)).over(all)) >= IvfPqRecallFloor)
+        .withColumn("ivfpq_recall_ok", Parity.recallAtLeast(IvfPqRecallFloor))
         .withColumn("index_ok", lit(complete))
         .select("query_id", "rank", "neighbor_id", "cos", "ivfpq_recall_ok", "index_ok")
         .orderBy("query_id", "rank")
@@ -1238,11 +1208,8 @@ object SimilarityQueries {
       val baseIntact = s.table(s"${base}_lists").count() == IvfAssign * eN
       val complete = ls.getLong(0) == IvfAssign * sN && ls.getLong(1) == sN &&
         baseIntact
-      val all = Window.partitionBy(lit(1))
       brute.join(ivf, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivf_recall_ok",
-          (sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-            / count(lit(1)).over(all)) >= IvfRecallFloor)
+        .withColumn("ivf_recall_ok", Parity.recallAtLeast(IvfRecallFloor))
         .withColumn("index_ok", lit(complete))
         .select("query_id", "rank", "neighbor_id", "cos", "ivf_recall_ok", "index_ok")
         .orderBy("query_id", "rank")
@@ -1287,11 +1254,8 @@ object SimilarityQueries {
         s.table(s"${base}_vecs").count() == eN
       val complete = cs.getLong(0) == IvfAssign * sN && cs.getLong(1) == sN &&
         vN == sN && baseIntact
-      val all = Window.partitionBy(lit(1))
       brute.join(ann, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivfpq_recall_ok",
-          (sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-            / count(lit(1)).over(all)) >= IvfPqRecallFloor)
+        .withColumn("ivfpq_recall_ok", Parity.recallAtLeast(IvfPqRecallFloor))
         .withColumn("index_ok", lit(complete))
         .select("query_id", "rank", "neighbor_id", "cos", "ivfpq_recall_ok", "index_ok")
         .orderBy("query_id", "rank")
@@ -1314,11 +1278,8 @@ object SimilarityQueries {
           k = 3, nprobe = IvfNprobe, shortlist = 128)
         .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
       val brute = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
-      val all = Window.partitionBy(lit(1))
       brute.join(ann, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivfpq_recall_ok",
-          (sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-            / count(lit(1)).over(all)) >= IvfPqRecallFloor)
+        .withColumn("ivfpq_recall_ok", Parity.recallAtLeast(IvfPqRecallFloor))
         .select("query_id", "rank", "neighbor_id", "cos", "ivfpq_recall_ok")
         .orderBy("query_id", "rank")
     })

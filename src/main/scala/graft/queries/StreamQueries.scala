@@ -76,15 +76,16 @@ object StreamQueries {
     * offsets, statistics, schema all live there, so two different
     * corpora sharing it is astronomically unlikely): a regeneration
     * that happened to preserve byte length and coarse mtime can no
-    * longer replay a stale fixture.
+    * longer replay a stale fixture. The fixture itself is the `name`
+    * leaf inside that keyed directory.
     */
-  private def fixtureDir(kind: String, d: String, table: String, leaf: String): java.nio.file.Path = {
+  private def fixtureDir(name: String, d: String, table: String): java.nio.file.Path = {
     val f = new java.io.File(s"$d/$table.parquet")
     val gen = java.lang.Long.toHexString(
       f.length ^ java.lang.Long.rotateLeft(f.lastModified, 21)
         ^ footerFingerprint(f))
     java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_${kind}_${ScratchKeys.forPath(d)}_$gen", leaf)
+      s"graft_stream_${name}_${ScratchKeys.forPath(d)}_$gen", name)
   }
 
   /** FNV-1a over the last 4 KiB of the file — the parquet footer (and
@@ -130,9 +131,8 @@ object StreamQueries {
     * [[fixtureReady]], and a concurrent winner is accepted as-is.
     */
   private def buildFixture(dir: java.nio.file.Path)(
-      build: (java.nio.file.Path, java.nio.file.Path) => Unit): Unit = {
-    val stage = java.nio.file.Files.createTempDirectory("graft_fixture_build_")
-    try {
+      build: (java.nio.file.Path, java.nio.file.Path) => Unit): Unit =
+    ScratchKeys.withScratch("graft_fixture_build_") { stage =>
       val out = stage.resolve("out")
       val work = stage.resolve("work")
       java.nio.file.Files.createDirectories(out)
@@ -141,8 +141,54 @@ object StreamQueries {
       java.nio.file.Files.createDirectories(dir.getParent)
       try java.nio.file.Files.move(out, dir)
       catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    } finally deleteRecursively(stage)
+    }
+
+  /** The files under `dir` as a stream of one file per micro-batch, read
+    * with the schema the files themselves carry: a fixture built from an
+    * earlier corpus form (nanos-as-long, NTZ) must be read with the type
+    * it actually stores, not the current source table's.
+    */
+  private[queries] def microBatches(s: SparkSession, dir: String): DataFrame =
+    s.readStream.schema(s.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+
+  /** A four-micro-batch split of one corpus table: `rows` of the RAW
+    * table read (whatever on-disk form it ships; events normalize after
+    * reading, see [[withEventTs]]), hash-split on `key` into four files.
+    * Every key's rows land in one batch and the batches interleave the
+    * key space, so consumers exercise cross-batch behavior (state merge,
+    * incremental sink merges, per-batch index appends) that a
+    * single-batch drain never does. The fixture directory is named after
+    * `name`, so queries streaming the same rows reuse one split value
+    * and share one directory.
+    */
+  private final case class Split(name: String, table: String, key: String,
+      rows: DataFrame => DataFrame = identity)
+
+  private val Events4 = Split("events4", "events", "event_id")
+  private val Docs4 = Split("docs4", "documents", "doc_id")
+  // the day's documents: the tenth an index seeded from the rest ingests
+  private val DayDocs4 = Split("daydocs4", "documents", "doc_id",
+    _.filter(col("doc_id") % 10 === 0))
+  private val DayVecs4 = Split("dayvecs4", "embeddings", "vec_id",
+    _.filter(col("vec_id") % 10 === 0))
+  private val Vecs4 = Split("vecs4", "embeddings", "vec_id")
+
+  /** The split's fixture directory, built on first use per corpus
+    * generation (see [[fixtureDir]]).
+    */
+  private def splitDir(s: SparkSession, d: String, split: Split): String = {
+    val dir = fixtureDir(split.name, d, split.table)
+    if (!fixtureReady(dir)) buildFixture(dir) { (out, _) =>
+      split.rows(s.read.parquet(s"$d/${split.table}.parquet"))
+        .repartition(4, col(split.key))
+        .write.mode("overwrite").parquet(out.toString)
+    }
+    dir.toString
   }
+
+  private def splitStream(s: SparkSession, d: String, split: Split): DataFrame =
+    microBatches(s, splitDir(s, d, split))
 
   /** The events table as a bounded file STREAM, with the same event-time
     * conversion the batch source applies (`Tables.load`); readStream needs
@@ -154,36 +200,164 @@ object StreamQueries {
     withEventTs(raw)
   }
 
-  /** Stateful streaming instantiates one state store per side per shuffle
-    * partition, each committing delta files every micro-batch — at the
-    * session-wide 32 partitions a bounded parity drain pays ~3× more store
-    * I/O than compute. 8 partitions is plenty for the drained volumes and
-    * is pinned into the query's checkpoint at start; the session conf is
-    * restored for whatever batch query runs next. (A real deployment sizes
-    * this to state volume per partition, not to the batch shuffle width.)
+  /** The events table as a FOUR-micro-batch stream ([[Events4]]). */
+  private def eventsStreamSplit(s: SparkSession, d: String): DataFrame =
+    withEventTs(splitStream(s, d, Events4))
+
+  /** A fixture of one parquet file per named frame of `table`'s raw
+    * read, triggered in the listed order: the file source picks files in
+    * mod-time order, and the files get distinct mod-times increasing in
+    * list order.
     */
-  private def withStreamPartitions[T](s: SparkSession)(body: => T): T = {
-    val keys = Seq(
-      "spark.sql.shuffle.partitions" -> "8",
-      // The whole bounded input lands in one data micro-batch and every
-      // query here emits its result within it (inner join and dedup emit
-      // eagerly; the complete-mode aggs re-emit full state each batch), so
-      // the trailing no-data batch would only advance the watermark and
-      // evict state we are about to stop anyway — skip that full
-      // commit cycle across all the state stores.
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
-    val prev = keys.map { case (k, _) => k -> s.conf.get(k) }
-    keys.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prev.foreach { case (k, v) => s.conf.set(k, v) }
+  private def orderedFiles(s: SparkSession, d: String, name: String, table: String)(
+      files: DataFrame => Seq[(String, DataFrame)]): String = {
+    val dir = fixtureDir(name, d, table)
+    if (!fixtureReady(dir)) buildFixture(dir) { (out, work) =>
+      files(s.read.parquet(s"$d/$table.parquet")).zipWithIndex.foreach {
+        case ((file, df), i) =>
+          val part = s"$work/$file"
+          df.coalesce(1).write.mode("overwrite").parquet(part)
+          val written = new java.io.File(part).listFiles()
+            .filter(_.getName.startsWith("part-")).head
+          val dest = out.resolve(s"$file.parquet")
+          java.nio.file.Files.move(written.toPath, dest)
+          dest.toFile.setLastModified((i + 1) * 1000000L)
+      }
+    }
+    dir.toString
   }
 
-  /** Start the configured `writer` and run it until its bounded input is
-    * consumed, under [[withStreamPartitions]]; stops the query either way.
+  /** Flush-sentinel rows over the normalized events `ev`: `sentinel(id,
+    * days)` is one `__flush` event (event_id −id, user_id −1) at
+    * hour-align(max ts) + `days` days + 1h30m. Sentinels sit at :30
+    * offsets so no watermark ever lands exactly on an hour-aligned window
+    * end (boundary semantics stay unobservable). The one collected
+    * scalar (max ts) is fixture construction, not query-path work.
     */
-  private def drainStream(s: SparkSession)(writer: => DataStreamWriter[_]): Unit =
-    withStreamPartitions(s) {
-      val q = writer.start()
-      try q.processAllAvailable() finally q.stop()
+  private def sentinels(ev: DataFrame): (Long, Long) => DataFrame = {
+    val hourNs = 3600L * 1000 * 1000 * 1000
+    val maxNs = ev.selectExpr("max(unix_micros(ts))").head.getLong(0) * 1000L
+    (id, days) => {
+      val ns = (maxNs / hourNs + 1 + days * 24) * hourNs + hourNs / 2
+      ev.limit(1).select(
+        lit(-id).cast("long").as("event_id"),
+        expr(s"timestamp_micros(${ns / 1000}L)").as("ts"),
+        lit(-1L).as("user_id"), lit("__flush").as("event_type"),
+        lit(0.0).as("value"), lit("{}").as("props"))
+    }
+  }
+
+  /** Late-arrival fixture: five single-file micro-batches in a pinned
+    * order:
+    *
+    *   1. on-time bulk (event_id % 5 ≠ 0)
+    *   2. watermark-advance sentinel S1 at hour-align(max ts)+1h30m — its
+    *      event time pushes the watermark to S1−1d BEFORE the stragglers
+    *      arrive, so by then every window ending ≤ max(on-time)−1d has
+    *      already been finalized and evicted
+    *   3. stragglers (event_id % 5 = 0) — judged against that watermark
+    *   4./5. flush sentinels S1+2d, S1+3d — advance the watermark past
+    *      every real window so append mode emits the remainder (no-data
+    *      micro-batches are disabled in the drain helper, so emission
+    *      needs trailing DATA batches)
+    *
+    * Sentinels must NOT be filtered out between source and watermark node:
+    * a `filter` there is pushed down to the parquet scan and the watermark
+    * never advances (found empirically — the pushed predicate removed the
+    * sentinel before EventTimeWatermarkExec saw its event time). They flow
+    * through the aggregation instead; their far-future windows never
+    * finalize, and the consumer scrubs them by window start. Event time is
+    * normalized BEFORE building, so every fixture file (real rows and
+    * sentinels alike) carries one session-zone TIMESTAMP form.
+    */
+  private def eventsStreamLate(s: SparkSession, d: String): DataFrame =
+    withEventTs(microBatches(s, orderedFiles(s, d, "late", "events") { onDisk =>
+      val raw = withEventTs(onDisk)
+      val sentinel = sentinels(raw)
+      Seq("f1_ontime" -> raw.filter(pmod(col("event_id"), lit(5)) =!= 0),
+        "f2_wm_advance" -> sentinel(1, 0),
+        "f3_late" -> raw.filter(pmod(col("event_id"), lit(5)) === 0),
+        "f4_flush_a" -> sentinel(2, 2),
+        "f5_flush_b" -> sentinel(3, 3))
+    }))
+
+  /** Flush fixture for APPEND-mode windowed aggregations with nothing
+    * late: one micro-batch with ALL real events, then three far-future
+    * flush sentinels (+2/+3/+4 days, one per batch). The sentinels advance
+    * the watermark past every real window so append mode emits them all on
+    * a bounded drain (no-data micro-batches are disabled in the drain
+    * helper, so emission needs trailing DATA batches — and a CHAINED
+    * aggregation needs one extra batch of headroom per stage for its
+    * emissions to flow through the downstream state). Since every real
+    * event arrives in batch 1, the watermark never drops anything — the
+    * batch oracle is the plain aggregation, no late-data replay.
+    * Sentinels carry event_type `__flush` and are scrubbed AFTER the
+    * drain (see eventsStreamLate).
+    */
+  private def eventsStreamFlush(s: SparkSession, d: String): DataFrame =
+    withEventTs(microBatches(s, orderedFiles(s, d, "flush", "events") { onDisk =>
+      val raw = withEventTs(onDisk)
+      // sentinels carry user_id = -1; the post-drain scrubs downstream
+      // (st_join_outer_parity in particular) are only sound if that id
+      // space is disjoint from the real-user domain, so refuse to build
+      // the fixture over data that violates it
+      require(raw.filter(col("user_id") < 0).isEmpty,
+        "eventsStreamFlush requires non-negative real user_ids: " +
+          "sentinel rows use user_id = -1 and must never join real events")
+      val sentinel = sentinels(raw)
+      Seq("f1_all" -> raw, "f2_flush_a" -> sentinel(1, 2),
+        "f3_flush_b" -> sentinel(2, 3), "f4_flush_c" -> sentinel(3, 4))
+    }))
+
+  /** Settings every drained stream starts under. Stateful streaming
+    * instantiates one state store per side per shuffle partition, each
+    * committing delta files every micro-batch — at a wide batch shuffle a
+    * bounded parity drain pays more store I/O than compute, and 8
+    * partitions is plenty for the drained volumes (a real deployment
+    * sizes this to state volume per partition). The whole bounded input
+    * lands in few data micro-batches and every query here emits its
+    * result within them (inner join and dedup emit eagerly; the
+    * complete-mode aggs re-emit full state each batch; the append-mode
+    * ones get trailing sentinel batches), so the trailing no-data batch
+    * would only advance the watermark and evict state we are about to
+    * stop anyway.
+    */
+  private val StreamConf = Seq(
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+
+  /** Start the configured `writer` and run it until its bounded input is
+    * consumed; stops the query either way. [[StreamConf]] plus `conf` are
+    * held on the session only across `start()`: the query clones the
+    * session there and plans every micro-batch on the clone, so the
+    * settings reach the stream (and its foreachBatch frames) while a
+    * batch query overlapping the drain plans at the session's own width.
+    */
+  private def drainStream(s: SparkSession, conf: (String, String)*)(
+      writer: => DataStreamWriter[_]): Unit = {
+    val q = graft.GraftSession.withConf(s, StreamConf ++ conf: _*)(writer.start())
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  /** Drain `df` into a memory sink named `name` and return the sink table. */
+  private def drain(df: DataFrame, name: String, mode: String,
+      conf: (String, String)*): DataFrame = {
+    val spark = df.sparkSession
+    drainStream(spark, conf: _*) {
+      df.writeStream.format("memory").queryName(name).outputMode(mode)
+    }
+    spark.table(name)
+  }
+
+  /** Drain `stream` through `each(batch, batchId)`, checkpointed in a
+    * scratch dir that is deleted afterwards. Whatever `each` must leave
+    * behind it writes elsewhere.
+    */
+  private[queries] def drainBatches(stream: DataFrame)(each: (DataFrame, Long) => Unit): Unit =
+    ScratchKeys.withScratch("graft_drain_") { scratch =>
+      drainStream(stream.sparkSession) {
+        stream.writeStream.option("checkpointLocation", s"$scratch/chk").foreachBatch(each)
+      }
     }
 
   /** Run the parity's stream-INDEPENDENT reference/certificate work on its
@@ -202,169 +376,32 @@ object StreamQueries {
   private def overlapping[T](work: => T)(drain: => Unit): T =
     Overlap.both(work)(drain)._1
 
-  /** The events table as a FOUR-micro-batch stream: rows hash-split by id
-    * into four files (one-time, per data dir), `maxFilesPerTrigger=1`.
-    * Every user's events spread across batches, so consumers exercise
-    * cross-batch behavior (state merge, incremental sink merges) that a
-    * single-batch drain never does. Split from the RAW read (whatever
-    * on-disk ts form the corpus ships), so the split files carry the same
-    * schema the stream reader is given; `withEventTs` normalizes after.
+  /** Serving parity under a frozen model: each micro-batch of `stream`
+    * goes through `serve`, is stamped with its `batch_id` and appended to
+    * scratch, while `oneShot` — the same serving over the whole input,
+    * eagerly materialized — runs alongside (see [[overlapping]]). Returns
+    * the served rows read back (with `batch_id`), the one-shot frame, and
+    * the certificate: the served rows equal the one-shot rows as a
+    * multiset AND came from all four batches.
     */
-  private def eventsStreamSplit(s: SparkSession, d: String): DataFrame = {
-    val splitDir = fixtureDir("split", d, "events", "events4")
-    if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-      s.read.parquet(s"$d/events.parquet")
-        .repartition(4, col("event_id"))
-        .write.mode("overwrite").parquet(out.toString)
-    }
-    // schema from the fixture's own files (see eventsStreamLate)
-    val onDisk = s.read.parquet(splitDir.toString).schema
-    val raw = s.readStream.schema(onDisk)
-      .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
-    withEventTs(raw)
-  }
-
-  /** Late-arrival fixture: five single-file micro-batches in a pinned
-    * order (explicit distinct mod-times; the file source triggers in
-    * mod-time order):
-    *
-    *   1. on-time bulk (event_id % 5 ≠ 0)
-    *   2. watermark-advance sentinel S1 at hour-align(max ts)+1h30m — its
-    *      event time pushes the watermark to S1−1d BEFORE the stragglers
-    *      arrive, so by then every window ending ≤ max(on-time)−1d has
-    *      already been finalized and evicted
-    *   3. stragglers (event_id % 5 = 0) — judged against that watermark
-    *   4./5. flush sentinels S1+2d, S1+3d — advance the watermark past
-    *      every real window so append mode emits the remainder (no-data
-    *      micro-batches are disabled in the drain helper, so emission
-    *      needs trailing DATA batches)
-    *
-    * Sentinels must NOT be filtered out between source and watermark node:
-    * a `filter` there is pushed down to the parquet scan and the watermark
-    * never advances (found empirically — the pushed predicate removed the
-    * sentinel before EventTimeWatermarkExec saw its event time). They flow
-    * through the aggregation instead; their far-future windows never
-    * finalize, and the consumer scrubs them by window start. Sentinels sit
-    * at :30 offsets so no watermark ever lands exactly on an hour-aligned
-    * window end (boundary semantics stay unobservable). Built once per
-    * data dir from the RAW on-disk schema; the one collected scalar
-    * (max ts) is fixture construction, not query-path work.
-    */
-  private def eventsStreamLate(s: SparkSession, d: String): DataFrame = {
-    val dir = fixtureDir("late", d, "events", "events_late")
-    if (!fixtureReady(dir)) buildFixture(dir) { (out, work) =>
-      // normalize event time BEFORE building, so every fixture file (real
-      // rows and sentinels alike) carries one session-zone TIMESTAMP form
-      val raw = withEventTs(s.read.parquet(s"$d/events.parquet"))
-      def writeOne(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-        val part = s"$work/$name"
-        df.coalesce(1).write.mode("overwrite").parquet(part)
-        val file = new java.io.File(part).listFiles()
-          .filter(_.getName.startsWith("part-")).head
-        val dest = out.resolve(s"$name.parquet")
-        java.nio.file.Files.move(file.toPath, dest)
-        dest.toFile.setLastModified(mtimeMs)
+  private def servingParity(stream: DataFrame, oneShot: => DataFrame)(
+      serve: DataFrame => DataFrame): (DataFrame, DataFrame, Boolean) =
+    ScratchKeys.withScratch("graft_serve_") { scratch =>
+      val results = s"$scratch/results"
+      val os = overlapping(oneShot) {
+        drainBatches(stream) { (batch, bid) =>
+          serve(batch).withColumn("batch_id", lit(bid))
+            .write.mode("append").parquet(results)
+        }
       }
-      val hourNs = 3600L * 1000 * 1000 * 1000
-      val maxNs = raw.selectExpr("max(unix_micros(ts))").head.getLong(0) * 1000L
-      def sentinel(id: Long, days: Long): DataFrame = {
-        val ns = (maxNs / hourNs + 1 + days * 24) * hourNs + hourNs / 2
-        raw.limit(1).select(
-          lit(-id).cast("long").as("event_id"),
-          expr(s"timestamp_micros(${ns / 1000}L)").as("ts"),
-          lit(-1L).as("user_id"), lit("__flush").as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
-      }
-      writeOne(raw.filter(pmod(col("event_id"), lit(5)) =!= 0), "f1_ontime", 1000000L)
-      writeOne(sentinel(1, 0), "f2_wm_advance", 2000000L)
-      writeOne(raw.filter(pmod(col("event_id"), lit(5)) === 0), "f3_late", 3000000L)
-      writeOne(sentinel(2, 2), "f4_flush_a", 4000000L)
-      writeOne(sentinel(3, 3), "f5_flush_b", 5000000L)
+      val streamed = stream.sparkSession.read.parquet(results).localCheckpoint(true)
+      val parity = Parity.multisetEqual(streamed.drop("batch_id"), os)
+      (streamed, os, parity && streamed.select("batch_id").distinct().count() == 4L)
     }
-    // schema from the fixture's OWN files: a fixture built from an earlier
-    // corpus form (nanos-as-long, NTZ) must be read with the type it
-    // actually stores, not the current source table's
-    val onDisk = s.read.parquet(dir.toString).schema
-    val raw = s.readStream.schema(onDisk)
-      .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-    withEventTs(raw)
-  }
 
-  /** Flush fixture for APPEND-mode windowed aggregations with nothing
-    * late: one micro-batch with ALL real events, then three far-future
-    * flush sentinels (+2/+3/+4 days, one per batch). The sentinels advance
-    * the watermark past every real window so append mode emits them all on
-    * a bounded drain (no-data micro-batches are disabled in the drain
-    * helper, so emission needs trailing DATA batches — and a CHAINED
-    * aggregation needs one extra batch of headroom per stage for its
-    * emissions to flow through the downstream state). Since every real
-    * event arrives in batch 1, the watermark never drops anything — the
-    * batch oracle is the plain aggregation, no late-data replay.
-    * Sentinels carry event_type `__flush` and are scrubbed AFTER the
-    * drain (a filter between source and watermark node would be pushed
-    * into the scan and the watermark would never advance — see
-    * eventsStreamLate).
-    */
-  private def eventsStreamFlush(s: SparkSession, d: String): DataFrame = {
-    val dir = fixtureDir("flush", d, "events", "events_flush")
-    if (!fixtureReady(dir)) buildFixture(dir) { (out, work) =>
-      // normalize event time BEFORE building (see eventsStreamLate)
-      val raw = withEventTs(s.read.parquet(s"$d/events.parquet"))
-      // sentinels carry user_id = -1; the post-drain scrubs downstream
-      // (st_join_outer_parity in particular) are only sound if that id
-      // space is disjoint from the real-user domain, so refuse to build
-      // the fixture over data that violates it
-      require(raw.filter(col("user_id") < 0).isEmpty,
-        "eventsStreamFlush requires non-negative real user_ids: " +
-          "sentinel rows use user_id = -1 and must never join real events")
-      def writeOne(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-        val part = s"$work/$name"
-        df.coalesce(1).write.mode("overwrite").parquet(part)
-        val file = new java.io.File(part).listFiles()
-          .filter(_.getName.startsWith("part-")).head
-        val dest = out.resolve(s"$name.parquet")
-        java.nio.file.Files.move(file.toPath, dest)
-        dest.toFile.setLastModified(mtimeMs)
-      }
-      val hourNs = 3600L * 1000 * 1000 * 1000
-      val maxNs = raw.selectExpr("max(unix_micros(ts))").head.getLong(0) * 1000L
-      def sentinel(id: Long, days: Long): DataFrame = {
-        val ns = (maxNs / hourNs + 1 + days * 24) * hourNs + hourNs / 2
-        raw.limit(1).select(
-          lit(-id).cast("long").as("event_id"),
-          expr(s"timestamp_micros(${ns / 1000}L)").as("ts"),
-          lit(-1L).as("user_id"), lit("__flush").as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
-      }
-      writeOne(raw, "f1_all", 1000000L)
-      writeOne(sentinel(1, 2), "f2_flush_a", 2000000L)
-      writeOne(sentinel(2, 3), "f3_flush_b", 3000000L)
-      writeOne(sentinel(3, 4), "f4_flush_c", 4000000L)
-    }
-    // schema from the fixture's own files (see eventsStreamLate)
-    val onDisk = s.read.parquet(dir.toString).schema
-    val raw = s.readStream.schema(onDisk)
-      .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-    withEventTs(raw)
-  }
-
-  private def drain(df: DataFrame, name: String, mode: String): DataFrame = {
-    val spark = df.sparkSession
-    drainStream(spark) {
-      df.writeStream.format("memory").queryName(name).outputMode(mode)
-    }
-    spark.table(name)
-  }
-
-  private[queries] def deleteRecursively(root: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(root)) {
-      val walk = java.nio.file.Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
-    }
-  }
+  /** transformWithState on a RocksDB state store (see st_tws_totals_parity). */
+  private val RocksDbState = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -465,7 +502,7 @@ object StreamQueries {
 
     // Cross-batch state merge: the same session-window aggregation, but the
     // input arrives as FOUR interleaved micro-batches (events hash-split by
-    // id into four files, maxFilesPerTrigger=1) — every session's events
+    // id into four files, one file per micro-batch) — every session's events
     // spread across batches, so the final answer is only correct if the
     // engine's session state MERGES across batches (the property a
     // single-batch drain never exercises). Complete mode retains all
@@ -524,42 +561,33 @@ object StreamQueries {
     // Four micro-batches ⇒ four merge cycles; the final target must equal
     // the batch aggregation. Sums carried in DECIMAL so the batch-split
     // addition order cannot drift the double sum.
-    "st_foreachbatch_upsert" -> ((s, d) => {
-      val scratch = java.nio.file.Files.createTempDirectory("graft_feb_")
-      try {
-        val target = s"$scratch/target"
-        def mergeBatch(batch: DataFrame): Unit = {
-          val delta = batch.groupBy("user_id")
-            .agg(count(lit(1)).as("n_events"),
-              sum(col("value").cast("decimal(18,6)")).as("sum_value"),
-              max(col("ts")).as("last_ts"))
-          val merged =
-            if (new java.io.File(target).isDirectory) {
-              s.read.parquet(target).unionByName(delta)
-                .groupBy("user_id")
-                .agg(sum("n_events").cast("long").as("n_events"),
-                  sum("sum_value").as("sum_value"),
-                  max("last_ts").as("last_ts"))
-            } else delta
-          // materialize BEFORE the overwrite — the plan reads the same
-          // path it is about to replace
-          val mat = merged.localCheckpoint(true)
-          try mat.write.mode("overwrite").parquet(target)
-          finally mat.unpersist()
-        }
-        drainStream(s) {
-          eventsStreamSplit(s, d).writeStream
-            .option("checkpointLocation", s"$scratch/chk")
-            .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                _: Long) => mergeBatch(batch.toDF()))
-        }
-        s.read.parquet(target)
-          .select(col("user_id"), col("n_events"),
-            round(col("sum_value").cast("double") + 1e-9, 2).as("sum_value"),
-            date_format(col("last_ts"), Fmt).as("last_ts"))
-          .orderBy("user_id")
-          .localCheckpoint(true)
-      } finally deleteRecursively(scratch)
+    "st_foreachbatch_upsert" -> ((s, d) => ScratchKeys.withScratch("graft_feb_") { scratch =>
+      val target = s"$scratch/target"
+      drainBatches(eventsStreamSplit(s, d)) { (batch, _) =>
+        val delta = batch.groupBy("user_id")
+          .agg(count(lit(1)).as("n_events"),
+            sum(col("value").cast("decimal(18,6)")).as("sum_value"),
+            max(col("ts")).as("last_ts"))
+        val merged =
+          if (new java.io.File(target).isDirectory) {
+            s.read.parquet(target).unionByName(delta)
+              .groupBy("user_id")
+              .agg(sum("n_events").cast("long").as("n_events"),
+                sum("sum_value").as("sum_value"),
+                max("last_ts").as("last_ts"))
+          } else delta
+        // materialize BEFORE the overwrite — the plan reads the same
+        // path it is about to replace
+        val mat = merged.localCheckpoint(true)
+        try mat.write.mode("overwrite").parquet(target)
+        finally mat.unpersist()
+      }
+      s.read.parquet(target)
+        .select(col("user_id"), col("n_events"),
+          round(col("sum_value").cast("double") + 1e-9, 2).as("sum_value"),
+          date_format(col("last_ts"), Fmt).as("last_ts"))
+        .orderBy("user_id")
+        .localCheckpoint(true)
     }),
 
     // Streaming ingest through the PERSISTED minhash index — the bridge
@@ -584,12 +612,6 @@ object StreamQueries {
       // consumer below) instead of re-tokenizing per position — same
       // rationale as DedupQueries.docsTk; the split files stay tokenless
       val shingles = CrossHash.wordShingles(col("__tk"), 3)
-      val splitDir = fixtureDir("dedup", d, "documents", "docs4")
-      if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-        docs.filter(col("doc_id") % 10 === 0)
-          .repartition(4, col("doc_id"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
       val prefix = s"mh_stream_index_${ScratchKeys.forPath(d)}"
       Dedup.Minhash.drop(s, prefix)
       // seed from the suite-shared signature memo (the same frame
@@ -599,29 +621,20 @@ object StreamQueries {
       val corpusSigs = DedupQueries.minhashSigsFrame(s, d)
       Dedup.writeMinhashIndex(
         corpusSigs.filter(col("id") % 10 =!= 0), prefix, buckets = 8, k = 16, bands = 4)
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_dedup_")
-      try {
+      ScratchKeys.withScratch("graft_stream_dedup_") { scratch =>
         val pairsDir = s"$scratch/pairs"
         // the certificate's corpus count is stream-independent — computed
         // while the drain runs (guide §2.6, see `overlapping`)
         val nDocs = overlapping(docs.count()) {
-          drainStream(s) {
-            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
-              .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
-              .writeStream
-              .option("checkpointLocation", s"$scratch/chk")
-              .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                  bid: Long) => {
-                val sigs = Dedup.minhashSignatures(
-                  batch.toDF().withColumn("__tk", CrossHash.tokens(col("text"))),
-                  "doc_id", shingles, k = 16)
-                // the production ingest body: batchId-keyed exactly-once
-                // (write-ahead ledger; a retried batch would skip or
-                // scrub-and-reapply instead of double-appending)
-                Dedup.exactlyOnceIngestIntoMinhashIndex(
-                    sigs, prefix, bid, threshold = 0.7)
-                  .foreach(_.write.mode("append").parquet(pairsDir))
-              })
+          drainBatches(splitStream(s, d, DayDocs4)) { (batch, bid) =>
+            val sigs = Dedup.minhashSignatures(
+              batch.withColumn("__tk", CrossHash.tokens(col("text"))),
+              "doc_id", shingles, k = 16)
+            // the production ingest body: batchId-keyed exactly-once
+            // (write-ahead ledger; a retried batch would skip or
+            // scrub-and-reapply instead of double-appending)
+            Dedup.exactlyOnceIngestIntoMinhashIndex(sigs, prefix, bid, threshold = 0.7)
+              .foreach(_.write.mode("append").parquet(pairsDir))
           }
         }
         // resolution-safe: a retried batch's scrub advances a generation
@@ -635,7 +648,7 @@ object StreamQueries {
           .withColumn("index_ok", lit(sigsN == nDocs && bandsN == nDocs * 4))
           .orderBy("new_id")
           .localCheckpoint(true)
-      } finally deleteRecursively(scratch)
+      }
     }),
 
     // Streaming index DELETION — the take-down feed as a stream: a
@@ -652,39 +665,24 @@ object StreamQueries {
     // cannot pass. Every index maintenance verb — append AND delete —
     // now has a streaming twin.
     "st_index_delete_parity" -> ((s, d) => {
-      import graft.functions.CrossHash
       import graft.operators.Dedup
       val docs = graft.sources.Tables.load(s, d, "documents")
-      val shingles = CrossHash.wordShingles(col("__tk"), 3)
-      val delDir = fixtureDir("mhdel", d, "documents", "del4")
-      if (!fixtureReady(delDir)) buildFixture(delDir) { (out, _) =>
-        docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 3 === 0)
-          .select(col("doc_id").as("id"))
-          .repartition(4, col("id"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
+      val takeDowns = Split("del4", "documents", "id",
+        _.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 3 === 0)
+          .select(col("doc_id").as("id")))
       val prefix = s"mh_stream_del_${ScratchKeys.forPath(d)}"
       Dedup.Minhash.drop(s, prefix)
       val corpusSigs = DedupQueries.minhashSigsFrame(s, d)
       Dedup.writeMinhashIndex(
         corpusSigs.filter(col("id") % 10 =!= 0), prefix, buckets = 8, k = 16, bands = 4)
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_mhdel_")
       // the certificate's survivor count is a pure corpus aggregation,
       // stream-independent — computed while the drain runs (guide §2.6)
-      val survivors = try {
-        overlapping(docs
-            .filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 3 =!= 0).count()) {
-          drainStream(s) {
-            s.readStream.schema(s.read.parquet(delDir.toString).schema)
-              .option("maxFilesPerTrigger", 1).parquet(delDir.toString)
-              .writeStream
-              .option("checkpointLocation", s"$scratch/chk")
-              .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                  _: Long) =>
-                Dedup.deleteFromMinhashIndex(s, prefix, batch.toDF()))
-          }
+      val survivors = overlapping(docs
+          .filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 3 =!= 0).count()) {
+        drainBatches(splitStream(s, d, takeDowns)) { (batch, _) =>
+          Dedup.deleteFromMinhashIndex(s, prefix, batch)
         }
-      } finally deleteRecursively(scratch)
+      }
       val atp = graft.sources.Sinks.activeTablePrefix(s, prefix)
       val sigsN = s.table(s"${atp}_sigs").count()
       val bandsN = s.table(s"${atp}_bands").count()
@@ -715,14 +713,11 @@ object StreamQueries {
     "st_rebuild_cutover_parity" -> ((s, d) => {
       import graft.operators.Similarity
       val e = graft.sources.Tables.load(s, d, "embeddings")
-      val waveDir = fixtureDir("annrb", d, "embeddings", "qwaves4")
-      if (!fixtureReady(waveDir)) buildFixture(waveDir) { (out, _) =>
-        (0 until 4).foreach { w =>
-          e.filter(col("vec_id") % 50 === 0)
-            .select(col("vec_id"), col("embedding"), lit(w).as("wave"))
-            .coalesce(1)
-            .write.mode("append").parquet(out.toString)
-        }
+      // four identical waves — full copies of the query set, not a hash
+      // split (hashing four wave labels into four partitions collides)
+      val waves = orderedFiles(s, d, "qwaves4", "embeddings") { emb =>
+        (0 until 4).map(w => s"wave$w" -> emb.filter(col("vec_id") % 50 === 0)
+          .select(col("vec_id"), col("embedding"), lit(w).as("wave")))
       }
       val prefix = s"ivf_stream_rb_${ScratchKeys.forPath(d)}"
       Similarity.Ivf.drop(s, prefix)
@@ -730,9 +725,8 @@ object StreamQueries {
         "vec_id", "embedding", prefix, buckets = 8, nlist = 8, iters = 2)
       val preDrains = new java.util.concurrent.atomic.AtomicInteger(0)
       val genSeen = new java.util.concurrent.atomic.AtomicLong(-1L)
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_annrb_")
-      val probeDir = s"$scratch/probes"
-      try {
+      ScratchKeys.withScratch("graft_stream_annrb_") { scratch =>
+        val probeDir = s"$scratch/probes"
         // query-set count + brute-force reference are stream-independent
         // (corpus only — the streamed index never feeds them) — computed
         // while the drain runs (guide §2.6, see `overlapping`)
@@ -742,26 +736,19 @@ object StreamQueries {
                 e.filter(col("vec_id") % 50 === 0), e, "vec_id", "embedding", k = 3)
               .localCheckpoint(true))
         } {
-          drainStream(s) {
-            s.readStream.schema(s.read.parquet(waveDir.toString).schema)
-              .option("maxFilesPerTrigger", 1).parquet(waveDir.toString)
-              .writeStream
-              .option("checkpointLocation", s"$scratch/chk")
-              .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                  bid: Long) => {
-                val flipped = s.catalog.tableExists(s"${prefix}_current")
-                Similarity.ivfTopKAgainstIndex(
-                    batch.toDF().select("vec_id", "embedding"), prefix,
-                    "vec_id", "embedding", k = 3,
-                    nprobe = SimilarityQueries.IvfNprobe)
-                  .select(col("query_id"), col("neighbor_id"),
-                    lit(flipped).as("flipped"), lit(bid).as("bid"))
-                  .write.mode("append").parquet(probeDir)
-                if (!flipped && preDrains.incrementAndGet() == 2)
-                  genSeen.set(Similarity.Ivf.rebuild(s, prefix)(
-                    Similarity.writeIvfIndex(e, "vec_id", "embedding", _, buckets = 8,
-                      nlist = 16, iters = 3, assign = SimilarityQueries.IvfAssign)))
-              })
+          drainBatches(microBatches(s, waves)) { (batch, bid) =>
+            val flipped = s.catalog.tableExists(s"${prefix}_current")
+            Similarity.ivfTopKAgainstIndex(
+                batch.select("vec_id", "embedding"), prefix,
+                "vec_id", "embedding", k = 3,
+                nprobe = SimilarityQueries.IvfNprobe)
+              .select(col("query_id"), col("neighbor_id"),
+                lit(flipped).as("flipped"), lit(bid).as("bid"))
+              .write.mode("append").parquet(probeDir)
+            if (!flipped && preDrains.incrementAndGet() == 2)
+              genSeen.set(Similarity.Ivf.rebuild(s, prefix)(
+                Similarity.writeIvfIndex(e, "vec_id", "embedding", _, buckets = 8,
+                  nlist = 16, iters = 3, assign = SimilarityQueries.IvfAssign)))
           }
         }
         val probes = s.read.parquet(probeDir)
@@ -783,11 +770,8 @@ object StreamQueries {
           genSeen.get() == 1L && !s.catalog.tableExists(s"${prefix}_lists")
         val hits = post.select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
           .distinct()
-        val all = org.apache.spark.sql.expressions.Window.partitionBy(lit(1))
         brute.join(hits, Seq("query_id", "neighbor_id"), "left")
-          .withColumn("post_recall_ok",
-            (sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-              / count(lit(1)).over(all)) >= SimilarityQueries.IvfRecallFloor)
+          .withColumn("post_recall_ok", Parity.recallAtLeast(SimilarityQueries.IvfRecallFloor))
           .withColumn("pre_served_ok", lit(preServedOk))
           .withColumn("pre_stale_ok", lit(preStaleOk))
           .withColumn("lifecycle_ok", lit(lifecycleOk))
@@ -795,7 +779,7 @@ object StreamQueries {
             "post_recall_ok", "pre_served_ok", "pre_stale_ok", "lifecycle_ok")
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally deleteRecursively(scratch)
+      }
     }),
 
     // Streaming ANN-index ingest — st_dedup_index_parity's twin for the
@@ -823,40 +807,24 @@ object StreamQueries {
     "st_ann_index_parity" -> ((s, d) => {
       import graft.operators.Similarity
       val e = graft.sources.Tables.load(s, d, "embeddings")
-      val splitDir = fixtureDir("ann", d, "embeddings", "emb4")
-      if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-        e.filter(col("vec_id") % 10 === 0)
-          .repartition(4, col("vec_id"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
       val prefix = s"ivf_stream_${ScratchKeys.forPath(d)}"
       Similarity.Ivf.drop(s, prefix)
       Similarity.writeIvfIndex(e.filter(col("vec_id") % 10 =!= 0),
         "vec_id", "embedding", prefix, buckets = 8, nlist = 16, iters = 3,
         assign = SimilarityQueries.IvfAssign)
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_ann_")
       // corpus count + brute-force reference are stream-independent —
       // computed while the drain runs (guide §2.6, see `overlapping`)
-      val (eN, brute) = try {
-        overlapping {
-          (e.count(),
-            Similarity.bruteForceTopK(
-                e.filter(col("vec_id") % 50 === 0), e, "vec_id", "embedding", k = 3)
-              .localCheckpoint(true))
-        } {
-          drainStream(s) {
-            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
-              .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
-              .writeStream
-              .option("checkpointLocation", s"$scratch/chk")
-              .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                  bid: Long) =>
-                // production append body: batchId-keyed exactly-once
-                Similarity.exactlyOnceAppendToIvfIndex(
-                  batch.toDF(), prefix, "vec_id", "embedding", bid): Unit)
-          }
+      val (eN, brute) = overlapping {
+        (e.count(),
+          Similarity.bruteForceTopK(
+              e.filter(col("vec_id") % 50 === 0), e, "vec_id", "embedding", k = 3)
+            .localCheckpoint(true))
+      } {
+        drainBatches(splitStream(s, d, DayVecs4)) { (batch, bid) =>
+          // production append body: batchId-keyed exactly-once
+          Similarity.exactlyOnceAppendToIvfIndex(batch, prefix, "vec_id", "embedding", bid): Unit
         }
-      } finally deleteRecursively(scratch)
+      }
       val grown = Similarity.ivfTopKAgainstIndex(
           e.filter(col("vec_id") % 50 === 0), prefix, "vec_id", "embedding",
           k = 3, nprobe = SimilarityQueries.IvfNprobe)
@@ -868,11 +836,8 @@ object StreamQueries {
         .agg(count(lit(1)).as("n"), countDistinct(col("neighbor_id")).as("nd")).head()
       val complete =
         ls.getLong(0) == SimilarityQueries.IvfAssign * eN && ls.getLong(1) == eN
-      val all = org.apache.spark.sql.expressions.Window.partitionBy(lit(1))
       brute.join(grown, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivf_recall_ok",
-          (sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-            / count(lit(1)).over(all)) >= SimilarityQueries.IvfRecallFloor)
+        .withColumn("ivf_recall_ok", Parity.recallAtLeast(SimilarityQueries.IvfRecallFloor))
         .withColumn("index_ok", lit(complete))
         .select("query_id", "rank", "neighbor_id", "cos", "ivf_recall_ok", "index_ok")
         .orderBy("query_id", "rank")
@@ -893,16 +858,12 @@ object StreamQueries {
       val docs = graft.sources.Tables.load(s, d, "documents")
       val edges = DedupQueries.minhashPairEdges(s, d)
       val oldEdges = edges.filter(col("a") % 10 =!= 0 && col("b") % 10 =!= 0)
-      val newEdges = edges.filter(col("a") % 10 === 0 || col("b") % 10 === 0)
       // the day's edges as a 4-file stream (edges are a deterministic
       // function of the corpus, so the content-generation fixture key
       // applies unchanged)
-      val splitDir = fixtureDir("ccedges", d, "documents", "edges4")
-      if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-        newEdges.select(col("a").cast("long"), col("b").cast("long"))
-          .repartition(4, col("a"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
+      val dayEdges = Split("edges4", "documents", "a", _ =>
+        edges.filter(col("a") % 10 === 0 || col("b") % 10 === 0)
+          .select(col("a").cast("long"), col("b").cast("long")))
       // pointer-protected blue/green label state (Sinks.updateLabelTable):
       // each batch stages a fresh generation and flips <prefix>_current —
       // a crash in any window leaves a complete serving generation, the
@@ -913,22 +874,11 @@ object StreamQueries {
       graft.sources.Sinks.Labels.drop(s, prefix)
       graft.sources.Sinks.updateLabelTable(
         s, prefix, Dedup.connectedComponentsStar(oldEdges), 8)
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_cc_")
-      try {
-        drainStream(s) {
-          s.readStream.schema(s.read.parquet(splitDir.toString).schema)
-            .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
-            .writeStream
-            .option("checkpointLocation", s"$scratch/chk")
-            .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                _: Long) => {
-              val updated = Dedup.incrementalConnectedComponents(
-                graft.sources.Sinks.readLabelTable(s, prefix), batch.toDF())
-              graft.sources.Sinks.updateLabelTable(s, prefix, updated, 8)
-              ()
-            })
-        }
-      } finally deleteRecursively(scratch)
+      drainBatches(splitStream(s, d, dayEdges)) { (batch, _) =>
+        val updated = Dedup.incrementalConnectedComponents(
+          graft.sources.Sinks.readLabelTable(s, prefix), batch)
+        graft.sources.Sinks.updateLabelTable(s, prefix, updated, 8)
+      }
       docs.select("doc_id")
         .join(graft.sources.Sinks.readLabelTable(s, prefix)
             .withColumnRenamed("id", "doc_id").withColumnRenamed("rep", "inc_rep"),
@@ -951,65 +901,26 @@ object StreamQueries {
     "st_knn_serving_parity" -> ((s, d) => {
       import graft.operators.Similarity
       val e = graft.sources.Tables.load(s, d, "embeddings")
-      val splitDir = fixtureDir("annq", d, "embeddings", "query4")
-      if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-        e.filter(col("vec_id") % 50 === 0)
-          .repartition(4, col("vec_id"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
+      val q = e.filter(col("vec_id") % 50 === 0)
       // the fixed serving index IS the suite's shared serving-config base
       // (full corpus, nlist=16, assign=2) — probed read-only per batch
       val prefix = SimilarityQueries.ensureIvfBase(s, d)
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_serve_")
-      val resultsDir = s"$scratch/results"
-      try {
-        // one-shot probe + brute-force reference are stream-independent
-        // (read-only probes of the frozen shared index / the corpus) —
-        // computed WHILE the drain runs (guide §2.6, see `overlapping`).
-        // Both eager-materialized: the parity bool + returned frame
-        // consume them repeatedly (guide §5 — reuse)
-        val (oneShot, brute) = overlapping {
-          val os = Similarity.ivfTopKAgainstIndex(
-              e.filter(col("vec_id") % 50 === 0), prefix, "vec_id", "embedding",
-              k = 3, nprobe = SimilarityQueries.IvfNprobe)
-            .localCheckpoint(true)
-          val br = Similarity.bruteForceTopK(
-              e.filter(col("vec_id") % 50 === 0), e, "vec_id", "embedding", k = 3)
-            .localCheckpoint(true)
-          (os, br)
-        } {
-          drainStream(s) {
-            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
-              .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
-              .writeStream
-              .option("checkpointLocation", s"$scratch/chk")
-              .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                  bid: Long) =>
-                Similarity.ivfTopKAgainstIndex(batch.toDF(), prefix,
-                    "vec_id", "embedding",
-                    k = 3, nprobe = SimilarityQueries.IvfNprobe)
-                  .withColumn("batch_id", lit(bid))
-                  .write.mode("append").parquet(resultsDir): Unit)
-          }
-        }
-        val streamed = s.read.parquet(resultsDir).localCheckpoint(true)
-        val served = streamed.drop("batch_id")
-        // one tagged-union aggregation job — same predicate as the old
-        // count + two exceptAll sides (see Parity.multisetEqual)
-        val parity = Parity.multisetEqual(served, oneShot)
-        val batches = streamed.select("batch_id").distinct().count()
-        val all = org.apache.spark.sql.expressions.Window.partitionBy(lit(1))
-        brute.join(
-            streamed.select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-              .distinct(),
-            Seq("query_id", "neighbor_id"), "left")
-          .withColumn("ivf_recall_ok",
-            (sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-              / count(lit(1)).over(all)) >= SimilarityQueries.IvfRecallFloor)
-          .withColumn("serve_ok", lit(parity && batches == 4L))
-          .select("query_id", "rank", "neighbor_id", "cos", "ivf_recall_ok", "serve_ok")
-          .orderBy("query_id", "rank")
-      } finally deleteRecursively(scratch)
+      def probe(batch: DataFrame): DataFrame = Similarity.ivfTopKAgainstIndex(
+        batch, prefix, "vec_id", "embedding", k = 3, nprobe = SimilarityQueries.IvfNprobe)
+      // the brute-force reference is stream-independent too: forced on
+      // the one-shot side, eager-materialized for the recall join
+      lazy val brute = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
+        .localCheckpoint(true)
+      val queries4 = Split("queries4", "embeddings", "vec_id", _.filter(col("vec_id") % 50 === 0))
+      val (streamed, _, ok) = servingParity(splitStream(s, d, queries4),
+        { brute; probe(q).localCheckpoint(true) })(probe)
+      brute.join(
+          streamed.select(col("query_id"), col("neighbor_id"), lit(1).as("hit")).distinct(),
+          Seq("query_id", "neighbor_id"), "left")
+        .withColumn("ivf_recall_ok", Parity.recallAtLeast(SimilarityQueries.IvfRecallFloor))
+        .withColumn("serve_ok", lit(ok))
+        .select("query_id", "rank", "neighbor_id", "cos", "ivf_recall_ok", "serve_ok")
+        .orderBy("query_id", "rank")
     }),
 
     // Streaming CLUSTER-ID tagging — the clustering tier's serving dual
@@ -1026,47 +937,21 @@ object StreamQueries {
     "st_kmeans_serving_parity" -> ((s, d) => {
       import graft.operators.Similarity
       val e = graft.sources.Tables.load(s, d, "embeddings")
-      val splitDir = fixtureDir("kmserve", d, "embeddings", "corpus4")
-      if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-        e.repartition(4, col("vec_id"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
       val prefix = s"km_serve_${ScratchKeys.forPath(d)}"
       Similarity.Kmeans.drop(s, prefix)
       Similarity.writeKmeansModel(e, "vec_id", "embedding", prefix,
         k = 8, iters = 2)
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_km_")
-      val resultsDir = s"$scratch/results"
-      try {
-        // one-shot side = the suite-shared assignment frame (same k/iters
-        // — trains in-session; the oracle's full replay pins that the
-        // PERSISTED model matches it). Stream-independent — computed
-        // while the drain runs (guide §2.6, see `overlapping`)
-        val oneShot = overlapping(SimilarityQueries.kmeansAssignFrame(s, d)) {
-          drainStream(s) {
-            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
-              .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
-              .writeStream
-              .option("checkpointLocation", s"$scratch/chk")
-              .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                  bid: Long) =>
-                Similarity.assignAgainstKmeansModel(batch.toDF(), prefix,
-                    "vec_id", "embedding")
-                  .withColumn("batch_id", lit(bid))
-                  .write.mode("append").parquet(resultsDir): Unit)
-          }
-        }
-        val streamed = s.read.parquet(resultsDir).localCheckpoint(true)
-        val served = streamed.drop("batch_id")
-        // one tagged-union aggregation job — same predicate as the old
-        // count + two exceptAll sides (see Parity.multisetEqual)
-        val parity = Parity.multisetEqual(served, oneShot)
-        val batches = streamed.select("batch_id").distinct().count()
-        oneShot
-          .withColumn("serve_ok", lit(parity && batches == 4L))
-          .select("vec_id", "cid", "dist", "serve_ok")
-          .orderBy("vec_id")
-      } finally deleteRecursively(scratch)
+      // one-shot side = the suite-shared assignment frame (same k/iters
+      // — trains in-session; the oracle's full replay pins that the
+      // PERSISTED model matches it)
+      val (_, oneShot, ok) = servingParity(splitStream(s, d, Vecs4),
+          SimilarityQueries.kmeansAssignFrame(s, d)) {
+        Similarity.assignAgainstKmeansModel(_, prefix, "vec_id", "embedding")
+      }
+      oneShot
+        .withColumn("serve_ok", lit(ok))
+        .select("vec_id", "cid", "dist", "serve_ok")
+        .orderBy("vec_id")
     }),
 
     // Streamed classifier serving: the linear quality probe is trained
@@ -1081,58 +966,25 @@ object StreamQueries {
     // hash-mismatches.
     "st_classifier_serving_parity" -> ((s, d) => {
       import graft.operators.LinearModel
-      val docs = graft.sources.Tables.load(s, d, "documents")
-      val splitDir = fixtureDir("clfserve", d, "documents", "docsall4")
-      if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-        docs.repartition(4, col("doc_id"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
       val prefix = s"clf_serve_${ScratchKeys.forPath(d)}"
       LinearModel.Linear.drop(s, prefix)
       LinearModel.writeLinearModel(s, prefix,
         TextQueries.ClfXCols, TextQueries.classifierWeights(s, d))
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_clf_")
-      val resultsDir = s"$scratch/results"
-      try {
-        // eager-materialized: consumed by the parity bool (count + both
-        // exceptAll sides) AND as the returned frame — four evaluations
-        // of the scoring pass without the checkpoint (guide §5 — reuse).
-        // Stream-independent (shared frozen features + weights) — computed
-        // while the drain runs (guide §2.6, see `overlapping`)
-        val oneShot = overlapping {
+      val (_, oneShot, ok) = servingParity(splitStream(s, d, Docs4),
           LinearModel.scoreSquashedLinear(
               TextQueries.classifierFeatures(s, d),
               TextQueries.ClfXCols, TextQueries.classifierWeights(s, d))
             .select("doc_id", "score", "pred")
-            .localCheckpoint(true)
-        } {
-          drainStream(s) {
-            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
-              .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
-              .writeStream
-              .option("checkpointLocation", s"$scratch/chk")
-              .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                  bid: Long) =>
-                LinearModel.scoreAgainstLinearModel(
-                    TextQueries.classifierFeatureCols(batch.toDF()), prefix)
-                  .select(col("doc_id"), col("score"), col("pred"),
-                    lit(bid).as("batch_id"))
-                  .write.mode("append").parquet(resultsDir): Unit)
-          }
-        }
-        val streamed = s.read.parquet(resultsDir).localCheckpoint(true)
-        val served = streamed.drop("batch_id")
-        // one tagged-union aggregation job — same predicate as the old
-        // count + two exceptAll sides (see Parity.multisetEqual)
-        val parity = Parity.multisetEqual(served, oneShot)
-        val batches = streamed.select("batch_id").distinct().count()
-        oneShot
-          .withColumn("serve_ok", lit(parity && batches == 4L))
-          .select(col("doc_id"),
-            round(col("score") + 1e-9, 4).as("score"),
-            col("pred").as("pred_keep"), col("serve_ok"))
-          .orderBy("doc_id")
-      } finally deleteRecursively(scratch)
+            .localCheckpoint(true)) { batch =>
+        LinearModel.scoreAgainstLinearModel(TextQueries.classifierFeatureCols(batch), prefix)
+          .select("doc_id", "score", "pred")
+      }
+      oneShot
+        .withColumn("serve_ok", lit(ok))
+        .select(col("doc_id"),
+          round(col("score") + 1e-9, 4).as("score"),
+          col("pred").as("pred_keep"), col("serve_ok"))
+        .orderBy("doc_id")
     }),
 
     // Streamed CALIBRATED-classifier serving: the holdout-trained weights
@@ -1147,56 +999,24 @@ object StreamQueries {
     // ALL docs.
     "st_clf_cal_serving_parity" -> ((s, d) => {
       import graft.operators.LinearModel
-      val docs = graft.sources.Tables.load(s, d, "documents")
-      val splitDir = fixtureDir("clfcal", d, "documents", "docsall4")
-      if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-        docs.repartition(4, col("doc_id"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
       val prefix = s"clf_cals_${ScratchKeys.forPath(d)}"
       LinearModel.Calibrated.drop(s, prefix)
       LinearModel.writeCalibratedLinearModel(s, prefix, TextQueries.ClfXCols,
         TextQueries.holdoutWeights(s, d), TextQueries.calibrationFitFrame(s, d))
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_cal_")
-      val resultsDir = s"$scratch/results"
-      try {
-        // stream-independent one-shot (frozen features + the calibrated
-        // model written above) — computed while the drain runs (guide
-        // §2.6, see `overlapping`); eager-materialized for reuse (§5)
-        val oneShot = overlapping {
-          LinearModel.scoreAgainstCalibratedModel(
-              TextQueries.classifierFeatures(s, d), prefix)
-            .select("doc_id", "score", "cal_score")
-            .localCheckpoint(true)
-        } {
-          drainStream(s) {
-            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
-              .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
-              .writeStream
-              .option("checkpointLocation", s"$scratch/chk")
-              .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                  bid: Long) =>
-                LinearModel.scoreAgainstCalibratedModel(
-                    TextQueries.classifierFeatureCols(batch.toDF()), prefix)
-                  .select(col("doc_id"), col("score"), col("cal_score"),
-                    lit(bid).as("batch_id"))
-                  .write.mode("append").parquet(resultsDir): Unit)
-          }
-        }
-        val streamed = s.read.parquet(resultsDir).localCheckpoint(true)
-        val served = streamed.drop("batch_id")
-        // one tagged-union aggregation job — same predicate as the old
-        // count + two exceptAll sides (see Parity.multisetEqual)
-        val parity = Parity.multisetEqual(served, oneShot)
-        val batches = streamed.select("batch_id").distinct().count()
-        oneShot
-          .withColumn("serve_ok", lit(parity && batches == 4L))
-          .select(col("doc_id"),
-            round(col("score") + 1e-9, 4).as("score"),
-            round(col("cal_score") + 1e-9, 7).as("cal_score"),
-            col("serve_ok"))
-          .orderBy("doc_id")
-      } finally deleteRecursively(scratch)
+      def score(docs: DataFrame): DataFrame =
+        LinearModel.scoreAgainstCalibratedModel(docs, prefix)
+          .select("doc_id", "score", "cal_score")
+      val (_, oneShot, ok) = servingParity(splitStream(s, d, Docs4),
+          score(TextQueries.classifierFeatures(s, d)).localCheckpoint(true)) {
+        batch => score(TextQueries.classifierFeatureCols(batch))
+      }
+      oneShot
+        .withColumn("serve_ok", lit(ok))
+        .select(col("doc_id"),
+          round(col("score") + 1e-9, 4).as("score"),
+          round(col("cal_score") + 1e-9, 7).as("cal_score"),
+          col("serve_ok"))
+        .orderBy("doc_id")
     }),
 
     // Streamed BLOCKLIST rewrite — the span-rewrite verb's streaming twin
@@ -1209,16 +1029,9 @@ object StreamQueries {
     // pattern set, so the drained union must equal the one-shot pass —
     // the oracle IS the full excision replay (blocklistScrubSql).
     "st_blocklist_parity" -> ((s, d) => {
-      val dd = graft.sources.Tables.load(s, d, "documents")
       val pats = TextQueries.top10BigramBlocklist(s, d)
-      val splitDir = fixtureDir("blk", d, "documents", "docs4")
-      if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-        dd.select("doc_id", "text").repartition(4, col("doc_id"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
-      val stream = s.readStream
-        .schema(s.read.parquet(splitDir.toString).schema)
-        .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
+      val stream = splitStream(s, d,
+        Split("doctext4", "documents", "doc_id", _.select("doc_id", "text")))
       drain(TextQueries.blocklistScrub(stream, pats), "st_blocklist", "append")
         .orderBy("doc_id")
     }),
@@ -1235,40 +1048,30 @@ object StreamQueries {
     // AND exact set parity with the one-shot lifecycle's resolve.
     "st_blocklist_ingest_parity" -> ((s, d) => {
       import graft.operators.Text
+      import s.implicits._
       val finalSet = TextQueries.topBigramBlocklist(s, d, 12).drop(2)
       val prefix = s"blk_st_${ScratchKeys.forPath(d)}"
       Text.Blocklist.drop(s, prefix)
       Text.writeBlocklist(s, prefix, finalSet.take(4))
-      val rest = finalSet.drop(4)
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_blk_")
-      try {
-        import s.implicits._
+      val batches = finalSet.drop(4).grouped(2).toSeq
+      val seen = new java.util.concurrent.atomic.AtomicLong(0L)
+      ScratchKeys.withScratch("graft_stream_blk_") { scratch =>
         val patDir = s"$scratch/pats"
-        val batches = rest.grouped(2).toSeq
         batches.foreach(ps =>
           ps.toDF("pattern").coalesce(1)
             .write.mode("append").parquet(patDir))
-        val seen = new java.util.concurrent.atomic.AtomicLong(0L)
-        drainStream(s) {
-          s.readStream.schema(s.read.parquet(patDir).schema)
-            .option("maxFilesPerTrigger", 1).parquet(patDir)
-            .writeStream
-            .option("checkpointLocation", s"$scratch/chk")
-            .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                _: Long) => {
-              Text.ingestIntoBlocklist(s, prefix,
-                batch.select("pattern").collect().map(_.getString(0)).toSeq)
-              seen.incrementAndGet(): Unit
-            })
+        drainBatches(microBatches(s, patDir)) { (batch, _) =>
+          Text.ingestIntoBlocklist(s, prefix,
+            batch.select("pattern").collect().map(_.getString(0)).toSeq)
+          seen.incrementAndGet(): Unit
         }
-        val resolved = Text.resolveBlocklist(s, prefix)
-        val ok = resolved == finalSet.sorted &&
-          seen.get() == batches.size.toLong
-        TextQueries.blocklistScan(
-            graft.sources.Tables.load(s, d, "documents"), resolved)
-          .withColumn("serve_ok", lit(ok))
-          .orderBy("doc_id")
-      } finally deleteRecursively(scratch)
+      }
+      val resolved = Text.resolveBlocklist(s, prefix)
+      val ok = resolved == finalSet.sorted && seen.get() == batches.size.toLong
+      TextQueries.blocklistScan(
+          graft.sources.Tables.load(s, d, "documents"), resolved)
+        .withColumn("serve_ok", lit(ok))
+        .orderBy("doc_id")
     }),
 
     // Streamed tokenizer serving: the unigram-LM piece model is trained
@@ -1282,74 +1085,33 @@ object StreamQueries {
     // model diverging from the trained pieces hash-mismatches.
     "st_ulm_serving_parity" -> ((s, d) => {
       import graft.operators.Text
-      val docs = graft.sources.Tables.load(s, d, "documents")
-      val splitDir = fixtureDir("ulmserve", d, "documents", "docsall4")
-      if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-        docs.repartition(4, col("doc_id"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
       val prefix = s"ulm_stream_${ScratchKeys.forPath(d)}"
       Text.Ulm.drop(s, prefix)
       val (pieces, _) = TextQueries.ulm2(s, d)
       Text.writeUlmModel(pieces, prefix, maxPieceLen = 4)
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_ulm_")
-      val resultsDir = s"$scratch/results"
-      try {
-        // one-shot side: the serving query's own aggregation through the
-        // same persisted (frozen) model — stream-independent, computed
-        // while the drain runs (guide §2.6, see `overlapping`);
-        // eager-materialized for the parity bool + returned frame (§5)
-        val oneShot = overlapping {
-          val words = docs
-            .select(col("doc_id"),
-              explode(graft.functions.CrossHash.tokens(col("text"))).as("word"))
-            .filter(col("word") =!= "")
-          val enc = Text.encodeAgainstUlmModel(
-              words.select("word").distinct(), "word", prefix)
-            .select("word", "n_pieces").localCheckpoint(true)
-          words.join(enc, "word")
-            .groupBy("doc_id")
-            .agg(count(lit(1)).as("n_words"), sum("n_pieces").as("n_subtoks"))
-            .localCheckpoint(true)
-        } {
-          drainStream(s) {
-            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
-              .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
-              .writeStream
-              .option("checkpointLocation", s"$scratch/chk")
-              .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                  bid: Long) => {
-                val words = batch.toDF()
-                  .select(col("doc_id"),
-                    explode(graft.functions.CrossHash.tokens(col("text"))).as("word"))
-                  .filter(col("word") =!= "")
-                // encode the batch's DISTINCT words once, join back — the
-                // distinct-word serving trick at micro-batch grain
-                val enc = Text.encodeAgainstUlmModel(
-                    words.select("word").distinct(), "word", prefix)
-                  .select("word", "n_pieces").localCheckpoint(true)
-                words.join(enc, "word")
-                  .groupBy("doc_id")
-                  .agg(count(lit(1)).as("n_words"),
-                    sum("n_pieces").as("n_subtoks"))
-                  .withColumn("batch_id", lit(bid))
-                  .write.mode("append").parquet(resultsDir): Unit
-              })
-          }
-        }
-        val streamed = s.read.parquet(resultsDir).localCheckpoint(true)
-        val served = streamed.select("doc_id", "n_words", "n_subtoks")
-        // one tagged-union aggregation job — same predicate as the old
-        // count + two exceptAll sides (see Parity.multisetEqual)
-        val parity = Parity.multisetEqual(served, oneShot)
-        val batches = streamed.select("batch_id").distinct().count()
-        oneShot
-          .withColumn("subtok_ratio",
-            round(col("n_subtoks").cast("double") / col("n_words") + 1e-9, 4))
-          .withColumn("serve_ok", lit(parity && batches == 4L))
-          .select("doc_id", "n_words", "n_subtoks", "subtok_ratio", "serve_ok")
-          .orderBy("doc_id")
-      } finally deleteRecursively(scratch)
+      // per-doc (n_words, n_subtoks) through the persisted model: encode
+      // the DISTINCT words once and join back — the distinct-word serving
+      // trick, at micro-batch grain on the streamed side
+      def encode(docs: DataFrame): DataFrame = {
+        val words = docs
+          .select(col("doc_id"),
+            explode(graft.functions.CrossHash.tokens(col("text"))).as("word"))
+          .filter(col("word") =!= "")
+        val enc = Text.encodeAgainstUlmModel(
+            words.select("word").distinct(), "word", prefix)
+          .select("word", "n_pieces").localCheckpoint(true)
+        words.join(enc, "word")
+          .groupBy("doc_id")
+          .agg(count(lit(1)).as("n_words"), sum("n_pieces").as("n_subtoks"))
+      }
+      val (_, oneShot, ok) = servingParity(splitStream(s, d, Docs4),
+        encode(graft.sources.Tables.load(s, d, "documents")).localCheckpoint(true))(encode)
+      oneShot
+        .withColumn("subtok_ratio",
+          round(col("n_subtoks").cast("double") / col("n_words") + 1e-9, 4))
+        .withColumn("serve_ok", lit(ok))
+        .select("doc_id", "n_words", "n_subtoks", "subtok_ratio", "serve_ok")
+        .orderBy("doc_id")
     }),
 
     // Streamed DoReMi mixture maintenance: the reference models FREEZE
@@ -1363,51 +1125,37 @@ object StreamQueries {
     // pins parity + 4 batches; the oracle replays the whole chain).
     "st_doremi_parity" -> ((s, d) => {
       import graft.operators.{Sampling, Text}
-      val docs = graft.sources.Tables.load(s, d, "documents")
       val toks = graft.functions.CrossHash.tokens(col("text"))
-      val splitDir = fixtureDir("doremi", d, "documents", "docsall4")
-      if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-        docs.repartition(4, col("doc_id"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
       // the frozen reference artifacts are the SHARED bases (prewarmed
       // through SharedFrames), so this query measures the four scoring
       // drains + the MW fold — not the reference-model training that
       // used to land here as first-consumer cost
       val knPrefix = TextQueries.ensureKnBase(s, d)
       val cfStats = TextQueries.unigramCfFrame(s, d)
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_dor_")
-      val resultsDir = s"$scratch/results"
-      try {
+      ScratchKeys.withScratch("graft_stream_dor_") { scratch =>
+        val resultsDir = s"$scratch/results"
         // the one-shot mixture is stream-independent (frozen KN base +
         // unigram stats + corpus) — computed while the drain runs
         // (guide §2.6, see `overlapping`)
         val oneShot = overlapping {
           TextQueries.queries("tx_doremi_weights")(s, d).localCheckpoint(true)
         } {
-          drainStream(s) {
-            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
-              .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
-              .writeStream
-              .option("checkpointLocation", s"$scratch/chk")
-              .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                  bid: Long) => {
-                val b = batch.toDF().localCheckpoint(true)
-                val u = Text.unigramScoreAgainstStats(
-                    Text.unigramTf(b, "doc_id", toks), cfStats)
-                  .select(col("id"), col("nll").as("unll"))
-                val k = Text.scoreAgainstKnModel(b, "doc_id", toks, knPrefix)
-                  .select(col("id"), col("nll").as("knll"))
-                u.join(k, Seq("id"))
-                  .join(b.select(col("doc_id").as("id"),
-                    col("lang").as("domain")), Seq("id"))
-                  .groupBy("domain")
-                  .agg(sum(greatest(col("unll") - col("knll"), lit(0.0))
-                      .cast("decimal(28,14)")).as("sx"),
-                    count(lit(1)).as("n"))
-                  .withColumn("batch_id", lit(bid))
-                  .write.mode("append").parquet(resultsDir): Unit
-              })
+          drainBatches(splitStream(s, d, Docs4)) { (batch, bid) =>
+            val b = batch.localCheckpoint(true)
+            val u = Text.unigramScoreAgainstStats(
+                Text.unigramTf(b, "doc_id", toks), cfStats)
+              .select(col("id"), col("nll").as("unll"))
+            val k = Text.scoreAgainstKnModel(b, "doc_id", toks, knPrefix)
+              .select(col("id"), col("nll").as("knll"))
+            u.join(k, Seq("id"))
+              .join(b.select(col("doc_id").as("id"),
+                col("lang").as("domain")), Seq("id"))
+              .groupBy("domain")
+              .agg(sum(greatest(col("unll") - col("knll"), lit(0.0))
+                  .cast("decimal(28,14)")).as("sx"),
+                count(lit(1)).as("n"))
+              .withColumn("batch_id", lit(bid))
+              .write.mode("append").parquet(resultsDir)
           }
         }
         val partials = s.read.parquet(resultsDir).localCheckpoint(true)
@@ -1429,7 +1177,7 @@ object StreamQueries {
         oneShot
           .withColumn("serve_ok", lit(parity && batches == 4L))
           .orderBy("domain")
-      } finally deleteRecursively(scratch)
+      }
     }),
 
     // Streamed KN-LM serving: the ninth family's streaming twin — the
@@ -1439,112 +1187,45 @@ object StreamQueries {
     // fold, tx_kn_nll's arithmetic). Per-doc scores depend only on the
     // doc's own bigrams + the frozen stats, so the drained scores must
     // equal the one-shot serving pass EXACTLY (serve_ok pins row parity
-    // + 4 batches) and the oracle replays the full corpus chain.
+    // + 4 batches) and the oracle replays the full corpus chain. Scores
+    // against the SHARED persisted full-corpus base (prewarmed through
+    // SharedFrames) — the query measures streamed serving, not the model
+    // build; the shared serving fold is single-flight in SessionMemo, so
+    // the one-shot side's race with batch 0 builds it exactly once.
     "st_kn_serving_parity" -> ((s, d) => {
       import graft.operators.Text
-      val docs = graft.sources.Tables.load(s, d, "documents")
-      val toks = graft.functions.CrossHash.tokens(col("text"))
-      val splitDir = fixtureDir("knserve", d, "documents", "docsall4")
-      if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-        docs.repartition(4, col("doc_id"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
-      // scores against the SHARED persisted full-corpus base (prewarmed
-      // through SharedFrames) — the query measures streamed serving, not
-      // the model build
       val prefix = TextQueries.ensureKnBase(s, d)
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_kn_")
-      val resultsDir = s"$scratch/results"
-      try {
-        // stream-independent one-shot scoring against the frozen persisted
-        // base — computed while the drain runs (guide §2.6, see
-        // `overlapping`; the shared serving fold is single-flight in
-        // SessionMemo, so the race with batch 0 builds it exactly once)
-        val oneShot = overlapping {
-          Text.scoreAgainstKnModel(docs, "doc_id", toks, prefix)
-            .withColumnRenamed("id", "doc_id").localCheckpoint(true)
-        } {
-          drainStream(s) {
-            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
-              .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
-              .writeStream
-              .option("checkpointLocation", s"$scratch/chk")
-              .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                  bid: Long) => {
-                Text.scoreAgainstKnModel(batch.toDF(), "doc_id", toks, prefix)
-                  .withColumnRenamed("id", "doc_id")
-                  .withColumn("batch_id", lit(bid))
-                  .write.mode("append").parquet(resultsDir): Unit
-              })
-          }
-        }
-        val streamed = s.read.parquet(resultsDir).localCheckpoint(true)
-        val served = streamed.select("doc_id", "n_bigrams", "n_oov", "nll")
-        // one tagged-union aggregation job — same predicate as the old
-        // count + two exceptAll sides (see Parity.multisetEqual)
-        val parity = Parity.multisetEqual(served, oneShot)
-        val batches = streamed.select("batch_id").distinct().count()
-        oneShot
-          .withColumn("serve_ok", lit(parity && batches == 4L))
-          .select("doc_id", "n_bigrams", "n_oov", "nll", "serve_ok")
-          .orderBy("doc_id")
-      } finally deleteRecursively(scratch)
+      def score(docs: DataFrame): DataFrame = Text.scoreAgainstKnModel(
+        docs, "doc_id", graft.functions.CrossHash.tokens(col("text")), prefix)
+        .withColumnRenamed("id", "doc_id")
+      val (_, oneShot, ok) = servingParity(splitStream(s, d, Docs4),
+        score(graft.sources.Tables.load(s, d, "documents")).localCheckpoint(true))(score)
+      oneShot
+        .withColumn("serve_ok", lit(ok))
+        .select("doc_id", "n_bigrams", "n_oov", "nll", "serve_ok")
+        .orderBy("doc_id")
     }),
 
     // Streamed TRIGRAM KN-LM serving — the tenth family's streaming twin
-    // (st_kn_serving_parity one order up): the corpus streams in four
-    // micro-batches, each scored in foreachBatch against the SHARED
-    // persisted trigram base (generation-resolved fold, tx_kn3_nll's
-    // arithmetic). Per-doc scores depend only on the doc's own trigrams
-    // + the frozen stats, so the drained scores must equal the one-shot
-    // serving pass EXACTLY (serve_ok pins row parity + 4 batches) and
-    // the oracle replays the full corpus chain.
+    // (st_kn_serving_parity one order up, over the same split): each
+    // micro-batch is scored in foreachBatch against the SHARED persisted
+    // trigram base (generation-resolved fold, tx_kn3_nll's arithmetic).
+    // Per-doc scores depend only on the doc's own trigrams + the frozen
+    // stats, so the drained scores must equal the one-shot serving pass
+    // EXACTLY (serve_ok pins row parity + 4 batches) and the oracle
+    // replays the full corpus chain.
     "st_kn3_serving_parity" -> ((s, d) => {
       import graft.operators.Text
-      val docs = graft.sources.Tables.load(s, d, "documents")
-      val toks = graft.functions.CrossHash.tokens(col("text"))
-      val splitDir = fixtureDir("kn3serve", d, "documents", "docsall4")
-      if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-        docs.repartition(4, col("doc_id"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
       val prefix = TextQueries.ensureKn3Base(s, d)
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_kn3_")
-      val resultsDir = s"$scratch/results"
-      try {
-        // stream-independent one-shot scoring against the frozen persisted
-        // base — computed while the drain runs (guide §2.6, see
-        // `overlapping`; the shared serving fold is single-flight in
-        // SessionMemo, so the race with batch 0 builds it exactly once)
-        val oneShot = overlapping {
-          Text.scoreAgainstKn3Model(docs, "doc_id", toks, prefix)
-            .withColumnRenamed("id", "doc_id").localCheckpoint(true)
-        } {
-          drainStream(s) {
-            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
-              .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
-              .writeStream
-              .option("checkpointLocation", s"$scratch/chk")
-              .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                  bid: Long) => {
-                Text.scoreAgainstKn3Model(batch.toDF(), "doc_id", toks, prefix)
-                  .withColumnRenamed("id", "doc_id")
-                  .withColumn("batch_id", lit(bid))
-                  .write.mode("append").parquet(resultsDir): Unit
-              })
-          }
-        }
-        val streamed = s.read.parquet(resultsDir).localCheckpoint(true)
-        val served = streamed.select("doc_id", "n_trigrams", "n_oov", "nll")
-        // one tagged-union aggregation job — same predicate as the old
-        // count + two exceptAll sides (see Parity.multisetEqual)
-        val parity = Parity.multisetEqual(served, oneShot)
-        val batches = streamed.select("batch_id").distinct().count()
-        oneShot
-          .withColumn("serve_ok", lit(parity && batches == 4L))
-          .select("doc_id", "n_trigrams", "n_oov", "nll", "serve_ok")
-          .orderBy("doc_id")
-      } finally deleteRecursively(scratch)
+      def score(docs: DataFrame): DataFrame = Text.scoreAgainstKn3Model(
+        docs, "doc_id", graft.functions.CrossHash.tokens(col("text")), prefix)
+        .withColumnRenamed("id", "doc_id")
+      val (_, oneShot, ok) = servingParity(splitStream(s, d, Docs4),
+        score(graft.sources.Tables.load(s, d, "documents")).localCheckpoint(true))(score)
+      oneShot
+        .withColumn("serve_ok", lit(ok))
+        .select("doc_id", "n_trigrams", "n_oov", "nll", "serve_ok")
+        .orderBy("doc_id")
     }),
 
     // Streamed IVF-PQ index maintenance: st_ann_index_parity extended to
@@ -1557,42 +1238,26 @@ object StreamQueries {
     "st_ivfpq_index_parity" -> ((s, d) => {
       import graft.operators.Similarity
       val e = graft.sources.Tables.load(s, d, "embeddings")
-      // the same 4-file split fixture st_ann_index_parity streams
-      val splitDir = fixtureDir("ann", d, "embeddings", "emb4")
-      if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-        e.filter(col("vec_id") % 10 === 0)
-          .repartition(4, col("vec_id"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
       val prefix = s"ivfpq_stream_${ScratchKeys.forPath(d)}"
       Similarity.IvfPq.drop(s, prefix)
       Similarity.writeIvfPqIndex(e.filter(col("vec_id") % 10 =!= 0),
         "vec_id", "embedding", prefix,
         buckets = 8, nlist = 16, nlistIters = 3, m = 16, ks = 16, iters = 2,
         assign = SimilarityQueries.IvfAssign)
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_ivfpq_")
       // corpus count + brute-force reference are stream-independent —
       // computed while the drain runs (guide §2.6, see `overlapping`)
-      val (eN, brute) = try {
-        overlapping {
-          (e.count(),
-            Similarity.bruteForceTopK(
-                e.filter(col("vec_id") % 50 === 0), e, "vec_id", "embedding", k = 3)
-              .localCheckpoint(true))
-        } {
-          drainStream(s) {
-            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
-              .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
-              .writeStream
-              .option("checkpointLocation", s"$scratch/chk")
-              .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                  bid: Long) =>
-                // production append body: batchId-keyed exactly-once
-                Similarity.exactlyOnceAppendToIvfPqIndex(
-                  batch.toDF(), prefix, "vec_id", "embedding", bid): Unit)
-          }
+      val (eN, brute) = overlapping {
+        (e.count(),
+          Similarity.bruteForceTopK(
+              e.filter(col("vec_id") % 50 === 0), e, "vec_id", "embedding", k = 3)
+            .localCheckpoint(true))
+      } {
+        // the same split st_ann_index_parity streams
+        drainBatches(splitStream(s, d, DayVecs4)) { (batch, bid) =>
+          // production append body: batchId-keyed exactly-once
+          Similarity.exactlyOnceAppendToIvfPqIndex(batch, prefix, "vec_id", "embedding", bid): Unit
         }
-      } finally deleteRecursively(scratch)
+      }
       val grown = Similarity.ivfPqTopKAgainstIndex(
           e.filter(col("vec_id") % 50 === 0), prefix, "vec_id", "embedding",
           k = 3, nprobe = SimilarityQueries.IvfNprobe, shortlist = 128)
@@ -1604,14 +1269,80 @@ object StreamQueries {
         .agg(count(lit(1)).as("n"), countDistinct(col("neighbor_id")).as("nd")).head()
       val complete =
         cs.getLong(0) == SimilarityQueries.IvfAssign * eN && cs.getLong(1) == eN
-      val all = org.apache.spark.sql.expressions.Window.partitionBy(lit(1))
       brute.join(grown, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivfpq_recall_ok",
-          (sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
-            / count(lit(1)).over(all)) >= SimilarityQueries.IvfPqRecallFloor)
+        .withColumn("ivfpq_recall_ok", Parity.recallAtLeast(SimilarityQueries.IvfPqRecallFloor))
         .withColumn("index_ok", lit(complete))
         .select("query_id", "rank", "neighbor_id", "cos", "ivfpq_recall_ok", "index_ok")
         .orderBy("query_id", "rank")
+    }),
+
+    // Streaming retrieval ingest — the inverted-index family's twin: the
+    // base index serves 90% of the corpus, the remaining tenth arrives as
+    // four micro-batches whose foreachBatch body is the production
+    // exactly-once ingest (batchId-keyed ledger). The post-drain BM25
+    // probe must equal the one-shot full-corpus Text.bm25 oracle
+    // verbatim — a lost batch shifts n_docs/avgdl/df, a duplicated one
+    // doubles a tf — and the certificate additionally pins the index's
+    // stats-vs-corpus totals.
+    "st_text_index_parity" -> ((s, d) => {
+      import graft.functions.CrossHash
+      import graft.operators.TextIndex
+      val docs = graft.sources.Tables.load(s, d, "documents")
+      val tk = CrossHash.tokens(col("text"))
+      val prefix = s"ti_stream_index_${ScratchKeys.forPath(d)}"
+      TextIndex.Family.drop(s, prefix)
+      TextIndex.writeTextIndex(
+        docs.filter(col("doc_id") % 10 =!= 0), "doc_id", tk, prefix, buckets = 8)
+      // the certificate's corpus count is stream-independent — computed
+      // while the drain runs (guide §2.6, see `overlapping`)
+      val nAll = overlapping(docs.count()) {
+        drainBatches(splitStream(s, d, DayDocs4)) { (batch, bid) =>
+          TextIndex.exactlyOnceIngestIntoTextIndex(batch, "doc_id",
+            CrossHash.tokens(col("text")), prefix, bid): Unit
+        }
+      }
+      val statsN = s.table(s"${prefix}_stats")
+        .agg(coalesce(sum("n_docs"), lit(0L))).head().getLong(0)
+      val lensN = s.table(s"${prefix}_doclens").count()
+      TextIndex.bm25AgainstIndex(s, prefix, TextQueries.BmQueryTerms, 20)
+        .select(col("id").as("doc_id"), col("dl"), col("bm25"))
+        .withColumn("index_ok", lit(statsN == nAll && lensN == nAll))
+    }),
+
+    // Streaming DSIR model maintenance: the selection model's bin counts
+    // and per-doc term counts are ADDITIVE partials, so each micro-batch
+    // appends its own aggregation and day-close scoring re-sums — the
+    // drained top-50 must equal the one-shot tx_dsir_sample replay
+    // exactly, and the certificate pins the accumulated model's token
+    // total against the corpus (a lost or doubled batch breaks both).
+    "st_dsir_parity" -> ((s, d) => {
+      import graft.functions.CrossHash
+      import graft.operators.Text
+      val docs = graft.sources.Tables.load(s, d, "documents")
+      val binsT = s"dsir_bins_${ScratchKeys.forPath(d)}"
+      val dtfT = s"dsir_dtf_${ScratchKeys.forPath(d)}"
+      Seq(binsT, dtfT).foreach(graft.sources.Sinks.dropManagedTable(s, _))
+      // the certificate's corpus token total is stream-independent —
+      // computed while the drain runs (guide §2.6, see `overlapping`)
+      val totTok = overlapping {
+        docs.select(explode(CrossHash.tokens(col("text")))).count()
+      } {
+        drainBatches(splitStream(s, d, Docs4)) { (batch, _) =>
+          val (bp, dp) = Text.dsirPartials(batch, "doc_id",
+            CrossHash.tokens(col("text")), col("lang") === "en")
+          bp.write.mode(org.apache.spark.sql.SaveMode.Append)
+            .format("parquet").saveAsTable(binsT)
+          dp.write.mode(org.apache.spark.sql.SaveMode.Append)
+            .format("parquet").saveAsTable(dtfT)
+        }
+      }
+      val crSum = s.table(binsT)
+        .agg(coalesce(sum("cr"), lit(0L))).head().getLong(0)
+      Text.dsirWeightsFromPartials(s.table(binsT), s.table(dtfT))
+        .withColumnRenamed("id", "doc_id")
+        .orderBy(col("dsir_w").desc, col("doc_id"))
+        .limit(50)
+        .withColumn("model_ok", lit(crSum == totTok))
     }),
 
     // Streaming ingest through the PERSISTED gram index — the substring
@@ -1631,158 +1362,42 @@ object StreamQueries {
     // sum(n_docs) over the index must equal the independently recomputed
     // distinct (doc, gram) count over ALL documents — a dropped or
     // double-appended batch flips index_ok.
-    // Streaming retrieval ingest — the inverted-index family's twin: the
-    // base index serves 90% of the corpus, the remaining tenth arrives as
-    // four micro-batches whose foreachBatch body is the production
-    // exactly-once ingest (batchId-keyed ledger). The post-drain BM25
-    // probe must equal the one-shot full-corpus Text.bm25 oracle
-    // verbatim — a lost batch shifts n_docs/avgdl/df, a duplicated one
-    // doubles a tf — and the certificate additionally pins the index's
-    // stats-vs-corpus totals.
-    "st_text_index_parity" -> ((s, d) => {
-      import graft.functions.CrossHash
-      import graft.operators.TextIndex
-      val docs = graft.sources.Tables.load(s, d, "documents")
-      val tk = CrossHash.tokens(col("text"))
-      val splitDir = fixtureDir("ti", d, "documents", "docs4")
-      if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-        docs.filter(col("doc_id") % 10 === 0)
-          .repartition(4, col("doc_id"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
-      val prefix = s"ti_stream_index_${ScratchKeys.forPath(d)}"
-      TextIndex.Family.drop(s, prefix)
-      TextIndex.writeTextIndex(
-        docs.filter(col("doc_id") % 10 =!= 0), "doc_id", tk, prefix, buckets = 8)
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_ti_")
-      // the certificate's corpus count is stream-independent — computed
-      // while the drain runs (guide §2.6, see `overlapping`)
-      val nAll = try {
-        overlapping(docs.count()) {
-          drainStream(s) {
-            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
-              .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
-              .writeStream
-              .option("checkpointLocation", s"$scratch/chk")
-              .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                  bid: Long) =>
-                TextIndex.exactlyOnceIngestIntoTextIndex(batch.toDF(), "doc_id",
-                  CrossHash.tokens(col("text")), prefix, bid): Unit)
-          }
-        }
-      } finally deleteRecursively(scratch)
-      val statsN = s.table(s"${prefix}_stats")
-        .agg(coalesce(sum("n_docs"), lit(0L))).head().getLong(0)
-      val lensN = s.table(s"${prefix}_doclens").count()
-      TextIndex.bm25AgainstIndex(s, prefix, TextQueries.BmQueryTerms, 20)
-        .select(col("id").as("doc_id"), col("dl"), col("bm25"))
-        .withColumn("index_ok", lit(statsN == nAll && lensN == nAll))
-    }),
-
-    // Streaming DSIR model maintenance: the selection model's bin counts
-    // and per-doc term counts are ADDITIVE partials, so each micro-batch
-    // appends its own aggregation and day-close scoring re-sums — the
-    // drained top-50 must equal the one-shot tx_dsir_sample replay
-    // exactly, and the certificate pins the accumulated model's token
-    // total against the corpus (a lost or doubled batch breaks both).
-    "st_dsir_parity" -> ((s, d) => {
-      import graft.functions.CrossHash
-      import graft.operators.Text
-      val docs = graft.sources.Tables.load(s, d, "documents")
-      val splitDir = fixtureDir("dsir", d, "documents", "all4")
-      if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-        docs.repartition(4, col("doc_id"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
-      val binsT = s"dsir_bins_${ScratchKeys.forPath(d)}"
-      val dtfT = s"dsir_dtf_${ScratchKeys.forPath(d)}"
-      Seq(binsT, dtfT).foreach(graft.sources.Sinks.dropManagedTable(s, _))
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_dsir_")
-      // the certificate's corpus token total is stream-independent —
-      // computed while the drain runs (guide §2.6, see `overlapping`)
-      val totTok = try {
-        overlapping {
-          docs.select(explode(CrossHash.tokens(col("text")))).count()
-        } {
-          drainStream(s) {
-            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
-              .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
-              .writeStream
-              .option("checkpointLocation", s"$scratch/chk")
-              .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                  _: Long) => {
-                val (bp, dp) = Text.dsirPartials(batch.toDF(), "doc_id",
-                  CrossHash.tokens(col("text")), col("lang") === "en")
-                bp.write.mode(org.apache.spark.sql.SaveMode.Append)
-                  .format("parquet").saveAsTable(binsT)
-                dp.write.mode(org.apache.spark.sql.SaveMode.Append)
-                  .format("parquet").saveAsTable(dtfT)
-              })
-          }
-        }
-      } finally deleteRecursively(scratch)
-      val crSum = s.table(binsT)
-        .agg(coalesce(sum("cr"), lit(0L))).head().getLong(0)
-      Text.dsirWeightsFromPartials(s.table(binsT), s.table(dtfT))
-        .withColumnRenamed("id", "doc_id")
-        .orderBy(col("dsir_w").desc, col("doc_id"))
-        .limit(50)
-        .withColumn("model_ok", lit(crSum == totTok))
-    }),
-
     "st_gram_index_parity" -> ((s, d) => {
       import graft.functions.CrossHash
       import graft.operators.Dedup
       val docs = graft.sources.Tables.load(s, d, "documents")
-      val splitDir = fixtureDir("gram", d, "documents", "docs4")
-      if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-        docs.filter(col("doc_id") % 10 === 0)
-          .repartition(4, col("doc_id"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
+      val dayDir = splitDir(s, d, DayDocs4)
       val prefix = s"gram_stream_index_${ScratchKeys.forPath(d)}"
       Dedup.Grams.drop(s, prefix)
       Dedup.writeGramIndex(
         docs.filter(col("doc_id") % 10 =!= 0), "doc_id",
         CrossHash.tokens(col("text")), n = 5, prefix, buckets = 8)
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_gram_")
       // the certificate's expected distinct (doc, gram) count is a pure
       // corpus aggregation, stream-independent — computed while the drain
       // runs (guide §2.6, see `overlapping`)
-      val expected = try {
-        overlapping {
-          docs
-            .select(col("doc_id"), explode(array_distinct(
-              CrossHash.wordShingles(CrossHash.tokens(col("text")), 5))).as("g"))
-            .count()
-        } {
-          drainStream(s) {
-            s.readStream.schema(s.read.parquet(splitDir.toString).schema)
-              .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
-              .writeStream
-              .option("checkpointLocation", s"$scratch/chk")
-              .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                  bid: Long) =>
-                // production ingest body: batchId-keyed exactly-once
-                Dedup.exactlyOnceIngestIntoGramIndex(batch.toDF(), "doc_id",
-                  CrossHash.tokens(col("text")), prefix, bid): Unit)
-          }
+      val expected = overlapping {
+        docs
+          .select(col("doc_id"), explode(array_distinct(
+            CrossHash.wordShingles(CrossHash.tokens(col("text")), 5))).as("g"))
+          .count()
+      } {
+        drainBatches(microBatches(s, dayDir)) { (batch, bid) =>
+          // production ingest body: batchId-keyed exactly-once
+          Dedup.exactlyOnceIngestIntoGramIndex(batch, "doc_id",
+            CrossHash.tokens(col("text")), prefix, bid): Unit
         }
-      } finally deleteRecursively(scratch)
+      }
       // resolution-safe: a retried batch's scrub advances a generation
       val dfSum = s.table(s"${graft.sources.Sinks.activeTablePrefix(s, prefix)}_grams")
         .agg(sum("n_docs")).head().getLong(0)
       Dedup.dupSpansAtDayClose(
-          s.read.parquet(splitDir.toString), "doc_id",
+          s.read.parquet(dayDir), "doc_id",
           CrossHash.tokens(col("text")), prefix, minRun = 2)
         .withColumnRenamed("id", "doc_id")
         .withColumn("index_ok", lit(dfSum == expected))
         .orderBy("doc_id", "start_pos")
     }),
 
-    // Streaming dedup (dropDuplicatesWithinWatermark on event_id) drained
-    // to a sink, then audited: per-type row and distinct-id counts must
-    // equal the batch table's (event ids are unique, so dedup is an
     // Streaming multimodal codec — the codec tier's streaming twin: the
     // document ids arrive as four micro-batches and the REAL
     // synthesize→decode pipeline (javax.imageio PNG encode + decode in
@@ -1794,15 +1409,8 @@ object StreamQueries {
     // execution, batch splits lose no clips and duplicate none.
     "st_mm_features_parity" -> ((s, d) => {
       import graft.operators.Multimodal
-      val docs = graft.sources.Tables.load(s, d, "documents")
-      val splitDir = fixtureDir("mmids", d, "documents", "ids4")
-      if (!fixtureReady(splitDir)) buildFixture(splitDir) { (out, _) =>
-        docs.select("doc_id").repartition(4, col("doc_id"))
-          .write.mode("overwrite").parquet(out.toString)
-      }
-      val stream = s.readStream
-        .schema(s.read.parquet(splitDir.toString).schema)
-        .option("maxFilesPerTrigger", 1).parquet(splitDir.toString)
+      val stream = splitStream(s, d,
+        Split("docids4", "documents", "doc_id", _.select("doc_id")))
       val feats = Multimodal.decodeImageFeatures(
           Multimodal.synthesizePng(stream, "doc_id"))
         .select(col("asset_id"), col("width"), col("height"),
@@ -1812,6 +1420,9 @@ object StreamQueries {
       drain(feats, "st_mm_features", "append").orderBy("asset_id")
     }),
 
+    // Streaming dedup (dropDuplicatesWithinWatermark on event_id) drained
+    // to a sink, then audited: per-type row and distinct-id counts must
+    // equal the batch table's (event ids are unique, so dedup is an
     // identity pass — the assertion is that streaming state dropped
     // nothing and duplicated nothing).
     "st_dedup_parity" -> ((s, d) => {
@@ -1824,14 +1435,6 @@ object StreamQueries {
         .orderBy("event_type")
     }),
 
-    // The deployment-shaped drain: append-mode PARQUET file sink with a
-    // checkpointLocation — exactly-once landing via the checkpoint's source
-    // offsets + the sink's _spark_metadata file manifest (restart/resume
-    // semantics are pinned in StreamingSpec). The parity check aggregates
-    // the LANDED FILES, read back like any downstream batch consumer, and
-    // must equal the batch twin over the same parquet. Fresh scratch dirs
-    // per invocation (removed after the result is materialized) keep the
-    // query self-contained and idempotent across suite runs.
     // Arbitrary stateful processing through the Spark 4 transformWithState
     // API (typed ValueState on a RocksDB store — the state backend a
     // 100 TB deployment runs): per-user running totals over the FOUR-batch
@@ -1846,17 +1449,8 @@ object StreamQueries {
           expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
         .as[(Long, Long)]
       val out = EventStreams.runningTotals(pairs).toDF()
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val drained =
-        try drain(out, "st_tws_totals", "update")
-        finally prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
-        }
-      drained.groupBy("user_id")
+      drain(out, "st_tws_totals", "update", RocksDbState)
+        .groupBy("user_id")
         .agg(max("n_events").as("n_events"),
           max_by(col("sum_cents"), col("n_events")).as("sum_cents"))
         .select(col("user_id"), col("n_events"),
@@ -1884,17 +1478,8 @@ object StreamQueries {
         .select(col("user_id"), expr(centsExpr).as("cents"))
         .as[(Long, Long)]
       val out = EventStreams.bootstrappedTotals(pairs, initial).toDF()
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val drained =
-        try drain(out, "st_tws_bootstrap", "update")
-        finally prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
-        }
-      drained.groupBy("user_id")
+      drain(out, "st_tws_bootstrap", "update", RocksDbState)
+        .groupBy("user_id")
         .agg(max("n_events").as("n_events"),
           max_by(col("sum_cents"), col("n_events")).as("sum_cents"))
         .select(col("user_id"), col("n_events"),
@@ -1944,27 +1529,32 @@ object StreamQueries {
         .orderBy("day_start", "event_type")
     }),
 
-    "st_file_sink_parity" -> ((s, d) => {
-      val scratch = java.nio.file.Files.createTempDirectory("graft_file_sink_")
-      try {
-        val out = s"$scratch/out"
-        val stream = eventsStream(s, d)
-          .select("event_id", "ts", "user_id", "event_type", "value")
-        drainStream(s) {
-          stream.writeStream
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", s"$scratch/chk")
-            .outputMode("append")
-        }
-        s.read.parquet(out)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"),
-            countDistinct(col("event_id")).as("n_ids"),
-            round(sum("value"), 2).as("sum_value"))
-          .orderBy("event_type")
-          .localCheckpoint(true)
-      } finally deleteRecursively(scratch)
+    // The deployment-shaped drain: append-mode PARQUET file sink with a
+    // checkpointLocation — exactly-once landing via the checkpoint's source
+    // offsets + the sink's _spark_metadata file manifest (restart/resume
+    // semantics are pinned in StreamingSpec). The parity check aggregates
+    // the LANDED FILES, read back like any downstream batch consumer, and
+    // must equal the batch twin over the same parquet. Fresh scratch dirs
+    // per invocation (removed after the result is materialized) keep the
+    // query self-contained and idempotent across suite runs.
+    "st_file_sink_parity" -> ((s, d) => ScratchKeys.withScratch("graft_file_sink_") { scratch =>
+      val out = s"$scratch/out"
+      val stream = eventsStream(s, d)
+        .select("event_id", "ts", "user_id", "event_type", "value")
+      drainStream(s) {
+        stream.writeStream
+          .format("parquet")
+          .option("path", out)
+          .option("checkpointLocation", s"$scratch/chk")
+          .outputMode("append")
+      }
+      s.read.parquet(out)
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          countDistinct(col("event_id")).as("n_ids"),
+          round(sum("value"), 2).as("sum_value"))
+        .orderBy("event_type")
+        .localCheckpoint(true)
     })
   )
 

@@ -1724,9 +1724,8 @@ object TextQueries {
       val emitRows = cur.select(col("doc_id"), col("lang"),
           md5(Text.piiScrub(col("text"))).as("curated_fp"))
         .join(nTok, Seq("doc_id"))
-      val scratch =
-        java.nio.file.Files.createTempDirectory("graft_emit_").toString
-      try {
+      ScratchKeys.withScratch("graft_emit_") { dir =>
+        val scratch = dir.toString
         graft.sources.Sinks.writeTrainingShards(
           emitRows, "doc_id", scratch, nShards = 8, salt = "emit_v1")
         val ctx = 512
@@ -1750,8 +1749,7 @@ object TextQueries {
           .orderBy("shard")
           // materialize before the scratch dir disappears
           .localCheckpoint(true)
-      } finally StreamQueries.deleteRecursively(
-        java.nio.file.Paths.get(scratch))
+      }
     }),
 
     // The FULL curation funnel (r14 verdict #4) — d_curate_ccnet's gates

@@ -714,12 +714,9 @@ object Sinks {
         //  - AQE's local shuffle reader must not rewrite the exchange
         //    into mapper-local mixed-bucket chunks when the repartition
         //    DOES survive (a `rewrite` hook that reshuffles).
-        val pinned = Map(
-          "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false",
-          "spark.sql.adaptive.localShuffleReader.enabled" -> "false")
-        val prev = pinned.keys.map(k => k -> spark.conf.getOption(k)).toMap
-        pinned.foreach { case (k, v) => spark.conf.set(k, v) }
-        try {
+        graft.GraftSession.withConf(spark,
+            "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false",
+            "spark.sql.adaptive.localShuffleReader.enabled" -> "false") {
           val cols = s.bucketColumnNames.map(col)
           val w = ordered(rows).repartition(s.numBuckets, cols: _*)
             .write.mode(SaveMode.Overwrite)
@@ -727,9 +724,6 @@ object Sinks {
           val ws = if (s.sortColumnNames.nonEmpty)
             w.sortBy(s.sortColumnNames.head, s.sortColumnNames.tail: _*) else w
           ws.format("parquet").saveAsTable(stage)
-        } finally prev.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
         }
       case None =>
         ordered(rows).repartition(outputFileCount(parquetFiles(spark, table), CompactFileBytes))

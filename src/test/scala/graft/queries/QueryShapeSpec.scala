@@ -79,6 +79,53 @@ class QueryShapeSpec extends SparkSpec {
     assert(total > onTime, "at least one straggler must merge into a live window")
   }
 
+  test("stream settings reach the drained batches, not the caller's session") {
+    val partitions = "spark.sql.shuffle.partitions"
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val dir = java.nio.file.Files.createTempDirectory("graft_conf_spec").resolve("in").toString
+    spark.range(40).repartition(4).write.parquet(dir)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Option[String]]]()
+    val before = spark.conf.getOption(noData)
+    val wasSet = spark.conf.getAll.contains(noData)
+    try graft.GraftSession.withConf(spark, partitions -> "3") {
+      StreamQueries.drainBatches(StreamQueries.microBatches(spark, dir)) { (batch, _) =>
+        seen.add(Seq(batch.sparkSession.conf.getOption(partitions),
+          spark.conf.getOption(partitions),
+          batch.sparkSession.conf.getOption(noData),
+          spark.conf.getOption(noData)))
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir).getParentFile)
+    import scala.jdk.CollectionConverters._
+    assert(seen.size == 4, "one micro-batch per input file")
+    seen.asScala.foreach(r => assert(r == Seq(Some("8"), Some("3"), Some("false"), before),
+      s"(batch, caller) partitions then (batch, caller) no-data flag: $r"))
+    assert(spark.conf.getAll.contains(noData) == wasSet && spark.conf.getOption(noData) == before,
+      "the caller's settings are as before the drain, and an unset key stays unset")
+  }
+
+  test("stream tier: serving and index-ingest parities certify; the KN servings share one split") {
+    // a fresh data dir (links to the same tables) keys fresh fixture dirs,
+    // so the ones these queries stream from can be counted
+    val d = java.nio.file.Files.createTempDirectory("graft_st_data")
+    new java.io.File(sf).listFiles().filter(_.getName.endsWith(".parquet")).foreach(f =>
+      java.nio.file.Files.createSymbolicLink(d.resolve(f.getName), f.toPath.toAbsolutePath))
+    val key = ScratchKeys.forPath(d.toString)
+    def fixtures(): Seq[java.io.File] = new java.io.File(sys.props("java.io.tmpdir"))
+      .listFiles().toSeq.filter(f => f.getName.startsWith("graft_stream_") && f.getName.contains(key))
+    try {
+      Seq("st_kn_serving_parity", "st_kn3_serving_parity", "st_text_index_parity").foreach { q =>
+        val out = StreamQueries.queries(q)(spark, d.toString).localCheckpoint(true)
+        val oks = out.columns.filter(_.endsWith("_ok"))
+        assert(out.count() > 0 && oks.nonEmpty, s"$q emits certified rows")
+        oks.foreach(c => assert(out.filter(!coalesce(col(c), lit(false))).isEmpty, s"$q: $c"))
+        if (q == "st_kn3_serving_parity") {
+          val dirs = fixtures().map(_.getName)
+          assert(dirs.size == 1, s"both KN servings stream one four-file split: $dirs")
+        }
+      }
+    } finally (fixtures() :+ d.toFile).foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+  }
+
   test("k11_xml_roundtrip: XML metacharacters survive write+read") {
     val out = ParityQueries.queries("k11_xml_roundtrip")(spark, sf)
     val probes = out.select("xml_probe").collect().map(_.getString(0))
