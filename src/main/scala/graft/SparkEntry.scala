@@ -60,7 +60,8 @@ object SparkEntry {
     * (`certs` is expanded by Verify to this set; results go in the
     * round's BASELINE.md note.) Membership: every query emitting a
     * `*_ok` certificate column, the approx-sketch queries, and all
-    * `st_*` parities — asserted non-drifting in SparkEntrySpec.
+    * `st_*` parities — asserted non-drifting in QueryShapeSpec
+    * ("certificateQueries: the sf0.1 re-proof subset names real queries").
     */
   val certificateQueries: Set[String] =
     Set(

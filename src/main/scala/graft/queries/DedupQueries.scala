@@ -55,19 +55,10 @@ object DedupQueries {
     * `SimilarityQueries.ensureIvfBase`). Built once per (session,
     * corpus); [[SharedFrames]] pre-builds it in Bench.
     */
-  private[queries] def ensureMinhashBase(s: SparkSession, d: String): String = {
-    val prefix = s"mh_base_${ScratchKeys.forPath(d)}"
-    SessionMemo.ensure(s, s"mh_base:$d") {
-      Dedup.Minhash.drop(s, prefix)
-      Dedup.writeMinhashIndex(
-        minhashSigsFrame(s, d).filter(col("id") % 10 =!= 0), prefix,
-        buckets = 8, k = 16, bands = 4)
-    }
-    prefix
-  }
-
-  private[queries] def minhashBaseFrame(s: SparkSession, d: String): DataFrame =
-    s.table(s"${ensureMinhashBase(s, d)}_meta")
+  private[queries] def ensureMinhashBase(s: SparkSession, d: String): String =
+    Dedup.Minhash.buildOnce(s, s"mh_base_${ScratchKeys.forPath(d)}")(
+      Dedup.writeMinhashIndex(minhashSigsFrame(s, d).filter(col("id") % 10 =!= 0), _,
+        buckets = 8, k = 16, bands = 4))
 
   /** Shared duplicate-span frame (word-5-grams, minDocs=2, minRun=2):
     * `d_dup_spans` reports it and `d_dup_spans_removed` excises it — the
@@ -531,13 +522,11 @@ object DedupQueries {
             edges, k = 3,
             tablePrefix = SimilarityQueries.ensureIvfBase(s, d),
             nprobe = SimilarityQueries.IvfNprobe)
-          .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
+          .select("query_id", "neighbor_id")
           .localCheckpoint(true)
       }
-      brute.join(mined, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("mine_recall_ok", Parity.recallAtLeast(SimilarityQueries.HardNegRecallFloor))
-        .select("query_id", "rank", "neighbor_id", "cos", "mine_recall_ok")
-        .orderBy("query_id", "rank")
+      Parity.recallCertificate(brute, mined, "mine_recall_ok",
+        SimilarityQueries.HardNegRecallFloor)()
     }),
 
     // End-to-end corpus curation — the daily training-data pipeline as ONE

@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
   * and neither supports map-typed columns.
   *
   * Also the one recall-floor certificate every approximate-retrieval
-  * query emits ([[recallAtLeast]]).
+  * query emits ([[recallAtLeast]]), and the whole ANN recall certificate
+  * built on it ([[recallCertificate]]).
   */
 private[queries] object Parity {
 
@@ -45,5 +46,31 @@ private[queries] object Parity {
     val all = Window.partitionBy(lit(1))
     (sum(coalesce(col("hit"), lit(0))).over(all).cast("double")
       / count(lit(1)).over(all)) >= floor
+  }
+
+  /** The `keys` of the served rows, each carrying `hit` = 1: the right
+    * side of a reference's left join for [[recallAtLeast]]. The keys must
+    * be unique, or a reference row joins more than once.
+    */
+  def hits(served: DataFrame, keys: String*): DataFrame =
+    served.select(keys.map(col) :+ lit(1).as("hit"): _*)
+
+  /** The ANN recall certificate: the exact `reference` rows (`query_id,
+    * rank, neighbor_id, cos`) with `ok` = [[recallAtLeast]]`(floor)` over
+    * the served `(query_id, neighbor_id)` pairs, AND `alsoOk` (a lifecycle
+    * check folded into the recall column), then one constant column per
+    * `extras` certificate, ordered by `(query_id, rank)`.
+    */
+  def recallCertificate(reference: DataFrame, served: DataFrame, ok: String,
+      floor: Double, alsoOk: Boolean = true)(extras: (String, Boolean)*): DataFrame = {
+    // materialized here: the distinct side is unique on the join keys, so a
+    // consumer reading no certificate column (a count) would otherwise
+    // prune the join, and with it the served probe, from its plan
+    val hit = hits(served, "query_id", "neighbor_id").distinct().localCheckpoint(true)
+    reference.join(hit, Seq("query_id", "neighbor_id"), "left")
+      .select(Seq(col("query_id"), col("rank"), col("neighbor_id"), col("cos"),
+        (recallAtLeast(floor) && lit(alsoOk)).as(ok))
+        ++ extras.map { case (name, v) => lit(v).as(name) }: _*)
+      .orderBy("query_id", "rank")
   }
 }

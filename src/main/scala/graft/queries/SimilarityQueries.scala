@@ -34,25 +34,39 @@ object SimilarityQueries {
     * base intact; the delete queries fold that into their completeness
     * certificates.
     */
-  private[queries] def ensureIvfBase(s: SparkSession, d: String): String = {
-    val prefix = s"ivf_base_${ScratchKeys.forPath(d)}"
-    SessionMemo.ensure(s, s"ivf_base:$d") {
-      Similarity.Ivf.drop(s, prefix)
-      Similarity.writeIvfIndex(emb(s, d), "vec_id", "embedding", prefix,
-        buckets = 8, nlist = 16, iters = 3, assign = IvfAssign)
-    }
-    prefix
-  }
+  private[queries] def ensureIvfBase(s: SparkSession, d: String): String =
+    Similarity.Ivf.buildOnce(s, s"ivf_base_${ScratchKeys.forPath(d)}")(
+      Similarity.writeIvfIndex(emb(s, d), "vec_id", "embedding", _,
+        buckets = 8, nlist = 16, iters = 3, assign = IvfAssign))
 
-  private[queries] def ensureIvfPqBase(s: SparkSession, d: String): String = {
-    val prefix = s"ivfpq_base_${ScratchKeys.forPath(d)}"
-    SessionMemo.ensure(s, s"ivfpq_base:$d") {
-      Similarity.IvfPq.drop(s, prefix)
-      Similarity.writeIvfPqIndex(emb(s, d), "vec_id", "embedding", prefix,
+  private[queries] def ensureIvfPqBase(s: SparkSession, d: String): String =
+    Similarity.IvfPq.buildOnce(s, s"ivfpq_base_${ScratchKeys.forPath(d)}")(
+      Similarity.writeIvfPqIndex(emb(s, d), "vec_id", "embedding", _,
         buckets = 8, nlist = 16, nlistIters = 3, m = 16, ks = 16, iters = 2,
-        assign = IvfAssign)
+        assign = IvfAssign))
+
+  /** The exact brute-force top-3 over the full corpus for the query set:
+    * the reference every full-corpus ANN recall certificate
+    * ([[Parity.recallCertificate]]) is measured against. Memoized per
+    * (session, corpus) and pre-built by Bench via [[SharedFrames]].
+    */
+  private[queries] def exactTop3(s: SparkSession, d: String): DataFrame =
+    SessionMemo.getOrCompute(s, s"exact_top3:$d") {
+      val e = emb(s, d)
+      Similarity.bruteForceTopK(queriesOf(e), e, "vec_id", "embedding", k = 3)
+        .localCheckpoint(true)
     }
-    prefix
+
+  /** True iff the active generation of the index at `prefix` lists each
+    * of `n` vectors exactly [[IvfAssign]] times in its `member` table
+    * (`_lists` or `_codes`): one aggregation pass for total and distinct
+    * ids together.
+    */
+  private[queries] def indexComplete(s: SparkSession, prefix: String, member: String,
+      n: Long): Boolean = {
+    val r = s.table(s"${graft.sources.Sinks.activeTablePrefix(s, prefix)}$member")
+      .agg(count(lit(1)).as("n"), countDistinct(col("neighbor_id")).as("nd")).head()
+    r.getLong(0) == IvfAssign * n && r.getLong(1) == n
   }
 
   /** Shared k-means assignment frame (k=8, iters=2, the serving
@@ -94,14 +108,6 @@ object SimilarityQueries {
     x.join(drops, Seq("vec_id"), "left_anti")
       .select("vec_id", "cid").orderBy("vec_id")
   }
-
-  /** [[SharedFrames]] adapters: ensure the base index exists and hand back
-    * its (1-row) meta frame as the registrable DataFrame.
-    */
-  private[queries] def ivfBaseFrame(s: SparkSession, d: String): DataFrame =
-    s.table(s"${ensureIvfBase(s, d)}_meta")
-  private[queries] def ivfPqBaseFrame(s: SparkSession, d: String): DataFrame =
-    s.table(s"${ensureIvfPqBase(s, d)}_meta")
 
   /** Corpus-level recall floor certified by `sim_knn_ivf`: the serving
     * configuration is nlist=16, nprobe=6, assign=2 (SOAR-style dual
@@ -244,6 +250,27 @@ object SimilarityQueries {
 
   private def cosSql(a: String, b: String, dims: Int = 64) =
     s"round(${dotSql(a, b, dims)} / (sqrt(${dotSql(a, a, dims)}) * sqrt(${dotSql(b, b, dims)})), 7)"
+
+  /** Oracle replay of an ANN recall certificate: the exact cosine top-3
+    * of every query vector (`vec_id % 50 = 0`) among the candidate
+    * vectors satisfying `candidates` (`TRUE` for the full corpus), with
+    * each of `certs` pinned TRUE — the rows [[Parity.recallCertificate]]
+    * emits over [[exactTop3]] or a per-query reference.
+    */
+  private[queries] def exactTop3Sql(candidates: String, certs: String*): String =
+    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
+       |q AS (SELECT vec_id AS qid, embedding AS qe FROM e WHERE vec_id % 50 = 0),
+       |c AS (SELECT vec_id, embedding FROM e WHERE $candidates),
+       |s AS (
+       |  SELECT qid AS query_id, vec_id AS neighbor_id, ${cosSql("qe", "embedding")} AS cos
+       |  FROM q JOIN c ON vec_id <> qid),
+       |r AS (
+       |  SELECT query_id, neighbor_id, cos,
+       |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
+       |  FROM s)
+       |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos,
+       |  ${certs.map(c => s"TRUE AS $c").mkString(", ")}
+       |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
 
   /** Hand-unrolled MMR greedy rounds (λ=0.7) as step CTEs penᵗ/pkᵗ/selᵗ
     * over caller-defined `cand(query_id, doc_id, emb, rel)`,
@@ -589,8 +616,7 @@ object SimilarityQueries {
             docsAll.filter(col("doc_id") % 3 === 0).select("doc_id"),
             kTop = 50, engageMinPostings = 0L)._1
           .localCheckpoint(true))
-      val served = fuse(denseServed, sparseServed)
-        .select(col("doc_id"), lit(1).as("hit"))
+      val served = Parity.hits(fuse(denseServed, sparseServed), "doc_id")
       exact.join(served, Seq("doc_id"), "left")
         .withColumn("rag_recall_ok", Parity.recallAtLeast(RagFusionRecallFloor))
         .select("doc_id", "dense_rank", "sparse_rank", "rrf", "rag_recall_ok")
@@ -611,8 +637,7 @@ object SimilarityQueries {
     // batch average looks fine.
     "sim_rag_batch" -> ((s, d) => {
       val (exact, servedFused) = ragBatchFused(s, d)
-      val served = servedFused
-        .select(col("query_id"), col("doc_id"), lit(1).as("hit"))
+      val served = Parity.hits(servedFused, "query_id", "doc_id")
       val perQ = Window.partitionBy("query_id")
       val all = Window.partitionBy(lit(1))
       exact.join(served, Seq("query_id", "doc_id"), "left")
@@ -646,9 +671,9 @@ object SimilarityQueries {
         .select("query_id", "doc_id", "emb", "rel")
       val exact = Similarity.mmrSelect(toCand(exactFused), kSel = 8, lambda = 0.7)
         .localCheckpoint(true)
-      val served = Similarity
-        .mmrSelect(toCand(servedFused), kSel = 8, lambda = 0.7)
-        .select(col("query_id"), col("doc_id"), lit(1).as("hit"))
+      val served = Parity.hits(
+        Similarity.mmrSelect(toCand(servedFused), kSel = 8, lambda = 0.7),
+        "query_id", "doc_id")
       val perQ = Window.partitionBy("query_id")
       val all = Window.partitionBy(lit(1))
       exact.join(served, Seq("query_id", "doc_id"), "left")
@@ -698,8 +723,8 @@ object SimilarityQueries {
           .select(col("query_id"), col("neighbor_id").as("doc_id"))
           .join(c, "doc_id").join(broadcast(q), "query_id"))
         .select("query_id", "doc_id", "emb", "rel")
-      val served = Similarity.mmrSelect(servedCand, kSel = 8, lambda = 0.7)
-        .select(col("query_id"), col("doc_id"), lit(1).as("hit"))
+      val served = Parity.hits(
+        Similarity.mmrSelect(servedCand, kSel = 8, lambda = 0.7), "query_id", "doc_id")
       val perQ = Window.partitionBy("query_id")
       val all = Window.partitionBy(lit(1))
       exact.join(served, Seq("query_id", "doc_id"), "left")
@@ -863,15 +888,9 @@ object SimilarityQueries {
 
     "sim_knn_ivf" -> ((s, d) => {
       val e = emb(s, d)
-      val q = queriesOf(e)
-      val ivf = Similarity.ivfTopK(q, e, "vec_id", "embedding",
+      val ivf = Similarity.ivfTopK(queriesOf(e), e, "vec_id", "embedding",
           k = 3, nlist = 16, nprobe = IvfNprobe, assign = IvfAssign)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      val brute = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
-      brute.join(ivf, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivf_recall_ok", Parity.recallAtLeast(IvfRecallFloor))
-        .select("query_id", "rank", "neighbor_id", "cos", "ivf_recall_ok")
-        .orderBy("query_id", "rank")
+      Parity.recallCertificate(exactTop3(s, d), ivf, "ivf_recall_ok", IvfRecallFloor)()
     }),
 
     // IVF index MAINTENANCE: the index is built from the vec_id%10!=0
@@ -886,36 +905,17 @@ object SimilarityQueries {
     // pinned in DedupSimilaritySpec.
     "sim_knn_ivf_ingest" -> ((s, d) => {
       val e = emb(s, d)
-      val q = queriesOf(e)
       val prefix = s"ivf_ingest_${ScratchKeys.forPath(d)}"
-      // corpus count + brute-force reference never read the index — they
-      // build on a second thread while the lifecycle (build + append)
-      // runs (guide §2.6, Overlap.both)
-      val ((eN, brute), _) = Overlap.both {
-        (e.count(),
-          Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
-            .localCheckpoint(true))
-      } {
-        Similarity.Ivf.drop(s, prefix)
-        Similarity.writeIvfIndex(e.filter(col("vec_id") % 10 =!= 0),
-          "vec_id", "embedding", prefix, buckets = 8, nlist = 16, iters = 3,
-          assign = IvfAssign)
-        Similarity.appendToIvfIndex(e.filter(col("vec_id") % 10 === 0),
-          prefix, "vec_id", "embedding")
-      }
-      val grown = Similarity.ivfTopKAgainstIndex(q, prefix, "vec_id", "embedding",
+      Similarity.Ivf.drop(s, prefix)
+      Similarity.writeIvfIndex(e.filter(col("vec_id") % 10 =!= 0),
+        "vec_id", "embedding", prefix, buckets = 8, nlist = 16, iters = 3,
+        assign = IvfAssign)
+      Similarity.appendToIvfIndex(e.filter(col("vec_id") % 10 === 0),
+        prefix, "vec_id", "embedding")
+      val grown = Similarity.ivfTopKAgainstIndex(queriesOf(e), prefix, "vec_id", "embedding",
           k = 3, nprobe = IvfNprobe)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      // one aggregation pass over each side (see sim_knn_ivfpq_ingest);
-      // dual assignment lists every vector exactly `assign` times
-      val ls = s.table(s"${prefix}_lists")
-        .agg(count(lit(1)).as("n"), countDistinct(col("neighbor_id")).as("nd")).head()
-      val complete = ls.getLong(0) == IvfAssign * eN && ls.getLong(1) == eN
-      brute.join(grown, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivf_recall_ok", Parity.recallAtLeast(IvfRecallFloor))
-        .withColumn("index_ok", lit(complete))
-        .select("query_id", "rank", "neighbor_id", "cos", "ivf_recall_ok", "index_ok")
-        .orderBy("query_id", "rank")
+      Parity.recallCertificate(exactTop3(s, d), grown, "ivf_recall_ok", IvfRecallFloor)(
+        "index_ok" -> indexComplete(s, prefix, "_lists", e.count()))
     }),
 
     // sim_knn_ivf through a PERSISTED index (the d_incremental_indexed
@@ -928,17 +928,9 @@ object SimilarityQueries {
     // probe chain end-to-end. Probes the shared serving-config BASE
     // index (ensureIvfBase — built once per suite, not per query).
     "sim_knn_ivf_indexed" -> ((s, d) => {
-      val e = emb(s, d)
-      val q = queriesOf(e)
-      val prefix = ensureIvfBase(s, d)
-      val ivf = Similarity.ivfTopKAgainstIndex(q, prefix, "vec_id", "embedding",
-          k = 3, nprobe = IvfNprobe)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      val brute = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
-      brute.join(ivf, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivf_recall_ok", Parity.recallAtLeast(IvfRecallFloor))
-        .select("query_id", "rank", "neighbor_id", "cos", "ivf_recall_ok")
-        .orderBy("query_id", "rank")
+      val ivf = Similarity.ivfTopKAgainstIndex(queriesOf(emb(s, d)), ensureIvfBase(s, d),
+          "vec_id", "embedding", k = 3, nprobe = IvfNprobe)
+      Parity.recallCertificate(exactTop3(s, d), ivf, "ivf_recall_ok", IvfRecallFloor)()
     }),
 
     // Retrain-and-cutover (blue/green rebuild): the index first serves a
@@ -953,29 +945,17 @@ object SimilarityQueries {
     // corpus — the same oracle as sim_knn_ivf_indexed.
     "sim_knn_ivf_rebuild" -> ((s, d) => {
       val e = emb(s, d)
-      val q = queriesOf(e)
       val prefix = s"ivf_rb_${ScratchKeys.forPath(d)}"
-      // brute-force reference never reads the index — built on a second
-      // thread while the stale build + rebuild run (guide §2.6)
-      val (brute, gen) = Overlap.both {
-        Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
-          .localCheckpoint(true)
-      } {
-        Similarity.Ivf.drop(s, prefix)
-        Similarity.writeIvfIndex(e.filter(col("vec_id") % 5 =!= 0),
-          "vec_id", "embedding", prefix, buckets = 8, nlist = 8, iters = 2)
-        Similarity.Ivf.rebuild(s, prefix)(Similarity.writeIvfIndex(e, "vec_id", "embedding",
-          _, buckets = 8, nlist = 16, iters = 3, assign = IvfAssign))
-      }
+      Similarity.Ivf.drop(s, prefix)
+      Similarity.writeIvfIndex(e.filter(col("vec_id") % 5 =!= 0),
+        "vec_id", "embedding", prefix, buckets = 8, nlist = 8, iters = 2)
+      val gen = Similarity.Ivf.rebuild(s, prefix)(Similarity.writeIvfIndex(e, "vec_id",
+        "embedding", _, buckets = 8, nlist = 16, iters = 3, assign = IvfAssign))
       val retired = !s.catalog.tableExists(s"${prefix}_lists")
-      val ivf = Similarity.ivfTopKAgainstIndex(q, prefix, "vec_id", "embedding",
+      val ivf = Similarity.ivfTopKAgainstIndex(queriesOf(e), prefix, "vec_id", "embedding",
           k = 3, nprobe = IvfNprobe)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      brute.join(ivf, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("rebuild_ok",
-          Parity.recallAtLeast(IvfRecallFloor) && lit(gen == 1L && retired))
-        .select("query_id", "rank", "neighbor_id", "cos", "rebuild_ok")
-        .orderBy("query_id", "rank")
+      Parity.recallCertificate(exactTop3(s, d), ivf, "rebuild_ok", IvfRecallFloor,
+        gen == 1L && retired)()
     }),
 
     // The >16-nlist serving certificate: rebuild the serving nlist=16
@@ -987,34 +967,22 @@ object SimilarityQueries {
     // one-time measurement.
     "sim_knn_ivf_sqrtn" -> ((s, d) => {
       val e = emb(s, d)
-      val q = queriesOf(e)
       val n = e.count()
       val nlist = math.ceil(math.sqrt(n.toDouble)).toInt
       val nprobe = math.ceil(nlist * 3.0 / 8.0).toInt
       val prefix = s"ivf_sqrtn_${ScratchKeys.forPath(d)}"
       Similarity.Ivf.drop(s, prefix)
-      // brute-force reference never reads the index — built on a second
-      // thread while the fork + rebuild run (guide §2.6)
-      val (brute, gen) = Overlap.both {
-        Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
-          .localCheckpoint(true)
-      } {
-        // the serving nlist=16 index being replaced arrives as a FORK of
-        // the shared base (snapshot, no retrain) — the staging-copy
-        // workflow, and the rebuild below must still retrain + cut over
-        // from it
-        Similarity.Ivf.fork(s, ensureIvfBase(s, d), prefix)
-        Similarity.Ivf.rebuild(s, prefix)(Similarity.writeIvfIndex(e, "vec_id", "embedding",
-          _, buckets = 8, nlist = nlist, iters = 3, assign = IvfAssign))
-      }
-      val ivf = Similarity.ivfTopKAgainstIndex(q, prefix, "vec_id", "embedding",
+      // the serving nlist=16 index being replaced arrives as a FORK of
+      // the shared base (snapshot, no retrain) — the staging-copy
+      // workflow, and the rebuild below must still retrain + cut over
+      // from it
+      Similarity.Ivf.fork(s, ensureIvfBase(s, d), prefix)
+      val gen = Similarity.Ivf.rebuild(s, prefix)(Similarity.writeIvfIndex(e, "vec_id",
+        "embedding", _, buckets = 8, nlist = nlist, iters = 3, assign = IvfAssign))
+      val ivf = Similarity.ivfTopKAgainstIndex(queriesOf(e), prefix, "vec_id", "embedding",
           k = 3, nprobe = nprobe)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      brute.join(ivf, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("sqrtn_ok",
-          Parity.recallAtLeast(SqrtNRecallFloor) && lit(gen == 1L))
-        .select("query_id", "rank", "neighbor_id", "cos", "sqrtn_ok")
-        .orderBy("query_id", "rank")
+      Parity.recallCertificate(exactTop3(s, d), ivf, "sqrtn_ok", SqrtNRecallFloor,
+        gen == 1L)()
     }),
 
     // Blue/green rebuild through the FLAGSHIP tier: the IVF-PQ index
@@ -1027,32 +995,19 @@ object SimilarityQueries {
     // (impossible through the stale generation) + gen/retired pins.
     "sim_knn_ivfpq_rebuild" -> ((s, d) => {
       val e = emb(s, d)
-      val q = queriesOf(e)
       val prefix = s"ivfpq_rb_${ScratchKeys.forPath(d)}"
-      // brute-force reference never reads the index — built on a second
-      // thread while the stale build + quadruple-table rebuild run
-      // (guide §2.6)
-      val (brute, gen) = Overlap.both {
-        Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
-          .localCheckpoint(true)
-      } {
-        Similarity.IvfPq.drop(s, prefix)
-        Similarity.writeIvfPqIndex(e.filter(col("vec_id") % 5 =!= 0),
-          "vec_id", "embedding", prefix,
-          buckets = 8, nlist = 8, nlistIters = 2, m = 16, ks = 16, iters = 2)
-        Similarity.IvfPq.rebuild(s, prefix)(Similarity.writeIvfPqIndex(e, "vec_id", "embedding",
-          _, buckets = 8, nlist = 16, nlistIters = 3, m = 16, ks = 16, iters = 2,
-          assign = IvfAssign))
-      }
+      Similarity.IvfPq.drop(s, prefix)
+      Similarity.writeIvfPqIndex(e.filter(col("vec_id") % 5 =!= 0),
+        "vec_id", "embedding", prefix,
+        buckets = 8, nlist = 8, nlistIters = 2, m = 16, ks = 16, iters = 2)
+      val gen = Similarity.IvfPq.rebuild(s, prefix)(Similarity.writeIvfPqIndex(e, "vec_id",
+        "embedding", _, buckets = 8, nlist = 16, nlistIters = 3, m = 16, ks = 16, iters = 2,
+        assign = IvfAssign))
       val retired = !s.catalog.tableExists(s"${prefix}_codes")
-      val ann = Similarity.ivfPqTopKAgainstIndex(q, prefix, "vec_id", "embedding",
+      val ann = Similarity.ivfPqTopKAgainstIndex(queriesOf(e), prefix, "vec_id", "embedding",
           k = 3, nprobe = IvfNprobe, shortlist = 128)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      brute.join(ann, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("rebuild_ok",
-          Parity.recallAtLeast(IvfPqRecallFloor) && lit(gen == 1L && retired))
-        .select("query_id", "rank", "neighbor_id", "cos", "rebuild_ok")
-        .orderBy("query_id", "rank")
+      Parity.recallCertificate(exactTop3(s, d), ann, "rebuild_ok", IvfPqRecallFloor,
+        gen == 1L && retired)()
     }),
 
     // FILTERED vector search — the serving feature real stores need
@@ -1075,13 +1030,9 @@ object SimilarityQueries {
       val ivf = Similarity.ivfTopKAgainstIndex(q, prefix, "vec_id", "embedding",
           k = 3, nprobe = IvfFilteredNprobe,
           candidateFilter = col("neighbor_id") % 3 === 0)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
       val brute = Similarity.bruteForceTopK(
         q, e.filter(col("vec_id") % 3 === 0), "vec_id", "embedding", k = 3)
-      brute.join(ivf, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("filtered_recall_ok", Parity.recallAtLeast(IvfFilteredRecallFloor))
-        .select("query_id", "rank", "neighbor_id", "cos", "filtered_recall_ok")
-        .orderBy("query_id", "rank")
+      Parity.recallCertificate(brute, ivf, "filtered_recall_ok", IvfFilteredRecallFloor)()
     }),
 
     // Product-quantization ANN (ADC): corpus compressed to 16 codebook
@@ -1096,23 +1047,9 @@ object SimilarityQueries {
     // Measured recall: 1.000 / 1.000 / 0.925 at sf0.001 / 0.01 / 0.1.
     "sim_knn_pq" -> ((s, d) => {
       val e = emb(s, d)
-      val q = queriesOf(e)
-      // the PQ tier (inline codebook training + ADC scan) and the
-      // brute-force reference never read each other — built on two
-      // threads at once (guide §2.6, Overlap.both)
-      val (brute, pq) = Overlap.both {
-        Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
-          .localCheckpoint(true)
-      } {
-        Similarity.pqTopK(q, e, "vec_id", "embedding",
-            k = 3, m = 16, ks = 16, shortlist = 128, iters = 2)
-          .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-          .localCheckpoint(true)
-      }
-      brute.join(pq, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("pq_recall_ok", Parity.recallAtLeast(PqRecallFloor))
-        .select("query_id", "rank", "neighbor_id", "cos", "pq_recall_ok")
-        .orderBy("query_id", "rank")
+      val pq = Similarity.pqTopK(queriesOf(e), e, "vec_id", "embedding",
+          k = 3, m = 16, ks = 16, shortlist = 128, iters = 2)
+      Parity.recallCertificate(exactTop3(s, d), pq, "pq_recall_ok", PqRecallFloor)()
     }),
 
     // IVF-PQ index maintenance: build over 90% of the corpus, append the
@@ -1125,47 +1062,25 @@ object SimilarityQueries {
     // build-time coding is pinned in DedupSimilaritySpec.
     "sim_knn_ivfpq_ingest" -> ((s, d) => {
       val e = emb(s, d)
-      val q = queriesOf(e)
       val prefix = s"ivfpq_ingest_${ScratchKeys.forPath(d)}"
-      // corpus count + brute-force reference never read the index — built
-      // on a second thread while the lifecycle (build + append + vacuum)
-      // runs (guide §2.6, Overlap.both)
-      val ((eN, brute), _) = Overlap.both {
-        (e.count(),
-          Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
-            .localCheckpoint(true))
-      } {
-        // the vacuum advances a generation — scrub pointer + generations too
-        Similarity.IvfPq.drop(s, prefix)
-        Similarity.writeIvfPqIndex(e.filter(col("vec_id") % 10 =!= 0),
-          "vec_id", "embedding", prefix,
-          buckets = 8, nlist = 16, nlistIters = 3, m = 16, ks = 16, iters = 2,
-          assign = IvfAssign)
-        Similarity.appendToIvfPqIndex(e.filter(col("vec_id") % 10 === 0),
-          prefix, "vec_id", "embedding")
-        // vacuum after the append — the production maintenance order (appends
-        // fragment, compaction rewrites one file per bucket through the
-        // catalog bucket spec); the probe below certifying recall over the
-        // COMPACTED index proves the cycle is semantics-preserving under the
-        // same oracle that gates the uncompacted path
-        Similarity.IvfPq.compact(s, prefix)
-      }
-      val grown = Similarity.ivfPqTopKAgainstIndex(q, prefix, "vec_id", "embedding",
-          k = 3, nprobe = IvfNprobe, shortlist = 128)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      // one aggregation pass over each side: total and distinct ids
-      // together, instead of four separate count jobs; dual assignment
-      // codes every vector exactly `assign` times
-      // compaction flipped a generation — resolve through the pointer
-      val atp = graft.sources.Sinks.activeTablePrefix(s, prefix)
-      val cs = s.table(s"${atp}_codes")
-        .agg(count(lit(1)).as("n"), countDistinct(col("neighbor_id")).as("nd")).head()
-      val complete = cs.getLong(0) == IvfAssign * eN && cs.getLong(1) == eN
-      brute.join(grown, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivfpq_recall_ok", Parity.recallAtLeast(IvfPqRecallFloor))
-        .withColumn("index_ok", lit(complete))
-        .select("query_id", "rank", "neighbor_id", "cos", "ivfpq_recall_ok", "index_ok")
-        .orderBy("query_id", "rank")
+      // the vacuum advances a generation — scrub pointer + generations too
+      Similarity.IvfPq.drop(s, prefix)
+      Similarity.writeIvfPqIndex(e.filter(col("vec_id") % 10 =!= 0),
+        "vec_id", "embedding", prefix,
+        buckets = 8, nlist = 16, nlistIters = 3, m = 16, ks = 16, iters = 2,
+        assign = IvfAssign)
+      Similarity.appendToIvfPqIndex(e.filter(col("vec_id") % 10 === 0),
+        prefix, "vec_id", "embedding")
+      // vacuum after the append — the production maintenance order (appends
+      // fragment, compaction rewrites one file per bucket through the
+      // catalog bucket spec); the probe below certifying recall over the
+      // COMPACTED index proves the cycle is semantics-preserving under the
+      // same oracle that gates the uncompacted path
+      Similarity.IvfPq.compact(s, prefix)
+      val grown = Similarity.ivfPqTopKAgainstIndex(queriesOf(e), prefix, "vec_id",
+          "embedding", k = 3, nprobe = IvfNprobe, shortlist = 128)
+      Parity.recallCertificate(exactTop3(s, d), grown, "ivfpq_recall_ok", IvfPqRecallFloor)(
+        "index_ok" -> indexComplete(s, prefix, "_codes", e.count()))
     }),
 
     // Index take-down (IVF): every 7th vector is deleted from the
@@ -1201,18 +1116,11 @@ object SimilarityQueries {
       }
       val ivf = Similarity.ivfTopKAgainstIndex(q, prefix, "vec_id", "embedding",
           k = 3, nprobe = IvfNprobe)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      // the deletion flipped a generation on the fork — resolve
-      val ls = s.table(s"${graft.sources.Sinks.activeTablePrefix(s, prefix)}_lists")
-        .agg(count(lit(1)).as("n"), countDistinct(col("neighbor_id")).as("nd")).head()
-      val baseIntact = s.table(s"${base}_lists").count() == IvfAssign * eN
-      val complete = ls.getLong(0) == IvfAssign * sN && ls.getLong(1) == sN &&
-        baseIntact
-      brute.join(ivf, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivf_recall_ok", Parity.recallAtLeast(IvfRecallFloor))
-        .withColumn("index_ok", lit(complete))
-        .select("query_id", "rank", "neighbor_id", "cos", "ivf_recall_ok", "index_ok")
-        .orderBy("query_id", "rank")
+      // the deletion flipped a generation on the fork (resolved inside)
+      val complete = indexComplete(s, prefix, "_lists", sN) &&
+        s.table(s"${base}_lists").count() == IvfAssign * eN
+      Parity.recallCertificate(brute, ivf, "ivf_recall_ok", IvfRecallFloor)(
+        "index_ok" -> complete)
     }),
 
     // Index take-down through the flagship IVF-PQ index: every 7th vector
@@ -1244,21 +1152,14 @@ object SimilarityQueries {
       }
       val ann = Similarity.ivfPqTopKAgainstIndex(q, prefix, "vec_id", "embedding",
           k = 3, nprobe = IvfNprobe, shortlist = 128)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
       // the deletion flipped a generation on the fork — resolve
       val atp = graft.sources.Sinks.activeTablePrefix(s, prefix)
-      val cs = s.table(s"${atp}_codes")
-        .agg(count(lit(1)).as("n"), countDistinct(col("neighbor_id")).as("nd")).head()
-      val vN = s.table(s"${atp}_vecs").count()
-      val baseIntact = s.table(s"${base}_codes").count() == IvfAssign * eN &&
+      val complete = indexComplete(s, prefix, "_codes", sN) &&
+        s.table(s"${atp}_vecs").count() == sN &&
+        s.table(s"${base}_codes").count() == IvfAssign * eN &&
         s.table(s"${base}_vecs").count() == eN
-      val complete = cs.getLong(0) == IvfAssign * sN && cs.getLong(1) == sN &&
-        vN == sN && baseIntact
-      brute.join(ann, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivfpq_recall_ok", Parity.recallAtLeast(IvfPqRecallFloor))
-        .withColumn("index_ok", lit(complete))
-        .select("query_id", "rank", "neighbor_id", "cos", "ivfpq_recall_ok", "index_ok")
-        .orderBy("query_id", "rank")
+      Parity.recallCertificate(brute, ann, "ivfpq_recall_ok", IvfPqRecallFloor)(
+        "index_ok" -> complete)
     }),
 
     // Persisted IVF-PQ index (FAISS `IVF16,PQ16` shape, by_residual=false):
@@ -1271,17 +1172,10 @@ object SimilarityQueries {
     // recall-certificate pattern as the other ANN paths: emitted rows are
     // brute-force top-3; the IVF-PQ probe contributes `ivfpq_recall_ok`.
     "sim_knn_ivfpq" -> ((s, d) => {
-      val e = emb(s, d)
-      val q = queriesOf(e)
-      val prefix = ensureIvfPqBase(s, d) // read-only probe of the shared base
-      val ann = Similarity.ivfPqTopKAgainstIndex(q, prefix, "vec_id", "embedding",
-          k = 3, nprobe = IvfNprobe, shortlist = 128)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      val brute = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
-      brute.join(ann, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivfpq_recall_ok", Parity.recallAtLeast(IvfPqRecallFloor))
-        .select("query_id", "rank", "neighbor_id", "cos", "ivfpq_recall_ok")
-        .orderBy("query_id", "rank")
+      // read-only probe of the shared base
+      val ann = Similarity.ivfPqTopKAgainstIndex(queriesOf(emb(s, d)), ensureIvfPqBase(s, d),
+          "vec_id", "embedding", k = 3, nprobe = IvfNprobe, shortlist = 128)
+      Parity.recallCertificate(exactTop3(s, d), ann, "ivfpq_recall_ok", IvfPqRecallFloor)()
     })
   )
 
@@ -1608,197 +1502,27 @@ object SimilarityQueries {
          |       % 1000) < r.rate_permille
          |ORDER BY af.vec_id""".stripMargin,
 
-    // The rows are the exact brute-force top-3 (recomputed here); the IVF
-    // recall certificate is pinned TRUE — below-floor recall hash-mismatches.
-    "sim_knn_ivf" ->
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |q AS (SELECT vec_id AS qid, embedding AS qe FROM e WHERE vec_id % 50 = 0),
-         |s AS (
-         |  SELECT qid AS query_id, vec_id AS neighbor_id, ${cosSql("qe", "embedding")} AS cos
-         |  FROM q JOIN e ON vec_id <> qid),
-         |r AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM s)
-         |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos, TRUE AS ivf_recall_ok
-         |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-
-    // Brute-force rows + pinned-TRUE recall and completeness
-    // certificates: recall through the append-grown index must clear the
-    // corpus floor, and the lists must hold every vector exactly once.
-    "sim_knn_ivf_ingest" ->
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |q AS (SELECT vec_id AS qid, embedding AS qe FROM e WHERE vec_id % 50 = 0),
-         |s AS (
-         |  SELECT qid AS query_id, vec_id AS neighbor_id, ${cosSql("qe", "embedding")} AS cos
-         |  FROM q JOIN e ON vec_id <> qid),
-         |r AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM s)
-         |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos,
-         |  TRUE AS ivf_recall_ok, TRUE AS index_ok
-         |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-
-    // Brute-force rows + pinned-TRUE recall and completeness
-    // certificates for the append-grown IVF-PQ index (the sim_knn_ivf
-    // pattern: neither quantizer training has a SQL twin).
-    "sim_knn_ivfpq_ingest" ->
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |q AS (SELECT vec_id AS qid, embedding AS qe FROM e WHERE vec_id % 50 = 0),
-         |s AS (
-         |  SELECT qid AS query_id, vec_id AS neighbor_id, ${cosSql("qe", "embedding")} AS cos
-         |  FROM q JOIN e ON vec_id <> qid),
-         |r AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM s)
-         |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos,
-         |  TRUE AS ivfpq_recall_ok, TRUE AS index_ok
-         |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-
-    // Identical oracle to sim_knn_ivf: the persisted-index probe must
-    // reproduce the inline path bit-for-bit (deterministic quantizer), so
-    // the same brute-force rows + pinned-TRUE recall certificate apply.
-    "sim_knn_ivf_indexed" ->
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |q AS (SELECT vec_id AS qid, embedding AS qe FROM e WHERE vec_id % 50 = 0),
-         |s AS (
-         |  SELECT qid AS query_id, vec_id AS neighbor_id, ${cosSql("qe", "embedding")} AS cos
-         |  FROM q JOIN e ON vec_id <> qid),
-         |r AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM s)
-         |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos, TRUE AS ivf_recall_ok
-         |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-
-    // Brute-force rows + pinned-TRUE certificate: recall through the
-    // rebuilt nlist=ceil(sqrt(N)) generation must clear the 0.85 floor —
-    // the production-shaped-nlist serving certificate.
-    "sim_knn_ivf_sqrtn" ->
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |q AS (SELECT vec_id AS qid, embedding AS qe FROM e WHERE vec_id % 50 = 0),
-         |s AS (
-         |  SELECT qid AS query_id, vec_id AS neighbor_id, ${cosSql("qe", "embedding")} AS cos
-         |  FROM q JOIN e ON vec_id <> qid),
-         |r AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM s)
-         |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos, TRUE AS sqrtn_ok
-         |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-
-    // The full-corpus brute force — the post-cutover index must reach
-    // serving recall against it, which the stale 60% generation cannot.
-    "sim_knn_ivf_rebuild" ->
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |q AS (SELECT vec_id AS qid, embedding AS qe FROM e WHERE vec_id % 50 = 0),
-         |s AS (
-         |  SELECT qid AS query_id, vec_id AS neighbor_id, ${cosSql("qe", "embedding")} AS cos
-         |  FROM q JOIN e ON vec_id <> qid),
-         |r AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM s)
-         |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos, TRUE AS rebuild_ok
-         |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-
-    // Same brute-force rows + pinned-TRUE certificate as
-    // sim_knn_ivf_rebuild — neither quantizer retrain has a SQL twin, so
-    // the oracle pins the post-cutover probe's recall/gen/retired
-    // certificate through the emitted rows.
-    "sim_knn_ivfpq_rebuild" ->
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |q AS (SELECT vec_id AS qid, embedding AS qe FROM e WHERE vec_id % 50 = 0),
-         |s AS (
-         |  SELECT qid AS query_id, vec_id AS neighbor_id, ${cosSql("qe", "embedding")} AS cos
-         |  FROM q JOIN e ON vec_id <> qid),
-         |r AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM s)
-         |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos, TRUE AS rebuild_ok
-         |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-
-    // Brute force over the FILTERED corpus — pre-filter semantics: the
-    // exact top-3 among eligible (vec_id % 3 = 0) vectors per query.
-    "sim_knn_ivf_filtered" ->
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |q AS (SELECT vec_id AS qid, embedding AS qe FROM e WHERE vec_id % 50 = 0),
-         |f AS (SELECT vec_id, embedding FROM e WHERE vec_id % 3 = 0),
-         |s AS (
-         |  SELECT qid AS query_id, vec_id AS neighbor_id, ${cosSql("qe", "embedding")} AS cos
-         |  FROM q JOIN f ON vec_id <> qid),
-         |r AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM s)
-         |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos, TRUE AS filtered_recall_ok
-         |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-
-    // Brute-force top-3 over the surviving corpus (every 7th vector
-    // deleted) + pinned-TRUE recall and completeness certificates: the
-    // post-deletion probe must rank against survivors only.
-    "sim_knn_ivf_delete" ->
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 7 <> 0),
-         |q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id % 50 = 0),
-         |s AS (
-         |  SELECT qid AS query_id, vec_id AS neighbor_id, ${cosSql("qe", "embedding")} AS cos
-         |  FROM q JOIN e ON vec_id <> qid),
-         |r AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM s)
-         |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos,
-         |  TRUE AS ivf_recall_ok, TRUE AS index_ok
-         |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-
-    // Brute-force top-3 over the surviving corpus + pinned-TRUE compound
-    // recall and completeness certificates — the IVF-PQ take-down twin.
-    "sim_knn_ivfpq_delete" ->
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 7 <> 0),
-         |q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id % 50 = 0),
-         |s AS (
-         |  SELECT qid AS query_id, vec_id AS neighbor_id, ${cosSql("qe", "embedding")} AS cos
-         |  FROM q JOIN e ON vec_id <> qid),
-         |r AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM s)
-         |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos,
-         |  TRUE AS ivfpq_recall_ok, TRUE AS index_ok
-         |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-
-    // Brute-force rows + pinned-TRUE compound-recall certificate (the
-    // sim_knn_ivf pattern: neither k-means nor codebook training has a
-    // tractable SQL twin).
-    "sim_knn_ivfpq" ->
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |q AS (SELECT vec_id AS qid, embedding AS qe FROM e WHERE vec_id % 50 = 0),
-         |s AS (
-         |  SELECT qid AS query_id, vec_id AS neighbor_id, ${cosSql("qe", "embedding")} AS cos
-         |  FROM q JOIN e ON vec_id <> qid),
-         |r AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM s)
-         |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos, TRUE AS ivfpq_recall_ok
-         |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-
-    // Brute-force rows + pinned-TRUE PQ recall certificate (the
-    // sim_knn_ivf pattern: iterative codebook training has no SQL twin).
-    "sim_knn_pq" ->
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |q AS (SELECT vec_id AS qid, embedding AS qe FROM e WHERE vec_id % 50 = 0),
-         |s AS (
-         |  SELECT qid AS query_id, vec_id AS neighbor_id, ${cosSql("qe", "embedding")} AS cos
-         |  FROM q JOIN e ON vec_id <> qid),
-         |r AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM s)
-         |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos, TRUE AS pq_recall_ok
-         |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+    // Every ANN recall certificate's oracle: the exact brute-force top-3
+    // recomputed in SQL with its certificates pinned TRUE, so a
+    // below-floor recall or a failed lifecycle check hash-mismatches.
+    // Quantizer and codebook training have no SQL twin; the index paths
+    // prove themselves through these pins.
+    "sim_knn_ivf" -> exactTop3Sql("TRUE", "ivf_recall_ok"),
+    "sim_knn_ivf_indexed" -> exactTop3Sql("TRUE", "ivf_recall_ok"),
+    "sim_knn_ivf_ingest" -> exactTop3Sql("TRUE", "ivf_recall_ok", "index_ok"),
+    "sim_knn_ivfpq_ingest" -> exactTop3Sql("TRUE", "ivfpq_recall_ok", "index_ok"),
+    // recall through the rebuilt nlist=ceil(sqrt(N)) generation
+    "sim_knn_ivf_sqrtn" -> exactTop3Sql("TRUE", "sqrtn_ok"),
+    // the post-cutover index must reach serving recall against the full
+    // corpus, which the stale 60% generation cannot
+    "sim_knn_ivf_rebuild" -> exactTop3Sql("TRUE", "rebuild_ok"),
+    "sim_knn_ivfpq_rebuild" -> exactTop3Sql("TRUE", "rebuild_ok"),
+    // pre-filter semantics: the exact top-3 among eligible vectors
+    "sim_knn_ivf_filtered" -> exactTop3Sql("vec_id % 3 = 0", "filtered_recall_ok"),
+    // every 7th vector deleted: the probe must rank against survivors only
+    "sim_knn_ivf_delete" -> exactTop3Sql("vec_id % 7 <> 0", "ivf_recall_ok", "index_ok"),
+    "sim_knn_ivfpq_delete" -> exactTop3Sql("vec_id % 7 <> 0", "ivfpq_recall_ok", "index_ok"),
+    "sim_knn_ivfpq" -> exactTop3Sql("TRUE", "ivfpq_recall_ok"),
+    "sim_knn_pq" -> exactTop3Sql("TRUE", "pq_recall_ok")
   )
 }

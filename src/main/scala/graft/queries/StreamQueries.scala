@@ -79,7 +79,7 @@ object StreamQueries {
     * longer replay a stale fixture. The fixture itself is the `name`
     * leaf inside that keyed directory.
     */
-  private def fixtureDir(name: String, d: String, table: String): java.nio.file.Path = {
+  private[queries] def fixtureDir(name: String, d: String, table: String): java.nio.file.Path = {
     val f = new java.io.File(s"$d/$table.parquet")
     val gen = java.lang.Long.toHexString(
       f.length ^ java.lang.Long.rotateLeft(f.lastModified, 21)
@@ -128,7 +128,10 @@ object StreamQueries {
     * files into `out` (scratch space for intermediate spark writes is
     * `work`), and `out` moves into place LAST — same /tmp filesystem, so
     * a failed or interrupted build leaves nothing that passes
-    * [[fixtureReady]], and a concurrent winner is accepted as-is.
+    * [[fixtureReady]]. A stale directory at `dir` that does not pass it
+    * (an empty dir left by a crash, a directory of an older layout) is
+    * moved aside and replaced; a ready one that appears during the move
+    * is a concurrent winner, accepted as-is, and anything else rethrows.
     */
   private def buildFixture(dir: java.nio.file.Path)(
       build: (java.nio.file.Path, java.nio.file.Path) => Unit): Unit =
@@ -139,8 +142,10 @@ object StreamQueries {
       java.nio.file.Files.createDirectories(work)
       build(out, work)
       java.nio.file.Files.createDirectories(dir.getParent)
+      if (java.nio.file.Files.isDirectory(dir) && !fixtureReady(dir))
+        java.nio.file.Files.move(dir, stage.resolve("stale"))
       try java.nio.file.Files.move(out, dir)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      catch { case e: java.nio.file.FileAlreadyExistsException => if (!fixtureReady(dir)) throw e }
     }
 
   /** The files under `dir` as a stream of one file per micro-batch, read
@@ -162,7 +167,7 @@ object StreamQueries {
     * `name`, so queries streaming the same rows reuse one split value
     * and share one directory.
     */
-  private final case class Split(name: String, table: String, key: String,
+  private[queries] final case class Split(name: String, table: String, key: String,
       rows: DataFrame => DataFrame = identity)
 
   private val Events4 = Split("events4", "events", "event_id")
@@ -172,7 +177,7 @@ object StreamQueries {
     _.filter(col("doc_id") % 10 === 0))
   private val DayVecs4 = Split("dayvecs4", "embeddings", "vec_id",
     _.filter(col("vec_id") % 10 === 0))
-  private val Vecs4 = Split("vecs4", "embeddings", "vec_id")
+  private[queries] val Vecs4 = Split("vecs4", "embeddings", "vec_id")
 
   /** The split's fixture directory, built on first use per corpus
     * generation (see [[fixtureDir]]).
@@ -727,30 +732,21 @@ object StreamQueries {
       val genSeen = new java.util.concurrent.atomic.AtomicLong(-1L)
       ScratchKeys.withScratch("graft_stream_annrb_") { scratch =>
         val probeDir = s"$scratch/probes"
-        // query-set count + brute-force reference are stream-independent
-        // (corpus only — the streamed index never feeds them) — computed
-        // while the drain runs (guide §2.6, see `overlapping`)
-        val (nQ, brute) = overlapping {
-          (e.filter(col("vec_id") % 50 === 0).count(),
-            Similarity.bruteForceTopK(
-                e.filter(col("vec_id") % 50 === 0), e, "vec_id", "embedding", k = 3)
-              .localCheckpoint(true))
-        } {
-          drainBatches(microBatches(s, waves)) { (batch, bid) =>
-            val flipped = s.catalog.tableExists(s"${prefix}_current")
-            Similarity.ivfTopKAgainstIndex(
-                batch.select("vec_id", "embedding"), prefix,
-                "vec_id", "embedding", k = 3,
-                nprobe = SimilarityQueries.IvfNprobe)
-              .select(col("query_id"), col("neighbor_id"),
-                lit(flipped).as("flipped"), lit(bid).as("bid"))
-              .write.mode("append").parquet(probeDir)
-            if (!flipped && preDrains.incrementAndGet() == 2)
-              genSeen.set(Similarity.Ivf.rebuild(s, prefix)(
-                Similarity.writeIvfIndex(e, "vec_id", "embedding", _, buckets = 8,
-                  nlist = 16, iters = 3, assign = SimilarityQueries.IvfAssign)))
-          }
+        drainBatches(microBatches(s, waves)) { (batch, bid) =>
+          val flipped = s.catalog.tableExists(s"${prefix}_current")
+          Similarity.ivfTopKAgainstIndex(
+              batch.select("vec_id", "embedding"), prefix,
+              "vec_id", "embedding", k = 3,
+              nprobe = SimilarityQueries.IvfNprobe)
+            .select(col("query_id"), col("neighbor_id"),
+              lit(flipped).as("flipped"), lit(bid).as("bid"))
+            .write.mode("append").parquet(probeDir)
+          if (!flipped && preDrains.incrementAndGet() == 2)
+            genSeen.set(Similarity.Ivf.rebuild(s, prefix)(
+              Similarity.writeIvfIndex(e, "vec_id", "embedding", _, buckets = 8,
+                nlist = 16, iters = 3, assign = SimilarityQueries.IvfAssign)))
         }
+        val nQ = e.filter(col("vec_id") % 50 === 0).count()
         val probes = s.read.parquet(probeDir)
           .select("query_id", "neighbor_id", "flipped", "bid").distinct()
           .localCheckpoint(true)
@@ -768,16 +764,10 @@ object StreamQueries {
         val lifecycleOk = drains.get(false).contains(2L) &&
           drains.get(true).contains(2L) &&
           genSeen.get() == 1L && !s.catalog.tableExists(s"${prefix}_lists")
-        val hits = post.select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-          .distinct()
-        brute.join(hits, Seq("query_id", "neighbor_id"), "left")
-          .withColumn("post_recall_ok", Parity.recallAtLeast(SimilarityQueries.IvfRecallFloor))
-          .withColumn("pre_served_ok", lit(preServedOk))
-          .withColumn("pre_stale_ok", lit(preStaleOk))
-          .withColumn("lifecycle_ok", lit(lifecycleOk))
-          .select("query_id", "rank", "neighbor_id", "cos",
-            "post_recall_ok", "pre_served_ok", "pre_stale_ok", "lifecycle_ok")
-          .orderBy("query_id", "rank")
+        Parity.recallCertificate(SimilarityQueries.exactTop3(s, d), post, "post_recall_ok",
+            SimilarityQueries.IvfRecallFloor)(
+            "pre_served_ok" -> preServedOk, "pre_stale_ok" -> preStaleOk,
+            "lifecycle_ok" -> lifecycleOk)
           .localCheckpoint(true)
       }
     }),
@@ -812,35 +802,17 @@ object StreamQueries {
       Similarity.writeIvfIndex(e.filter(col("vec_id") % 10 =!= 0),
         "vec_id", "embedding", prefix, buckets = 8, nlist = 16, iters = 3,
         assign = SimilarityQueries.IvfAssign)
-      // corpus count + brute-force reference are stream-independent —
-      // computed while the drain runs (guide §2.6, see `overlapping`)
-      val (eN, brute) = overlapping {
-        (e.count(),
-          Similarity.bruteForceTopK(
-              e.filter(col("vec_id") % 50 === 0), e, "vec_id", "embedding", k = 3)
-            .localCheckpoint(true))
-      } {
-        drainBatches(splitStream(s, d, DayVecs4)) { (batch, bid) =>
-          // production append body: batchId-keyed exactly-once
-          Similarity.exactlyOnceAppendToIvfIndex(batch, prefix, "vec_id", "embedding", bid): Unit
-        }
+      drainBatches(splitStream(s, d, DayVecs4)) { (batch, bid) =>
+        // production append body: batchId-keyed exactly-once
+        Similarity.exactlyOnceAppendToIvfIndex(batch, prefix, "vec_id", "embedding", bid): Unit
       }
       val grown = Similarity.ivfTopKAgainstIndex(
           e.filter(col("vec_id") % 50 === 0), prefix, "vec_id", "embedding",
           k = 3, nprobe = SimilarityQueries.IvfNprobe)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      // one aggregation pass per side (see sim_knn_ivfpq_ingest); dual
-      // assignment lists every vector exactly `assign` times
       // resolution-safe: a retried batch's scrub advances a generation
-      val ls = s.table(s"${graft.sources.Sinks.activeTablePrefix(s, prefix)}_lists")
-        .agg(count(lit(1)).as("n"), countDistinct(col("neighbor_id")).as("nd")).head()
-      val complete =
-        ls.getLong(0) == SimilarityQueries.IvfAssign * eN && ls.getLong(1) == eN
-      brute.join(grown, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivf_recall_ok", Parity.recallAtLeast(SimilarityQueries.IvfRecallFloor))
-        .withColumn("index_ok", lit(complete))
-        .select("query_id", "rank", "neighbor_id", "cos", "ivf_recall_ok", "index_ok")
-        .orderBy("query_id", "rank")
+      Parity.recallCertificate(SimilarityQueries.exactTop3(s, d), grown, "ivf_recall_ok",
+        SimilarityQueries.IvfRecallFloor)(
+        "index_ok" -> SimilarityQueries.indexComplete(s, prefix, "_lists", e.count()))
     }),
 
     // Streamed incremental connected components: the day's near-dup
@@ -907,20 +879,11 @@ object StreamQueries {
       val prefix = SimilarityQueries.ensureIvfBase(s, d)
       def probe(batch: DataFrame): DataFrame = Similarity.ivfTopKAgainstIndex(
         batch, prefix, "vec_id", "embedding", k = 3, nprobe = SimilarityQueries.IvfNprobe)
-      // the brute-force reference is stream-independent too: forced on
-      // the one-shot side, eager-materialized for the recall join
-      lazy val brute = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
-        .localCheckpoint(true)
       val queries4 = Split("queries4", "embeddings", "vec_id", _.filter(col("vec_id") % 50 === 0))
       val (streamed, _, ok) = servingParity(splitStream(s, d, queries4),
-        { brute; probe(q).localCheckpoint(true) })(probe)
-      brute.join(
-          streamed.select(col("query_id"), col("neighbor_id"), lit(1).as("hit")).distinct(),
-          Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivf_recall_ok", Parity.recallAtLeast(SimilarityQueries.IvfRecallFloor))
-        .withColumn("serve_ok", lit(ok))
-        .select("query_id", "rank", "neighbor_id", "cos", "ivf_recall_ok", "serve_ok")
-        .orderBy("query_id", "rank")
+        probe(q).localCheckpoint(true))(probe)
+      Parity.recallCertificate(SimilarityQueries.exactTop3(s, d), streamed, "ivf_recall_ok",
+        SimilarityQueries.IvfRecallFloor)("serve_ok" -> ok)
     }),
 
     // Streaming CLUSTER-ID tagging — the clustering tier's serving dual
@@ -1244,36 +1207,18 @@ object StreamQueries {
         "vec_id", "embedding", prefix,
         buckets = 8, nlist = 16, nlistIters = 3, m = 16, ks = 16, iters = 2,
         assign = SimilarityQueries.IvfAssign)
-      // corpus count + brute-force reference are stream-independent —
-      // computed while the drain runs (guide §2.6, see `overlapping`)
-      val (eN, brute) = overlapping {
-        (e.count(),
-          Similarity.bruteForceTopK(
-              e.filter(col("vec_id") % 50 === 0), e, "vec_id", "embedding", k = 3)
-            .localCheckpoint(true))
-      } {
-        // the same split st_ann_index_parity streams
-        drainBatches(splitStream(s, d, DayVecs4)) { (batch, bid) =>
-          // production append body: batchId-keyed exactly-once
-          Similarity.exactlyOnceAppendToIvfPqIndex(batch, prefix, "vec_id", "embedding", bid): Unit
-        }
+      // the same split st_ann_index_parity streams
+      drainBatches(splitStream(s, d, DayVecs4)) { (batch, bid) =>
+        // production append body: batchId-keyed exactly-once
+        Similarity.exactlyOnceAppendToIvfPqIndex(batch, prefix, "vec_id", "embedding", bid): Unit
       }
       val grown = Similarity.ivfPqTopKAgainstIndex(
           e.filter(col("vec_id") % 50 === 0), prefix, "vec_id", "embedding",
           k = 3, nprobe = SimilarityQueries.IvfNprobe, shortlist = 128)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      // one aggregation pass per side (see sim_knn_ivfpq_ingest); dual
-      // assignment codes every vector exactly `assign` times
       // resolution-safe: a retried batch's scrub advances a generation
-      val cs = s.table(s"${graft.sources.Sinks.activeTablePrefix(s, prefix)}_codes")
-        .agg(count(lit(1)).as("n"), countDistinct(col("neighbor_id")).as("nd")).head()
-      val complete =
-        cs.getLong(0) == SimilarityQueries.IvfAssign * eN && cs.getLong(1) == eN
-      brute.join(grown, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("ivfpq_recall_ok", Parity.recallAtLeast(SimilarityQueries.IvfPqRecallFloor))
-        .withColumn("index_ok", lit(complete))
-        .select("query_id", "rank", "neighbor_id", "cos", "ivfpq_recall_ok", "index_ok")
-        .orderBy("query_id", "rank")
+      Parity.recallCertificate(SimilarityQueries.exactTop3(s, d), grown, "ivfpq_recall_ok",
+        SimilarityQueries.IvfPqRecallFloor)(
+        "index_ok" -> SimilarityQueries.indexComplete(s, prefix, "_codes", e.count()))
     }),
 
     // Streaming retrieval ingest — the inverted-index family's twin: the
@@ -1566,57 +1511,20 @@ object StreamQueries {
         |FROM events GROUP BY day_start, event_type
         |ORDER BY day_start, event_type""".stripMargin,
 
-    // Identical to sim_knn_ivf_ingest's oracle: four streamed appends
-    // must yield the same probe rows as the one-shot batch append (brute
-    // rows + pinned recall/completeness certificates).
     // Full-corpus brute-force rows + four pinned-TRUE certificates: the
     // quantizer retrain has no SQL twin, so the oracle pins continuity
     // (pre drains served all queries), staleness (no held-out neighbor
     // pre-flip), post-cutover serving recall, and the 2+2-drain/gen/
     // retired lifecycle through the emitted rows.
     "st_rebuild_cutover_parity" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |q AS (SELECT vec_id AS qid, embedding AS qe FROM e WHERE vec_id % 50 = 0),
-        |s AS (
-        |  SELECT qid AS query_id, vec_id AS neighbor_id,
-        |    round(list_sum(list_transform(range(1, 65),
-        |        i -> qe[i]::DOUBLE * embedding[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(range(1, 65),
-        |           i -> qe[i]::DOUBLE * qe[i]::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(range(1, 65),
-        |           i -> embedding[i]::DOUBLE * embedding[i]::DOUBLE)))), 7) AS cos
-        |  FROM q JOIN e ON vec_id <> qid),
-        |r AS (
-        |  SELECT query_id, neighbor_id, cos,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-        |  FROM s)
-        |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos,
-        |  TRUE AS post_recall_ok, TRUE AS pre_served_ok,
-        |  TRUE AS pre_stale_ok, TRUE AS lifecycle_ok
-        |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
+      SimilarityQueries.exactTop3Sql("TRUE", "post_recall_ok", "pre_served_ok",
+        "pre_stale_ok", "lifecycle_ok"),
 
     // brute-force rows + pinned-TRUE recall/serving certificates: the
     // streamed query drain must reproduce the one-shot probe exactly
     // and clear the serving recall floor
     "st_knn_serving_parity" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |q AS (SELECT vec_id AS qid, embedding AS qe FROM e WHERE vec_id % 50 = 0),
-        |s AS (
-        |  SELECT qid AS query_id, vec_id AS neighbor_id,
-        |    round(list_sum(list_transform(range(1, 65),
-        |        i -> qe[i]::DOUBLE * embedding[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(range(1, 65),
-        |           i -> qe[i]::DOUBLE * qe[i]::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(range(1, 65),
-        |           i -> embedding[i]::DOUBLE * embedding[i]::DOUBLE)))), 7) AS cos
-        |  FROM q JOIN e ON vec_id <> qid),
-        |r AS (
-        |  SELECT query_id, neighbor_id, cos,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-        |  FROM s)
-        |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos,
-        |  TRUE AS ivf_recall_ok, TRUE AS serve_ok
-        |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
+      SimilarityQueries.exactTop3Sql("TRUE", "ivf_recall_ok", "serve_ok"),
 
     // the one-shot k-means assignment replayed in FULL (training
     // included) — a persisted model diverging from the trained
@@ -1657,25 +1565,11 @@ object StreamQueries {
     "st_ulm_serving_parity" ->
       TextQueries.ulmEncodeOracle(2, extraCols = ",\n  TRUE AS serve_ok"),
 
+    // Identical to sim_knn_ivf_ingest's oracle: four streamed appends
+    // must yield the same probe rows as the one-shot batch append (brute
+    // rows + pinned recall/completeness certificates).
     "st_ann_index_parity" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |q AS (SELECT vec_id AS qid, embedding AS qe FROM e WHERE vec_id % 50 = 0),
-        |s AS (
-        |  SELECT qid AS query_id, vec_id AS neighbor_id,
-        |    round(list_sum(list_transform(range(1, 65),
-        |        i -> qe[i]::DOUBLE * embedding[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(range(1, 65),
-        |           i -> qe[i]::DOUBLE * qe[i]::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(range(1, 65),
-        |           i -> embedding[i]::DOUBLE * embedding[i]::DOUBLE)))), 7) AS cos
-        |  FROM q JOIN e ON vec_id <> qid),
-        |r AS (
-        |  SELECT query_id, neighbor_id, cos,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-        |  FROM s)
-        |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos,
-        |  TRUE AS ivf_recall_ok, TRUE AS index_ok
-        |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
+      SimilarityQueries.exactTop3Sql("TRUE", "ivf_recall_ok", "index_ok"),
 
     // tx_kn_serving's full-corpus chain over ALL docs, serve_ok pinned
     // TRUE: streamed per-batch scoring against the frozen stats must be
@@ -1713,24 +1607,7 @@ object StreamQueries {
     // Brute-force rows + pinned-TRUE certificates, like st_ann — the
     // streamed IVF-PQ appends must reproduce the one-shot batch index.
     "st_ivfpq_index_parity" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |q AS (SELECT vec_id AS qid, embedding AS qe FROM e WHERE vec_id % 50 = 0),
-        |s AS (
-        |  SELECT qid AS query_id, vec_id AS neighbor_id,
-        |    round(list_sum(list_transform(range(1, 65),
-        |        i -> qe[i]::DOUBLE * embedding[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(range(1, 65),
-        |           i -> qe[i]::DOUBLE * qe[i]::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(range(1, 65),
-        |           i -> embedding[i]::DOUBLE * embedding[i]::DOUBLE)))), 7) AS cos
-        |  FROM q JOIN e ON vec_id <> qid),
-        |r AS (
-        |  SELECT query_id, neighbor_id, cos,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-        |  FROM s)
-        |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos,
-        |  TRUE AS ivfpq_recall_ok, TRUE AS index_ok
-        |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
+      SimilarityQueries.exactTop3Sql("TRUE", "ivfpq_recall_ok", "index_ok"),
 
     // The batch d_incremental answer (new×index minhash pairs, grouped)
     // plus the pinned-TRUE append certificate — a dropped or double

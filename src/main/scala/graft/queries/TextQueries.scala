@@ -57,33 +57,17 @@ object TextQueries {
     * lesson). The lifecycle queries (`tx_kn_serving`/`_ingest`/`_delete`)
     * keep their own prefixes — they test the WRITE verbs themselves.
     */
-  private[queries] def ensureKnBase(s: SparkSession, d: String): String = {
-    val prefix = s"knlm_base_${ScratchKeys.forPath(d)}"
-    SessionMemo.ensure(s, s"knlm_base:$d") {
-      Text.Kn.drop(s, prefix)
-      Text.Kn.write(prefix, Text.knCounts(docs(s, d), "doc_id", toks))
-    }
-    prefix
-  }
-
-  private[queries] def knBaseFrame(s: SparkSession, d: String): DataFrame =
-    s.table(s"${ensureKnBase(s, d)}_meta")
+  private[queries] def ensureKnBase(s: SparkSession, d: String): String =
+    Text.Kn.buildOnce(s, s"knlm_base_${ScratchKeys.forPath(d)}")(
+      Text.Kn.write(_, Text.knCounts(docs(s, d), "doc_id", toks)))
 
   /** Shared persisted full-corpus TRIGRAM KN model — the tenth family's
     * frozen streaming-serving base, same attribution discipline as
     * [[ensureKnBase]].
     */
-  private[queries] def ensureKn3Base(s: SparkSession, d: String): String = {
-    val prefix = s"kn3_base_${ScratchKeys.forPath(d)}"
-    SessionMemo.ensure(s, s"kn3_base:$d") {
-      Text.Kn3.drop(s, prefix)
-      Text.Kn3.write(prefix, Text.kn3Counts(docs(s, d), "doc_id", toks))
-    }
-    prefix
-  }
-
-  private[queries] def kn3BaseFrame(s: SparkSession, d: String): DataFrame =
-    s.table(s"${ensureKn3Base(s, d)}_meta")
+  private[queries] def ensureKn3Base(s: SparkSession, d: String): String =
+    Text.Kn3.buildOnce(s, s"kn3_base_${ScratchKeys.forPath(d)}")(
+      Text.Kn3.write(_, Text.kn3Counts(docs(s, d), "doc_id", toks)))
 
   /** Full-corpus (doc_id, n_trigrams, n_oov, nll) against the shared
     * frozen trigram-KN base — the Wenzek scoring pass, memoized AND
@@ -164,14 +148,9 @@ object TextQueries {
     * once per (session, corpus) from the memoized [[ulm2]] pieces (the
     * training itself prewarms under `shared_frame_builds`).
     */
-  private[queries] def ensureUlmBase(s: SparkSession, d: String): String = {
-    val prefix = s"ulm_base_${ScratchKeys.forPath(d)}"
-    SessionMemo.ensure(s, s"ulm_base:$d") {
-      Text.Ulm.drop(s, prefix)
-      Text.writeUlmModel(ulm2(s, d)._1, prefix, maxPieceLen = 4)
-    }
-    prefix
-  }
+  private[queries] def ensureUlmBase(s: SparkSession, d: String): String =
+    Text.Ulm.buildOnce(s, s"ulm_base_${ScratchKeys.forPath(d)}")(
+      Text.writeUlmModel(ulm2(s, d)._1, _, maxPieceLen = 4))
 
   private[queries] val LangBins = 64
   private[queries] val LangSalt = 19 // all 16 lexicon words land in distinct bins
@@ -524,16 +503,10 @@ object TextQueries {
     * discipline every persisted family follows. Built once per
     * (session, corpus).
     */
-  private[queries] def ensureTextBase(s: SparkSession, d: String): String = {
-    val prefix = s"ti_base_${ScratchKeys.forPath(d)}"
-    SessionMemo.ensure(s, s"ti_base:$d") {
-      TextIndex.Family.drop(s, prefix)
-      TextIndex.writeTextIndex(
-        docs(s, d).filter(col("doc_id") % 4 =!= 3), "doc_id", toks,
-        prefix, buckets = 8)
-    }
-    prefix
-  }
+  private[queries] def ensureTextBase(s: SparkSession, d: String): String =
+    TextIndex.Family.buildOnce(s, s"ti_base_${ScratchKeys.forPath(d)}")(
+      TextIndex.writeTextIndex(docs(s, d).filter(col("doc_id") % 4 =!= 3), "doc_id", toks,
+        _, buckets = 8))
 
   /** Fixed BM25 query bag — high-signal corpus terms (see the generator's
     * vocabulary in TESTDATA.md); the scoring is term-agnostic.
@@ -596,15 +569,9 @@ object TextQueries {
     * certificates; built once per (session, corpus) like
     * [[ensureTextBase]].
     */
-  private[queries] def ensureSkewBase(s: SparkSession, d: String): String = {
-    val prefix = s"ti_skew_${ScratchKeys.forPath(d)}"
-    SessionMemo.ensure(s, s"ti_skew:$d") {
-      TextIndex.Family.drop(s, prefix)
-      TextIndex.writeTextIndex(skewedDocs(s, d), "doc_id", toks, prefix,
-        buckets = 8)
-    }
-    prefix
-  }
+  private[queries] def ensureSkewBase(s: SparkSession, d: String): String =
+    TextIndex.Family.buildOnce(s, s"ti_skew_${ScratchKeys.forPath(d)}")(
+      TextIndex.writeTextIndex(skewedDocs(s, d), "doc_id", toks, _, buckets = 8))
 
   /** Fixed batch of query bags for the multi-query served probe —
     * overlapping vocabularies on purpose (bag 0 shares nothing with bag

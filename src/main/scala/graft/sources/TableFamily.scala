@@ -112,6 +112,18 @@ class TableFamily(declared: String*) {
     compact(spark, prefix, from.map(_ -> anti).toMap): Unit
   }
 
+  /** A shared read-only family at `prefix`, built once per (session,
+    * prefix): the first call drops any remnant, then runs `write(prefix)`;
+    * later calls only return `prefix`. A write that throws leaves no mark.
+    */
+  def buildOnce(spark: SparkSession, prefix: String)(write: String => Unit): String = {
+    SessionMemo.ensure(spark, s"base:$prefix") {
+      drop(spark, prefix)
+      write(prefix)
+    }
+    prefix
+  }
+
   /** Drop every remnant of the family at `prefix`: the bare members, the
     * ingest ledger, the generation pointer, and every generation member
     * `<prefix>_g<N><member>` found in the catalog or, for a fresh JVM

@@ -126,6 +126,68 @@ class QueryShapeSpec extends SparkSpec {
     } finally (fixtures() :+ d.toFile).foreach(org.apache.commons.io.FileUtils.deleteDirectory)
   }
 
+  test("recallCertificate: floor boundary, duplicate served pairs, column and row order") {
+    import spark.implicits._
+    // shuffled on purpose: the certificate orders by (query_id, rank)
+    val ref = Seq((2L, 2L, 21L, 0.6), (1L, 1L, 10L, 0.9), (2L, 1L, 20L, 0.7), (1L, 2L, 11L, 0.8))
+      .toDF("query_id", "rank", "neighbor_id", "cos")
+    // 3 of the 4 reference rows served, one of them twice
+    val served = Seq((1L, 10L), (1L, 10L), (1L, 11L), (2L, 20L), (2L, 99L))
+      .toDF("query_id", "neighbor_id")
+    def cert(floor: Double, alsoOk: Boolean = true) =
+      Parity.recallCertificate(ref, served, "x_ok", floor, alsoOk)(
+        "a_ok" -> true, "b_ok" -> false)
+    val out = cert(0.75)
+    assert(out.columns.toSeq == Seq("query_id", "rank", "neighbor_id", "cos", "x_ok", "a_ok", "b_ok"))
+    val rows = out.as[(Long, Long, Long, Double, Boolean, Boolean, Boolean)].collect().toSeq
+    assert(rows.map(r => (r._1, r._2, r._3, r._4)) ==
+      Seq((1L, 1L, 10L, 0.9), (1L, 2L, 11L, 0.8), (2L, 1L, 20L, 0.7), (2L, 2L, 21L, 0.6)),
+      "one row per reference row, ordered by (query_id, rank)")
+    assert(rows.forall(r => r._5 && r._6 && !r._7), s"recall 0.75 at floor 0.75 certifies: $rows")
+    def oks(df: org.apache.spark.sql.DataFrame) = df.select("x_ok").as[Boolean].collect().toSeq
+    assert(oks(cert(0.7500001)) == Seq.fill(4)(false), "recall just below the floor fails")
+    assert(oks(cert(0.75, alsoOk = false)) == Seq.fill(4)(false), "a failed lifecycle check fails")
+  }
+
+  test("ANN tier: certificates hold, full-corpus queries share one memoized reference") {
+    val s = spark.newSession()
+    val key = s"exact_top3:$sf"
+    assert(graft.SessionMemo.peek(s, key).isEmpty)
+    val full = Seq("sim_knn_ivf", "sim_knn_ivf_ingest", "st_ann_index_parity")
+    val outs = Seq("sim_knn_ivf", "sim_knn_ivf_ingest", "sim_knn_ivfpq_delete",
+        "st_ann_index_parity").map { q =>
+      val out = graft.SparkEntry.queries(q)(s, sf).localCheckpoint(true)
+      if (q == "sim_knn_ivf")
+        assert(graft.SessionMemo.peek(s, key).isDefined, "the reference is memoized by the first query")
+      val oks = out.columns.filter(_.endsWith("_ok"))
+      assert(out.count() > 0 && oks.nonEmpty, s"$q emits certified rows")
+      oks.foreach(c => assert(out.filter(!coalesce(col(c), lit(false))).isEmpty, s"$q: $c"))
+      q -> out
+    }.toMap
+    val refs = full.map(q => outs(q).select("query_id", "rank", "neighbor_id", "cos").collect().toSeq)
+    assert(refs.distinct.size == 1, s"the full-corpus queries emit one reference: $refs")
+    assert(refs.head == SimilarityQueries.exactTop3(s, sf).collect().toSeq)
+  }
+
+  test("stream split: a stale fixture dir without parquet files is rebuilt") {
+    val d = java.nio.file.Files.createTempDirectory("graft_st_stale")
+    new java.io.File(sf).listFiles().filter(_.getName.endsWith(".parquet")).foreach(f =>
+      java.nio.file.Files.createSymbolicLink(d.resolve(f.getName), f.toPath.toAbsolutePath))
+    val split = StreamQueries.Vecs4
+    val dir = StreamQueries.fixtureDir(split.name, d.toString, split.table)
+    // an older layout's directory at the fixture path: no parquet file in it
+    java.nio.file.Files.createDirectories(dir.resolve("embeddings_old"))
+    try {
+      val out = StreamQueries.queries("st_kmeans_serving_parity")(spark, d.toString)
+        .localCheckpoint(true)
+      val files = dir.toFile.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+      assert(files.length == 4, s"the split's four files replace the stale dir: ${files.toSeq}")
+      val oks = out.columns.filter(_.endsWith("_ok"))
+      assert(out.count() > 0 && oks.nonEmpty)
+      oks.foreach(c => assert(out.filter(!coalesce(col(c), lit(false))).isEmpty, c))
+    } finally Seq(dir.getParent.toFile, d.toFile).foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+  }
+
   test("k11_xml_roundtrip: XML metacharacters survive write+read") {
     val out = ParityQueries.queries("k11_xml_roundtrip")(spark, sf)
     val probes = out.select("xml_probe").collect().map(_.getString(0))
