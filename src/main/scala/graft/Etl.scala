@@ -68,18 +68,22 @@ object Etl {
       case Some(c) if daily => Tables.incremental(raw, c, day)
       case _                => raw
     }
+    val sink = Sinks.parquetAdapter(spark, s"$outBase/${spec.name}", Some(spec.name))
     // P7: skip transform+load on empty extract (etl_process.py:21,24-25).
-    Transforms.nonEmptyGuard(extracted).map { df =>
-      val transformed = Transforms.forTable(spec.name)(df)
-      val schema = SchemaRegistry.schemaFor(registry, spec.name)
-      val report = Sinks.load(
-        spark, transformed, schema, s"$outBase/${spec.name}",
-        daily = daily, dayPartitionField = spec.dayPartitionField,
-        table = Some(spec.name))
+    // Where an empty write leaves the destination as it was (a DAY-
+    // partitioned append into an existing table), the write is the probe:
+    // a count of 0 skips the table as the guard would have, and the source
+    // is not scanned twice. Elsewhere the guard's limit(1) probe runs first.
+    val writeProbes = sink.emptyWriteIsNoOp(daily, spec.dayPartitionField)
+    val toLoad = if (writeProbes) Some(extracted) else Transforms.nonEmptyGuard(extracted)
+    toLoad.flatMap { df =>
+      val report = Sinks.loadVia(sink, Transforms.forTable(spec.name)(df),
+        SchemaRegistry.schemaFor(registry, spec.name), daily, spec.dayPartitionField)
       // transforms are row-preserving (rename/drop/cast), so the rows the
       // write job counted ARE the extract count: the source is scanned once,
       // by the write, and rowsTotal is the K5 read-back of the destination.
-      RunReport(spec.name, report.rowsLoaded, report.rowsLoaded, report.rowsTotal)
+      Option.when(report.rowsLoaded > 0 || !writeProbes)(
+        RunReport(spec.name, report.rowsLoaded, report.rowsLoaded, report.rowsTotal))
     }
   }
 

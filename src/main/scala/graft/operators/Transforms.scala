@@ -103,7 +103,13 @@ object Transforms {
 
   /** P7: empty-input guard (`etl_process.py:21,24-25`) — the reference skips
     * transform+load when the extract is empty. `isEmpty` is a `limit(1)`
-    * probe, not a full count.
+    * probe, not a full count, but on a remote source it is still a second
+    * query before the load's own scan. `Etl.runTable` therefore runs it
+    * only where an empty write would change the destination: a truncate
+    * (it would empty the table), an unpartitioned append (it adds a
+    * schema-only part file), a first load (it creates the directory) and
+    * any sink leg not shown otherwise (BigQuery). A DAY-partitioned append
+    * into an existing table skips it: its write's own row count decides.
     */
   def nonEmptyGuard(df: DataFrame): Option[DataFrame] =
     if (df.isEmpty) None else Some(df)

@@ -57,6 +57,27 @@ object SimilarityQueries {
         .localCheckpoint(true)
     }
 
+  /** The exact brute-force top-3 over the survivors of the delete queries'
+    * take-down (every 7th vector gone, `vec_id % 7 <> 0`), with the
+    * survivor and corpus counts their completeness certificates check:
+    * the reference `sim_knn_ivf_delete` and `sim_knn_ivfpq_delete` share.
+    * Both frames are memoized per (session, corpus); the counts come from
+    * one aggregation and are held as a local one-row frame.
+    */
+  private[queries] def survivorsTop3(s: SparkSession, d: String): (DataFrame, Long, Long) = {
+    val e = emb(s, d)
+    val survivor = col("vec_id") % 7 =!= 0
+    val brute = SessionMemo.getOrCompute(s, s"survivors_top3:$d") {
+      Similarity.bruteForceTopK(queriesOf(e), e.filter(survivor), "vec_id", "embedding", k = 3)
+        .localCheckpoint(true)
+    }
+    val n = SessionMemo.getOrCompute(s, s"survivor_counts:$d") {
+      val r = e.agg(count(when(survivor, 1)), count(lit(1))).head()
+      s.createDataFrame(Seq((r.getLong(0), r.getLong(1))))
+    }.head()
+    (brute, n.getLong(0), n.getLong(1))
+  }
+
   /** True iff the active generation of the index at `prefix` lists each
     * of `n` vectors exactly [[IvfAssign]] times in its `member` table
     * (`_lists` or `_codes`): one aggregation pass for total and distinct
@@ -1096,17 +1117,12 @@ object SimilarityQueries {
     "sim_knn_ivf_delete" -> ((s, d) => {
       val e = emb(s, d)
       val q = queriesOf(e)
-      val survivors = e.filter(col("vec_id") % 7 =!= 0)
       val base = ensureIvfBase(s, d)
       val prefix = s"ivf_del_${ScratchKeys.forPath(d)}"
-      // survivor/corpus counts + brute-force-over-survivors never read
-      // the fork — built on a second thread while the snapshot + deletion
+      // the survivors reference never reads the fork — built (or taken
+      // from the memo) on a second thread while the snapshot + deletion
       // run (guide §2.6, Overlap.both)
-      val ((sN, eN, brute), _) = Overlap.both {
-        (survivors.count(), e.count(),
-          Similarity.bruteForceTopK(q, survivors, "vec_id", "embedding", k = 3)
-            .localCheckpoint(true))
-      } {
+      val ((brute, sN, eN), _) = Overlap.both(survivorsTop3(s, d)) {
         // the take-down is trialed on a FORK of the serving base (snapshot,
         // no retrain) — copy-on-write: index_ok additionally pins that the
         // base still lists the FULL corpus after the fork's deletion
@@ -1132,17 +1148,12 @@ object SimilarityQueries {
     "sim_knn_ivfpq_delete" -> ((s, d) => {
       val e = emb(s, d)
       val q = queriesOf(e)
-      val survivors = e.filter(col("vec_id") % 7 =!= 0)
       val base = ensureIvfPqBase(s, d)
       val prefix = s"ivfpq_del_${ScratchKeys.forPath(d)}"
-      // survivor/corpus counts + brute-force-over-survivors never read
-      // the fork — built on a second thread while the snapshot + deletion
+      // the survivors reference never reads the fork — built (or taken
+      // from the memo) on a second thread while the snapshot + deletion
       // run (guide §2.6, Overlap.both)
-      val ((sN, eN, brute), _) = Overlap.both {
-        (survivors.count(), e.count(),
-          Similarity.bruteForceTopK(q, survivors, "vec_id", "embedding", k = 3)
-            .localCheckpoint(true))
-      } {
+      val ((brute, sN, eN), _) = Overlap.both(survivorsTop3(s, d)) {
         // fork-then-delete (see sim_knn_ivf_delete): the flagship index's
         // take-down trials on a snapshot; index_ok additionally pins the
         // base's codes AND re-rank vectors untouched by the fork's scrub

@@ -55,7 +55,10 @@ object BigQuerySink {
   /** The BigQuery leg of the sink seam. `write` counts its rows inside the
     * load job, like the parquet leg; `countAudit` is the
     * `get_table(...).num_rows` read-back (`bigquery_operations.py:46-48`),
-    * spelled as a connector read so it stays a metadata-only count.
+    * spelled as a connector read so it stays a metadata-only count. Whether
+    * an empty load job leaves the table untouched cannot be checked here,
+    * so `emptyWriteIsNoOp` stays false and callers keep their empty-input
+    * guard on this leg.
     */
   def adapter(
       spark: SparkSession,

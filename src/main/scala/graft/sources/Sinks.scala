@@ -1,10 +1,14 @@
 package graft.sources
 
-import java.util.concurrent.TimeoutException
+import java.util.concurrent.{Callable, Executors, TimeoutException}
 
 import scala.concurrent.Await
 import scala.concurrent.duration.{DurationInt, FiniteDuration}
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -22,7 +26,9 @@ import graft.model.SchemaRegistry
   *    (`bigquery_operations.py:30-34`). Day partitioning keeps future
   *    incremental reads partition-prunable, which is the 100 TB story: a
   *    daily query touches one directory, not the table;
-  *  - K5 post-load row-count audit (`bigquery_operations.py:46-48`).
+  *  - K5 post-load row-count audit (`bigquery_operations.py:46-48`): a
+  *    metadata read, like the reference's `num_rows` — the row counts in
+  *    the committed files' parquet footers ([[countAudit]]), no Spark job.
   *
   * A table load counts its rows inside its write job ([[write]]),
   * so it scans its source exactly once.
@@ -98,9 +104,62 @@ object Sinks {
             s"arrive within $bound (Spark listener bus event dropped?)")
     }
 
-  /** K5: read-back count audit. */
-  def countAudit(spark: SparkSession, path: String): Long =
-    spark.read.parquet(path).count()
+  /** K5: the rows in the destination at `path`, read back from the files
+    * its writes committed — independently of any write's own count — as
+    * the sum of the row counts in their parquet footers. It runs no Spark
+    * job and reads no data page; `spark.read.parquet(path).count()` ran
+    * three jobs for the same number.
+    *
+    * The data files are the ones Spark's file index reads: a recursive
+    * listing that skips [[hiddenFromScans]] names (`_SUCCESS`, `.crc`
+    * files, an uncommitted task's `_temporary/`) and zero-byte files, for
+    * which Spark plans no split. Footers open on a bounded
+    * driver pool ([[onDriverPool]]) with one shared set of read options.
+    * At scale the audit costs one footer read per data file — the file
+    * opens the Spark count's tasks made, minus the jobs — after a driver
+    * walk that lists each partition directory once. A missing `path`
+    * throws `FileNotFoundException`.
+    */
+  def countAudit(spark: SparkSession, path: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    // default options would build a fresh Configuration per footer
+    val options = HadoopReadOptions.builder(conf).build()
+    onDriverPool(dataFiles(root.getFileSystem(conf), root)) { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), options)
+      try reader.getRecordCount finally reader.close()
+    }.sum
+  }
+
+  /** Non-empty data files under `dir`, recursively. `listStatus`, not
+    * `listFiles`: on the local file system `listFiles` resolves block
+    * locations, which forks a `stat` per file.
+    */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filterNot(st => hiddenFromScans(st.getPath.getName)).flatMap { st =>
+      if (st.isDirectory) dataFiles(fs, st.getPath)
+      else if (st.getLen > 0) Seq(st)
+      else Nil
+    }
+
+  /** Names Spark's file index leaves out of a scan: `.`-prefixed,
+    * `_`-prefixed unless a `key=value` partition directory, and files
+    * still being copied in.
+    */
+  private def hiddenFromScans(name: String): Boolean =
+    name.startsWith(".") || (name.startsWith("_") && !name.contains("=")) ||
+      name.endsWith("._COPYING_")
+
+  /** `f` over `items` on a per-call pool of at most 16 driver threads (no
+    * leaked threads), results in order; the first failure propagates.
+    */
+  private def onDriverPool[A, B](items: Seq[A])(f: A => B): Seq[B] =
+    if (items.size <= 1) items.map(f)
+    else {
+      val pool = Executors.newFixedThreadPool(math.min(16, items.size))
+      try items.map(a => pool.submit(new Callable[B] { def call(): B = f(a) })).map(_.get())
+      finally pool.shutdown()
+    }
 
   /** Bucketed, sorted table layout for shuffle-free co-located joins —
     * the 100 TB answer to "this join runs every day on the same keys":
@@ -366,28 +425,14 @@ object Sinks {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = srcPath.getFileSystem(conf)
     if (!fs.exists(dstPath)) fs.mkdirs(dstPath): Unit
-    val files = parquetFilesAt(spark, srcPath)
     // copy files CONCURRENTLY (r16 — measured: a sequential FileUtil.copy
     // of one bucketed postings table was 2.25 s of single-threaded driver
     // time, the whole rest of the clone is milliseconds): destinations
-    // are distinct files, so the copies are independent; the pool is
-    // bounded and per-call (no leaked threads)
-    if (files.nonEmpty) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, files.size))
-      try {
-        val tasks = files.map { st =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit =
-              org.apache.hadoop.fs.FileUtil.copy(
-                fs, st.getPath, fs,
-                new org.apache.hadoop.fs.Path(dstPath, st.getPath.getName),
-                false, conf): Unit
-          })
-        }
-        tasks.foreach(_.get()) // propagate the first failure
-      } finally pool.shutdown()
-    }
+    // are distinct files, so the copies are independent
+    onDriverPool(parquetFilesAt(spark, srcPath)) { st =>
+      org.apache.hadoop.fs.FileUtil.copy(
+        fs, st.getPath, fs, new Path(dstPath, st.getPath.getName), false, conf): Unit
+    }: Unit
     spark.catalog.refreshTable(dst)
   }
 
@@ -744,8 +789,18 @@ object Sinks {
       * ([[countedWrite]]), never by a separate pass over `df`.
       */
     def write(df: DataFrame, daily: Boolean, dayPartitionField: Option[String]): Long
-    /** Rows in the destination after the write, read back from it. */
+    /** K5: rows in the destination after the write, read back from the
+      * destination itself, never from the write's count. A metadata read
+      * where the sink keeps one (parquet footers, BigQuery `num_rows`).
+      */
     def countAudit(): Long
+    /** True when a write of zero rows with this disposition leaves the
+      * destination exactly as it was, so a caller may skip its empty-input
+      * probe and let the write's count say whether rows landed. False
+      * unless a leg has shown it: an empty write that changes the
+      * destination (truncates it, or adds a file) needs the probe first.
+      */
+    def emptyWriteIsNoOp(daily: Boolean, dayPartitionField: Option[String]): Boolean = false
   }
 
   def parquetAdapter(spark: SparkSession, path: String, table: Option[String] = None): SinkAdapter =
@@ -754,6 +809,15 @@ object Sinks {
       def write(df: DataFrame, daily: Boolean, dayPartitionField: Option[String]): Long =
         Sinks.write(df, path, daily, dayPartitionField)
       def countAudit(): Long = Sinks.countAudit(spark, path)
+      // an empty DAY-partitioned append into an existing directory writes
+      // no file (pinned in EtlSpec); into a missing one it creates the
+      // directory, and an empty unpartitioned write adds a schema-only
+      // part file
+      override def emptyWriteIsNoOp(daily: Boolean, dayPartitionField: Option[String]): Boolean =
+        daily && dayPartitionField.isDefined && {
+          val p = new Path(path)
+          p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+        }
     }
 
   /** K1+K2+K3+K5 composite against any [[SinkAdapter]] — the whole

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.model.SchemaRegistry
@@ -30,6 +32,19 @@ class EtlSpec extends SparkSpec {
     (2L, ts("2024-01-15 11:00:00"), "s2", "b.bak"),
     (3L, ts("2024-01-15 12:00:00"), "s1", "c.bak")
   ).toDF("ID", "backup_date", "server", "fileName")
+
+  /** `sourceDf` as a parquet landing table, so every probe of it is a
+    * scan. Opened here, so its schema-inference job runs before any count.
+    */
+  private def landed(): String => org.apache.spark.sql.DataFrame = {
+    val dir = Files.createTempDirectory("graft_etl_src").resolve("daily_log").toString
+    sourceDf.write.parquet(dir)
+    val df = spark.read.parquet(dir)
+    _ => df
+  }
+
+  private val daySpec = Etl.TableSpec("daily_log",
+    incrementalCol = Some("backup_date"), dayPartitionField = Some("BackupDate"))
 
   test("full refresh: transform dispatch + schema enforce + DAY partitioning") {
     val out = Files.createTempDirectory("graft_etl").toString
@@ -62,6 +77,54 @@ class EtlSpec extends SparkSpec {
     val reports = Etl.run(spark, Seq(spec), _ => sourceDf, registry, out, daily = true, day = day)
     assert(reports.isEmpty)
     assert(!new java.io.File(s"$out/daily_log").exists())
+    // a DAY-partitioned first load keeps the guard: an empty write would
+    // create the destination directory
+    assert(Etl.run(spark, Seq(daySpec), _ => sourceDf, registry, out, daily = true, day = day).isEmpty)
+    assert(!new java.io.File(s"$out/daily_log").exists())
+  }
+
+  test("a table load runs at most 2 Spark jobs for a daily append, 3 for a full refresh") {
+    val src = landed()
+    def runTable(spec: Etl.TableSpec, out: String, daily: Boolean) =
+      jobsStartedBy(Etl.runTable(spark, spec, src, registry, out, daily,
+        java.time.LocalDate.parse("2024-01-15")))
+    val out = Files.createTempDirectory("graft_etl_jobs").toString
+    // full refresh: guard, then the DAY write's shuffle map and result jobs
+    val (full, fullJobs) = runTable(daySpec, out, daily = false)
+    assert(full.contains(Etl.RunReport("daily_log", 3, 3, 3)))
+    assert(fullJobs <= 3, s"full refresh ran $fullJobs jobs")
+    // DAY-partitioned daily append into the existing table: the write alone
+    val (daily, dailyJobs) = runTable(daySpec, out, daily = true)
+    assert(daily.contains(Etl.RunReport("daily_log", 2, 2, 5)))
+    assert(dailyJobs <= 2, s"DAY append ran $dailyJobs jobs")
+    // unpartitioned append: guard and write
+    val flat = Etl.TableSpec("daily_log", incrementalCol = Some("backup_date"))
+    val (flatReport, flatJobs) =
+      runTable(flat, Files.createTempDirectory("graft_etl_jobs_flat").toString, daily = true)
+    assert(flatReport.contains(Etl.RunReport("daily_log", 2, 2, 2)))
+    assert(flatJobs <= 2, s"unpartitioned append ran $flatJobs jobs")
+  }
+
+  test("an empty DAY-partitioned day into an existing table: no report, files untouched (P7)") {
+    val src = landed()
+    val out = Files.createTempDirectory("graft_etl_p7").toString
+    val dest = java.nio.file.Paths.get(out, "daily_log")
+    assert(Etl.run(spark, Seq(daySpec), src, registry, out).nonEmpty)
+    // every parquet file under the destination: relative name -> bytes
+    def parquetFiles(): Map[String, Seq[Byte]] = {
+      val st = Files.walk(dest)
+      try st.iterator().asScala
+        .filter(_.toString.endsWith(".parquet"))
+        .map(p => dest.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+      finally st.close()
+    }
+    val before = parquetFiles()
+    assert(before.nonEmpty)
+    val reports = Etl.run(spark, Seq(daySpec), src, registry, out, daily = true,
+      day = java.time.LocalDate.parse("1999-01-01"))
+    assert(reports.isEmpty)
+    // same names, sizes and bytes
+    assert(parquetFiles() == before)
   }
 
   test("fail-fast: a missing registry entry aborts the run (O3/K6)") {

@@ -103,6 +103,48 @@ class SinksSpec extends SparkSpec {
       s"$out/empty") == 0L)
   }
 
+  test("K5 audit: footer row counts equal Spark's count of the destination, with no job") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType), StructField("ts", TimestampType)))
+    val rows = (0 until 30).map(i =>
+      Row(i.toLong, java.sql.Timestamp.valueOf(f"2024-01-${1 + i % 3}%02d 10:00:00")))
+    val out = Files.createTempDirectory("graft_audit")
+    val dest = out.resolve("t").toString
+    // a DAY destination over two appends: p_date= directories, _SUCCESS and .crc files
+    Seq(0, 1).foreach { _ =>
+      Sinks.write(spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema), dest,
+        daily = true, dayPartitionField = Some("ts"))
+    }
+    def under(dir: String): Seq[Path] = {
+      val st = Files.walk(Paths.get(dir))
+      try st.iterator().asScala.toList
+      finally st.close()
+    }
+    def partFile(dir: String) = under(dir).find(p =>
+      p.getFileName.toString.startsWith("part-") && p.toString.endsWith(".parquet")).get
+    assert(under(dest).exists(_.getFileName.toString == "_SUCCESS"))
+    assert(under(dest).exists(_.getFileName.toString.endsWith(".crc")))
+    assert(under(dest).exists(_.getFileName.toString.startsWith("p_date=")))
+    // a leftover of an uncommitted task that holds rows: scans skip _temporary/
+    val leftover = out.resolve("leftover").toString
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema).write.parquet(leftover)
+    Files.createDirectories(Paths.get(dest, "_temporary", "0"))
+    Files.copy(partFile(leftover), Paths.get(dest, "_temporary", "0", "part-00000-left.parquet"))
+    // a zero-row part file in a partition directory
+    val empty = out.resolve("empty").toString
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema).write.parquet(empty)
+    val day = under(dest).find(_.getFileName.toString.startsWith("p_date=")).get
+    Files.copy(partFile(empty), day.resolve("part-00000-zero.parquet"))
+
+    val (audited, jobs) = jobsStartedBy(Sinks.countAudit(spark, dest))
+    assert(audited == spark.read.parquet(dest).count())
+    assert(audited == 60L)
+    assert(jobs == 0, s"the audit started $jobs Spark jobs")
+  }
+
   test("a row count that never arrives fails the load by name instead of hanging") {
     val e = intercept[IllegalStateException] {
       Sinks.awaitObservedRows("warehouse/daily_log", org.apache.spark.sql.Observation(),

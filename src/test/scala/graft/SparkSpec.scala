@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,6 +15,36 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // session shared across suites
+
+  /** `body`'s result and the Spark jobs it started: jobs whose local
+    * properties carry a tag set on the calling thread (inherited by the
+    * threads it starts), so jobs of other suites do not count. The
+    * listener bus is drained before the count is read.
+    */
+  def jobsStartedBy[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobs"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty(key) == tag) jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    val prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, tag)
+    try {
+      val r = body
+      // LiveListenerBus.waitUntilEmpty is private to Spark, hence reflection
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
+        .invoke(bus, java.lang.Long.valueOf(60000L))
+      (r, jobs.get)
+    } finally {
+      sc.setLocalProperty(key, prev)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 object SparkSpec {
