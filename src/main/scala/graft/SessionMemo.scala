@@ -21,12 +21,14 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *    persisted base index". The state lives on disk in catalog tables, so
   *    the mark is a strong boolean: a GC must never silently re-trigger a
   *    multi-second rebuild.
-  *  - fingerprint-keyed metadata ([[cached]], [[cachedHead]]): index-family
-  *    metadata that is immutable per generation. Every entry is keyed by the
+  *  - fingerprint-keyed metadata ([[cached]], [[cachedHead]],
+  *    [[cachedForPath]]): index-family metadata that is immutable per
+  *    generation, and source schemas. Every entry is keyed by the
   *    file-set fingerprint of a guard table the family's builders rewrite
-  *    whenever any cached member changes (`_meta`, written last), so a
-  *    rewrite under the same name is simply never read from the stale
-  *    entry. Values are metadata-scale and held strongly.
+  *    whenever any cached member changes (`_meta`, written last), or of
+  *    the source path itself, so a rewrite under the same name is simply
+  *    never read from the stale entry. Values are metadata-scale and held
+  *    strongly.
   *
   * Sessions are weak keys, so every entry dies with its session. Every
   * policy builds under a per-(session, key) lock: concurrent callers (a
@@ -101,24 +103,33 @@ private[graft] object SessionMemo {
   def ensure(s: SparkSession, key: String)(build: => Unit): Unit =
     singleFlight[Unit](s, s"mark:$key")(_ => Some(()), _ => java.lang.Boolean.TRUE)(build)
 
-  /** File-set fingerprint of `table` (sorted name:len:mtime triples).
-    * Parquet write file names carry fresh UUIDs, so any rewrite, even one
-    * producing identical bytes, changes it. One catalog lookup plus one
-    * directory listing: driver metadata ops, no Spark job. Also used for
-    * frame keys whose value is a soft frame (the KN serving fold).
+  /** File-set fingerprint of `table` ([[pathFingerprint]] of its
+    * location). Also used for frame keys whose value is a soft frame (the
+    * KN serving fold).
     */
   def tableFingerprint(spark: SparkSession, table: String): String = {
     val meta = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val path = new org.apache.hadoop.fs.Path(meta.location)
+    pathFingerprint(spark, new org.apache.hadoop.fs.Path(meta.location))
+  }
+
+  /** File-set fingerprint of the files under `path` (sorted
+    * relative-name:len:mtime triples, walking into subdirectories; a
+    * missing path has the empty fingerprint). Parquet write file names
+    * carry fresh UUIDs, so any rewrite, even one producing identical
+    * bytes, changes it. Directory listings only: driver metadata ops, no
+    * Spark job.
+    */
+  def pathFingerprint(spark: SparkSession, path: org.apache.hadoop.fs.Path): String = {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sts =
-      try fs.listStatus(path)
-      catch { case _: java.io.FileNotFoundException =>
-        Array.empty[org.apache.hadoop.fs.FileStatus] }
-    sts.filter(_.isFile)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
+    def walk(p: org.apache.hadoop.fs.Path, rel: String): Seq[String] =
+      (try fs.listStatus(p).toSeq
+       catch { case _: java.io.FileNotFoundException => Nil }).flatMap { st =>
+        val name = if (rel.isEmpty) st.getPath.getName else s"$rel/${st.getPath.getName}"
+        if (st.isDirectory) walk(st.getPath, name)
+        else Seq(s"$name:${st.getLen}:${st.getModificationTime}")
+      }
+    walk(path, "").sorted.mkString("|")
   }
 
   /** Memoized `load`, keyed on (session, `what`, guard table's current
@@ -128,8 +139,20 @@ private[graft] object SessionMemo {
     */
   def cached[T <: AnyRef](
       spark: SparkSession, guardTable: String, what: String)(load: => T): T =
-    singleFlight[T](spark,
-      s"meta:$what@$guardTable@${tableFingerprint(spark, guardTable)}")(
+    fingerprinted(spark, s"$what@$guardTable", tableFingerprint(spark, guardTable))(load)
+
+  /** Memoized `load`, keyed on (session, `what`, the current
+    * [[pathFingerprint]] of `path`): a rewrite of the files under `path`
+    * loads afresh.
+    */
+  def cachedForPath[T <: AnyRef](
+      spark: SparkSession, path: String, what: String)(load: => T): T =
+    fingerprinted(spark, s"$what@$path",
+      pathFingerprint(spark, new org.apache.hadoop.fs.Path(path)))(load)
+
+  private def fingerprinted[T <: AnyRef](
+      spark: SparkSession, key: String, fingerprint: String)(load: => T): T =
+    singleFlight[T](spark, s"meta:$key@$fingerprint")(
       v => Some(v.asInstanceOf[T]), identity)(load)
 
   /** Memoized head row of a single-row parameter table (every family's

@@ -1128,13 +1128,21 @@ object Text {
       coalesce(sum(when(col("cabc") === 1, 1L)), lit(0L)).as("n1_3"),
       coalesce(sum(when(col("cabc") === 2, 1L)), lit(0L)).as("n2_3"))
 
+  private def kn3G2n1 = coalesce(sum(when(col("nbc") === 1, 1L)), lit(0L)).as("n1_2")
+  private def kn3G2n2 = coalesce(sum(when(col("nbc") === 2, 1L)), lit(0L)).as("n2_2")
+  private def kn3GBgN = count(lit(1)).as("nbg")
+
   private[graft] def kn3DerivedG2(cont: DataFrame): DataFrame =
-    cont.agg(
-      coalesce(sum(when(col("nbc") === 1, 1L)), lit(0L)).as("n1_2"),
-      coalesce(sum(when(col("nbc") === 2, 1L)), lit(0L)).as("n2_2"))
+    cont.agg(kn3G2n1, kn3G2n2)
 
   private[graft] def kn3DerivedGBg(cont: DataFrame): DataFrame =
-    cont.agg(count(lit(1)).as("nbg"))
+    cont.agg(kn3GBgN)
+
+  /** [[kn3DerivedG2]] and [[kn3DerivedGBg]] in one aggregation:
+    * (n1_2, n2_2, nbg).
+    */
+  private[graft] def kn3DerivedG2Bg(cont: DataFrame): DataFrame =
+    cont.agg(kn3G2n1, kn3G2n2, kn3GBgN)
 
   /** The trigram-KN scoring arithmetic over explicitly-supplied derived
     * statistics — one body for the inline (lazy) and serving (memoized
@@ -1336,15 +1344,18 @@ object Text {
       spark.createDataFrame(Seq((r.getLong(0), r.getLong(1))))
         .toDF("n1_3", "n2_3")
     }
+    // g2 and gBg come from one job over `cont`, held as two one-row frames
+    def g2AndBg(): (DataFrame, DataFrame) = {
+      val r = kn3DerivedG2Bg(cont).head()
+      (spark.createDataFrame(Seq((r.getLong(0), r.getLong(1)))).toDF("n1_2", "n2_2"),
+        spark.createDataFrame(Seq(Tuple1(r.getLong(2)))).toDF("nbg"))
+    }
     val g2 = graft.SessionMemo.getOrCompute(spark, s"$key/g2") {
-      val r = kn3DerivedG2(cont).head()
-      spark.createDataFrame(Seq((r.getLong(0), r.getLong(1))))
-        .toDF("n1_2", "n2_2")
+      val (g2, gBg) = g2AndBg()
+      graft.SessionMemo.put(spark, s"$key/gbg", gBg)
+      g2
     }
-    val gBg = graft.SessionMemo.getOrCompute(spark, s"$key/gbg") {
-      val r = kn3DerivedGBg(cont).head()
-      spark.createDataFrame(Seq(Tuple1(r.getLong(0)))).toDF("nbg")
-    }
+    val gBg = graft.SessionMemo.getOrCompute(spark, s"$key/gbg")(g2AndBg()._2)
     knTrigramScoreBody(trigramTf(docs, idCol, toks), cabc, ab, cont, bmid,
       cc, g3, g2, gBg)
   }

@@ -1,10 +1,9 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
-import scala.concurrent.{Await, Promise}
-import scala.concurrent.duration.Duration
-import scala.util.Try
+import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.SparkSession
 
@@ -15,13 +14,30 @@ import org.apache.spark.sql.SparkSession
   * cores idle between small jobs. `side` runs on its own thread while
   * `main` runs on the caller's; both must be mutually independent (no
   * shared mutable state beyond the thread-safe memos) and should eagerly
-  * materialize what they return, or the overlap buys nothing.
+  * materialize what they return, or the overlap buys nothing. Nest calls
+  * for more than two pieces: `both(a)(both(b)(c))` runs `a`, `b` and `c`
+  * at once.
   *
-  * Failures: `side`'s is rethrown from the join. When `main` throws, the
-  * side's jobs are cancelled and the side is joined before `main`'s
-  * exception is rethrown, with the side's attached as suppressed, so no
-  * side job outlives the call. The side's jobs carry a per-call job tag,
-  * not a job group, so a caller's job group still attributes them.
+  * Neither piece may request a [[graft.SessionMemo]] key the caller holds
+  * (the caller waits on the join while holding it, so the piece would
+  * wait forever); a key both pieces request is built once, by whichever
+  * asks first, while the other waits.
+  *
+  * Failures stop the other piece. Each piece's jobs carry a per-call job
+  * tag (`graft-overlap-<n>` for the side, `graft-overlap-<n>-main` for
+  * `main`, inherited by threads either piece starts), not a job group, so
+  * a caller's job group still attributes them. The piece that fails first
+  * has the other's tag cancelled until the other ends; its exception is
+  * rethrown, with the other's (usually the cancellation) attached as
+  * suppressed. No job of either piece outlives the call.
+  *
+  * Call sites: the `d_curate_emit` dependency chains
+  * ([[TextQueries.curateCcnetFrame]] and the emit's tokenizer), the
+  * exact/served tiers of `sim_rag_batch`'s fused build and
+  * `sim_hard_negatives`, the survivors-only reference of the two ANN
+  * delete certificates, the certificate counts of the exactly-once ingest
+  * queries (`d_exactly_once_ingest`, `tx_bm25_ingest`), and
+  * `StreamQueries.overlapping` (reference work beside a stream drain).
   */
 private[graft] object Overlap {
 
@@ -29,22 +45,41 @@ private[graft] object Overlap {
 
   def both[A, B](side: => A)(main: => B): (A, B) = {
     val sc = SparkSession.active.sparkContext
-    val tag = s"graft-overlap-${calls.incrementAndGet()}"
-    val p = Promise[A]()
+    val sideTag = s"graft-overlap-${calls.incrementAndGet()}"
+    val mainTag = s"$sideTag-main"
+    val mainDone = new CountDownLatch(1)
+    val firstFailed = new AtomicReference[String]()
+    val sideResult = new AtomicReference[Try[A]]()
+    // built before `main`'s tag is added: the side inherits the caller's
+    // local properties at construction
     val t = new Thread(() => {
-      sc.addJobTag(tag) // thread-local: tags the side's jobs only
-      p.complete(Try(side)): Unit
+      sc.addJobTag(sideTag) // thread-local: tags the side's jobs only
+      val a = try Success(side) catch { case e: Throwable => Failure(e) }
+      if (a.isFailure && firstFailed.compareAndSet(null, sideTag)) {
+        // cancel until main ends: a job it launches after one cancel
+        // lands is caught by the next
+        var done = false
+        while (!done) {
+          sc.cancelJobsWithTag(mainTag)
+          done = mainDone.await(50, TimeUnit.MILLISECONDS)
+        }
+      }
+      sideResult.set(a)
     }, "graft-overlap")
     t.setDaemon(true)
     t.start()
-    val b = try main catch {
-      case e: Throwable =>
-        // cancel until the side ends: a job it launches after one cancel
-        // lands is caught by the next
-        while (t.isAlive) { sc.cancelJobsWithTag(tag); t.join(50) }
-        p.future.value.foreach(_.failed.foreach(e.addSuppressed))
-        throw e
+    sc.addJobTag(mainTag)
+    val b = try Right(main) catch { case e: Throwable => Left(e) }
+    finally { sc.removeJobTag(mainTag); mainDone.countDown() }
+    if (b.isLeft && firstFailed.compareAndSet(null, mainTag))
+      while (t.isAlive) { sc.cancelJobsWithTag(sideTag); t.join(50) }
+    t.join()
+    (sideResult.get, b) match {
+      case (Success(a), Right(v)) => (a, v)
+      case (Failure(se), Left(me)) if firstFailed.get == sideTag =>
+        se.addSuppressed(me); throw se
+      case (a, Left(me)) => a.failed.foreach(me.addSuppressed); throw me
+      case (Failure(se), Right(_)) => throw se
     }
-    (Await.result(p.future, Duration.Inf), b)
   }
 }

@@ -375,8 +375,8 @@ object StreamQueries {
     * inputs only (corpus tables, pre-stream persisted models, shared
     * memoized frames), and it eagerly materializes what it returns so the
     * overlap actually buys the wall time. Results are unchanged by
-    * construction: the same jobs run, just concurrently. Failures on
-    * either side propagate (Await rethrows the work side's).
+    * construction: the same jobs run, just concurrently. The first
+    * failure on either side cancels the other side's jobs and propagates.
     */
   private def overlapping[T](work: => T)(drain: => Unit): T =
     Overlap.both(work)(drain)._1

@@ -111,31 +111,51 @@ object TextQueries {
     * (dedup survivors → lang allowlist → quality floor → Wenzek §4.3
     * perplexity gate → calibrated keep floor), memoized once per
     * (session, corpus) and prewarmed through [[SharedFrames]]:
-    * `d_curate_ccnet` projects it, and the round-15 EMIT composition
+    * `d_curate_ccnet` projects it, and the EMIT composition
     * (`d_curate_emit`) tokenizes/packs/shards it — without the shared
     * frame the whole chain would run once per consumer.
+    *
+    * The three gate inputs are independent chains, built at once through
+    * nested [[Overlap.both]] calls, each running the plans and actions it
+    * would run alone:
+    *  - dedup: the MinHash pair edges, then [[graft.operators.Dedup.keepSurvivors]]'s
+    *    connected-components pass;
+    *  - LM: the trigram-KN base, the full-corpus scoring pass and the
+    *    perplexity buckets (the longest chain: it sets the wall time);
+    *  - classifier: features, holdout weights, the calibration fit and
+    *    the calibrated keep (its isotonic map's checkpoint).
+    * The gate join and its checkpoint run on the caller after the join.
+    * The chains never request this frame's key, which the caller holds
+    * while they run. A failing chain cancels the other two and leaves no
+    * entry under this key, so the next call rebuilds.
     */
   private[graft] def curateCcnetFrame(s: SparkSession, d: String): DataFrame =
     SessionMemo.getOrCompute(s, s"curate_ccnet:$d") {
-      val surv = graft.operators.Dedup.keepSurvivors(
-        docs(s, d), "doc_id", DedupQueries.minhashPairEdges(s, d))
+      val (surv, (ppl, cal)) = Overlap.both {
+        graft.operators.Dedup.keepSurvivors(
+          docs(s, d), "doc_id", DedupQueries.minhashPairEdges(s, d))
+      } {
+        Overlap.both {
+          pplBucketsFrame(s, d)
+            .filter(col("bucket") =!= "tail")
+            .select(col("doc_id"), col("nll"), col("bucket"))
+        } {
+          LinearModel.isotonicApply(
+              LinearModel.scoreSquashedLinear(
+                  classifierFeatures(s, d), ClfXCols, holdoutWeights(s, d))
+                .select(col("doc_id"), col("score"),
+                  round(col("score") + 1e-9, 4).as("lvl")),
+              "lvl", calibrationFitFrame(s, d))
+            .select(col("doc_id"),
+              round(col("cal_score") + 1e-9, 7).as("cal_keep"))
+            .filter(col("cal_keep") >= 0.5)
+        }
+      }
       val gated = surv
         .withColumn("tk", toks)
         .withColumn("quality", Text.qualityScore(col("text"), col("tk")))
         .filter(col("lang").isin("en", "de", "es", "fr")
           && col("quality") >= 0.5)
-      val ppl = pplBucketsFrame(s, d)
-        .filter(col("bucket") =!= "tail")
-        .select(col("doc_id"), col("nll"), col("bucket"))
-      val cal = LinearModel.isotonicApply(
-          LinearModel.scoreSquashedLinear(
-              classifierFeatures(s, d), ClfXCols, holdoutWeights(s, d))
-            .select(col("doc_id"), col("score"),
-              round(col("score") + 1e-9, 4).as("lvl")),
-          "lvl", calibrationFitFrame(s, d))
-        .select(col("doc_id"),
-          round(col("cal_score") + 1e-9, 7).as("cal_keep"))
-        .filter(col("cal_keep") >= 0.5)
       gated.join(ppl, Seq("doc_id")).join(cal, Seq("doc_id"))
         .select(col("doc_id"), col("lang"), col("text"),
           size(col("tk")).cast("long").as("n_tokens"), col("quality"),
@@ -1675,9 +1695,12 @@ object TextQueries {
     // interleave) and one window per shard (= one packing stream per
     // writer task, the tx_pack_ctx argument); the tokenizer join is a
     // vocabulary-sized broadcast.
+    //
+    // The tokenizer (ULM training + family write) builds on an Overlap
+    // side while the curated frame's chains run; the encode, shard write
+    // and manifest run after the join.
     "d_curate_emit" -> ((s, d) => {
-      val cur = curateCcnetFrame(s, d)
-      val prefix = ensureUlmBase(s, d)
+      val (prefix, cur) = Overlap.both(ensureUlmBase(s, d))(curateCcnetFrame(s, d))
       val words = cur.select(explode(toks).as("word"))
         .filter(col("word") =!= "").distinct()
       // vocabulary-sized; materialized before the explode-join (the

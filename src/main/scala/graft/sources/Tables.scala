@@ -31,7 +31,18 @@ object Tables {
     * job — callers just compose on the returned (lazy) DataFrame.
     */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    normalizeEventTime(name, spark.read.parquet(s"$sfDir/$name.parquet"))
+    normalizeEventTime(name, readParquet(spark, s"$sfDir/$name.parquet"))
+
+  /** `spark.read.parquet(path)` with the schema inferred once per
+    * (session, path, file set): inference is a Spark job that reads a
+    * footer, paid on every open otherwise. The key is the path's
+    * [[graft.SessionMemo.pathFingerprint]], so a rewritten path re-infers;
+    * each load still lists the path's files (driver only).
+    */
+  private def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(graft.SessionMemo.cachedForPath(spark, path, "parquet-schema") {
+      spark.read.parquet(path).schema
+    }).parquet(path)
 
   private def normalizeEventTime(name: String, raw: DataFrame): DataFrame =
     eventTimeColumns.getOrElse(name, Nil).foldLeft(raw) { (df, c) =>
@@ -88,7 +99,7 @@ object Tables {
       name: String,
       tsCol: String,
       day: java.time.LocalDate): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+    val raw = readParquet(spark, s"$sfDir/$name.parquet")
     val (lo, hi) = raw.schema(tsCol).dataType match {
       case LongType if eventTimeColumns.getOrElse(name, Nil).contains(tsCol) =>
         def nanos(d: java.time.LocalDate) =

@@ -67,6 +67,23 @@ class SessionMemoSpec extends SparkSpec {
     assert(loads == 2 && v2 == "v2", "a rewritten guard table must reload")
   }
 
+  test("Tables.load infers a source's schema once per file set and re-infers after a rewrite") {
+    val s = spark.newSession()
+    val dir = java.nio.file.Files.createTempDirectory("graft_schema_memo").toString
+    s.range(4).selectExpr("id AS a").write.parquet(s"$dir/t.parquet")
+    val (first, firstJobs) = jobsStartedBy(graft.sources.Tables.load(s, dir, "t").schema)
+    val (again, againJobs) = jobsStartedBy(graft.sources.Tables.load(s, dir, "t").schema)
+    assert(first.fieldNames.toSeq == Seq("a") && again == first)
+    assert(firstJobs == 1 && againJobs == 0, s"inference jobs: $firstJobs, then $againJobs")
+    s.range(4).selectExpr("CAST(id AS STRING) AS b", "timestamp_seconds(id) AS c")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val rewritten = graft.sources.Tables.load(s, dir, "t")
+    assert(rewritten.schema.fieldNames.toSeq == Seq("b", "c"))
+    assert(rewritten.orderBy("c").collect().map(_.getString(0)).toSeq == Seq("0", "1", "2", "3"))
+    val day = graft.sources.Tables.loadIncremental(s, dir, "t", "c", java.time.LocalDate.of(1970, 1, 1))
+    assert(day.schema == rewritten.schema && day.count() == 4)
+  }
+
   test("cached runs one load when two threads race on a key") {
     val guard = guardTable("memo_spec_race")
     val loads = new AtomicInteger()

@@ -35,15 +35,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     sc.setLocalProperty(key, tag)
     try {
       val r = body
-      // LiveListenerBus.waitUntilEmpty is private to Spark, hence reflection
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-        .invoke(bus, java.lang.Long.valueOf(60000L))
+      drainListenerBus()
       (r, jobs.get)
     } finally {
       sc.setLocalProperty(key, prev)
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** Wait until every posted listener event has been delivered. */
+  def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    // LiveListenerBus.waitUntilEmpty is private to Spark, hence reflection
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
+      .invoke(bus, java.lang.Long.valueOf(60000L))
   }
 }
 

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SessionMemo, SparkSpec}
 
 /** Structural invariants of the newest query-tier entries — properties the
   * DuckDB hash-compare can't see (it pins equality, not WHY the answer is
@@ -294,5 +294,58 @@ class QueryShapeSpec extends SparkSpec {
       assert(nWindows == (nTokens + 511) / 512,
         s"window count must be ceil(token mass / 512): $r")
     }
+  }
+
+  /** `body`'s outcome, and the jobs tagged `graft-overlap-*` that started
+    * during it and those still running once it returned (listener bus
+    * drained first).
+    */
+  private def overlapJobs[T](body: => T): (scala.util.Try[T], Set[Int], Set[Int]) = {
+    val sc = spark.sparkContext
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.contains("graft-overlap-"))) started.add(js.jobId): Unit
+      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.add(je.jobId): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = scala.util.Try(body)
+      drainListenerBus()
+      import scala.jdk.CollectionConverters._
+      (r, started.asScala.toSet, started.asScala.toSet -- ended.asScala)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private val sf01 = s"${new java.io.File(sf).getParent}/sf0.01"
+
+  test("d_curate_emit: concurrent dependency chains give the rows of one-by-one shared-frame builds") {
+    val (rows, tagged, running) = overlapJobs(
+      TextQueries.queries("d_curate_emit")(spark.newSession(), sf01).collect().toSeq)
+    assert(tagged.nonEmpty, "the dependency chains run on Overlap threads")
+    assert(running.isEmpty, s"overlap jobs outlived the call: $running")
+    // the builders d_curate_emit reaches, one by one in registry order
+    val seq = spark.newSession()
+    val reached = Set("minhash_pairs", "ulm2", "kn3_base", "kn3_scored_all",
+      "ppl_buckets", "clf_holdout_weights", "clf_cal_fit", "curate_ccnet")
+    SharedFrames.builders.filter { case (n, _) => reached(n) }
+      .foreach { case (_, build) => build(seq, sf01).count() }
+    assert(rows.get == TextQueries.queries("d_curate_emit")(seq, sf01).collect().toSeq)
+  }
+
+  test("curateCcnetFrame: a failing chain stops the others and leaves no memo entry") {
+    val s = spark.newSession()
+    SessionMemo.put(s, s"minhash_pairs:$sf01",
+      s.range(1).select(raise_error(lit("injected edge failure")).cast("long").as("a"),
+        lit(1L).as("b")))
+    val (r, _, running) = overlapJobs(TextQueries.curateCcnetFrame(s, sf01))
+    assert(r.isFailure, "the dedup chain's failure propagates")
+    val msgs = Iterator.iterate(r.failed.get)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("injected edge failure")), r.failed.get)
+    assert(SessionMemo.peek(s, s"curate_ccnet:$sf01").isEmpty)
+    assert(running.isEmpty, s"overlap jobs outlived the call: $running")
   }
 }
