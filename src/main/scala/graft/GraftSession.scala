@@ -43,6 +43,13 @@ object GraftSession {
       // string nobody reads
       .config("spark.sql.maxPlanStringLength", (8 << 20).toString)
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      // child sessions (`newSession()`: Bench passes, Graphs' loop
+      // sessions) reuse the classes their parent generated. Spark keys its
+      // generated-class cache by the context class loader, which artifact
+      // isolation makes per session, and the cache holds 100 classes by
+      // default; one sf0.01 Verify pass generates 4,609 distinct ones
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
     warehouse.foreach(builder.config("spark.sql.warehouse.dir", _))
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.SessionMemo
 import graft.functions.CrossHash
@@ -1720,7 +1721,11 @@ object TextQueries {
           emitRows, "doc_id", scratch, nShards = 8, salt = "emit_v1")
         val ctx = 512
         val w = Window.partitionBy("shard").orderBy("__ord", "doc_id")
-        val packed = s.read.parquet(scratch)
+        // read back with the schema just written (emitRows' columns, then
+        // the order key, then the shard partition column): no inference job
+        val written = StructType((emitRows.schema.fields :+
+          StructField("__ord", LongType) :+ StructField("shard", LongType)).map(_.copy(nullable = true)))
+        val packed = s.read.schema(written).parquet(scratch)
           .withColumn("cum", sum("n_toks").over(w))
           .withColumn("bin_first",
             floor((col("cum") - col("n_toks")) / ctx).cast("long"))

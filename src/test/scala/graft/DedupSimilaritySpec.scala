@@ -1341,12 +1341,16 @@ class DedupSimilaritySpec extends SparkSpec {
     // diameter 4095: the min-label loop would need 4095 rounds; the
     // large-star/small-star pair must land the same labels inside a
     // 16-round budget (≈ log-scale) or throw — this pins the O(log n)
-    // claim the operator exists for.
+    // claim the operator exists for. driverEdgeLimit = 0 forces the star
+    // rounds (the chain fits the driver union-find bound); the default
+    // bound must land the same labels.
     val n = 4096
     val chain = (0L until (n - 1)).map(i => (i, i + 1)).toDF("a", "b")
-    val cc = Dedup.connectedComponentsStar(chain, maxIter = 16)
+    val cc = Dedup.connectedComponentsStar(chain, maxIter = 16, driverEdgeLimit = 0)
     assert(cc.count() == n)
     assert(cc.select("rep").distinct().as[Long].collect().toSeq == Seq(0L))
+    val driver = Dedup.connectedComponentsStar(chain, maxIter = 16)
+    assert(driver.as[(Long, Long)].collect().toMap == cc.as[(Long, Long)].collect().toMap)
   }
 
   test("star CC labels == min-label CC labels on seeded random graphs") {
@@ -1360,16 +1364,16 @@ class DedupSimilaritySpec extends SparkSpec {
       val es = Seq.fill(nEdges)((rnd.nextLong(nodes).abs, rnd.nextLong(nodes).abs))
       val edges = es.toDF("a", "b")
       val minLabel = Dedup.connectedComponents(edges).as[(Long, Long)].collect().toMap
-      val star = Dedup.connectedComponentsStar(edges).as[(Long, Long)].collect().toMap
+      val star = Dedup.connectedComponentsStar(edges, driverEdgeLimit = 0).as[(Long, Long)].collect().toMap
       assert(star == minLabel, s"divergence at seed=$seed: $star vs $minLabel")
     }
   }
 
   test("star CC handles empty edges, self-loops, and singletons like the min-label loop") {
     val noEdges = Seq.empty[(Long, Long)].toDF("a", "b")
-    assert(Dedup.connectedComponentsStar(noEdges).count() == 0)
+    assert(Dedup.connectedComponentsStar(noEdges, driverEdgeLimit = 0).count() == 0)
     val loops = Seq((5L, 5L), (1L, 2L)).toDF("a", "b")
-    val got = Dedup.connectedComponentsStar(loops).as[(Long, Long)].collect().toMap
+    val got = Dedup.connectedComponentsStar(loops, driverEdgeLimit = 0).as[(Long, Long)].collect().toMap
     assert(got == Map(5L -> 5L, 1L -> 1L, 2L -> 1L))
   }
 
