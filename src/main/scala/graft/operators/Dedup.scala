@@ -661,9 +661,9 @@ object Dedup {
     *     rep — the big label table is filtered, never recomputed;
     *     spec-pinned);
     *  3. surviving members of affected components + their surviving
-    *     edges feed [[connectedComponentsStar]] — O(log n) rounds over
-    *     the affected subgraph only; members left edge-less become
-    *     singletons (rep = own id).
+    *     edges feed [[connectedComponents]] — its driver union-find or
+    *     O(log n) star rounds over the affected subgraph only; members
+    *     left edge-less become singletons (rep = own id).
     *
     * Deleted ids appear in NO output row. The result equals a full CC
     * recompute over the surviving edge set (hash-verified by
@@ -697,7 +697,7 @@ object Dedup {
     val survivingEdges = e
       .join(members.select(col("id").as("a")), Seq("a"), "left_semi")
       .join(members.select(col("id").as("b")), Seq("b"), "left_semi")
-    val recomputed = connectedComponentsStar(survivingEdges, maxIter = maxIter)
+    val recomputed = connectedComponents(survivingEdges, maxIter = maxIter)
     val singletons = members.join(recomputed.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("rep"))
     untouched.unionByName(recomputed).unionByName(singletons)
@@ -900,116 +900,18 @@ object Dedup {
 
   /** Connected components over an undirected pair-edge set — the
     * "pairs → clusters" step of corpus dedup. Returns (id, rep) where `rep`
-    * is the smallest id in the component; only ids that appear in some edge
-    * are returned (singletons are the caller's coalesce).
+    * is the smallest id in the component, one row per node appearing in
+    * any edge (self-loop-only nodes included; singletons are the caller's
+    * coalesce).
     *
-    * Iterative min-label propagation, all relational: each round joins the
-    * edge list with the current labels and takes the per-node minimum — one
-    * shuffle join + one aggregation per round, no driver-side graph, no
-    * collect. Rounds needed = the cluster diameter, which for near-dup
-    * clusters is small (duplicates of a common source all pair with each
-    * other, so components are dense and shallow); `maxIter` bounds the
-    * pathological chain case. At 100 TB the same loop holds — each round is
-    * a hash join on ids — and if diameters ever grew past tens, the
-    * alternating large-star/small-star variant (Kiveris et al., "Connected
-    * Components in MapReduce") drops rounds to O(log n) with the same
-    * per-round shape.
-    *
-    * Each round's result is persisted and materialized, and the PREVIOUS
-    * round's blocks are released immediately after — `localCheckpoint` per
-    * round would leave every superseded round's blocks in the block manager
-    * until GC (measured: across a long suite run that retention evicts live
-    * caches and re-executes upstream stages, tripling this query's cost).
-    * Cache substitution keeps execution incremental — each round's plan
-    * references the previous round's Dataset, which the cache manager
-    * replaces with its materialized InMemoryRelation — and the lineage only
-    * grows by one join+agg per round for the handful of rounds a near-dup
-    * component needs, so a final `localCheckpoint` of the small label set is
-    * the only lineage truncation required.
-    */
-  def connectedComponents(
-      edges: DataFrame,
-      aCol: String = "a",
-      bCol: String = "b",
-      maxIter: Int = 20): DataFrame = {
-    val sym = edges.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-    val und = sym.union(sym.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = und.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("rep"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // labels only ever decrease, so Σrep strictly decreases each round
-    // until fixpoint — convergence is one aggregate per round, no
-    // change-detection join. coalesce: sum over ZERO rows is null (a clean
-    // corpus has no pair edges at all), which must read as converged, not
-    // NPE. The aggregate doubles as the action that materializes the
-    // round's persist.
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum("rep"), lit(0L))).head.getLong(0)
-    var prevSum = labelSum(labels)
-    // each round consumes the PREVIOUS round through an RDD bridge
-    // (LogicalRDD over the persisted blocks — the pageRank/bfs idiom):
-    // a round references its predecessor twice (the union and the join),
-    // so composing Datasets directly doubles the LOGICAL plan per round
-    // — execution stays incremental through the cache, but on a
-    // deep-diameter graph (many rounds) AQE's plan logging walks the
-    // 2^rounds expanded tree and stalls/OOMs the driver building a
-    // string nobody reads (measured: 20+ min on the ×10 embedding pair
-    // graph). The bridge keeps every round's plan constant-size while
-    // `persisted` still releases superseded blocks deterministically.
-    var persisted = labels
-    var bridged: DataFrame =
-      und.sparkSession.createDataFrame(labels.rdd, labels.schema)
-    var iter = 0
-    var converged = labels.isEmpty
-    while (!converged && iter < maxIter) {
-      val viaNeighbor = und.join(bridged, und("src") === bridged("id"))
-        .select(col("dst").as("id"), col("rep"))
-      val next = bridged.union(viaNeighbor)
-        .groupBy("id").agg(min("rep").as("rep"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nextSum = labelSum(next)
-      // next is materialized; the superseded round's blocks go NOW, not at
-      // GC — deterministic release is the whole point of this loop shape.
-      persisted.unpersist()
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      persisted = next
-      bridged = und.sparkSession.createDataFrame(next.rdd, next.schema)
-      iter += 1
-    }
-    und.unpersist()
-    // a silently-unconverged result would hand back WRONG representatives
-    // (split clusters) with no signal; a pathological >maxIter-diameter
-    // chain should fail loudly so the caller raises maxIter deliberately.
-    if (!converged) {
-      persisted.unpersist()
-      throw new IllegalArgumentException(
-        s"requirement failed: connectedComponents did not converge within " +
-          s"maxIter=$maxIter rounds — a component's diameter exceeds the " +
-          "round budget; raise maxIter")
-    }
-    // truncate the per-round lineage and hand back a frame whose only
-    // retained blocks are the final (tiny) label set.
-    val out = bridged.localCheckpoint(true)
-    persisted.unpersist()
-    out
-  }
-
-  /** Large-star/small-star connected components (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC '14) — the
-    * O(log n)-round escalation of [[connectedComponents]] for graphs whose
-    * component DIAMETER exceeds a sane round budget: the min-label loop
-    * moves labels one hop per round (diameter rounds total), while the
-    * star operators re-wire whole paths toward the component minimum, so
-    * the round count is logarithmic in component size (a 4096-node chain
-    * converges in a handful of rounds — pinned in PropertySpec).
-    *
-    * Same contract as [[connectedComponents]]: (id, rep) with rep = the
-    * component's minimum node id, one row per node appearing in any edge
-    * (self-loop-only nodes included). Label equivalence with the min-label
-    * loop on random graphs is property-tested.
+    * Up to `driverEdgeLimit` edges the whole CC is a driver min-root
+    * union-find ([[driverMinRootUnionFind]]). Past it, large-star/small-star
+    * rounds (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", SoCC '14) re-wire whole paths toward the component minimum,
+    * so the round count is logarithmic in component size, not its
+    * diameter (a 4096-node chain converges in a handful of rounds —
+    * pinned in DedupSimilaritySpec, with both branches' labels equal
+    * there and on seeded random graphs).
     *
     * Round = small-star ∘ large-star over the CURRENT edge set, each one
     * aggregation + one join (per-node neighbor minima — never a neighbor-
@@ -1018,7 +920,7 @@ object Dedup {
     * (count, Σa, Σb) signature equality in one aggregate pass, decimal
     * sums so two distinct edge sets can't fold together by overflow.
     */
-  def connectedComponentsStar(
+  def connectedComponents(
       edges: DataFrame,
       aCol: String = "a",
       bCol: String = "b",
@@ -1026,17 +928,15 @@ object Dedup {
       driverEdgeLimit: Long = 1000000L): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val raw = edges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-    // Bounded driver fast path (r16 — the incrementalConnectedComponents
-    // precedent generalized): when the edge set fits the same bound the
-    // relabel broadcast enforces, the whole CC is a driver min-root
-    // union-find — ONE bounded collect (limit pushes down, so the scan
-    // early-exits) + one checkpoint, instead of O(log n) star rounds
-    // whose ~6 shuffle jobs per round dominate every CC consumer at
-    // sub-corpus edge counts. Labels identical (rep = component minimum,
-    // every endpoint labeled, self-loops keep their node); an edge set
-    // past the bound falls through to the unchanged distributed star
-    // path — no cliff, no refusal. Endpoint set ≤ 2× the edge bound,
-    // the documented constant factor (r15 ADVICE).
+    // Bounded driver fast path: when the edge set fits `driverEdgeLimit`,
+    // the whole CC is a driver min-root union-find — ONE bounded collect
+    // (limit pushes down, so the scan early-exits) + one checkpoint,
+    // instead of O(log n) star rounds whose ~6 shuffle jobs per round
+    // dominate every CC consumer at sub-corpus edge counts. Labels
+    // identical (rep = component minimum, every endpoint labeled,
+    // self-loops keep their node); an edge set past the bound takes the
+    // distributed star rounds — no cliff, no refusal. The collected
+    // endpoint set holds up to 2× the edge bound, a constant factor.
     if (driverEdgeLimit > 0 && driverEdgeLimit < Int.MaxValue - 1) {
       val take = raw.limit(driverEdgeLimit.toInt + 1).collect()
       if (take.length <= driverEdgeLimit) {
@@ -1109,7 +1009,7 @@ object Dedup {
     if (!converged) {
       e.unpersist(); nodes.unpersist()
       throw new IllegalArgumentException(
-        s"requirement failed: connectedComponentsStar did not converge within " +
+        s"requirement failed: connectedComponents did not converge within " +
           s"maxIter=$maxIter rounds — raise maxIter (rounds grow with " +
           "log(component size), so this should be rare)")
     }
@@ -1123,78 +1023,12 @@ object Dedup {
     out
   }
 
-  /** Rep-level contraction of a day's new edges against existing labels:
-    * each endpoint maps to its current representative (unknown nodes map
-    * to themselves), same-rep edges drop out. What remains is an edge set
-    * over REPRESENTATIVES — one edge per component-merging event, never
-    * per member — so the downstream CC runs on the components actually
-    * being merged today, not the corpus. Exposed for the spec to pin that
-    * untouched components never enter the recompute.
-    */
-  private[graft] def contractedEdges(
-      labels: DataFrame,
-      newEdges: DataFrame,
-      aCol: String = "a",
-      bCol: String = "b"): DataFrame = {
-    val e = newEdges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-    val la = labels.select(col("id").as("a"), col("rep").as("ra"))
-    val lb = labels.select(col("id").as("b"), col("rep").as("rb"))
-    e.join(la, Seq("a"), "left").join(lb, Seq("b"), "left")
-      .select(coalesce(col("ra"), col("a")).as("ra"),
-        coalesce(col("rb"), col("b")).as("rb"))
-      .filter(col("ra") =!= col("rb"))
-  }
-
-  /** Incremental connected components — the union-find step that keeps
-    * cluster membership current as ingest days add edges, WITHOUT
-    * re-running CC over the accumulated edge set. `labels` is the
-    * persisted (id, rep) table (rep = component minimum, the
-    * [[connectedComponents]]/[[connectedComponentsStar]] contract);
-    * `newEdges` is today's pair output (e.g.
-    * [[minhashPairsAgainstIndex]]). Three steps:
-    *
-    *  1. contract new edges to rep level ([[contractedEdges]]) — at most
-    *     |new edges| rows, zero rows for edges inside existing components;
-    *  2. run [[connectedComponentsStar]] on the contracted graph: its
-    *     node set is exactly the touched reps + unseen nodes, so the
-    *     O(log n) rounds operate on the day's merge events only;
-    *  3. relabel: old labels whose rep merged get the new rep via the
-    *     (old rep → new rep) map — rows of untouched components pass
-    *     through the left join unchanged, byte-identical; unseen nodes
-    *     union in with their contracted-CC label (or themselves).
-    *
-    * The relabel map is BROADCAST only while it holds at most
-    * `broadcastRelabelLimit` entries (the daily contract: one row per
-    * component merged today — metadata-scale, and the big label table
-    * never shuffles). A pathological batch that touches most components
-    * (a backfill, a mass re-link) would make that broadcast unbounded, so
-    * above the limit the relabel joins via a plain shuffle instead —
-    * correct at any size, at the cost of one reshuffle of the label
-    * table. The default (1M entries ≈ 16 MB of packed longs) is far
-    * under executor broadcast budgets; for genuinely mega-batch updates
-    * prefer a full [[connectedComponentsStar]] recompute, which this
-    * guard's shuffle path approximates in cost anyway.
-    *
-    * Because old reps are their components' minima, the contracted CC's
-    * minimum over {merged reps ∪ new node ids} IS the merged component's
-    * global minimum — the result equals a full recompute over the union
-    * of all edges (oracle-verified by `d_incremental_clusters`, spec-pinned
-    * in DedupSimilaritySpec; the over-limit shuffle path is pinned equal
-    * to the broadcast path there too).
-    *
-    * At 100 TB: `labels` lives as a catalog table bucketed on `id` (the
-    * endpoint-lookup join consumes the bucket layout; the relabel join
-    * broadcasts, so the table is never reshuffled), rewritten only for
-    * rows whose rep changed — the maintenance cost is O(|day's edges| +
-    * |touched components|), never O(corpus).
-    */
   /** Driver min-root union-find over a collected edge iterator — the
-    * shared fast path of [[connectedComponentsStar]] (bounded edge sets)
-    * and [[incrementalConnectedComponents]] (contracted merge events).
-    * Union by MIN root, so the final find(x) IS the star-CC label
-    * (rep = component minimum); every endpoint is labeled, a self-loop
-    * registers its node. Returned as a 1-partition checkpointed frame —
-    * the exact shape the star path's consumers already join against.
+    * bounded branch of [[connectedComponents]]. Union by MIN root, so the
+    * final find(x) IS the star-round label (rep = component minimum);
+    * every endpoint is labeled, a self-loop registers its node. Returned
+    * as a 1-partition checkpointed frame, the shape the star rounds'
+    * result has for every consumer.
     */
   private def driverMinRootUnionFind(
       spark: org.apache.spark.sql.SparkSession,
@@ -1226,6 +1060,72 @@ object Dedup {
       .localCheckpoint(true)
   }
 
+  /** Rep-level contraction of a day's new edges against existing labels:
+    * each endpoint maps to its current representative (unknown nodes map
+    * to themselves), same-rep edges drop out. What remains is an edge set
+    * over REPRESENTATIVES — one edge per component-merging event, never
+    * per member — so the downstream CC runs on the components actually
+    * being merged today, not the corpus. Exposed for the spec to pin that
+    * untouched components never enter the recompute.
+    */
+  private[graft] def contractedEdges(
+      labels: DataFrame,
+      newEdges: DataFrame,
+      aCol: String = "a",
+      bCol: String = "b"): DataFrame = {
+    val e = newEdges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
+    val la = labels.select(col("id").as("a"), col("rep").as("ra"))
+    val lb = labels.select(col("id").as("b"), col("rep").as("rb"))
+    e.join(la, Seq("a"), "left").join(lb, Seq("b"), "left")
+      .select(coalesce(col("ra"), col("a")).as("ra"),
+        coalesce(col("rb"), col("b")).as("rb"))
+      .filter(col("ra") =!= col("rb"))
+  }
+
+  /** Incremental connected components — the union-find step that keeps
+    * cluster membership current as ingest days add edges, WITHOUT
+    * re-running CC over the accumulated edge set. `labels` is the
+    * persisted (id, rep) table (rep = component minimum, the
+    * [[connectedComponents]] contract); `newEdges` is today's pair output
+    * (e.g. [[minhashPairsAgainstIndex]]). Three steps:
+    *
+    *  1. contract new edges to rep level ([[contractedEdges]]) — at most
+    *     |new edges| rows, zero rows for edges inside existing components;
+    *  2. run [[connectedComponents]] on the contracted graph with
+    *     `driverEdgeLimit = broadcastRelabelLimit`: its node set is
+    *     exactly the touched reps + unseen nodes, so the driver
+    *     union-find or the O(log n) star rounds see the day's merge
+    *     events only;
+    *  3. relabel: old labels whose rep merged get the new rep via the
+    *     (old rep → new rep) map — rows of untouched components pass
+    *     through the left join unchanged, byte-identical; unseen nodes
+    *     union in with their contracted-CC label (or themselves).
+    *
+    * The relabel map is BROADCAST only while it holds at most
+    * `broadcastRelabelLimit` entries (the daily contract: one row per
+    * component merged today — metadata-scale, and the big label table
+    * never shuffles). A pathological batch that touches most components
+    * (a backfill, a mass re-link) would make that broadcast unbounded, so
+    * above the limit the relabel joins via a plain shuffle instead —
+    * correct at any size, at the cost of one reshuffle of the label
+    * table. The default (1M entries ≈ 16 MB of packed longs) is far
+    * under executor broadcast budgets; for genuinely mega-batch updates
+    * prefer a full [[connectedComponents]] recompute, which this
+    * guard's shuffle path approximates in cost anyway.
+    *
+    * Because old reps are their components' minima, the contracted CC's
+    * minimum over {merged reps ∪ new node ids} IS the merged component's
+    * global minimum — the result equals a full recompute over the union
+    * of all edges (oracle-verified by `d_incremental_clusters`, spec-pinned
+    * in DedupSimilaritySpec; the over-limit shuffle path is pinned equal
+    * to the broadcast path there too).
+    *
+    * At 100 TB: `labels` lives as a catalog table bucketed on `id` (the
+    * endpoint-lookup join consumes the bucket layout; the relabel join
+    * broadcasts, so the table is never reshuffled), rewritten only for
+    * rows whose rep changed — the maintenance cost is O(|day's edges| +
+    * |touched components|), never O(corpus).
+    */
   def incrementalConnectedComponents(
       labels: DataFrame,
       newEdges: DataFrame,
@@ -1236,26 +1136,14 @@ object Dedup {
     val e = newEdges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .localCheckpoint(true) // consumed by the contraction joins + the new-node scan
     val contracted = contractedEdges(labels, e)
-      .localCheckpoint(true) // consumed by the size guard + the CC below
-    // eager and tiny: one (id, rep) row per touched rep / unseen node.
-    // The contracted graph is metadata-scale BY CONTRACT (one edge per
-    // component-merging event), so when it fits the same bound the
-    // relabel broadcast already enforces, the CC runs as a driver-side
-    // min-rep union-find — one collect of the merge events instead of
-    // O(log n) distributed star rounds whose per-round job overhead
-    // dominates at micro-batch grain (measured r15: ~10 sub-second jobs
-    // per update). Identical output (rep = component minimum, every
-    // contracted-graph node labeled); a mega-batch past the bound takes
-    // the distributed star path unchanged. NOTE (r15 ADVICE): the gate
-    // is an EDGE count, and the collected endpoint set (and the repMap
-    // rows) can hold up to 2× that many nodes — i.e. the driver bound
-    // admits ≤ 2·broadcastRelabelLimit label rows (~32 MB at the 1M
-    // default), a documented constant factor, not a scale cliff.
-    val repMap =
-      if (contracted.count() <= broadcastRelabelLimit)
-        driverMinRootUnionFind(labels.sparkSession,
-          contracted.collect().iterator.map(r => (r.getLong(0), r.getLong(1))))
-      else connectedComponentsStar(contracted, "ra", "rb")
+      .localCheckpoint(true) // consumed by the CC's collect or its star rounds
+    // eager and tiny: one (id, rep) row per touched rep / unseen node. The
+    // contracted graph is metadata-scale BY CONTRACT (one edge per
+    // component-merging event), so under the bound the relabel broadcast
+    // already enforces, the CC's driver union-find takes it in one
+    // collect; a mega-batch past the bound runs the star rounds.
+    val repMap = connectedComponents(contracted, "ra", "rb",
+      maxIter = maxIter, driverEdgeLimit = broadcastRelabelLimit)
     // rep actually changed — self-labeled rows are relabel no-ops
     val changed = repMap.filter(col("id") =!= col("rep"))
     // repMap is already materialized, so the guard count is a cheap local
@@ -1366,11 +1254,12 @@ object Dedup {
     * id" keeps an arbitrary one while "highest quality" keeps the least
     * damaged one.
     *
-    * Shape: the component labels from [[connectedComponents]] join back
-    * to (id, quality) — cluster-member-sized, tiny next to the corpus —
-    * and one window over the `rep` partitioning picks each cluster's
-    * argmax. The corpus itself is touched exactly once, by the final
-    * `left_anti` of the losers (same no-broadcast-hint reasoning as
+    * Shape: the component labels from [[connectedComponents]] (one
+    * bounded driver collect under its edge bound, star rounds past it)
+    * join back to (id, quality) — cluster-member-sized, tiny next to
+    * the corpus — and one window over the `rep` partitioning picks each
+    * cluster's argmax. The corpus itself is touched exactly once, by the
+    * final `left_anti` of the losers (same no-broadcast-hint reasoning as
     * [[keepSurvivors]]: AQE promotes the loser side when it measures
     * small). At 100 TB: labels and quality are per-DOC frames, every
     * join/window keys on id/rep — no all-pairs anything.

@@ -215,7 +215,7 @@ object Graphs {
         // would grow the LOGICAL plan ~3× per round — exponential analyzer
         // cost long before any data moves (persist caches blocks but does
         // not truncate lineage). Bridge each round through its RDD, the
-        // same discipline as connectedComponentsStar.
+        // same discipline as Dedup.connectedComponents' star rounds.
         val plan = ee
           .join(keep, Seq("src"), "left_semi")
           .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")

@@ -37,9 +37,9 @@ object Hierarchy {
         when(col(parentCol).isNull, 0L).otherwise(1L).as("depth"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // doubles as the action materializing each round's persist (same loop
-    // shape as Dedup.connectedComponents; sum over zero rows reads as
-    // converged, not NPE).
+    // doubles as the action materializing each round's persist; depths
+    // only grow, so an unchanged sum is the fixpoint (sum over zero rows
+    // reads as converged, not NPE).
     def depthSum(df: DataFrame): Long =
       df.agg(coalesce(sum("depth"), lit(0L))).head.getLong(0)
 

@@ -92,56 +92,20 @@ object LinearModel {
     w
   }
 
-  /** Driver-side twin of [[trainSquashedLinear]] over a COLLECTED,
-    * size-capped training sample — ORACLE-IDENTICAL arithmetic: the
-    * margin is the identical left-associated double chain, each gradient
-    * term quantizes to DECIMAL(28,14) with the rint-based half-even cast
-    * the ORACLE engine (DuckDB) uses — which deliberately DIVERGES from
-    * Spark's double→decimal cast (shortest-string HALF_UP) on boundary
-    * doubles, so this trainer is replay-verified against the oracle but
-    * NOT bit-identical to the distributed twin on data that hits such a
-    * boundary (the tested corpora do not) — the accumulation is exact
-    * decimal (order-free — the reason the house uses decimal sums), and
-    * the update is one double division.
+  /** [[trainSquashedLinear]] with a driver fast path: under `maxRows`
+    * the rows are collected and trained on the driver ([[gdOnRows]]);
+    * past it, the UNCHANGED distributed [[trainSquashedLinear]] trains
+    * instead of refusing, so a corpus-proportional feature frame (one
+    * row per document, no sampling step) keeps training at any scale.
     *
     * Exists because a k-feature GD round as a distributed aggregate pays
     * Catalyst planning + codegen PER ITERATION — negligible at k=5,
     * pathological at k=65 (seconds per round before any data is
-    * touched) — while the training sample of a distillation pass is
-    * bounded by design: CCNet trains its fastText gate on a fixed
-    * offline sample, not the corpus. `maxRows` makes that contract loud:
-    * a caller pointing this at an unbounded frame gets an error, not an
-    * OOM. Callers whose frame is corpus-proportional (no sampling
-    * upstream) should use [[trainSquashedLinearAuto]], which keeps the
-    * driver fast path under the cap and FALLS BACK to the distributed
-    * trainer past it instead of refusing.
-    */
-  def trainSquashedLinearSampled(
-      feats: DataFrame,
-      xCols: Seq[String],
-      yCol: String,
-      lr: Double,
-      iters: Int,
-      maxRows: Long = 1000000L): Array[Double] = {
-    val rows = collectCapped(feats, xCols, yCol, maxRows)
-    require(rows.length <= maxRows,
-      s"trainSquashedLinearSampled: training frame exceeds maxRows=$maxRows " +
-        "— sample/cap it explicitly (the distillation contract) or use " +
-        "the distributed trainSquashedLinear")
-    gdOnRows(rows, xCols.size, lr, iters)
-  }
-
-  /** [[trainSquashedLinearSampled]] with a scale-safe fallback: under
-    * `maxRows` the training runs on the driver (the fast path — no
-    * per-round Catalyst planning); past it, the UNCHANGED distributed
-    * [[trainSquashedLinear]] trains instead of refusing. This is the
-    * right verb for call sites whose feature frame is
-    * corpus-proportional (e.g. one row per document with no sampling
-    * step): at bench scale they get the driver path, at 100 TB they keep
-    * training — no cliff. The two paths round decimal casts differently
-    * only on boundary doubles (see [[trainSquashedLinearSampled]]);
-    * corpora near the cap boundary should pin one path explicitly if
-    * last-decimal weight reproducibility across scales matters.
+    * touched) — while the driver loop plans nothing per round. The two
+    * paths round decimal casts differently only on boundary doubles (see
+    * [[gdOnRows]]); corpora near the cap boundary should pin one path
+    * explicitly if last-decimal weight reproducibility across scales
+    * matters.
     */
   def trainSquashedLinearAuto(
       feats: DataFrame,
@@ -150,31 +114,30 @@ object LinearModel {
       lr: Double,
       iters: Int,
       maxRows: Long = 1000000L): Array[Double] = {
-    val rows = collectCapped(feats, xCols, yCol, maxRows)
-    if (rows.length > maxRows) trainSquashedLinear(feats, xCols, yCol, lr, iters)
-    else gdOnRows(rows, xCols.size, lr, iters)
-  }
-
-  /** Bounded probe collect shared by the sampled/auto trainers: at most
-    * maxRows + 1 rows — one row past the cap is enough to DETECT the
-    * overflow without collecting an unbounded frame.
-    */
-  private def collectCapped(
-      feats: DataFrame,
-      xCols: Seq[String],
-      yCol: String,
-      maxRows: Long): Array[org.apache.spark.sql.Row] = {
     // < Int.MaxValue: limit() takes an Int, and (maxRows + 1).toInt on a
     // larger value wraps negative → a confusing AnalysisException instead
     // of this contract error
     require(maxRows > 0 && maxRows < Int.MaxValue,
       s"maxRows=$maxRows must be in (0, ${Int.MaxValue})")
-    feats.select((xCols :+ yCol).map(col): _*)
+    // one row past the cap DETECTS the overflow without collecting an
+    // unbounded frame
+    val rows = feats.select((xCols :+ yCol).map(col): _*)
       .limit((maxRows + 1).toInt).collect()
+    if (rows.length > maxRows) trainSquashedLinear(feats, xCols, yCol, lr, iters)
+    else gdOnRows(rows, xCols.size, lr, iters)
   }
 
-  /** The driver GD loop over collected rows — see
-    * [[trainSquashedLinearSampled]] for the arithmetic contract.
+  /** Driver-side twin of [[trainSquashedLinear]] over collected rows —
+    * ORACLE-IDENTICAL arithmetic: the margin is the identical
+    * left-associated double chain, each gradient term quantizes to
+    * DECIMAL(28,14) with the rint-based half-even cast the ORACLE engine
+    * (DuckDB) uses — which deliberately DIVERGES from Spark's
+    * double→decimal cast (shortest-string HALF_UP) on boundary doubles,
+    * so this loop is replay-verified against the oracle but NOT
+    * bit-identical to the distributed twin on data that hits such a
+    * boundary (the tested corpora do not) — the accumulation is exact
+    * decimal (order-free — the reason the house uses decimal sums), and
+    * the update is one double division.
     */
   private def gdOnRows(
       rows: Array[org.apache.spark.sql.Row],
@@ -182,10 +145,10 @@ object LinearModel {
       lr: Double,
       iters: Int): Array[Double] = {
     require(iters >= 1 && lr > 0, s"iters=$iters, lr=$lr must be positive")
-    require(rows.nonEmpty, "trainSquashedLinearSampled: empty feature frame")
+    require(rows.nonEmpty, "trainSquashedLinearAuto: empty feature frame")
     rows.foreach { r =>
       require(!(0 to k).exists(r.isNullAt),
-        s"trainSquashedLinearSampled: NULL in feature/label row $r")
+        s"trainSquashedLinearAuto: NULL in feature/label row $r")
     }
     val xs = rows.map(r => Array.tabulate(k)(r.getDouble))
     val ys = rows.map(_.getDouble(k))

@@ -239,12 +239,10 @@ object Similarity {
       maxAnchors: Long = 200_000L): DataFrame = {
     require(k >= 1, s"k=$k must be positive")
     require(maxAnchors >= 1, s"maxAnchors=$maxAnchors must be positive")
-    // star CC, not the min-label loop: a dense near-dup graph's component
-    // DIAMETER grows with corpus size (the ×10 decade's 0.38-threshold
-    // pair graph exceeded 20 label-hop rounds), while the star operators
-    // converge in O(log n) rounds at any diameter — same (id, rep = min
-    // node id) contract, so the mined negatives are identical
-    val cc = Dedup.connectedComponentsStar(dupEdges)
+    // a dense near-dup graph's component DIAMETER grows with corpus size;
+    // past its driver bound the CC's star rounds converge in O(log n)
+    // rounds at any diameter
+    val cc = Dedup.connectedComponents(dupEdges)
     val c = corpus.select(col(idCol).as("neighbor_id"), col(embCol).as("ce"))
       .withColumn("cn", l2Norm(col("ce")))
       .join(cc.select(col("id").as("neighbor_id"), col("rep").as("nrep")),
@@ -322,7 +320,7 @@ object Similarity {
       nprobe: Int = 4,
       anchorPred: Column = lit(true)): DataFrame = {
     require(k >= 1, s"k=$k must be positive")
-    val cc = Dedup.connectedComponentsStar(dupEdges).localCheckpoint(true)
+    val cc = Dedup.connectedComponents(dupEdges).localCheckpoint(true)
     // anchor frame exposes `query_id` — the same name the brute verb's
     // anchorPred filters on, so batching predicates are interchangeable
     val anchors = corpus.select(col(idCol).as("query_id"), col(embCol).as("qe"))

@@ -1087,17 +1087,6 @@ object TextIndex {
     (result, audits)
   }
 
-  /** Lazy probe plan for plan audits (PlanSpec pins bucket pruning on the
-    * postings scan) — identical to [[bm25AgainstIndex]], which is already
-    * lazy; alias kept for the sibling families' naming convention.
-    */
-  private[graft] def bm25AgainstIndexPlan(
-      spark: SparkSession,
-      tablePrefix: String,
-      queryTerms: Seq[String],
-      kTop: Int): DataFrame =
-    bm25AgainstIndex(spark, tablePrefix, queryTerms, kTop)
-
   /** Vacuum: fold tombstoned rows out of postings/doclens (bucket
     * layout preserved — probes keep their pruned scans), re-sum the
     * stats and score-bound partials to one base row each, and truncate

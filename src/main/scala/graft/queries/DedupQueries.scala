@@ -312,14 +312,14 @@ object DedupQueries {
         .orderBy("doc_id")
     }),
 
-    // Same contract through the O(log n)-round large-star/small-star
-    // algorithm (the documented escalation for deep-diameter components):
-    // identical labels to d_clusters against the identical recursive-CTE
-    // oracle — algorithm equivalence is itself hash-verified here, on the
-    // real corpus pair edges rather than spec fixtures.
+    // The same operator with driverEdgeLimit = 0, so its O(log n)-round
+    // large-star/small-star branch runs where d_clusters takes the driver
+    // union-find: identical labels against the identical recursive-CTE
+    // oracle certify both branches of the one size gate on the real
+    // corpus pair edges rather than spec fixtures.
     "d_clusters_star" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val cc = Dedup.connectedComponentsStar(minhashPairEdges(s, d))
+      val cc = Dedup.connectedComponents(minhashPairEdges(s, d), driverEdgeLimit = 0)
         .withColumnRenamed("id", "doc_id")
       docs.select("doc_id").join(cc, Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("cluster_rep"))
@@ -331,8 +331,8 @@ object DedupQueries {
     // d_clusters (which owns MEMBERSHIP): "yesterday's" labels (CC over
     // the index-side edges) are persisted as a catalog table bucketed on
     // id, then the day's edges (any pair touching the id%10==0 batch)
-    // merge against the REOPENED table — rep-level contraction, star CC
-    // over touched components only, broadcast relabel. Old-side edges ∪
+    // merge against the REOPENED table — rep-level contraction, CC over
+    // touched components only, broadcast relabel. Old-side edges ∪
     // day edges = the full corpus edge set, so the oracle is the same
     // full-recompute recursive CTE as d_clusters: equality IS the claim
     // that incremental maintenance loses nothing.
@@ -348,7 +348,7 @@ object DedupQueries {
       val prefix = s"cc_labels_${ScratchKeys.forPath(d)}"
       graft.sources.Sinks.Labels.drop(s, prefix)
       graft.sources.Sinks.updateLabelTable(
-        s, prefix, Dedup.connectedComponentsStar(oldEdges), 8)
+        s, prefix, Dedup.connectedComponents(oldEdges), 8)
       val inc = Dedup.incrementalConnectedComponents(
         graft.sources.Sinks.readLabelTable(s, prefix), newEdges)
         .withColumnRenamed("id", "doc_id").withColumnRenamed("rep", "inc_rep")
@@ -732,7 +732,7 @@ object DedupQueries {
     "d_delete_clusters" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val edges = minhashPairEdges(s, d)
-      val labels = Dedup.connectedComponentsStar(edges)
+      val labels = Dedup.connectedComponents(edges)
       val deleted = docs.filter(col("doc_id") % 50 === 0)
         .select(col("doc_id").as("id"))
       val relabeled = Dedup.edgeDeletionConnectedComponents(labels, edges, deleted)

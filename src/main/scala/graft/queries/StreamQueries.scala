@@ -845,7 +845,7 @@ object StreamQueries {
       val prefix = s"cc_stream_labels_${ScratchKeys.forPath(d)}"
       graft.sources.Sinks.Labels.drop(s, prefix)
       graft.sources.Sinks.updateLabelTable(
-        s, prefix, Dedup.connectedComponentsStar(oldEdges), 8)
+        s, prefix, Dedup.connectedComponents(oldEdges), 8)
       drainBatches(splitStream(s, d, dayEdges)) { (batch, _) =>
         val updated = Dedup.incrementalConnectedComponents(
           graft.sources.Sinks.readLabelTable(s, prefix), batch)

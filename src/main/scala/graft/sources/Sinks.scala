@@ -837,15 +837,4 @@ object Sinks {
     val rowsWritten = sink.write(SchemaRegistry.enforce(df, schema), daily, dayPartitionField)
     LoadReport(sink.name, rowsWritten, sink.countAudit())
   }
-
-  /** [[loadVia]] against the parquet destination. */
-  def load(
-      spark: SparkSession,
-      df: DataFrame,
-      schema: StructType,
-      path: String,
-      daily: Boolean = false,
-      dayPartitionField: Option[String] = None,
-      table: Option[String] = None): LoadReport =
-    loadVia(parquetAdapter(spark, path, table), df, schema, daily, dayPartitionField)
 }

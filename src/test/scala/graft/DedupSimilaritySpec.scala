@@ -846,13 +846,18 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("connectedComponents: chain + triangle + singleton edge-absence") {
-    // components: {1,2,3,4} (a chain, diameter 3 — needs >1 propagation
-    // round), {10,11,12} (triangle), node 99 appears in no edge.
+    // components: {1,2,3,4} (a chain, diameter 3 — needs >1 star round),
+    // {10,11,12} (triangle), node 99 appears in no edge. Both branches of
+    // the size gate: star rounds (driverEdgeLimit = 0) and the driver
+    // union-find (default bound).
     val edges = Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L), (11L, 12L), (10L, 12L))
       .toDF("a", "b")
-    val cc = Dedup.connectedComponents(edges).as[(Long, Long)].collect().toMap
-    assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L))
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      10L -> 10L, 11L -> 10L, 12L -> 10L)
+    val star = Dedup.connectedComponents(edges, driverEdgeLimit = 0).as[(Long, Long)].collect().toMap
+    val driver = Dedup.connectedComponents(edges).as[(Long, Long)].collect().toMap
+    assert(star == want, s"star rounds: $star")
+    assert(driver == star, s"driver union-find: $driver vs $star")
   }
 
   test("minhash ingest cycles: later batches dedup against earlier appends") {
@@ -1179,7 +1184,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // yesterday: chain {1,2,3}, pair {10,11}, pair {20,21}, pair {50,51}
     val oldEdges = Seq((2L, 1L), (3L, 2L), (11L, 10L), (21L, 20L), (51L, 50L))
       .toDF("a", "b")
-    val labels = Dedup.connectedComponentsStar(oldEdges)
+    val labels = Dedup.connectedComponents(oldEdges)
     // today: merge comps 10+20, a no-op edge inside comp 1, a brand-new
     // pair {40,41}, and new node 5 attaching to comp 1; comp {50,51}
     // untouched by anything
@@ -1229,7 +1234,7 @@ class DedupSimilaritySpec extends SparkSpec {
     for (id <- Seq(50L, 51L, 1L, 2L, 3L, 10L, 11L))
       assert(incMap(id) == oldMap(id), s"node $id must keep its old label")
     // the whole result equals CC from scratch over old ∪ new edges
-    val fullMap = Dedup.connectedComponentsStar(oldEdges.union(newEdges))
+    val fullMap = Dedup.connectedComponents(oldEdges.union(newEdges))
       .as[(Long, Long)].collect().toMap
     assert(incMap == fullMap, s"incremental diverged: $incMap vs $fullMap")
     assert(incMap(20L) == 10L && incMap(21L) == 10L, "components 10 and 20 merged")
@@ -1242,7 +1247,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // through ANY split (including one that delivers the two halves of a
     // future merge in different batches) ends at the one-shot answer
     val oldEdges = Seq((2L, 1L), (11L, 10L), (21L, 20L), (31L, 30L)).toDF("a", "b")
-    val labels0 = Dedup.connectedComponentsStar(oldEdges).localCheckpoint(true)
+    val labels0 = Dedup.connectedComponents(oldEdges).localCheckpoint(true)
     val dayEdges = Seq(
       (10L, 1L),  // merges comps 1 and 10
       (40L, 41L), // brand-new pair
@@ -1267,7 +1272,7 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(fold(dayEdges.reverse.map(Seq(_))) == oneShot)
     assert(fold(Seq(dayEdges.take(2), dayEdges.slice(2, 3), dayEdges.drop(3))) == oneShot)
     // and the one-shot itself equals CC from scratch
-    val scratch = Dedup.connectedComponentsStar(
+    val scratch = Dedup.connectedComponents(
         oldEdges.union(dayEdges.toDF("a", "b")))
       .as[(Long, Long)].collect().toMap
     assert(oneShot == scratch)
@@ -1276,11 +1281,13 @@ class DedupSimilaritySpec extends SparkSpec {
   test("incremental CC: over-limit relabel takes the shuffle path and equals the broadcast path") {
     // broadcastRelabelLimit = 0 forces EVERY relabel through the plain
     // shuffle join — the guard for pathological batches that touch most
-    // components, where an unbounded broadcast would OOM the executors.
-    // Same fixture as the byte-identity test: result must be identical.
+    // components, where an unbounded broadcast would OOM the executors —
+    // and the contracted CC through its star rounds (the same bound is
+    // its driverEdgeLimit). Same fixture as the byte-identity test:
+    // result must be identical.
     val oldEdges = Seq((2L, 1L), (3L, 2L), (11L, 10L), (21L, 20L), (51L, 50L))
       .toDF("a", "b")
-    val labels = Dedup.connectedComponentsStar(oldEdges)
+    val labels = Dedup.connectedComponents(oldEdges)
     val newEdges = Seq((20L, 11L), (3L, 2L), (41L, 40L), (5L, 1L)).toDF("a", "b")
     val viaBroadcast = Dedup.incrementalConnectedComponents(labels, newEdges)
       .as[(Long, Long)].collect().toMap
@@ -1290,9 +1297,29 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(viaShuffle == viaBroadcast,
       s"shuffle relabel diverged: $viaShuffle vs $viaBroadcast")
     // and both still equal CC from scratch
-    val scratch = Dedup.connectedComponentsStar(oldEdges.union(newEdges))
+    val scratch = Dedup.connectedComponents(oldEdges.union(newEdges))
       .as[(Long, Long)].collect().toMap
     assert(viaShuffle == scratch)
+  }
+
+  test("incremental CC: maxIter bounds the star rounds past the relabel limit") {
+    // a 16-node chain of unseen nodes contracts to itself; a chain is no
+    // star, so its first round changes the edge set and one round cannot
+    // reach the fixpoint
+    val labels = Dedup.connectedComponents(Seq((2L, 1L)).toDF("a", "b"))
+    val chain = (100L until 115L).map(i => (i, i + 1)).toDF("a", "b")
+    assert(Dedup.contractedEdges(labels, chain).count() == 15)
+    val e = intercept[IllegalArgumentException] {
+      Dedup.incrementalConnectedComponents(labels, chain, maxIter = 1, broadcastRelabelLimit = 0L)
+    }
+    assert(e.getMessage.contains("maxIter=1"), e.getMessage)
+    // under the bound the driver union-find needs no rounds
+    val viaDriver = Dedup.incrementalConnectedComponents(labels, chain, maxIter = 1)
+      .as[(Long, Long)].collect().toMap
+    val viaStar = Dedup.incrementalConnectedComponents(labels, chain, broadcastRelabelLimit = 0L)
+      .as[(Long, Long)].collect().toMap
+    assert(viaStar == viaDriver)
+    assert(viaDriver == Map(1L -> 1L, 2L -> 1L) ++ (100L to 115L).map(_ -> 100L))
   }
 
   test("edge-deletion CC: splits bridged components, untouched labels byte-identical") {
@@ -1303,7 +1330,7 @@ class DedupSimilaritySpec extends SparkSpec {
       (10L, 11L),
       (20L, 21L), (21L, 22L), (20L, 22L),
       (50L, 51L)).toDF("a", "b")
-    val labels = Dedup.connectedComponentsStar(edges)
+    val labels = Dedup.connectedComponents(edges)
     // delete the chain's bridge (3) and one triangle corner (22): the
     // chain SPLITS into {1,2} and {4,5}; the triangle survives as {20,21}
     // (still connected via its remaining edge); {10,11} and {50,51} are
@@ -1325,7 +1352,7 @@ class DedupSimilaritySpec extends SparkSpec {
       assert(outMap(id) == oldMap(id), s"untouched node $id must keep its label")
     // equals a full recompute over the surviving edge set
     val surviving = edges.filter(!col("a").isin(3L, 22L) && !col("b").isin(3L, 22L))
-    val scratch = Dedup.connectedComponentsStar(surviving)
+    val scratch = Dedup.connectedComponents(surviving)
       .as[(Long, Long)].collect().toMap
     // scratch lacks edge-less survivors; they must appear as singletons
     assert(outMap == scratch ++ (outMap.keySet -- scratch.keySet).map(k => k -> k).toMap)
@@ -1338,43 +1365,45 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("star CC contracts a 4096-node chain within a logarithmic round budget") {
-    // diameter 4095: the min-label loop would need 4095 rounds; the
-    // large-star/small-star pair must land the same labels inside a
+    // diameter 4095: one-hop label propagation would need 4095 rounds;
+    // the large-star/small-star pair must land the same labels inside a
     // 16-round budget (≈ log-scale) or throw — this pins the O(log n)
     // claim the operator exists for. driverEdgeLimit = 0 forces the star
     // rounds (the chain fits the driver union-find bound); the default
     // bound must land the same labels.
     val n = 4096
     val chain = (0L until (n - 1)).map(i => (i, i + 1)).toDF("a", "b")
-    val cc = Dedup.connectedComponentsStar(chain, maxIter = 16, driverEdgeLimit = 0)
+    val cc = Dedup.connectedComponents(chain, maxIter = 16, driverEdgeLimit = 0)
     assert(cc.count() == n)
     assert(cc.select("rep").distinct().as[Long].collect().toSeq == Seq(0L))
-    val driver = Dedup.connectedComponentsStar(chain, maxIter = 16)
+    val driver = Dedup.connectedComponents(chain, maxIter = 16)
     assert(driver.as[(Long, Long)].collect().toMap == cc.as[(Long, Long)].collect().toMap)
   }
 
-  test("star CC labels == min-label CC labels on seeded random graphs") {
+  test("star CC rounds == driver union-find labels on seeded random graphs") {
     // three seeded shapes: sparse multi-component, dense near-single-
     // component, and duplicate/self-loop-heavy — the structures a
-    // scalacheck forAll would explore, at a fixed handful of runs (both
-    // algorithms are iterative multi-action loops, so per-case cost is
-    // scheduler-bound; see the note in PropertySpec)
+    // scalacheck forAll would explore, at a fixed handful of runs (the
+    // star branch is an iterative multi-action loop, so per-case cost is
+    // scheduler-bound; see the note in PropertySpec). The two branches of
+    // the size gate are independent implementations of the contract.
     Seq((42, 40, 28), (7, 24, 40), (13, 12, 30)).foreach { case (seed, nodes, nEdges) =>
       val rnd = new scala.util.Random(seed)
       val es = Seq.fill(nEdges)((rnd.nextLong(nodes).abs, rnd.nextLong(nodes).abs))
       val edges = es.toDF("a", "b")
-      val minLabel = Dedup.connectedComponents(edges).as[(Long, Long)].collect().toMap
-      val star = Dedup.connectedComponentsStar(edges, driverEdgeLimit = 0).as[(Long, Long)].collect().toMap
-      assert(star == minLabel, s"divergence at seed=$seed: $star vs $minLabel")
+      val driver = Dedup.connectedComponents(edges).as[(Long, Long)].collect().toMap
+      val star = Dedup.connectedComponents(edges, driverEdgeLimit = 0).as[(Long, Long)].collect().toMap
+      assert(star == driver, s"divergence at seed=$seed: $star vs $driver")
     }
   }
 
-  test("star CC handles empty edges, self-loops, and singletons like the min-label loop") {
+  test("star CC handles empty edges, self-loops, and singletons like the driver union-find") {
     val noEdges = Seq.empty[(Long, Long)].toDF("a", "b")
-    assert(Dedup.connectedComponentsStar(noEdges, driverEdgeLimit = 0).count() == 0)
+    assert(Dedup.connectedComponents(noEdges, driverEdgeLimit = 0).count() == 0)
     val loops = Seq((5L, 5L), (1L, 2L)).toDF("a", "b")
-    val got = Dedup.connectedComponentsStar(loops, driverEdgeLimit = 0).as[(Long, Long)].collect().toMap
+    val got = Dedup.connectedComponents(loops, driverEdgeLimit = 0).as[(Long, Long)].collect().toMap
     assert(got == Map(5L -> 5L, 1L -> 1L, 2L -> 1L))
+    assert(Dedup.connectedComponents(loops).as[(Long, Long)].collect().toMap == got)
   }
 
   test("connectedComponents and keepSurvivors handle an empty edge set") {
@@ -1392,6 +1421,20 @@ class DedupSimilaritySpec extends SparkSpec {
     val kept = Dedup.keepSurvivors(corpus, "doc_id", edges)
       .as[Long].collect().toSet
     assert(kept == Set(1L, 10L, 99L))
+  }
+
+  test("survivor filters hold on a cluster whose diameter exceeds 20 hops") {
+    // a 64-node chain (diameter 63) + triangle {100,101,102} + singletons
+    val edges = ((0L until 63L).map(i => (i, i + 1)) ++
+      Seq((100L, 101L), (101L, 102L), (100L, 102L))).toDF("a", "b")
+    val corpus = ((0L until 64L) ++ Seq(100L, 101L, 102L, 200L, 201L)).toDF("doc_id")
+      .withColumn("quality",
+        when(col("doc_id") < 64, -abs(col("doc_id") - 40)).otherwise(col("doc_id")).cast("double"))
+    val kept = Dedup.keepSurvivors(corpus, "doc_id", edges).select("doc_id").as[Long].collect().toSet
+    assert(kept == Set(0L, 100L, 200L, 201L), s"got $kept")
+    val best = Dedup.keepBestSurvivors(corpus, "doc_id", edges, col("quality"))
+      .select("doc_id").as[Long].collect().toSet
+    assert(best == Set(40L, 102L, 200L, 201L), s"got $best")
   }
 
   test("decontaminate flags only train docs sharing an n-gram with the bench split") {

@@ -39,7 +39,7 @@ class SinksSpec extends SparkSpec {
     assert(BigQuerySink.saveMode(daily = false) == SaveMode.Overwrite)
   }
 
-  test("loadVia seam: parquet adapter reproduces Sinks.load, custom adapter observed") {
+  test("loadVia seam: parquet adapter loads and audits, custom adapter observed") {
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "name")
     val schema = SchemaRegistry.fromJson(
       """{"t": [{"name": "id", "type": "INTEGER"}, {"name": "name", "type": "STRING"}]}""")
@@ -86,7 +86,8 @@ class SinksSpec extends SparkSpec {
       val src = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 3).map { r => reads.add(1); r },
         StructType(Seq(StructField("id", LongType), StructField("ts", TimestampType))))
-      val report = Sinks.load(spark, src, schema, path, daily = daily, dayPartitionField = dayField)
+      val report = Sinks.loadVia(Sinks.parquetAdapter(spark, path), src, schema,
+        daily = daily, dayPartitionField = dayField)
       (report, reads.value.longValue)
     }
     // DAY-partitioned append: the count rides the write's post-shuffle stage
