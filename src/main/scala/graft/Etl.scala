@@ -1,12 +1,6 @@
 package graft
 
 import java.time.LocalDate
-import java.util.concurrent.Executors
-import java.util.concurrent.atomic.AtomicReference
-
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-import scala.util.{Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -32,12 +26,10 @@ object Credentials {
   *
   * Unlike the reference's sequential loop (`etl_process.py:18`), tables run
   * concurrently — each pipeline is an independent lazy DataFrame chain, so
-  * driver-side Futures just overlap their job submissions; executors then
+  * driver threads just overlap their job submissions; executors then
   * schedule tasks from all pipelines. Errors stay fail-fast per reference O3
-  * ("first error aborts the whole run"): once a table fails, no table that
-  * has not started yet starts; tables already running finish, because
-  * cancelling a truncate mid-write would leave its destination emptied;
-  * then the first failure is rethrown.
+  * ("first error aborts the whole run") by running the tables on
+  * [[Overlap.map]], whose failure rule keeps a running truncate whole.
   */
 object Etl {
 
@@ -94,24 +86,7 @@ object Etl {
       registry: SchemaRegistry.Registry,
       outBase: String,
       daily: Boolean = false,
-      day: LocalDate = LocalDate.now().minusDays(1)): Seq[RunReport] = {
-    val pool = Executors.newFixedThreadPool(Parallelism)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val firstFailure = new AtomicReference[Throwable]()
-    try {
-      val futures = specs.map { spec =>
-        Future[Try[Option[RunReport]]] {
-          if (firstFailure.get != null) Success(None) // O3: never starts
-          else {
-            val r = Try(runTable(spark, spec, source, registry, outBase, daily, day))
-            r.failed.foreach(firstFailure.compareAndSet(null, _))
-            r
-          }
-        }
-      }
-      val results = Await.result(Future.sequence(futures), Duration.Inf)
-      Option(firstFailure.get).foreach(e => throw e)
-      results.collect { case Success(Some(r)) => r }
-    } finally pool.shutdown()
-  }
+      day: LocalDate = LocalDate.now().minusDays(1)): Seq[RunReport] =
+    Overlap.map(specs, Parallelism)(
+      runTable(spark, _, source, registry, outBase, daily, day)).flatten
 }

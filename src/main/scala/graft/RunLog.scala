@@ -28,7 +28,7 @@ final class RunLog(dir: Path, clock: Clock = Clock.systemUTC()) {
 
   /** `<asctime> [<levelname>] <message>`, matching the reference's
     * `%(asctime)s ... %(levelname)s` shape. Synchronized: Etl runs table
-    * pipelines on a thread pool and they share one run log.
+    * pipelines on concurrent threads and they share one run log.
     */
   private def write(level: String, msg: String): Unit = synchronized {
     val line = s"${LocalDateTime.now(clock).format(fmt)} [$level] $msg\n"

@@ -88,7 +88,7 @@ object CrossHash {
     * registered GraftExtensions.
     *
     * Resolution falls back to the default session so worker threads that
-    * never set an active session (e.g. Etl's table thread pool) still get
+    * never set an active session (e.g. Etl's table threads) still get
     * the native fast path, and the catalog lookup result is cached per
     * session (weakly, so a stopped session doesn't pin memory) — registries
     * are fixed after session construction, and the uncached lookup costs a

@@ -53,7 +53,7 @@ object Dedup {
 
   /** Signature frame on the array-set (unbounded-vocabulary) verify path:
     * (id, sig, sset, ssz). Shared by [[minhashPairs]] and
-    * [[minhashPairsAgainst]] so the two paths cannot drift.
+    * [[minhashSignatures]] so the two paths cannot drift.
     */
   private def unboundedSigFrame(hashed: DataFrame, k: Int): DataFrame = {
     val mins = (0 until k).map(i => min(familyHash(col("h"), i)).as(s"m$i"))
@@ -262,34 +262,6 @@ object Dedup {
     // into the block manager.
     verified.localCheckpoint(true)
     } finally sigd.unpersist()
-  }
-
-  /** Incremental near-dup detection: MinHash+LSH of a NEW batch against an
-    * existing corpus INDEX — the daily-increment shape (the reference's
-    * `--daily` ethos applied to dedup). Band keys are computed for both
-    * sides and joined new×index, so the work is O(|new| · bucket_width),
-    * not a full corpus self-join: the whole point of incremental ingestion.
-    * At 100 TB the index side's signatures are a precomputed, bucketed
-    * table maintained across ingests (write once via
-    * [[graft.sources.Sinks.writeBucketedTable]]); here both sides are
-    * derived inline from the same shingle expression.
-    *
-    * Same family/band/verify arithmetic as [[minhashPairs]] (collect_set
-    * verify path), so a (new, index) pair verifies here iff it verifies in
-    * the full self-join. EAGER like minhashPairs: returns a materialized
-    * (new_id, index_id, jaccard) frame; intermediates released in finally.
-    */
-  def minhashPairsAgainst(
-      newDf: DataFrame,
-      indexDf: DataFrame,
-      idCol: String,
-      shingles: Column,
-      k: Int = 16,
-      bands: Int = 4,
-      threshold: Double = 0.7): DataFrame = {
-    def sigs(df: DataFrame): DataFrame =
-      minhashSignatures(df, idCol, shingles, k)
-    minhashPairsFromSignatures(sigs(newDf), sigs(indexDf), k, bands, threshold)
   }
 
   /** The per-document MinHash signature table: (id, sig[k], sset, ssz) —
@@ -1715,35 +1687,24 @@ object Dedup {
   /** Excise the duplicated spans from the corpus — the OUTPUT step of
     * exact-substring dedup (Lee et al. 2022 §4: the duplicated substring
     * is removed from the training text, not just reported): every token
-    * position covered by a [[dupSpans]] run is dropped and the survivors
+    * position covered by a run of `spans` is dropped and the survivors
     * are re-joined in order. Documents with no duplicated spans pass
     * through byte-identical; a fully-covered document survives as an
     * empty string (the curation gate downstream decides whether to keep
     * empty rows).
     *
-    * Plan shape on top of the marking stage: one `posexplode` of the
-    * token arrays, one anti-join against the exploded covered positions
-    * (both sides shuffle on the id — the same key the window already
-    * used), and one per-document sort-aggregation that rebuilds the text
+    * `spans` is a PRECOMPUTED span frame (`id, start_pos, n_grams,
+    * span_words` — [[dupSpans]]' shape): a real pipeline materializes the
+    * span report once and feeds both the audit and the rewrite from it,
+    * so the expensive marking never runs twice.
+    *
+    * Plan shape: one `posexplode` of the token arrays, one anti-join
+    * against the exploded covered positions (both sides shuffle on the
+    * id), and one per-document sort-aggregation that rebuilds the text
     * (`array_sort` on (pos, tok) structs, then a projection join — no
     * order-dependent `collect_list` assumption). Every term is linear in
     * total token positions; nothing depends on how many documents share
     * a span.
-    */
-  def removeDupSpans(
-      df: DataFrame,
-      idCol: String,
-      toks: Column,
-      n: Int,
-      minDocs: Int = 2,
-      minRun: Int = 2): DataFrame =
-    removeSpans(df, idCol, toks, dupSpans(df, idCol, toks, n, minDocs, minRun))
-
-  /** The excision stage of [[removeDupSpans]] against a PRECOMPUTED span
-    * frame (`id, start_pos, n_grams, span_words` — [[dupSpans]]' shape):
-    * a real pipeline materializes the span report once and feeds both the
-    * audit and the rewrite from it, so the expensive marking never runs
-    * twice.
     */
   def removeSpans(
       df: DataFrame,

@@ -17,7 +17,7 @@ import org.apache.spark.storage.StorageLevel
   * SparkContext, catalog, and cache but ISOLATES runtime conf — never by
   * mutating the caller's session conf, which would race any query planned
   * concurrently on the same session (Etl.run plans per-table pipelines on
-  * Futures sharing one session). Inputs are bridged in and results bridged
+  * Overlap.map threads sharing one session). Inputs are bridged in and results bridged
   * back out via the session-neutral RDD, so downstream plans over the
   * result use the caller's own width.
   */

@@ -28,16 +28,7 @@ object Sampling {
   private def requirePermille(p: Int): Unit =
     require(p >= 0 && p <= 1000, s"permille=$p must be in [0, 1000]")
 
-  /** Keep a row iff h60(salt:key) mod 1000 < permille. The salt namespaces
-    * the decision: two samples with different salts are independent.
-    */
-  def hashSample(key: Column, permille: Int, salt: String): Column = {
-    requirePermille(permille)
-    bucketOf(key, salt) < permille
-  }
-
-  /** Stratified variant: per-stratum keep rates (missing strata keep
-    * nothing), e.g. downsampling over-represented languages. One hash per
+  /** Per-stratum keep rates (missing strata keep nothing), e.g. downsampling over-represented languages. One hash per
     * row, membership decided row-locally — no per-stratum counts, no
     * shuffle, unlike `sampleBy` (which is also seed/partitioning
     * dependent).

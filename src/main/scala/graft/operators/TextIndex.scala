@@ -68,7 +68,7 @@ object TextIndex {
     * ids, so summed df is exact for the stored postings), and both stay
     * VALID upper-bound inputs under tombstone deletes (true max_tf can
     * only shrink; true df is bounded below by stored df − tombstone
-    * count, which [[bm25MaxScoreAgainstIndex]] uses for its idf upper
+    * count, which [[bm25MaxScoreWithAudit]] uses for its idf upper
     * bound). Compaction recomputes them exact.
     */
   private def maxscoresOf(posts: DataFrame, batchId: Long): DataFrame =
@@ -722,21 +722,21 @@ object TextIndex {
     * expensive stages: 12.3% of postings reached the scorer at both
     * decades (BASELINE.md "MaxScore pruning", 2026-08-15).
     *
-    * Returns exactly [[bm25AgainstIndex]]'s shape — (id, dl, bm25),
-    * top kTop by (bm25 desc, id) — and must equal it bit-for-bit on any
+    * Returns its [[MaxScoreAudit]] and a frame of exactly
+    * [[bm25AgainstIndex]]'s shape — (id, dl, bm25), top kTop by
+    * (bm25 desc, id) — that must equal it bit-for-bit on any
     * index and bag (the `tx_bm25_maxscore` oracle is the EXHAUSTIVE
     * replay; OperatorsSpec pins equality plus that pruning engaged).
     */
-  def bm25MaxScoreAgainstIndex(
+  def bm25MaxScoreWithAudit(
       spark: SparkSession,
       tablePrefix: String,
       queryTerms: Seq[String],
       kTop: Int,
-      engageMinPostings: Long = DefaultEngageMinPostings): DataFrame =
-    bm25MaxScoreWithAudit(spark, tablePrefix, queryTerms, kTop,
-      engageMinPostings)._1
+      engageMinPostings: Long = DefaultEngageMinPostings): (DataFrame, MaxScoreAudit) =
+    maxScoreProbe(spark, tablePrefix, queryTerms, kTop, engageMinPostings, None)
 
-  /** [[bm25MaxScoreAgainstIndex]] with a candidate FILTER — the RAG
+  /** [[bm25MaxScoreWithAudit]] with a candidate FILTER — the RAG
     * serving shape with the pruning kept: same Lucene semantics as
     * [[bm25FilteredAgainstIndex]] (the filter restricts CANDIDATES,
     * never statistics) and bit-for-bit equal to it. The composition is
@@ -759,15 +759,6 @@ object TextIndex {
       Some(allowed))
   }
 
-  /** [[bm25MaxScoreAgainstIndex]] plus its [[MaxScoreAudit]]. */
-  def bm25MaxScoreWithAudit(
-      spark: SparkSession,
-      tablePrefix: String,
-      queryTerms: Seq[String],
-      kTop: Int,
-      engageMinPostings: Long = DefaultEngageMinPostings): (DataFrame, MaxScoreAudit) =
-    maxScoreProbe(spark, tablePrefix, queryTerms, kTop, engageMinPostings, None)
-
   private def maxScoreProbe(
       spark: SparkSession,
       tablePrefix: String,
@@ -775,7 +766,7 @@ object TextIndex {
       kTop: Int,
       engageMinPostings: Long,
       allowed: Option[DataFrame]): (DataFrame, MaxScoreAudit) = {
-    require(queryTerms.nonEmpty, "bm25MaxScoreAgainstIndex: no query terms")
+    require(queryTerms.nonEmpty, "bm25MaxScoreWithAudit: no query terms")
     require(kTop >= 1, s"kTop=$kTop must be positive")
     val tp = graft.sources.Sinks.activeTablePrefix(spark, tablePrefix)
     val m = graft.SessionMemo.cachedHead(spark, s"${tp}_meta")
@@ -783,7 +774,7 @@ object TextIndex {
     val nDocs = spark.table(s"${tp}_stats")
       .agg(coalesce(sum("n_docs"), lit(0L))).head().getLong(0)
     require(nDocs > 0,
-      s"bm25MaxScoreAgainstIndex('$tablePrefix'): index holds no live documents")
+      s"bm25MaxScoreWithAudit('$tablePrefix'): index holds no live documents")
     val qTerms = queryTerms.distinct
     def exhaustive(): DataFrame = allowed match {
       case Some(ids) => bm25Scores(spark, tablePrefix, qTerms, 1.0)
@@ -958,7 +949,7 @@ object TextIndex {
         .as("bm25"))
   }
 
-  /** Batched MaxScore — [[bm25MaxScoreAgainstIndex]]'s lossless pruning
+  /** Batched MaxScore — [[bm25MaxScoreWithAudit]]'s lossless pruning
     * at the serving fan-in shape: N query bags answered with per-bag
     * essential sets but SHARED passes (one bounds scan for the bag
     * union, one θ pass scoring every bag's rarest-term candidates, one

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.SessionMemo
+import graft.{Overlap, SessionMemo}
 import graft.functions.CrossHash
 import graft.operators.{Dedup, Sampling, Similarity, Text}
 import graft.sources.Tables

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.Overlap
 import graft.streaming.EventStreams
 
 /** Stream/batch parity queries — the one place the streaming tier CAN be

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.SessionMemo
+import graft.{Overlap, SessionMemo}
 import graft.functions.CrossHash
 import graft.operators.{LinearModel, Multimodal, Sampling, Text, TextIndex}
 import graft.sources.Tables

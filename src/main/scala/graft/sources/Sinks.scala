@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.util.concurrent.{Callable, Executors, TimeoutException}
+import java.util.concurrent.TimeoutException
 
 import scala.concurrent.Await
 import scala.concurrent.duration.{DurationInt, FiniteDuration}
@@ -13,6 +13,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSess
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.Overlap
 import graft.model.SchemaRegistry
 
 /** Parquet sink with the reference's load semantics
@@ -113,8 +114,10 @@ object Sinks {
     * The data files are the ones Spark's file index reads: a recursive
     * listing that skips [[hiddenFromScans]] names (`_SUCCESS`, `.crc`
     * files, an uncommitted task's `_temporary/`) and zero-byte files, for
-    * which Spark plans no split. Footers open on a bounded
-    * driver pool ([[onDriverPool]]) with one shared set of read options.
+    * which Spark plans no split. Footers open on at most 16 driver
+    * threads ([[graft.Overlap.map]]) with one shared set of read options;
+    * a file that is not parquet fails the audit with the footer reader's
+    * own exception, which names the file.
     * At scale the audit costs one footer read per data file — the file
     * opens the Spark count's tasks made, minus the jobs — after a driver
     * walk that lists each partition directory once. A missing `path`
@@ -125,7 +128,7 @@ object Sinks {
     val root = new Path(path)
     // default options would build a fresh Configuration per footer
     val options = HadoopReadOptions.builder(conf).build()
-    onDriverPool(dataFiles(root.getFileSystem(conf), root)) { st =>
+    Overlap.map(dataFiles(root.getFileSystem(conf), root), DriverIoThreads) { st =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), options)
       try reader.getRecordCount finally reader.close()
     }.sum
@@ -150,16 +153,8 @@ object Sinks {
     name.startsWith(".") || (name.startsWith("_") && !name.contains("=")) ||
       name.endsWith("._COPYING_")
 
-  /** `f` over `items` on a per-call pool of at most 16 driver threads (no
-    * leaked threads), results in order; the first failure propagates.
-    */
-  private def onDriverPool[A, B](items: Seq[A])(f: A => B): Seq[B] =
-    if (items.size <= 1) items.map(f)
-    else {
-      val pool = Executors.newFixedThreadPool(math.min(16, items.size))
-      try items.map(a => pool.submit(new Callable[B] { def call(): B = f(a) })).map(_.get())
-      finally pool.shutdown()
-    }
+  /** Driver threads for per-file I/O: footer reads, file copies. */
+  private val DriverIoThreads = 16
 
   /** Bucketed, sorted table layout for shuffle-free co-located joins —
     * the 100 TB answer to "this join runs every day on the same keys":
@@ -429,7 +424,7 @@ object Sinks {
     // of one bucketed postings table was 2.25 s of single-threaded driver
     // time, the whole rest of the clone is milliseconds): destinations
     // are distinct files, so the copies are independent
-    onDriverPool(parquetFilesAt(spark, srcPath)) { st =>
+    Overlap.map(parquetFilesAt(spark, srcPath), DriverIoThreads) { st =>
       org.apache.hadoop.fs.FileUtil.copy(
         fs, st.getPath, fs, new Path(dstPath, st.getPath.getName), false, conf): Unit
     }: Unit

@@ -1797,8 +1797,10 @@ class DedupSimilaritySpec extends SparkSpec {
     // split the fixture: docs 2,4 arrive as the "new batch", 1,3 are the index
     val newBatch = docs.filter(col("doc_id").isin(2L, 4L))
     val index = docs.filter(col("doc_id").isin(1L, 3L))
-    val asym = Dedup.minhashPairsAgainst(newBatch, index, "doc_id",
-        CrossHash.wordShingles(toks, 3), k = 16, bands = 8, threshold = 0.5)
+    def sigs(df: org.apache.spark.sql.DataFrame) =
+      Dedup.minhashSignatures(df, "doc_id", CrossHash.wordShingles(toks, 3), 16)
+    val asym = Dedup.minhashPairsFromSignatures(sigs(newBatch), sigs(index),
+        k = 16, bands = 8, threshold = 0.5)
       .select("new_id", "index_id", "jaccard")
       .as[(Long, Long, Double)].collect().toSet
     val full = Dedup.minhashPairs(docs, "doc_id", CrossHash.wordShingles(toks, 3),
@@ -1968,8 +1970,8 @@ class DedupSimilaritySpec extends SparkSpec {
       (3L, "p q r s t u v w"),        // unique — must pass through byte-identical
       (4L, "a b c d e f")             // every gram duplicated — fully excised
     ).toDF("doc_id", "text")
-    val byId = Dedup.removeDupSpans(corpus, "doc_id",
-        CrossHash.tokens(col("text")), n = 3, minDocs = 2, minRun = 2)
+    val byId = Dedup.removeSpans(corpus, "doc_id", toks,
+        Dedup.dupSpans(corpus, "doc_id", toks, n = 3, minDocs = 2, minRun = 2))
       .select("id", "clean_text", "n_removed")
       .as[(Long, String, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap

@@ -137,7 +137,7 @@ class EtlSpec extends SparkSpec {
 
   test("fail-fast: a table queued behind a failure never starts (O3)") {
     val out = Files.createTempDirectory("graft_etl").toString
-    // the four unregistered tables fill the 4-thread pool and fail; the
+    // the four unregistered tables fill the 4 table threads and fail; the
     // table queued behind them must not truncate-and-reload its destination
     val specs = (1 to 4).map(i => Etl.TableSpec(s"unregistered_$i")) :+
       Etl.TableSpec("daily_log")
@@ -145,6 +145,37 @@ class EtlSpec extends SparkSpec {
       Etl.run(spark, specs, _ => sourceDf, registry, out)
     }
     assert(!new java.io.File(s"$out/daily_log").exists())
+  }
+
+  test("fail-fast: a running truncate finishes when another table fails (O3)") {
+    import EtlSpec.{bFailed, writeRunning}
+    val out = Files.createTempDirectory("graft_etl_truncate").toString
+    val a = Etl.TableSpec("daily_log")
+    assert(Etl.run(spark, Seq(a), _ => sourceDf, registry, out) ==
+      Seq(Etl.RunReport("daily_log", 3, 3, 3)))
+    // A's write holds its tasks until B has failed; the latches are static,
+    // so the local-mode task threads see the driver's instances
+    val holdWrite = udf { (s: String) =>
+      writeRunning.countDown()
+      require(bFailed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      Thread.sleep(200) // B's failure lands while A's write job runs
+      s
+    }
+    val landedA = landed()("daily_log") // a scan: the UDF runs in the write's tasks
+    val source: String => org.apache.spark.sql.DataFrame = {
+      case "daily_log" => landedA.withColumn("server", holdWrite(col("server")))
+      case t =>
+        require(writeRunning.await(60, java.util.concurrent.TimeUnit.SECONDS),
+          "daily_log's write never started")
+        bFailed.countDown()
+        throw new IllegalStateException(s"$t failed")
+    }
+    val e = intercept[IllegalStateException] {
+      Etl.run(spark, Seq(a, Etl.TableSpec("backup_log")), source, registry, out)
+    }
+    assert(e.getMessage == "backup_log failed")
+    // the overwrite ran to its end: neither cancelled nor left emptied
+    assert(spark.read.parquet(s"$out/daily_log").count() == 3)
   }
 
   test("O4 run log: dated file name, asctime [levelname] line format, append") {
@@ -232,4 +263,9 @@ class EtlSpec extends SparkSpec {
         |HOST=db.example.com""".stripMargin)
     assert(parsed == Map("USER" -> "alice", "PASS" -> "a=b=c", "HOST" -> "db.example.com"))
   }
+}
+
+object EtlSpec {
+  val writeRunning = new java.util.concurrent.CountDownLatch(1)
+  val bFailed = new java.util.concurrent.CountDownLatch(1)
 }

@@ -146,6 +146,15 @@ class SinksSpec extends SparkSpec {
     assert(jobs == 0, s"the audit started $jobs Spark jobs")
   }
 
+  test("K5 audit: a file that is not parquet fails with the footer reader's own error") {
+    val dest = java.nio.file.Files.createTempDirectory("graft_audit_bad").resolve("t").toString
+    spark.range(0, 10, 1, 2).write.parquet(dest)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dest, "part-x.parquet"),
+      "this is text, not a parquet file\n")
+    val e = intercept[RuntimeException](Sinks.countAudit(spark, dest))
+    assert(e.getMessage.contains("part-x.parquet"), e.getMessage)
+  }
+
   test("a row count that never arrives fails the load by name instead of hanging") {
     val e = intercept[IllegalStateException] {
       Sinks.awaitObservedRows("warehouse/daily_log", org.apache.spark.sql.Observation(),
