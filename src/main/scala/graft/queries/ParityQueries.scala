@@ -315,10 +315,10 @@ object ParityQueries {
     }),
 
     // K-extension: zstd-compressed parquet — the storage-efficiency codec
-    // switch a 100 TB lake actually flips (zstd trades a little CPU for a
-    // materially smaller footprint vs the snappy default). Write under
-    // zstd, read back, prove content fidelity; SinksSpec pins the size
-    // reduction.
+    // switch a 100 TB lake actually flips, and the load path's codec
+    // (`Sinks.write`, which k3_partitioned_write runs). Write under zstd,
+    // read back, prove content fidelity; SinksSpec pins the load writer's
+    // codec and its size against snappy.
     "k13_zstd_roundtrip" -> ((s, d) => {
       val out = scratch(d, "events_zstd")
       t(s, d, "events").write.mode("overwrite")

@@ -127,6 +127,28 @@ class EtlSpec extends SparkSpec {
     assert(parquetFiles() == before)
   }
 
+  test("upgrade: a daily load onto a snappy history; a full refresh leaves only zstd") {
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName.{SNAPPY, ZSTD}
+    val out = Files.createTempDirectory("graft_etl_upgrade").toString
+    val dest = s"$out/daily_log"
+    // a destination loaded before zstd: Spark's default writer, the sink's DAY layout
+    Seq((9L, ts("2024-01-13 09:00:00"), "s9")).toDF("ID", "BackupDate", "Server")
+      .withColumn("p_date", to_date(col("BackupDate")))
+      .write.partitionBy("p_date").parquet(dest)
+    def codecs() = columnChunks(dest).map(_.getCodec).toSet
+    assert(codecs() == Set(SNAPPY))
+    val day = java.time.LocalDate.parse("2024-01-15")
+    val daily = Etl.run(spark, Seq(daySpec), _ => sourceDf, registry, out, daily = true, day = day)
+    assert(codecs() == Set(SNAPPY, ZSTD))
+    def rows() = spark.read.parquet(dest).select("ID", "Server").as[(Long, String)].collect().toSet
+    assert(rows() == Set((9L, "s9"), (2L, "s2"), (3L, "s1")))
+    assert(daily == Seq(Etl.RunReport("daily_log", 2, 2, spark.read.parquet(dest).count())))
+    assert(daily.head.total == 3)
+    Etl.run(spark, Seq(daySpec), _ => sourceDf, registry, out)
+    assert(codecs() == Set(ZSTD))
+    assert(rows() == Set((1L, "s1"), (2L, "s2"), (3L, "s1")))
+  }
+
   test("fail-fast: a missing registry entry aborts the run (O3/K6)") {
     val out = Files.createTempDirectory("graft_etl").toString
     val specs = Seq(Etl.TableSpec("daily_log"), Etl.TableSpec("unregistered"))

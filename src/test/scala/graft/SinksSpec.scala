@@ -583,20 +583,48 @@ class SinksSpec extends SparkSpec {
       "a pure copy-compaction must not change the served scores")
   }
 
-  test("zstd parquet is materially smaller than snappy on repetitive data") {
+  test("loads write zstd pages, dictionaries only where they pay, below snappy") {
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
     import org.apache.spark.sql.functions._
-    val df = (0 until 40000)
-      .map(i => (i.toLong, s"segment_${i % 7}", "the quick brown fox " * 3, i * 1.5))
-      .toDF("id", "seg", "txt", "v")
-    def size(dir: String, codec: String): Long = {
-      df.write.mode(SaveMode.Overwrite).option("compression", codec).parquet(dir)
-      Option(new java.io.File(dir).listFiles()).get
-        .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
+    val df = spark.range(0, 40000, 1, 4).select(
+      col("id"),
+      concat(lit("segment_"), (col("id") % 200).cast("string")).as("seg"),
+      // 5000 repeated values: a ~170 KB dictionary that would beat plain encoding
+      concat(lit("/backups/server_07/file_"), lpad((col("id") % 5000).cast("string"), 6, "0"),
+        lit(".bak")).as("path"),
+      lit("the quick brown fox " * 3).as("txt"),
+      (col("id") * 1.5).as("v"),
+      timestamp_seconds(lit(1704067200L) + col("id") % 3 * 86400 + col("id")).as("ts"))
+    val out = java.nio.file.Files.createTempDirectory("graft_load_format").toString
+    def bytes(dir: String): Long = {
+      val st = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try st.filter(_.toString.endsWith(".parquet")).mapToLong(java.nio.file.Files.size(_)).sum
+      finally st.close()
     }
-    val snappy = size(java.nio.file.Files.createTempDirectory("graft_snappy").toString, "snappy")
-    val zstd = size(java.nio.file.Files.createTempDirectory("graft_zstd").toString, "zstd")
-    assert(zstd < snappy,
-      s"expected zstd ($zstd B) below snappy ($snappy B)")
+    Seq(None, Some("ts")).foreach { day =>
+      val load = s"$out/load_${day.isDefined}"
+      assert(Sinks.write(df, load, dayPartitionField = day) == 40000L)
+      val chunks = columnChunks(load)
+      assert(chunks.nonEmpty)
+      chunks.foreach(c =>
+        assert(c.getCodec == CompressionCodecName.ZSTD, s"$load: ${c.getPath} is ${c.getCodec}"))
+      def dictionaries(column: String) =
+        chunks.filter(_.getPath.toDotString == column).map(_.hasDictionaryPage)
+      assert(dictionaries("seg").nonEmpty && dictionaries("seg").forall(identity),
+        s"$load: the 200-value string column lost its dictionary")
+      assert(dictionaries("id").nonEmpty && !dictionaries("id").exists(identity),
+        s"$load: the unique id column kept a dictionary")
+      assert(dictionaries("path").nonEmpty && !dictionaries("path").exists(identity),
+        s"$load: a dictionary above the 64 KiB cap was kept")
+      // the same frame and layout through Spark's default writer
+      val snappy = s"$out/snappy_${day.isDefined}"
+      val w = day.fold(df.write) { f =>
+        df.withColumn(Sinks.PartitionCol, to_date(col(f))).repartition(col(Sinks.PartitionCol))
+          .write.partitionBy(Sinks.PartitionCol)
+      }
+      w.mode(SaveMode.Overwrite).option("compression", "snappy").parquet(snappy)
+      assert(bytes(load) < bytes(snappy), s"$load: ${bytes(load)} B, snappy ${bytes(snappy)} B")
+    }
   }
 
   private def withSQLConf[T](pairs: (String, String)*)(f: => T): T = {

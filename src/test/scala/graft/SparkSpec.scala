@@ -1,7 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
@@ -40,6 +47,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally {
       sc.setLocalProperty(key, prev)
       sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Every column chunk of every parquet data file under `dir`, read from
+    * the files' footers.
+    */
+  def columnChunks(dir: String): Seq[ColumnChunkMetaData] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val st = Files.walk(Paths.get(dir))
+    val files =
+      try st.iterator().asScala.filter { p =>
+        val name = p.getFileName.toString
+        Files.isRegularFile(p) && name.endsWith(".parquet") && !name.startsWith(".") &&
+          !p.toString.contains("/_temporary/")
+      }.toList
+      finally st.close()
+    files.flatMap { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p.toUri), conf))
+      try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+      finally reader.close()
     }
   }
 
